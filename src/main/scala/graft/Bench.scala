@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: times every registered query at SPARK_GRAFT_SF_DIR.
   * Emits ONE JSON line; failing queries are reported in an `errors` map (never
@@ -202,36 +201,12 @@ object Bench {
       s""""epoch_ms":${System.currentTimeMillis()},"timing":"best_of_2"}"""
   }
 
-  /** `spark.read.text` on a glob probes for a streaming-sink metadata dir and
-    * logs a full FileNotFoundException stack at WARN — pure noise that eats
-    * the driver's bounded stdout-tail parse window. Pin that one logger to
-    * ERROR (both the Spark 3 and Spark 4 class locations).
-    */
-  private[graft] def muteStreamProbe(): Unit =
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      java.util.Map.of(
-        "org.apache.spark.sql.execution.streaming.FileStreamSink",
-        org.apache.logging.log4j.Level.ERROR,
-        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
-        org.apache.logging.log4j.Level.ERROR))
-    catch { case _: Throwable => () }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    muteStreamProbe()
+    val spark = Session.local(Session.cpus(32))
     // warm the session once (codegen compiler, parquet footers) so the first
     // timed query doesn't absorb several seconds of one-time init
-    Seq("orders", "lineitem", "documents", "embeddings", "events")
-      .foreach(t => try Tables.t(spark, sfDir, t).count() catch { case _: Throwable => })
+    Tables.warm(spark, sfDir)
     // compile the common codegen templates (hash join, hash agg, sort,
     // window) on a small slice — one-time janino work that otherwise lands
     // in whatever query happens to run first

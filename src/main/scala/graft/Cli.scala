@@ -2,8 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
-
 /** Thin command-line entry over the engine — the Spark spelling of the
   * reference's primary UX (`jira-sync sync --jql=... --repo=...`,
   * reference: cmd/jira-sync/main.go:17-30, internal/cli/sync.go:74):
@@ -72,15 +70,7 @@ object Cli {
           Console.err.println(s"$cmd requires ${missing.map("--" + _).mkString(", ")}")
           return 2
         }
-        val spark = SparkSession.builder()
-          .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-          .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = Session.cli()
         try {
           if (cmd == "recover") {
             val findings = engine.SyncEngine.recover(spark, kv("repo"),
@@ -162,15 +152,7 @@ object Cli {
               Console.err.println(s"bad --resources file: ${e.getMessage}")
               return 2
           }
-        val spark = SparkSession.builder()
-          .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-          .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = Session.cli()
         val src = kv("source")
         val mgr = new jobs.JobManager(spark)
         val rec = new jobs.Reconciler(spark, mgr,
@@ -526,15 +508,7 @@ object Cli {
     */
   private[graft] def startServer(kv: Map[String, String],
       flags: Set[String] = Set.empty): (api.ApiServer, Int) = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.cli()
     val src = kv("source")
     val mgr = new jobs.JobManager(spark)
     val issuesFn = () => Tables.issuesFull(spark, src)

@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.types.BinaryType
 
-import graft.functions.{DotProductD, Md5Prefix64, Shingles}
+import graft.functions.{DeflateLen, DotProductD, HeavyHittersAgg, Md5Prefix64,
+  MinKAgg, Shingles, SimhashSig}
 
 /** Session extensions: registers the engine's native expressions for SQL use
   * (`SELECT md5_prefix64(col) ...`, `SELECT dot_d(x, y) ...`,
@@ -14,69 +16,40 @@ import graft.functions.{DotProductD, Md5Prefix64, Shingles}
   * without registration.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("md5_prefix64"),
-      new ExpressionInfo(classOf[Md5Prefix64].getName, "md5_prefix64"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "md5_prefix64 takes exactly one argument")
-        Md5Prefix64(org.apache.spark.sql.catalyst.expressions.Cast(
-          children.head, org.apache.spark.sql.types.BinaryType))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("dot_d"),
-      new ExpressionInfo(classOf[DotProductD].getName, "dot_d"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2, "dot_d takes exactly two arguments")
-        DotProductD(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("shingles"),
-      new ExpressionInfo(classOf[Shingles].getName, "shingles"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "shingles takes exactly one argument")
-        Shingles(children.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash_sig"),
-      new ExpressionInfo(classOf[graft.functions.SimhashSig].getName, "simhash_sig"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "simhash_sig takes exactly one argument")
-        graft.functions.SimhashSig(children.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("heavy_hitters"),
-      new ExpressionInfo(classOf[graft.functions.HeavyHittersAgg].getName, "heavy_hitters"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2, "heavy_hitters takes (column, k)")
-        val k = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v, _) if v != null =>
-            v.toString.toInt
-          case _ => throw new IllegalArgumentException(
-            "heavy_hitters: k must be an integer literal")
-        }
-        graft.functions.HeavyHittersAgg(children.head, k)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("deflate_len"),
-      new ExpressionInfo(classOf[graft.functions.DeflateLen].getName, "deflate_len"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "deflate_len takes exactly one argument")
-        graft.functions.DeflateLen(org.apache.spark.sql.catalyst.expressions.Cast(
-          children.head, org.apache.spark.sql.types.BinaryType))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("min_k"),
-      new ExpressionInfo(classOf[graft.functions.MinKAgg].getName, "min_k"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2, "min_k takes (column, k)")
-        val k = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v, _) if v != null =>
-            v.toString.toInt
-          case _ => throw new IllegalArgumentException(
-            "min_k: k must be an integer literal")
-        }
-        graft.functions.MinKAgg(children.head, k)
-      }))
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(ext.injectFunction)
+}
+
+object GraftExtensions {
+
+  type Builder = Seq[Expression] => Expression
+
+  /** Every SQL function as an `injectFunction` triple: name, expression
+    * class, and a builder that checks the arity first.
+    */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] = Seq(
+    fn("md5_prefix64", classOf[Md5Prefix64], 1)(
+      c => Md5Prefix64(Cast(c.head, BinaryType))),
+    fn("dot_d", classOf[DotProductD], 2)(c => DotProductD(c.head, c(1))),
+    fn("shingles", classOf[Shingles], 1)(c => Shingles(c.head)),
+    fn("simhash_sig", classOf[SimhashSig], 1)(c => SimhashSig(c.head)),
+    fn("heavy_hitters", classOf[HeavyHittersAgg], 2)(
+      c => HeavyHittersAgg(c.head, k("heavy_hitters", c(1)))),
+    fn("deflate_len", classOf[DeflateLen], 1)(
+      c => DeflateLen(Cast(c.head, BinaryType))),
+    fn("min_k", classOf[MinKAgg], 2)(c => MinKAgg(c.head, k("min_k", c(1)))))
+
+  private def fn(name: String, cls: Class[_], arity: Int)(build: Builder)
+      : (FunctionIdentifier, ExpressionInfo, Builder) =
+    (new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      children => {
+        require(children.length == arity, s"$name takes $arity argument(s)")
+        build(children)
+      })
+
+  private def k(name: String, e: Expression): Int = e match {
+    case Literal(v, _) if v != null => v.toString.toInt
+    case _ => throw new IllegalArgumentException(
+      s"$name: k must be an integer literal")
   }
 }

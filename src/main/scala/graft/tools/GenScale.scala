@@ -196,14 +196,7 @@ object GenScale {
   def main(args: Array[String]): Unit = {
     val outRoot = args(0)
     val sfs = args.drop(1).map(_.toDouble)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus(32))
     sfs.foreach { sf =>
       val dir = f"$outRoot/sfg$sf%s"
       def w(name: String, df: DataFrame): Unit = {

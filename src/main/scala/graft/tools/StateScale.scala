@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.state.StateStore
@@ -25,14 +24,7 @@ object StateScale {
     val work = args(0)
     val rows = if (args.length > 1) args(1).toLong else 14000000L
     val outPath = if (args.length > 2) args(2) else s"$work/state_scale.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus(32))
     val statePath = s"$work/state"
 
     // synthetic ledger: 8 projects, sequence-assigned suffixes, checksum is

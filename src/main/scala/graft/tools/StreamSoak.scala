@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Streaming soak at generated scale — the continuous-ingest counterpart of
@@ -83,16 +82,7 @@ object StreamSoak {
         val Array(p, f) = a.stripPrefix("skew=").split(":")
         (p, f.toDouble)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Bench.muteStreamProbe()
+    val spark = graft.Session.local(graft.Session.cpus(32))
 
     // RAM-backed work dir when available — the CDC leg writes the full YAML
     // corpus, and on throttled disks the soak would measure the disk

@@ -97,36 +97,26 @@ class NativeFunctionsSpec extends AnyFunSuite {
     assert(short.isEmpty)
   }
 
+  /** Register every `GraftExtensions` SQL function on the live session —
+    * the same builders `injectFunction` installs at session build.
+    */
+  private def registerSql(): Unit =
+    GraftExtensions.functions.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
+
   test("SQL registration via GraftExtensions injectFunction") {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(ext) // constructs without error
-    // direct registry injection on the live session for the SQL path
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    spark.sessionState.functionRegistry.registerFunction(
-      new FunctionIdentifier("md5_prefix64"),
-      new ExpressionInfo(classOf[Md5Prefix64].getName, "md5_prefix64"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Md5Prefix64(org.apache.spark.sql.catalyst.expressions.Cast(
-          children.head, org.apache.spark.sql.types.BinaryType)))
+    registerSql()
     val viaSql = spark.sql("SELECT md5_prefix64('hello') AS h").head.getLong(0)
     val viaCol = spark.range(1).select(Md5Prefix64(lit("hello"))).head.getLong(0)
     assert(viaSql == viaCol)
 
-    spark.sessionState.functionRegistry.registerFunction(
-      new FunctionIdentifier("shingles"),
-      new ExpressionInfo(classOf[graft.functions.Shingles].getName, "shingles"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.Shingles(children.head))
     val sh = spark.sql("SELECT shingles(array('a','b','c','d')) AS sh")
       .head.getSeq[String](0)
     assert(sh == Seq("a b c", "b c d"))
 
-    spark.sessionState.functionRegistry.registerFunction(
-      new FunctionIdentifier("simhash_sig"),
-      new ExpressionInfo(classOf[graft.functions.SimhashSig].getName, "simhash_sig"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.SimhashSig(children.head))
     val sim = spark.sql("SELECT simhash_sig(array('a','b','a')) AS s").head.getLong(0)
     val simCol = spark.range(1)
       .select(graft.functions.SimhashSig(array(lit("a"), lit("b"), lit("a"))))
@@ -138,23 +128,38 @@ class NativeFunctionsSpec extends AnyFunSuite {
       .head.getLong(0)
     assert(simNull == sim)
 
-    spark.sessionState.functionRegistry.registerFunction(
-      new FunctionIdentifier("heavy_hitters"),
-      new ExpressionInfo(classOf[graft.functions.HeavyHittersAgg].getName, "heavy_hitters"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.HeavyHittersAgg(children.head,
-          children(1).asInstanceOf[org.apache.spark.sql.catalyst.expressions.Literal]
-            .value.toString.toInt))
     val hh = spark.sql(
       "SELECT heavy_hitters(v, 5) AS hh FROM VALUES ('x'),('x'),('y') t(v)")
       .head.getSeq[org.apache.spark.sql.Row](0)
     assert(hh.map(r => (r.getString(0), r.getLong(1))) == Seq(("x", 2L), ("y", 1L)))
+
+    val dot = spark.sql(
+      "SELECT dot_d(array(1d, 2d, 3d), array(4d, 5d, -6d)) AS d").head.getDouble(0)
+    assert(dot == -4.0)
+
+    val mk = spark.sql(
+      "SELECT min_k(v, 2) AS m FROM VALUES ('c'),('a'),('b'),('a') t(v)")
+      .head.getSeq[String](0)
+    assert(mk == Seq("a", "b"))
+  }
+
+  test("SQL builders reject a non-literal k and a wrong argument count") {
+    registerSql()
+    def failure(sql: String): String = {
+      val e = intercept[Throwable](spark.sql(sql).collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(x => String.valueOf(x.getMessage)).mkString(" | ")
+    }
+    for (fn <- Seq("min_k", "heavy_hitters")) {
+      val msg = failure(s"SELECT $fn(v, length(v)) FROM VALUES ('x') t(v)")
+      assert(msg.contains(s"$fn: k must be an integer literal"), msg)
+    }
+    val arity = failure("SELECT dot_d(array(1d)) AS d")
+    assert(arity.contains("dot_d takes 2 argument(s)"), arity)
   }
 
   test("deflate_len: deterministic, discriminates repetition, codegen == eval") {
     import graft.functions.DeflateLen
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
     import spark.implicits._
     val rep = "spam spam spam spam " * 200   // highly compressible
     val varied = (1 to 200).map(i => s"w${i * 7919}").mkString(" ") // high entropy
@@ -170,12 +175,7 @@ class NativeFunctionsSpec extends AnyFunSuite {
     assert(ratioRep < 0.1 && ratioVar > 0.3,
       s"ratios failed to separate: rep=$ratioRep varied=$ratioVar")
     // SQL registration path
-    spark.sessionState.functionRegistry.registerFunction(
-      new FunctionIdentifier("deflate_len"),
-      new ExpressionInfo(classOf[DeflateLen].getName, "deflate_len"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DeflateLen(org.apache.spark.sql.catalyst.expressions.Cast(
-          children.head, org.apache.spark.sql.types.BinaryType)))
+    registerSql()
     assert(spark.sql("SELECT deflate_len('hello hello hello') AS n")
       .head.getInt(0) == DeflateLen.len("hello hello hello".getBytes("UTF-8")))
     // the composed quality signal: bounded ratios, covers every non-empty doc
