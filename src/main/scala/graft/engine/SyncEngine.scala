@@ -158,9 +158,11 @@ object SyncEngine {
       //   (b) edge write (S11): depends only on the batch, not the YAML
       //       files or the commit (separate pathspec: relationships/ vs
       //       projects/). Awaited BEFORE the state swap — state must not
-      //       mark issues synced until their edges are durable. An
-      //       incremental batch replaces only its own issues' edges; a full
-      //       run rewrites the table.
+      //       mark issues synced until their edges are durable. A full run
+      //       stages the whole table and swaps it in. An incremental batch
+      //       stages only its projects — their other issues' edges plus its
+      //       own — in one write job, then swaps each project dir in; a
+      //       crash before the state swap reruns the same idempotent upsert.
       //   (c) OPTIMISTIC state staging: the merge assumes every file write
       //       succeeds (the overwhelmingly common case) and materializes to
       //       the state store's tmp dir; a write failure restages without

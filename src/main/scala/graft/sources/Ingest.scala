@@ -1,10 +1,13 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 
 import graft.model.Issue
+import graft.state.DirSwap
 
 /** Field-mapping ingest (SURVEY.md §2.1 S5): JIRA wire JSON → the flat issue
   * record, including the custom-field epic link and inward/outward link
@@ -176,32 +179,51 @@ object Ingest {
 
   /** S11 sink: persist edges partitioned by (project_key, link_type) — the
     * layout the reference encodes as relationship directories.
-    *
-    * The batch is re-hashed on the partition columns first (keeping the full
+    */
+  def writeEdges(edges: DataFrame, path: String): Unit = {
+    val fs = new Path(path).getFileSystem(edges.sparkSession.sparkContext.hadoopConfiguration)
+    // a full rewrite replaces the table either way, but finishing any
+    // interrupted swap first keeps its leftovers from shadowing or
+    // resurrecting old edges later
+    recover(fs, path)
+    // stage + swap rather than overwrite-in-place: an in-place overwrite
+    // deletes the table before writing, so a crash mid-write leaves a
+    // PARTIAL table that reads as valid
+    stageEdges(edges, path + "__compact")
+    swapAll(fs, path)
+  }
+
+  /** Write edges partitioned by (project_key, link_type) into `dir`. The
+    * rows are re-hashed on the partition columns first (keeping the full
     * task-slot count) so each (project_key, link_type) lands in one task:
     * one file per partition instead of tasks × partitions small files, and
     * one open writer per task instead of one per partition value.
     */
-  def writeEdges(edges: DataFrame, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(edges.sparkSession.sparkContext.hadoopConfiguration)
-    // a full rewrite replaces the table either way, but clearing any
-    // mid-swap leftovers first keeps a stale __compact/__old from shadowing
-    // or resurrecting old edges later
-    recoverCompacted(fs, path)
-    // stage + swap rather than overwrite-in-place: an in-place overwrite
-    // deletes the table before writing, so a crash mid-write leaves a
-    // PARTIAL table that reads as valid. Staging into __compact and swapping
-    // reuses the compaction commit: every intermediate crash state is one
-    // recoverCompacted() call away from a complete table (old or new).
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compact")
+  private def stageEdges(edges: DataFrame, dir: String): Unit =
     edges
       .repartition(edges.sparkSession.sparkContext.defaultParallelism,
         col("project_key"), col("link_type"))
       .write.mode("overwrite")
       .partitionBy("project_key", "link_type")
-      .parquet(tmp.toString)
-    swapCompacted(fs, path)
+      .parquet(dir)
+
+  /** Replace the whole table by the complete staged one at `<path>__compact`:
+    * swap every project dir either side holds, parking the old ones at
+    * `<path>__old` ([[graft.state.DirSwap]]). The first write has nothing
+    * to park and renames the stage into place.
+    */
+  private def swapAll(fs: FileSystem, path: String): Unit = {
+    val table = new Path(path)
+    val stage = new Path(path + "__compact")
+    if (!fs.exists(table)) {
+      if (!fs.rename(stage, table))
+        throw new java.io.IOException(s"edge-table rename failed: $stage -> $table")
+    } else {
+      def projects(dir: Path) =
+        fs.listStatus(dir).toSeq.map(_.getPath.getName).filter(_.startsWith("project_key="))
+      DirSwap.swap(fs, table, stage, new Path(path + "__old"),
+        (projects(table) ++ projects(stage)).distinct.sorted)()
+    }
   }
 
   /** S11 incremental sink: replace the edges of every issue in
@@ -211,140 +233,79 @@ object Ingest {
     * changed-key set as the deletion universe covers the two cases a
     * batch-derived set misses: an issue whose links were all removed (no
     * rows in `edges` at all) and a link whose link_type changed (its old
-    * row lives in a partition the new batch doesn't touch).
+    * row lives in a partition the new batch doesn't touch). Every edge
+    * carries its src issue's project_key, as [[edges]] derives it.
     *
-    * Scale shape: only the affected projects' partitions are read
-    * (partition-pruned filter on project_key across ALL their link_type
-    * partitions), anti-joined on src against the changed-key set, and
-    * rewritten via dynamic partition overwrite. Partitions the rewrite
-    * leaves empty are dropped explicitly — dynamic overwrite never touches
-    * a partition absent from the output.
+    * Scale shape: work in proportion to the affected projects, not the
+    * table. One small collect names the projects of `changedIssues`; one
+    * write job reads only their partitions (partition-pruned), anti-joins
+    * them on src against the changed keys, adds the batch's edges and
+    * stages the result at `<path>__upsert`, one file per partition. Each
+    * affected `project_key=X` dir is then swapped for its staged copy
+    * ([[graft.state.DirSwap]]); a project the batch emptied has no staged
+    * copy, so its dir (and every link_type partition in it) goes away. The
+    * next edge-table writer rolls a crashed swap forward.
     */
-  def upsertEdges(edges: DataFrame, changedIssues: DataFrame, path: String): Unit = {
+  def upsertEdges(edges: DataFrame, changedIssues: DataFrame, path: String): Unit =
+    upsertEdges(edges, changedIssues, path, None)
+
+  /** [[upsertEdges]] with a test-only crash injected into its swap. */
+  private[graft] def upsertEdges(edges: DataFrame, changedIssues: DataFrame,
+      path: String, crash: Option[DirSwap.Crash]): Unit = {
     val spark = edges.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a compaction that crashed mid-swap leaves the complete table in
-    // __compact with src absent — recover BEFORE deciding the table doesn't
-    // exist, or this batch would recreate it with only its own edges and
-    // silently drop everyone else's
-    recoverCompacted(fs, path)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) return writeEdges(edges, path)
-    val changed = changedIssues
-      .select(col("key").as("src"), col("project_key")).distinct().cache()
-    try {
-      // affected projects: small (a handful of keys) — safe to collect
-      val projects = changed.select("project_key").distinct()
-        .collect().map(_.getString(0))
-      if (projects.isEmpty) return
-      // explicit schema: a previous zero-edge write leaves a parquet dir with
-      // no data files, which defeats inference
-      val existing = spark.read.schema(
-          org.apache.spark.sql.types.StructType(edges.schema.fields.toSeq))
-        .parquet(path)
-        .filter(col("project_key").isin(projects.toSeq: _*))
-      val existingParts = existing.select("project_key", "link_type").distinct()
-        .collect().map(r => (r.getString(0), r.getString(1)))
-      val out = existing
-        .join(changed.select("src"), Seq("src"), "left_anti")
-        .select(edges.columns.map(col).toSeq: _*)
-        .unionByName(edges)
-        // break the read-from-output-path lineage so the overwrite is legal;
-        // on a cluster this would be a checkpoint to reliable storage
-        .localCheckpoint(true)
-      // drop partitions the batch emptied (all their rows belonged to changed
-      // issues and none came back) — absent from `out`, so the dynamic
-      // overwrite below never touches them. Deleting BEFORE the write makes a
-      // crash recoverable: state isn't merged until the whole batch commits,
-      // so a rerun re-derives the same changed set and repeats both steps
-      // idempotently, whereas deletes after the commit could be lost forever
-      // (those issues never reappear in changedIssues). `out` is already
-      // checkpointed, so this collect doesn't recompute the merge.
-      val outParts = out.select("project_key", "link_type").distinct()
-        .collect().map(r => (r.getString(0), r.getString(1))).toSet
-      val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName _
-      existingParts.filterNot(outParts).foreach { case (p, t) =>
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"$path/project_key=${esc(p)}/link_type=${esc(t)}"), true)
-      }
-      out
-        .repartition(spark.sparkContext.defaultParallelism,
-          col("project_key"), col("link_type")) // one file per partition, see writeEdges
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic") // writer-scoped, no session-conf mutation
-        .partitionBy("project_key", "link_type")
-        .parquet(path)
-    } finally changed.unpersist()
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a crashed swap can leave the table without some (or all) of its
+    // project dirs — recover BEFORE deciding the table doesn't exist, or this
+    // batch would recreate it with only its own edges and silently drop
+    // everyone else's
+    recover(fs, path)
+    if (!fs.exists(new Path(path))) return writeEdges(edges, path)
+    // Spark writes null and "" partition values alike (as the default
+    // partition name) and reads both back as null
+    val pk = coalesce(col("project_key"), lit(""))
+    val projects = changedIssues.select(pk).distinct().collect().map(_.getString(0))
+    if (projects.isEmpty) return
+    // explicit schema: a previous zero-edge write leaves a parquet dir with
+    // no data files, which defeats inference
+    val kept = spark.read.schema(edges.schema).parquet(path)
+      .filter(pk.isin(projects.toSeq: _*))
+      .join(changedIssues.select(col("key").as("src")), Seq("src"), "left_anti")
+    stageEdges(kept.select(edges.columns.map(col).toSeq: _*).unionByName(edges),
+      path + "__upsert")
+    DirSwap.swap(fs, new Path(path), new Path(path + "__upsert"),
+      new Path(path + "__cold"), projects.toSeq.sorted.map(p =>
+        ExternalCatalogUtils.getPartitionPathString("project_key", p)), crash)()
   }
+
+  /** Make the edge table whole again after a crashed writer: finish an
+    * interrupted swap of a full rewrite or compaction (staged at
+    * `__compact`) or of an upsert (staged at `__upsert`). Every edge-table
+    * writer runs this first.
+    */
+  private def recover(fs: FileSystem, path: String): Unit =
+    Seq("__compact" -> "__old", "__upsert" -> "__cold").foreach { case (stage, cold) =>
+      DirSwap.recover(fs, new Path(path), new Path(path + stage), new Path(path + cold))
+    }
 
   /** S11 maintenance: compact the edge table's accumulated small files.
-    * Every incremental upsert rewrites its partitions with one file per
-    * write task, so file counts grow with sync frequency and scans degrade.
-    * Rewrite with one task per (project_key, link_type) partition (bounded
-    * by `maxRecordsPerFile`) into a tmp dir and swap — the same
-    * tmp-then-rename commit as the state store.
+    * Appends and file-size splits leave a partition in several files, so
+    * file counts can grow and scans degrade. Rewrite with one task per
+    * (project_key, link_type) partition (bounded by `maxRecordsPerFile`)
+    * into `<path>__compact` and swap it in, like a full rewrite.
     */
-  /** Finish (or discard) a compaction swap interrupted by a crash. The swap
-    * is src→`__old`, `__compact`→src, delete `__old`; the only window where
-    * src is absent is between the two renames, and then `__compact` is
-    * complete (its `_SUCCESS` marker proves it) — promote it. With src
-    * present, any leftover `__old`/`__compact` is from an uncommitted or
-    * already-committed swap — src is authoritative, drop them. Shared by
-    * every edge-table writer so no caller can mistake a mid-swap table for
-    * an absent one.
-    */
-  private def recoverCompacted(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val src = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compact")
-    val old = new org.apache.hadoop.fs.Path(path + "__old")
-    if (!fs.exists(src)) {
-      if (fs.exists(tmp) && fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))) {
-        if (!fs.rename(tmp, src))
-          throw new java.io.IOException(s"compaction recovery rename failed: $tmp -> $src")
-      } else if (fs.exists(old)) {
-        // tmp incomplete (shouldn't happen — the rename only runs after a
-        // committed write) — fall back to the pre-compaction table
-        if (!fs.rename(old, src))
-          throw new java.io.IOException(s"compaction rollback rename failed: $old -> $src")
-      }
-    }
-    if (fs.exists(src)) {
-      if (fs.exists(old)) fs.delete(old, true)
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-    }
-  }
-
-  /** Commit a complete staged table at `<path>__compact`: park the current
-    * table (if any) at `__old`, promote the staged one, clean up. Each
-    * intermediate crash state is one [[recoverCompacted]] call away from a
-    * complete table — src never disappears un-recoverably.
-    */
-  private def swapCompacted(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val src = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compact")
-    val old = new org.apache.hadoop.fs.Path(path + "__old")
-    if (fs.exists(src) && !fs.rename(src, old))
-      throw new java.io.IOException(s"edge-table rename failed: $src -> $old")
-    if (!fs.rename(tmp, src))
-      throw new java.io.IOException(s"edge-table rename failed: $tmp -> $src")
-    fs.delete(old, true)
-    ()
-  }
-
   def compactEdges(spark: org.apache.spark.sql.SparkSession, path: String,
       maxRecordsPerFile: Long = 1L << 20): Unit = {
-    val src = new org.apache.hadoop.fs.Path(path)
+    val src = new Path(path)
     val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compact")
-    recoverCompacted(fs, path)
+    recover(fs, path)
     if (!fs.exists(src)) return
     spark.read.parquet(path)
       .repartition(col("project_key"), col("link_type"))
       .write.mode("overwrite")
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy("project_key", "link_type")
-      .parquet(tmp.toString)
-    swapCompacted(fs, path)
+      .parquet(path + "__compact")
+    swapAll(fs, path)
   }
 
   /** S12: broken-link GC — dangling edges found by anti-join instead of a

@@ -82,11 +82,10 @@ object StateStore {
   private def resolveReadDir(spark: SparkSession, path: String): Option[Path] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // an interrupted partition-incremental compaction must heal BEFORE any
-    // read: the one inconsistent state it can leave is a block dir moved
-    // out but not yet in (see recoverCompaction) — two exists probes in the
-    // steady state
-    recoverCompaction(spark, path)
+    // an interrupted partition-incremental compaction (compactTouched) must
+    // heal BEFORE any read: it can leave a block dir moved out but not yet
+    // in — two exists probes in the steady state
+    DirSwap.recover(fs, p, new Path(path + "__ctmp"), new Path(path + "__cold"))
     if (fs.exists(p)) Some(p)
     else {
       val bak = new Path(path + "__bak")
@@ -493,100 +492,46 @@ object StateStore {
     deltas.foreach { case (_, p) => fs.delete(p, true) }
   }
 
+  /** Test-only crash injection for [[compactTouched]]'s swap (see
+    * [[DirSwap.Crash]]): `AfterDeltas` dies after delta deletion but before
+    * scratch cleanup.
+    */
+  private[graft] type CompactionCrash = DirSwap.Crash
+  private[graft] val AfterOut = DirSwap.AfterOut
+  private[graft] val AfterSwap = DirSwap.AfterSwap
+  private[graft] val AfterDeltas = DirSwap.BeforeCleanup
+  private[graft] type InjectedCrash = DirSwap.InjectedCrash
+
   /** Partition-incremental compaction: rewrite ONLY the touched block dirs.
     *
-    * Protocol (every boundary crash-safe, recovery in
-    * [[recoverCompaction]]):
+    * Protocol (every boundary crash-safe; every read recovers first, in
+    * [[resolveReadDir]]):
     *   1. write resolved rows for the touched blocks to `<path>__ctmp/`
     *      (spark parquet job; `_SUCCESS` marks it complete) — the base and
     *      deltas are untouched, a crash discards the tmp;
-    *   2. per touched block X: rename `base/__seg=X` → `<path>__cold/X`
-    *      (atomic), then `ctmp/__seg=X` → `base/__seg=X` (atomic). A crash
-    *      mid-sequence leaves some blocks swapped and some old — BOTH read
-    *      correctly because the deltas are still present and re-applying a
-    *      delta onto its own fold is the identity (latest-per-key picks
-    *      identical values); the one unsafe window — a block moved OUT but
-    *      not yet IN — is exactly what `__cold` + the complete `__ctmp`
-    *      lets recovery roll forward;
+    *   2. swap each touched block `__seg=X` in from `__ctmp` through
+    *      `<path>__cold` ([[DirSwap.swap]]). A crash mid-sequence leaves
+    *      some blocks swapped and some old — BOTH read correctly because the
+    *      deltas are still present and re-applying a delta onto its own fold
+    *      is the identity (latest-per-key picks identical values);
     *   3. delete the folded deltas, then the `__cold`/`__ctmp` scratch.
     */
-  /** Test-only crash injection for [[compactTouched]]'s swap loop:
-    * `AfterOut(k)` dies after the k-th block's rename-OUT (the one unsafe
-    * window recovery must roll forward), `AfterSwap(k)` after its
-    * rename-in, `AfterDeltas` after delta deletion but before scratch
-    * cleanup.
-    */
-  private[graft] sealed trait CompactionCrash
-  private[graft] final case class AfterOut(k: Int) extends CompactionCrash
-  private[graft] final case class AfterSwap(k: Int) extends CompactionCrash
-  private[graft] case object AfterDeltas extends CompactionCrash
-  private[graft] final class InjectedCrash extends RuntimeException("injected")
-
   private[graft] def compactTouched(spark: SparkSession, path: String,
       segs: Seq[String], deltas: Seq[(Int, Path)],
       crash: Option[CompactionCrash] = None): Unit = {
     val fs = fsOf(spark, path)
     val ctmp = new Path(path + "__ctmp")
-    val cold = new Path(path + "__cold")
     // 1. materialized fold of just the touched blocks
     loadResolvedPruned(spark, path, segs)
       .withColumn(SegCol, statePartCol(col("key")))
       .repartition(col(SegCol))
       .write.mode("overwrite").partitionBy(SegCol).parquet(ctmp.toString)
-    // 2. two-phase per-block swap
-    fs.mkdirs(cold)
+    // 2. per-block swap; 3. deltas only AFTER every swap landed
     val newSegDirs = fs.listStatus(ctmp)
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(SegCol + "="))
-      .map(_.getPath.getName).sorted
-    newSegDirs.zipWithIndex.foreach { case (name, i) =>
-      val old = new Path(path, name)
-      if (fs.exists(old) && !fs.rename(old, new Path(cold, name)))
-        throw new java.io.IOException(s"compaction rename-out failed: $old")
-      if (crash.contains(AfterOut(i))) throw new InjectedCrash
-      if (!fs.rename(new Path(ctmp, name), old))
-        throw new java.io.IOException(s"compaction rename-in failed: $name")
-      if (crash.contains(AfterSwap(i))) throw new InjectedCrash
-    }
-    // 3. cleanup — deltas only AFTER every swap landed
-    deltas.foreach { case (_, p) => fs.delete(p, true) }
-    if (crash.contains(AfterDeltas)) throw new InjectedCrash
-    fs.delete(cold, true)
-    fs.delete(ctmp, true)
-    ()
-  }
-
-  /** Roll an interrupted [[compactTouched]] forward (or back): called from
-    * [[resolveReadDir]] so EVERY reader sees a consistent base. The only
-    * inconsistent state the protocol can leave is a block present in
-    * `__cold` but absent from the base — with a complete `__ctmp` the new
-    * content rolls forward; otherwise the old block rolls back. Blocks
-    * whose swap completed keep the new content (the old copy in `__cold`
-    * is discarded). No-op (two exists probes) in the steady state.
-    */
-  private def recoverCompaction(spark: SparkSession, path: String): Unit = {
-    val fs = fsOf(spark, path)
-    val ctmp = new Path(path + "__ctmp")
-    val cold = new Path(path + "__cold")
-    val hasCold = fs.exists(cold)
-    val hasCtmp = fs.exists(ctmp)
-    if (!hasCold && !hasCtmp) return
-    log.warn(s"state $path: recovering interrupted incremental compaction")
-    if (hasCold) {
-      val ctmpComplete = hasCtmp && fs.exists(new Path(ctmp, "_SUCCESS"))
-      fs.listStatus(cold).filter(_.isDirectory).foreach { st =>
-        val name = st.getPath.getName
-        val dst = new Path(path, name)
-        if (!fs.exists(dst)) {
-          val fromNew = new Path(ctmp, name)
-          val src = if (ctmpComplete && fs.exists(fromNew)) fromNew else st.getPath
-          if (!fs.rename(src, dst))
-            throw new java.io.IOException(s"compaction recovery rename failed: $src")
-        }
-      }
-      fs.delete(cold, true)
-    }
-    if (hasCtmp) fs.delete(ctmp, true)
-    ()
+      .map(_.getPath.getName).sorted.toSeq
+    DirSwap.swap(fs, new Path(path), ctmp, new Path(path + "__cold"), newSegDirs,
+      crash)(deltas.foreach { case (_, p) => fs.delete(p, true) })
   }
 
   /** Explicit restore-from-backup (reference: pkg/state/manager.go:239-267

@@ -18,6 +18,11 @@ class EngineSpec extends AnyFunSuite {
   private val now1 = java.sql.Timestamp.valueOf("2002-01-01 00:00:00")
   private val now2 = java.sql.Timestamp.valueOf("2002-01-02 00:00:00")
 
+  /** An edge table's rows as sorted `|`-joined strings, src first. */
+  private def edgeRows(edges: org.apache.spark.sql.DataFrame): Seq[String] =
+    edges.select("src", "link_type", "direction", "dst", "project_key")
+      .collect().map(_.mkString("|")).toSeq.sorted
+
   test("full sync pipeline: jql filter → yaml → edges → commit → state") {
     val work = Files.createTempDirectory("graft-engine").toString
     val repo = s"$work/repo"
@@ -72,10 +77,73 @@ class EngineSpec extends AnyFunSuite {
     val bumped = issues.withColumn("updated",
       when(col("key") === victim, lit(java.sql.Timestamp.valueOf("2002-01-03 00:00:00")))
         .otherwise(col("updated")))
+    val before = edgeRows(spark.read.parquet(s"$repo/relationships"))
     val r3 = SyncEngine.run(spark, bumped, links, repo, statePath,
       SyncOptions(incremental = true), now = java.sql.Timestamp.valueOf("2002-01-04 00:00:00"))
     assert(r3.successful == 1)
     assert(spark.read.parquet(s"$repo/relationships").count() == e0)
+    // the edge set itself: every other issue's edges are unchanged, and the
+    // victim's are exactly its links
+    val after = spark.read.parquet(s"$repo/relationships")
+    assert(edgeRows(after.filter(col("src") =!= victim)) ==
+      before.filterNot(_.startsWith(victim + "|")))
+    assert(edgeRows(after.filter(col("src") === victim)) ==
+      edgeRows(links.filter(col("src") === victim)))
+  }
+
+  test("incremental sync that removes every edge of a project drops its dir") {
+    val work = Files.createTempDirectory("graft-edgedrop").toString
+    val repo = s"$work/repo"
+    val statePath = s"$work/state"
+    val issues = Tables.issues(spark, sf)
+    val links = Tables.links(spark, sf)
+    SyncEngine.run(spark, issues, links, repo, statePath, SyncOptions(), now = now1)
+    val rel = s"$repo/relationships"
+    val gone = spark.read.parquet(rel).select("project_key").head.getString(0)
+    assert(new java.io.File(s"$rel/project_key=$gone").exists())
+    val others = edgeRows(spark.read.parquet(rel).filter(col("project_key") =!= gone))
+    // every issue of `gone` changes, and the source now reports no links
+    // for any of them
+    val bumped = issues.withColumn("updated",
+      when(col("project_key") === gone, lit(java.sql.Timestamp.valueOf("2002-01-03 00:00:00")))
+        .otherwise(col("updated")))
+    val r = SyncEngine.run(spark, bumped, links.filter(col("project_key") =!= gone),
+      repo, statePath, SyncOptions(incremental = true),
+      now = java.sql.Timestamp.valueOf("2002-01-04 00:00:00"))
+    assert(r.successful == issues.filter(col("project_key") === gone).count())
+    assert(!new java.io.File(s"$rel/project_key=$gone").exists())
+    assert(edgeRows(spark.read.parquet(rel)) == others)
+  }
+
+  test("incremental sync leaves one parquet file per touched edge partition") {
+    val work = Files.createTempDirectory("graft-edgefiles").toString
+    val repo = s"$work/repo"
+    val statePath = s"$work/state"
+    val issues = Tables.issues(spark, sf)
+    val links = Tables.links(spark, sf)
+    SyncEngine.run(spark, issues, links, repo, statePath, SyncOptions(), now = now1)
+    // one issue with edges in each of two projects changes
+    val rel = s"$repo/relationships"
+    val victims = spark.read.parquet(rel).groupBy("project_key").agg(min("src"))
+      .orderBy("project_key").limit(2).collect().map(_.getString(1)).toSeq
+    val bumped = issues.withColumn("updated",
+      when(col("key").isin(victims: _*), lit(java.sql.Timestamp.valueOf("2002-01-03 00:00:00")))
+        .otherwise(col("updated")))
+    val r = SyncEngine.run(spark, bumped, links, repo, statePath,
+      SyncOptions(incremental = true), now = java.sql.Timestamp.valueOf("2002-01-04 00:00:00"))
+    assert(r.successful == 2)
+    val touched = issues.filter(col("key").isin(victims: _*))
+      .select("project_key").collect().map(_.getString(0)).toSet
+    assert(touched.size == 2)
+    touched.foreach { p =>
+      val parts = new java.io.File(s"$rel/project_key=$p").listFiles()
+        .filter(_.getName.startsWith("link_type="))
+      assert(parts.nonEmpty)
+      parts.foreach { d =>
+        val files = d.listFiles().count(_.getName.endsWith(".parquet"))
+        assert(files == 1, s"$p/${d.getName}: $files files")
+      }
+    }
   }
 
   test("failed file writes are counted and stay out of state for retry") {

@@ -295,6 +295,114 @@ class SourceSpec extends AnyFunSuite {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(path + "__old")))
   }
 
+  test("upsertEdges keeps the other edges of an empty project key") {
+    import spark.implicits._
+    val path = s"${Files.createTempDirectory("graft-emptypk")}/relationships"
+    def edf(rows: (String, String, String, String, String)*) =
+      rows.toDF("src", "link_type", "direction", "dst", "project_key")
+    // a key without a numeric suffix gets project_key "" from fromWire; Spark
+    // writes that partition value as the default partition and reads it
+    // back as null
+    Ingest.writeEdges(edf(("NODASH", "epic", "outward", "E-1", ""),
+      ("OTHER", "epic", "outward", "E-2", ""),
+      ("P1-1", "epic", "outward", "E-3", "P1")), path)
+    Ingest.upsertEdges(edf(("NODASH", "epic", "outward", "E-9", "")),
+      Seq(("NODASH", "")).toDF("key", "project_key"), path)
+    val after = spark.read.parquet(path)
+      .select("src", "dst").as[(String, String)].collect().toSet
+    assert(after == Set(("NODASH", "E-9"), ("OTHER", "E-2"), ("P1-1", "E-3")))
+  }
+
+  /** An edge table with four projects and three link types. */
+  private def edgeFixture(prefix: String) = {
+    import spark.implicits._
+    val path = s"${Files.createTempDirectory(prefix)}/relationships"
+    Ingest.writeEdges(Seq(
+      ("P1-1", "epic", "outward", "E-1", "P1"),
+      ("P1-1", "blocks", "outward", "P1-9", "P1"),
+      ("P1-2", "epic", "outward", "E-1", "P1"),
+      ("P2-1", "epic", "outward", "E-2", "P2"),
+      ("P2-2", "blocks", "inward", "P2-5", "P2"),
+      ("P3-1", "parent", "outward", "P3-0", "P3"),
+      ("P3-2", "blocks", "outward", "P1-1", "P3"),
+      ("P4-1", "epic", "outward", "E-4", "P4"))
+      .toDF("src", "link_type", "direction", "dst", "project_key"), path)
+    path
+  }
+
+  // An upsert touching P1, P2, P3 (its swap order): P1-1 changes link type,
+  // P2 loses every edge, P3-2 changes target. Each injected crash must leave
+  // a table the next edge-table writer completes.
+  {
+    import graft.state.DirSwap
+    val crashes = (0 until 3).flatMap(k => Seq(DirSwap.AfterOut(k), DirSwap.AfterSwap(k))) :+
+      DirSwap.BeforeCleanup
+    crashes.foreach { crash =>
+      test(s"upsertEdges crash $crash: the next writer and upsert leave the complete table") {
+        import spark.implicits._
+        def edf(rows: (String, String, String, String, String)*) =
+          rows.toDF("src", "link_type", "direction", "dst", "project_key")
+        def keys(ks: String*) =
+          ks.map(k => (k, k.takeWhile(_ != '-'))).toDF("key", "project_key")
+        val path = edgeFixture("graft-upsert-crash")
+        def table() = spark.read.parquet(path)
+          .select("src", "link_type", "dst").as[(String, String, String)].collect().toSet
+        val fs = new org.apache.hadoop.fs.Path(path)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        intercept[DirSwap.InjectedCrash] {
+          Ingest.upsertEdges(
+            edf(("P1-1", "parent", "outward", "E-1", "P1"),
+              ("P3-2", "blocks", "outward", "P3-7", "P3")),
+            keys("P1-1", "P2-1", "P2-2", "P3-2"), path, Some(crash))
+        }
+        val afterU1 = Set(("P1-1", "parent", "E-1"), ("P1-2", "epic", "E-1"),
+          ("P3-1", "parent", "P3-0"), ("P3-2", "blocks", "P3-7"), ("P4-1", "epic", "E-4"))
+        Ingest.compactEdges(spark, path)
+        assert(table() == afterU1)
+        assert(!new java.io.File(s"$path/project_key=P2").exists())
+        assert(!fs.exists(new org.apache.hadoop.fs.Path(path + "__upsert")))
+        assert(!fs.exists(new org.apache.hadoop.fs.Path(path + "__cold")))
+        Ingest.upsertEdges(edf(("P1-2", "epic", "outward", "E-5", "P1")), keys("P1-2"), path)
+        assert(table() == afterU1 - (("P1-2", "epic", "E-1")) + (("P1-2", "epic", "E-5")))
+      }
+    }
+  }
+
+  test("upsertEdges starts at most 5 Spark jobs") {
+    import spark.implicits._
+    val path = edgeFixture("graft-upsert-jobs")
+    val batch = Seq(("P1-1", "parent", "outward", "E-1", "P1"),
+      ("P3-2", "blocks", "outward", "P3-7", "P3"))
+      .toDF("src", "link_type", "direction", "dst", "project_key")
+    // the engine hands over its cached, materialized batch
+    val changed = Seq(("P1-1", "P1"), ("P2-1", "P2"), ("P3-2", "P3"))
+      .toDF("key", "project_key").cache()
+    changed.count()
+    val sc = spark.sparkContext
+    val group = "upsert-edges-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "upsertEdges")
+      try Ingest.upsertEdges(batch, changed, path) finally sc.clearJobGroup()
+      org.apache.spark.sql.graftbridge.drainListenerBus(sc)
+    } finally {
+      sc.removeSparkListener(listener)
+      changed.unpersist()
+    }
+    // the project collect and the one staged write, each split into jobs by
+    // AQE; a chain of collects, a checkpoint and a dynamic overwrite started
+    // 12 on this fixture
+    assert(jobs.get <= 5, s"${jobs.get} jobs")
+    assert(spark.read.parquet(path).filter(col("src") === "P3-2").select("dst")
+      .as[String].collect().toSeq == Seq("P3-7"))
+  }
+
   test("adaptive fetch honors Retry-After, spreads budget, bounds retries") {
     import graft.sources.Throttle
     import graft.sources.Throttle.RateSignal
