@@ -97,7 +97,9 @@ object SyncEngine {
     // metric — a non-incremental run derives total from the written count
     // instead of paying an extra pass.
     progress.step("filtering", 20)
-    val state = StateStore.load(spark, statePath)
+    // base + pending deltas: a CdcStream on the same ledger commits deltas
+    // (StateStore.appendDelta), and issues it synced must not look new
+    val state = StateStore.loadResolved(spark, statePath)
     // project scoping applies to the *selected* set so the skipped metric is
     // computed over the same universe the change filter saw
     val scoped =
@@ -152,9 +154,10 @@ object SyncEngine {
       //   (a) YAML + git-blob write (S6+S9 fused, main thread): executors
       //       write their partitions' YAML files AND the content-addressed
       //       git objects, so the hashing/object-creation bulk of `git add`
-      //       runs parallel with the data. Metrics derive from task OUTPUT
-      //       (collected (path,sha) rows), which under speculative execution
-      //       or task retry counts only the winning attempt.
+      //       runs parallel with the data. Metrics derive from the
+      //       per-partition manifests each task publishes by atomic rename,
+      //       which under speculative execution or task retry count only
+      //       the winning attempt.
       //   (b) edge write (S11): depends only on the batch, not the YAML
       //       files or the commit (separate pathspec: relationships/ vs
       //       projects/). Awaited BEFORE the state swap — state must not
@@ -299,7 +302,9 @@ object SyncEngine {
 
   def recover(spark: SparkSession, repoDir: String, statePath: String,
       repair: Boolean = false): DataFrame = {
-    val state = StateStore.load(spark, statePath)
+    // base + pending deltas, or every issue streamed since the last
+    // compaction would read as an orphaned file
+    val state = StateStore.loadResolved(spark, statePath)
     val filesOnDisk = Yaml.fileRecordChecksums(spark, repoDir)
     // Materialize the findings as a parquet SNAPSHOT of the tree at scan
     // time (the reference returns in-memory result lists the same way,
@@ -316,7 +321,7 @@ object SyncEngine {
     if (repair) {
       // orphaned files: stream the subset — one partition's rows in driver
       // memory at a time — deleting as we go and batching the git index
-      // removals (commitIndexInfo never stages deletions, so skipping the
+      // removals (feedIndexInfo never stages deletions, so skipping the
       // index here would resurface the paths in every future tree)
       val haveGit = new java.io.File(repoDir, ".git").exists()
       val pending = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -334,7 +339,10 @@ object SyncEngine {
       }
       flush()
       // missing-file keys: a distributed anti-join against the snapshot —
-      // the mass-drift case never passes through the driver at all
+      // the mass-drift case never passes through the driver at all. The
+      // rewrite replaces the base only, so fold the deltas in first: a
+      // delta left behind would bring a dropped key back
+      StateStore.compactDeltas(spark, statePath)
       StateStore.save(
         StateStore.load(spark, statePath).join(
           findings.filter(col("issue") === "missing_file").select("key"),

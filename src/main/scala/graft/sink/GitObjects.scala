@@ -13,8 +13,9 @@ import java.util.zip.{Deflater, DeflaterOutputStream}
   *
   * This distributes the hashing + object creation that `git add` would do
   * serially on the driver (reference's per-issue commit loop:
-  * pkg/git/git.go:214-287); the driver then commits index metadata only
-  * ([[GitRepo.commitIndexInfo]]).
+  * pkg/git/git.go:214-287); the driver then commits tree metadata only
+  * ([[GitRepo.feedIndexInfo]] + [[GitRepo.commitFedIndex]], or
+  * [[GitRepo.commitTreeDirect]]).
   */
 object GitObjects {
 

@@ -24,17 +24,8 @@ object GitRepo {
     (code, out.result())
   }
 
-  private def runWithInput(dir: File, input: String, args: String*): (Int, String) = {
-    val out = new StringBuilder
-    val logger = ProcessLogger(l => out.append(l).append('\n'), l => out.append(l).append('\n'))
-    val code = (Process("git" +: args.toSeq, dir) #<
-      new java.io.ByteArrayInputStream(input.getBytes(StandardCharsets.UTF_8))).!(logger)
-    (code, out.result())
-  }
-
-  /** Run git with stdin produced incrementally by `write` — the streaming
-    * variant of [[runWithInput]] for inputs too large to materialize (a huge
-    * batch's index-info lines).
+  /** Run git with stdin produced incrementally by `write`, so an input never
+    * has to be materialized (a huge batch's index-info lines).
     */
   private def runStreamingInput(dir: File, write: java.io.OutputStream => Unit,
       args: String*): (Int, String) = {
@@ -318,51 +309,9 @@ object GitRepo {
     Map("branch" -> branch.trim, "dirty" -> porcelain.trim.nonEmpty.toString)
   }
 
-  /** Stage `pathspec` and commit with `message`. One commit per batch.
-    * Returns the new commit hash, or None when there was nothing to commit
-    * (idempotent re-runs).
-    */
-  def commitBatch(repoDir: String, message: String,
-      pathspec: String = "projects"): Option[String] = {
-    val dir = new File(repoDir)
-    val (addCode, addOut) = run(dir, "add", "-A", "--", pathspec)
-    require(addCode == 0, s"git add failed: $addOut")
-    val (diffCode, _) = run(dir, "diff", "--cached", "--quiet")
-    if (diffCode == 0) None // nothing staged
-    else {
-      val msgFile = File.createTempFile("graft-commit", ".txt")
-      try {
-        java.nio.file.Files.write(msgFile.toPath,
-          message.getBytes(StandardCharsets.UTF_8))
-        val (code, out) = run(dir,
-          "-c", "user.name=graft-sync", "-c", "user.email=graft-sync@localhost",
-          "commit", "-q", "-F", msgFile.getAbsolutePath)
-        require(code == 0, s"git commit failed: $out")
-        val (_, hash) = run(dir, "rev-parse", "HEAD")
-        Some(hash.trim)
-      } finally msgFile.delete()
-    }
-  }
-
-  /** Commit a batch whose blob objects are ALREADY in the object store
-    * (written distributed by [[Yaml.writeIssuesWithBlobs]] /
-    * [[GitObjects.writeBlob]]): feed `(path, sha)` pairs straight into the
-    * index (`update-index --index-info` — no worktree scan, no re-hash, no
-    * serial object creation), then `write-tree` + `commit-tree` +
-    * `update-ref`. The driver's cost is one index write and a tree build,
-    * independent of file CONTENT size. Returns the commit hash, or None when
-    * the resulting tree equals HEAD's (idempotent re-runs).
-    */
-  def commitIndexInfo(repoDir: String, message: String,
-      entries: Seq[(String, String)]): Option[String] = {
-    if (entries.isEmpty) return None
-    feedIndexInfo(repoDir, entries.iterator)
-    commitFedIndex(repoDir, message)
-  }
-
   /** Stage deletions for paths already removed from the worktree
     * (`update-index --remove --stdin`; a no-op for paths still present or
-    * never indexed). Needed alongside [[commitIndexInfo]], which only
+    * never indexed). Needed alongside [[feedIndexInfo]], which only
     * adds/updates entries: without this, files deleted by
     * [[graft.engine.SyncEngine.recover]]'s repair pass would stay in every
     * future committed tree and leave `git status` permanently dirty.
@@ -372,9 +321,12 @@ object GitRepo {
     // clear any tree-direct staleness BEFORE staging removals — once they are
     // staged, a later read-tree repair would silently resurrect the paths
     syncIndexToHead(repoDir)
-    val input = paths.mkString("", "\n", "\n")
-    val (code, out) = runWithInput(new File(repoDir), input,
-      "update-index", "--remove", "--stdin")
+    val (code, out) = runStreamingInput(new File(repoDir), os => {
+      val w = new java.io.BufferedWriter(
+        new java.io.OutputStreamWriter(os, StandardCharsets.UTF_8), 1 << 16)
+      paths.foreach { p => w.write(p); w.write("\n") }
+      w.flush()
+    }, "update-index", "--remove", "--stdin")
     require(code == 0, s"git update-index --remove failed: $out")
   }
 

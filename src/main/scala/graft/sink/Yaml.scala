@@ -53,7 +53,8 @@ object Yaml {
     * block(s) per project — per-commit tree work is O(batch + one block),
     * constant as the corpus grows. Keys without a numeric suffix fall back
     * to a 256-way md5 shard (same derivability, hash distribution).
-    * SQL twin: [[graft.state.StateStore.shardSegCol]].
+    * The writers and the ledger derive it in-plan through the SQL twin
+    * [[graft.state.StateStore.shardSegCol]] ([[issuePath]]).
     */
   def shardSeg(key: String): String = {
     val dash = key.lastIndexOf('-')
@@ -222,125 +223,90 @@ object Yaml {
     def failed: Long = failedKeys.length.toLong
   }
 
-  /** S6/S8: write one YAML file per issue under
-    * `repoDir/projects/{project}/issues/`, creating the directory tree
-    * (reference: pkg/schema/yaml.go:88-116 CreateDirectoryStructure).
-    * A row whose file cannot be written counts as failed and does not abort
-    * the batch — the reference records failed issues and syncs the rest.
+  /** The one issue-path layout rule, `projects/{p}/issues/[{shard}/]{key}.yaml`
+    * (reference: pkg/schema/yaml.go:118-122; the shard segment only in the
+    * sharded layout, [[shardSeg]]), as a column: the writers project it, the
+    * state ledger records it ([[graft.state.StateStore.fromIssues]]), so the
+    * manifest lines and the ledger's `file_path` name the same file.
+    */
+  def issuePath(project: Column, key: Column, sharded: Boolean): Column = {
+    val shard =
+      if (sharded) concat(graft.state.StateStore.shardSegCol(key), lit("/"))
+      else lit("")
+    concat(lit("projects/"), project, lit("/issues/"), shard, key, lit(".yaml"))
+  }
+
+  /** `(key, path, yaml)` rows for the writers: partial schemas (e.g. a CDC
+    * stream carrying only changed fields) are completed with nulls — absent
+    * columns persist as empty — and the YAML document is rendered in the
+    * projection (native YamlRender, stays in codegen over unsafe rows), so a
+    * writer task converts three flat strings per issue, never the
+    * relationship arrays.
+    */
+  private def rendered(issues: DataFrame, sharded: Boolean): DataFrame = {
+    val complete = (columns ++ relColumns).foldLeft(issues) { (df, c) =>
+      if (df.columns.contains(c)) df
+      else df.withColumn(c, lit(null).cast(relType(c)))
+    }
+    complete.select(col("key"),
+      issuePath(col("project_key"), col("key"), sharded).as("path"),
+      graft.functions.YamlRender.forIssue(complete).as("yaml"))
+  }
+
+  /** The one per-partition row writer over [[rendered]] rows: each file lands
+    * at `repoDir/path`, with one createDirectories syscall per directory per
+    * partition, not per row. `written(path, bytes)` runs inside the row's
+    * failure guard, so an IOException from it fails the row like a failed
+    * file write: the row goes to `failed(key)` and the batch goes on — the
+    * reference records failed issues and syncs the rest.
+    */
+  private def writeRows(repoDir: String, rows: Iterator[Row])(
+      written: (String, Array[Byte]) => Unit, failed: String => Unit): Unit = {
+    val made = new java.util.HashMap[String, java.nio.file.Path]()
+    rows.foreach { r =>
+      val key = r.getString(0)
+      try {
+        val rel = r.getString(1)
+        val slash = rel.lastIndexOf('/')
+        val d = rel.substring(0, slash)
+        var dir = made.get(d)
+        if (dir == null) {
+          dir = Paths.get(repoDir, d)
+          Files.createDirectories(dir)
+          made.put(d, dir)
+        }
+        val bytes = r.getString(2).getBytes(StandardCharsets.UTF_8)
+        Files.write(dir.resolve(rel.substring(slash + 1)), bytes)
+        written(rel, bytes)
+      } catch { case _: java.io.IOException => failed(key) }
+    }
+  }
+
+  /** S6/S8: write one YAML file per issue at [[issuePath]] under `repoDir`,
+    * creating the directory tree (reference: pkg/schema/yaml.go:88-116
+    * CreateDirectoryStructure) — no git objects. The Sink query and a CDC
+    * stream without git commits write through this.
     */
   def writeIssuesCounted(issues: DataFrame, repoDir: String,
       sharded: Boolean = false): WriteResult = {
     val counter = issues.sparkSession.sparkContext.longAccumulator("yaml_written")
     val failures = issues.sparkSession.sparkContext
       .collectionAccumulator[String]("yaml_failed")
-    // tolerate partial schemas (e.g. a CDC stream carrying only changed
-    // fields): absent columns persist as empty/null
-    val complete = (columns ++ relColumns).foldLeft(issues) { (df, c) =>
-      if (df.columns.contains(c)) df
-      else df.withColumn(c, lit(null).cast(relType(c)))
-    }
-    // render the YAML document in the projection (native YamlRender, stays in
-    // codegen over unsafe rows) — the writer task converts three flat strings
-    // per issue, never the relationship arrays
-    val rendered = complete.select(col("key"), col("project_key"),
-      graft.functions.YamlRender.forIssue(complete).as("yaml"))
-    rendered.foreachPartition { rows: Iterator[Row] =>
-      // per-partition directory cache: one createDirectories syscall per
-      // (project, shard), not per row
-      val made = new java.util.HashMap[String, java.nio.file.Path]()
-      rows.foreach { r =>
-        val key = r.getString(0)
-        try {
-          val proj = r.getString(1)
-          val sub = if (sharded) shardSeg(key) else ""
-          var dir = made.get(s"$proj/$sub")
-          if (dir == null) {
-            dir = Paths.get(repoDir, "projects", proj, "issues")
-            if (sharded) dir = dir.resolve(sub)
-            Files.createDirectories(dir)
-            made.put(s"$proj/$sub", dir)
-          }
-          Files.write(dir.resolve(s"$key.yaml"),
-            r.getString(2).getBytes(StandardCharsets.UTF_8))
-          counter.add(1)
-        } catch { case _: java.io.IOException => failures.add(key) }
-      }
+    rendered(issues, sharded).foreachPartition { rows: Iterator[Row] =>
+      writeRows(repoDir, rows)((_, _) => counter.add(1), failures.add)
     }
     // dedup: under speculative execution or partial task retry the same key
     // can be attempted more than once (and can even succeed in one attempt
     // while failing in another — keeping it failed is safe: the file exists
     // but the key stays out of state and is retried next run). Distinct keys
     // keep written/failed/attempted reconcilable on a cluster.
-    WriteResult(counter.value,
-      scala.jdk.CollectionConverters.ListHasAsScala(failures.value).asScala.toSeq.distinct)
+    WriteResult(counter.value, failures.value.asScala.toSeq.distinct)
   }
 
   /** [[writeIssuesCounted]] returning only the written count. */
   def writeIssues(issues: DataFrame, repoDir: String,
       sharded: Boolean = false): Long =
     writeIssuesCounted(issues, repoDir, sharded).written
-
-  /** Outcome of [[writeIssuesWithBlobs]]: the `(relative path, blob sha)` of
-    * every file written — exactly what the driver's index-only commit needs —
-    * plus the failed keys.
-    */
-  final case class BlobWriteResult(entries: Seq[(String, String)],
-      failedKeys: Seq[String]) {
-    def written: Long = entries.length.toLong
-    def failed: Long = failedKeys.length.toLong
-  }
-
-  /** S6+S9 fused: each task writes its partition's YAML files AND the
-    * corresponding git loose blob objects (content-addressed, so concurrent /
-    * retried tasks converge on identical object files), returning
-    * `(path, sha)` pairs to the driver. Hashing and object creation — the
-    * serial bulk of `git add` on a 20k-file batch — thus run distributed with
-    * the data; the driver's commit is reduced to index metadata
-    * ([[GitRepo.commitIndexInfo]]). Results come back as task OUTPUT (not
-    * accumulators), so a retried or speculatively-executed task cannot
-    * double-count: only the winning attempt's rows are collected.
-    *
-    * The returned entry list lives in driver memory — fine for bounded
-    * batches; a corpus-scale first sync should use
-    * [[writeIssuesWithBlobsManifest]], which streams the entries through
-    * on-disk per-partition manifests instead (what [[graft.engine.SyncEngine]]
-    * runs).
-    *
-    * Requires an initialized repo ([[GitRepo.init]]) at `repoDir`.
-    */
-  def writeIssuesWithBlobs(issues: DataFrame, repoDir: String): BlobWriteResult = {
-    val complete = (columns ++ relColumns).foldLeft(issues) { (df, c) =>
-      if (df.columns.contains(c)) df
-      else df.withColumn(c, lit(null).cast(relType(c)))
-    }
-    import issues.sparkSession.implicits._
-    val rendered = complete.select(col("key"), col("project_key"),
-      graft.functions.YamlRender.forIssue(complete).as("yaml"))
-    val results = rendered
-      .mapPartitions { rows: Iterator[Row] =>
-        val made = new java.util.HashMap[String, java.nio.file.Path]()
-        val gitDir = Paths.get(repoDir, ".git")
-        rows.map { r =>
-          val key = r.getString(0)
-          try {
-            val proj = r.getString(1)
-            var dir = made.get(proj)
-            if (dir == null) {
-              dir = Paths.get(repoDir, "projects", proj, "issues")
-              Files.createDirectories(dir)
-              made.put(proj, dir)
-            }
-            val bytes = r.getString(2).getBytes(StandardCharsets.UTF_8)
-            Files.write(dir.resolve(s"$key.yaml"), bytes)
-            val sha = GitObjects.writeBlob(gitDir, bytes)
-            (key, s"projects/$proj/issues/$key.yaml", sha, true)
-          } catch { case _: java.io.IOException => (key, "", "", false) }
-        }
-      }.collect()
-    BlobWriteResult(
-      results.collect { case (_, path, sha, true) => (path, sha) }.toSeq,
-      results.collect { case (key, _, _, false) => key }.distinct.toSeq)
-  }
 
   /** One parsed issue link (the reference's IssueLink,
     * pkg/client/client.go:69-75; `type` on the wire → `link_type` in the
@@ -362,7 +328,6 @@ object Yaml {
     def entries: Iterator[(String, String)] =
       BlobManifest.scan(dir).collect { case Right(e) => e }
     def delete(): Unit = {
-      import scala.jdk.CollectionConverters._
       if (Files.isDirectory(dir)) {
         Files.list(dir).iterator().asScala.foreach(Files.deleteIfExists(_))
         Files.deleteIfExists(dir)
@@ -372,13 +337,23 @@ object Yaml {
   }
 
   object BlobManifest {
+    /** The handle of a published manifest dir, counted in one streaming scan. */
+    private[sink] def load(dir: java.nio.file.Path): BlobManifest = {
+      var written = 0L
+      val failedKeys = scala.collection.mutable.LinkedHashSet.empty[String]
+      scan(dir).foreach {
+        case Right(_) => written += 1
+        case Left(k) => failedKeys += k
+      }
+      BlobManifest(dir, written, failedKeys.toSeq)
+    }
+
     /** Lazily stream manifest lines: `Left(failedKey)` / `Right((path, sha))`.
       * Files are read in partition order; each is closed before the next
       * opens.
       */
     private[sink] def scan(
         dir: java.nio.file.Path): Iterator[Either[String, (String, String)]] = {
-      import scala.jdk.CollectionConverters._
       val parts = Files.list(dir).iterator().asScala.toSeq.sortBy(_.getFileName.toString)
       parts.iterator.flatMap { p =>
         Files.readAllLines(p, StandardCharsets.UTF_8).asScala.iterator.flatMap { line =>
@@ -408,7 +383,6 @@ object Yaml {
     * order across a multi-batch cadence window.
     */
   def recoverManifests(repoDir: String): Seq[BlobManifest] = {
-    import scala.jdk.CollectionConverters._
     val root = Paths.get(repoDir, ".git", "graft-manifest")
     if (!Files.isDirectory(root)) return Nil
     Files.list(root).iterator().asScala.toSeq
@@ -419,81 +393,50 @@ object Yaml {
         Files.list(dir).iterator().asScala
           .filter(_.getFileName.toString.contains(".attempt-"))
           .foreach(Files.deleteIfExists(_))
-        var written = 0L
-        val failedKeys = scala.collection.mutable.LinkedHashSet.empty[String]
-        BlobManifest.scan(dir).foreach {
-          case Right(_) => written += 1
-          case Left(k) => failedKeys += k
-        }
-        BlobManifest(dir, written, failedKeys.toSeq)
+        BlobManifest.load(dir)
       }
   }
 
-  /** [[writeIssuesWithBlobs]] with a MANIFEST handoff instead of a driver
-    * collect: each task spills its partition's `(sha, path)` outcomes to a
-    * manifest file (temp + atomic rename — a retried or speculative attempt
-    * republishes identical content, so the winning file is always
-    * well-formed). Driver memory is bounded by one partition's manifest, not
-    * the batch; the manifest feeds `git update-index` by streaming
-    * ([[GitRepo.feedIndexInfo]]) and persists until [[BlobManifest.delete]],
-    * so commit retries re-feed from disk.
+  /** S6+S9 fused, what sync and stream run: each task writes its
+    * partition's YAML files AND the corresponding git loose blob objects
+    * (content-addressed, so concurrent / retried tasks converge on identical
+    * object files) — the hashing and object creation that `git add` would do
+    * serially on the driver run distributed with the data. The `(sha, path)`
+    * outcomes go to a per-partition MANIFEST file instead of a driver collect
+    * (temp + atomic rename — a retried or speculative attempt republishes
+    * identical content, so the winning file is always well-formed). Driver
+    * memory is bounded by one partition's manifest, not the batch; the
+    * manifest feeds `git update-index` ([[GitRepo.feedIndexInfo]]) or the
+    * tree-direct commit ([[GitRepo.commitTreeDirect]]) by streaming and
+    * persists until [[BlobManifest.delete]], so commit retries re-feed from
+    * disk.
+    *
+    * Requires an initialized repo ([[GitRepo.init]]) at `repoDir`.
     */
   def writeIssuesWithBlobsManifest(issues: DataFrame, repoDir: String,
       sharded: Boolean = false): BlobManifest = {
-    val complete = (columns ++ relColumns).foldLeft(issues) { (df, c) =>
-      if (df.columns.contains(c)) df
-      else df.withColumn(c, lit(null).cast(relType(c)))
-    }
     val manifestDir = Paths.get(repoDir, ".git", "graft-manifest",
       java.util.UUID.randomUUID().toString)
     Files.createDirectories(manifestDir)
     val manifestDirStr = manifestDir.toString
-    val rendered = complete.select(col("key"), col("project_key"),
-      graft.functions.YamlRender.forIssue(complete).as("yaml"))
-    rendered.foreachPartition { rows: Iterator[Row] =>
+    rendered(issues, sharded).foreachPartition { rows: Iterator[Row] =>
       val taskManifestDir = Paths.get(manifestDirStr)
       val tc = org.apache.spark.TaskContext.get()
       val part = f"part-${tc.partitionId()}%05d"
       val tmp = taskManifestDir.resolve(s"$part.attempt-${tc.taskAttemptId()}")
-      val made = new java.util.HashMap[String, java.nio.file.Path]()
       val gitDir = Paths.get(repoDir, ".git")
       val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
         Files.newOutputStream(tmp), StandardCharsets.UTF_8), 1 << 16)
-      try {
-        rows.foreach { r =>
-          val key = r.getString(0)
-          try {
-            val proj = r.getString(1)
-            val sub = if (sharded) shardSeg(key) else ""
-            var dir = made.get(s"$proj/$sub")
-            if (dir == null) {
-              dir = Paths.get(repoDir, "projects", proj, "issues")
-              if (sharded) dir = dir.resolve(sub)
-              Files.createDirectories(dir)
-              made.put(s"$proj/$sub", dir)
-            }
-            val bytes = r.getString(2).getBytes(StandardCharsets.UTF_8)
-            Files.write(dir.resolve(s"$key.yaml"), bytes)
-            val sha = GitObjects.writeBlob(gitDir, bytes)
-            val rel =
-              if (sharded) s"projects/$proj/issues/$sub/$key.yaml"
-              else s"projects/$proj/issues/$key.yaml"
-            w.write(s"ok\t$sha\t$rel\n")
-          } catch { case _: java.io.IOException => w.write(s"fail\t$key\n") }
-        }
-      } finally w.close()
+      try writeRows(repoDir, rows)(
+        (rel, bytes) => w.write(s"ok\t${GitObjects.writeBlob(gitDir, bytes)}\t$rel\n"),
+        key => w.write(s"fail\t$key\n"))
+      finally w.close()
       Files.move(tmp, taskManifestDir.resolve(part),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       ()
     }
-    var written = 0L
-    val failedKeys = scala.collection.mutable.LinkedHashSet.empty[String]
-    BlobManifest.scan(manifestDir).foreach {
-      case Right(_) => written += 1
-      case Left(k) => failedKeys += k
-    }
-    BlobManifest(manifestDir, written, failedKeys.toSeq)
+    BlobManifest.load(manifestDir)
   }
 
   /** Flat issue record parsed back from YAML (timestamps re-parsed from the
@@ -509,6 +452,59 @@ object Yaml {
       epic_link: Option[String], parent_issue: Option[String],
       subtasks: Seq[String], issue_links: Seq[YamlLink])
 
+  /** The one scan of the YAML tree: `(src, value)` = (file URI, whole
+    * document) for every `*.yaml` under `repoDir/projects`, in both layouts.
+    * A missing `projects/` root OR an initialized-but-empty tree yields an
+    * empty frame, not a path-does-not-exist AnalysisException from the glob
+    * (the walk short-circuits at the first .yaml, so it is O(dirs) not
+    * O(files)).
+    */
+  private def scanYaml(spark: SparkSession, repoDir: String): DataFrame = {
+    val root = Paths.get(repoDir, "projects")
+    val anyYaml = Files.isDirectory(root) && {
+      val walk = Files.walk(root)
+      try walk.anyMatch(p => p.toString.endsWith(".yaml"))
+      finally walk.close()
+    }
+    if (!anyYaml) {
+      import spark.implicits._
+      return Seq.empty[(String, String)].toDF("src", "value")
+    }
+    spark.read.option("wholetext", "true")
+      .option("recursiveFileLookup", "true")
+      .option("pathGlobFilter", "*.yaml")
+      .text(s"$repoDir/projects")
+      .select(input_file_name().as("src"), col("value"))
+  }
+
+  /** The one field accessor over a parsed YAML record: top-level and
+    * one-level nested scalars as strings, "" when absent — what
+    * [[toYamlString]] writes for a null.
+    */
+  private final class Fields(m: java.util.Map[_, _]) {
+    private def str(o: Any): String = if (o == null) "" else o.toString
+    def apply(k: String): String = str(m.get(k))
+    def apply(k: String, f: String): String = m.get(k) match {
+      case sub: java.util.Map[_, _] => str(sub.get(f))
+      case _ => ""
+    }
+    /** A wire timestamp; null when empty (partial CDC schemas render null
+      * created/updated as "").
+      */
+    def ts(k: String): java.time.LocalDateTime = {
+      val s = apply(k)
+      if (s.isEmpty) null else java.time.LocalDateTime.parse(s, wire)
+    }
+    /** The list at `k.f`, empty when absent. */
+    def list(k: String, f: String): Seq[Any] = m.get(k) match {
+      case sub: java.util.Map[_, _] => sub.get(f) match {
+        case l: java.util.List[_] => l.asScala.toSeq
+        case _ => Nil
+      }
+      case _ => Nil
+    }
+  }
+
   /** S7: read the YAML tree back into the flat issue schema. Layout-agnostic:
     * the recursive lookup reads the flat AND the sharded corpus layouts (and
     * any mix mid-migration) in one scan — key identity lives in the document,
@@ -516,59 +512,28 @@ object Yaml {
     */
   def readIssues(spark: SparkSession, repoDir: String): DataFrame = {
     import spark.implicits._
-    val raw = spark.read.option("wholetext", "true")
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.yaml")
-      .text(s"$repoDir/projects")
-      .as[String]
-    raw.mapPartitions { docs =>
+    scanYaml(spark, repoDir).select("value").as[String].mapPartitions { docs =>
       val yaml = new org.yaml.snakeyaml.Yaml()
-      // writeIssues permits empty timestamps (partial CDC schemas render null
-      // created/updated as "") — read them back as null, don't throw
-      val parseTs = (s: String) =>
-        if (s == null || s.isEmpty) null
-        else java.sql.Timestamp.valueOf(
-          java.time.LocalDateTime.parse(s,
-            java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")))
       docs.map { doc =>
-        val m = yaml.load[java.util.Map[String, Object]](doc).asScala
-        def str(k: String): String = Option(m.get(k).orNull).map(_.toString).getOrElse("")
-        def nested(k: String, f: String): String = m.get(k) match {
-          case Some(sub: java.util.Map[_, _]) =>
-            Option(sub.asInstanceOf[java.util.Map[String, Object]].get(f))
-              .map(_.toString).getOrElse("")
-          case _ => ""
-        }
+        val d = new Fields(yaml.load[java.util.Map[_, _]](doc))
         def opt(s: String): Option[String] = if (s.isEmpty) None else Some(s)
-        val rel = m.get("relationships") match {
-          case Some(sub: java.util.Map[_, _]) =>
-            sub.asInstanceOf[java.util.Map[String, Object]].asScala
-          case _ => scala.collection.mutable.Map.empty[String, Object]
-        }
-        val subtasks = rel.get("subtasks") match {
-          case Some(l: java.util.List[_]) => l.asScala.map(_.toString).toSeq
-          case _ => Seq.empty[String]
-        }
-        val issueLinks = rel.get("issue_links") match {
-          case Some(l: java.util.List[_]) => l.asScala.collect {
-            case lm: java.util.Map[_, _] =>
-              val lmm = lm.asInstanceOf[java.util.Map[String, Object]]
-              def lf(k: String): String =
-                Option(lmm.get(k)).map(_.toString).getOrElse("")
-              YamlLink(lf("type"), lf("direction"), lf("issue_key"))
-          }.toSeq
-          case _ => Seq.empty[YamlLink]
-        }
+        def ts(k: String): java.sql.Timestamp =
+          Option(d.ts(k)).map(java.sql.Timestamp.valueOf).orNull
         YamlIssue(
-          str("key"), str("project"), str("summary"), str("description"),
-          nested("status", "name"), nested("status", "category"),
-          nested("assignee", "name"), nested("assignee", "email"),
-          nested("reporter", "name"), nested("reporter", "email"),
-          parseTs(str("created")), parseTs(str("updated")),
-          str("priority"), str("issuetype"), opt(str("sprint")),
-          opt(nested("relationships", "epic_link")),
-          opt(nested("relationships", "parent_issue")),
-          subtasks, issueLinks)
+          d("key"), d("project"), d("summary"), d("description"),
+          d("status", "name"), d("status", "category"),
+          d("assignee", "name"), d("assignee", "email"),
+          d("reporter", "name"), d("reporter", "email"),
+          ts("created"), ts("updated"),
+          d("priority"), d("issuetype"), opt(d("sprint")),
+          opt(d("relationships", "epic_link")),
+          opt(d("relationships", "parent_issue")),
+          d.list("relationships", "subtasks").map(_.toString),
+          d.list("relationships", "issue_links").collect {
+            case lm: java.util.Map[_, _] =>
+              val l = new Fields(lm)
+              YamlLink(l("type"), l("direction"), l("issue_key"))
+          })
       }
     }.toDF()
   }
@@ -584,57 +549,26 @@ object Yaml {
     */
   def fileRecordChecksums(spark: SparkSession, repoDir: String): DataFrame = {
     import spark.implicits._
-    // a missing projects/ root OR an initialized-but-empty tree must yield an
-    // empty frame, not a path-does-not-exist AnalysisException from the glob
-    // (the walk short-circuits at the first .yaml, so it is O(dirs) not O(files))
-    val root = Paths.get(repoDir, "projects")
-    val anyYaml = Files.isDirectory(root) && {
-      val walk = Files.walk(root)
-      try walk.anyMatch(p => p.toString.endsWith(".yaml"))
-      finally walk.close()
-    }
-    if (!anyYaml)
-      return Seq.empty[(String, String)].toDF("file_path", "checksum")
-    val raw = spark.read.option("wholetext", "true")
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.yaml")
-      .text(s"$repoDir/projects")
-      .select(input_file_name().as("src"), col("value"))
-      .as[(String, String)]
-    raw.mapPartitions { docs =>
+    scanYaml(spark, repoDir).as[(String, String)].mapPartitions { docs =>
       val yaml = new org.yaml.snakeyaml.Yaml()
-      val wireFmt = java.time.format.DateTimeFormatter
-        .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
       docs.map { case (src, doc) =>
         // both layouts: projects/{proj}/issues/[{shard}/]{key}.yaml
         val rel = src.replaceFirst(
           "^.*?(projects/[^/]+/issues/(?:[^/]+/)?[^/]+\\.yaml)$", "$1")
         val checksum = try {
-          val m = yaml.load[java.util.Map[String, Object]](doc).asScala
-          def str(k: String): String =
-            Option(m.get(k).orNull).map(_.toString).getOrElse("")
-          def nested(k: String, f: String): String = m.get(k) match {
-            case Some(sub: java.util.Map[_, _]) =>
-              Option(sub.asInstanceOf[java.util.Map[String, Object]].get(f))
-                .map(_.toString).getOrElse("")
-            case _ => ""
-          }
-          def ts(k: String): String = {
-            val s = str(k)
-            if (s.isEmpty) ""
-            else graft.state.StateStore.tsCastString(
-              java.time.LocalDateTime.parse(s, wireFmt))
-          }
+          val d = new Fields(yaml.load[java.util.Map[_, _]](doc))
+          def ts(k: String): String =
+            Option(d.ts(k)).map(graft.state.StateStore.tsCastString).getOrElse("")
           // StateStore.checksumColumns (= Yaml.columns) order
           graft.state.StateStore.recordChecksumJvm(Array(
-            str("key"), str("project"), str("summary"), str("description"),
-            nested("status", "name"), nested("status", "category"),
-            nested("assignee", "name"), nested("assignee", "email"),
-            nested("reporter", "name"), nested("reporter", "email"),
+            d("key"), d("project"), d("summary"), d("description"),
+            d("status", "name"), d("status", "category"),
+            d("assignee", "name"), d("assignee", "email"),
+            d("reporter", "name"), d("reporter", "email"),
             ts("created"), ts("updated"),
-            str("priority"), str("issuetype"), str("sprint"),
-            nested("relationships", "epic_link"),
-            nested("relationships", "parent_issue")))
+            d("priority"), d("issuetype"), d("sprint"),
+            d("relationships", "epic_link"),
+            d("relationships", "parent_issue")))
         } catch { case scala.util.control.NonFatal(_) => s"unparseable:$rel" }
         (rel, checksum)
       }

@@ -597,15 +597,9 @@ object StateStore {
       .map(b => f"$b%02x").mkString
   }
 
-  /** Build state rows from a batch of synced issues. `syncedAt` is the run's
-    * logical sync time; checksum is SHA-256 of the persisted record content
-    * ([[recordChecksum]]; reference: pkg/state/manager.go:649-662). Partial
-    * CDC schemas are tolerated — absent fields checksum as empty, matching
-    * what the YAML writer persists for them.
-    */
   /** Column twin of [[graft.sink.Yaml.shardSeg]] — the sharded layout's
-    * directory segment derived in-plan, so the ledger's path always names
-    * the file the writer actually produced: zero-padded
+    * directory segment derived in-plan by [[graft.sink.Yaml.issuePath]], so
+    * the writers and the ledger name the same file: zero-padded
     * `issue-number / 8192` range block for numeric-suffix keys, 2-hex md5
     * fallback otherwise.
     */
@@ -621,6 +615,12 @@ object StateStore {
       .otherwise(substring(md5(key), 1, 2))
   }
 
+  /** Build state rows from a batch of synced issues. `syncedAt` is the run's
+    * logical sync time; checksum is SHA-256 of the persisted record content
+    * ([[recordChecksum]]; reference: pkg/state/manager.go:649-662). Partial
+    * CDC schemas are tolerated — absent fields checksum as empty, matching
+    * what the YAML writer persists for them.
+    */
   def fromIssues(batch: DataFrame, syncedAt: java.sql.Timestamp,
       sharded: Boolean = false): DataFrame = {
     val complete = checksumColumns.foldLeft(batch) { (df, c) =>
@@ -628,16 +628,13 @@ object StateStore {
       else df.withColumn(c, lit(null).cast(
         if (c == "created" || c == "updated") "timestamp" else "string"))
     }
-    val shardSeg =
-      if (sharded) concat(shardSegCol(col("key")), lit("/"))
-      else lit("")
     complete.select(
       col("key"),
       col("project_key"),
       lit(syncedAt).as("last_synced"),
       col("updated").as("last_updated"),
-      concat(lit("projects/"), col("project_key"), lit("/issues/"), shardSeg,
-        col("key"), lit(".yaml")).as("file_path"),
+      graft.sink.Yaml.issuePath(col("project_key"), col("key"), sharded)
+        .as("file_path"),
       lit(null).cast(LongType).as("file_size"),
       recordChecksum(complete.apply).as("checksum"),
       lit("synced").as("sync_status"),

@@ -302,7 +302,7 @@ class EngineSpec extends AnyFunSuite {
     SyncEngine.recover(spark, repo, statePath, repair = true)
     val victimPath = s"projects/P3/issues/$victim.yaml"
     assert(!Files.exists(java.nio.file.Paths.get(repo, victimPath)))
-    // the deletion must be staged, not just on disk (commitIndexInfo can
+    // the deletion must be staged, not just on disk (feedIndexInfo can
     // only add entries, so an un-removed index entry would resurface in
     // every future tree)
     val lsFiles = scala.sys.process.Process(
@@ -328,6 +328,51 @@ class EngineSpec extends AnyFunSuite {
       (c, out.result())
     }
     assert(code == 0 && !lsTree.linesIterator.contains(victimPath))
+  }
+
+  test("batch sync and recover read the ledger's pending stream deltas") {
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-deltas").toString
+    val repo = s"$work/repo"
+    val statePath = s"$work/state"
+    SyncEngine.run(spark, Tables.issues(spark, sf), Tables.links(spark, sf),
+      repo, statePath, SyncOptions(jql = Some("project = P2")), now = now1)
+    // what a CdcStream batch commits: the YAML files plus a state delta
+    // (StateStore.appendDelta), the base untouched
+    def streamBatch(batch: org.apache.spark.sql.DataFrame): Seq[String] = {
+      val wr = graft.sink.Yaml.writeIssuesCounted(batch, repo)
+      assert(wr.failed == 0)
+      StateStore.appendDelta(StateStore.merge(StateStore.empty(spark),
+        StateStore.fromIssues(batch, now1)), statePath)
+      batch.select("key").as[String].collect().toSeq.sorted
+    }
+    val streamed = Tables.issues(spark, sf).filter(col("project_key") === "P4")
+      .orderBy("key").limit(5).cache()
+    val keys = streamBatch(streamed)
+    assert(StateStore.deltaCount(spark, statePath) == 1)
+    def fileOf(k: String) = java.nio.file.Paths.get(repo, "projects",
+      k.takeWhile(_ != '-'), "issues", s"$k.yaml")
+    // the streamed files are tracked by the ledger: nothing to report or delete
+    val report = SyncEngine.recover(spark, repo, statePath, repair = true)
+    assert(report.count() == 0, report.collect().mkString(", "))
+    assert(keys.forall(k => Files.exists(fileOf(k))))
+    // and already synced: an incremental run over them writes nothing
+    val r = SyncEngine.run(spark, streamed, Tables.links(spark, sf), repo,
+      statePath, SyncOptions(incremental = true), now = now2)
+    assert(r.successful == 0 && r.total == keys.length)
+    // a missing streamed file is dropped from the ledger for good: its
+    // delta must not bring the key back after the repair
+    val more = Tables.issues(spark, sf).filter(col("project_key") === "P5")
+      .orderBy("key").limit(3)
+    val victim = streamBatch(more).head
+    Files.delete(fileOf(victim))
+    val repaired = SyncEngine.recover(spark, repo, statePath, repair = true)
+      .select("key", "issue").as[(String, String)].collect().toSeq
+    assert(repaired == Seq((victim, "missing_file")))
+    assert(SyncEngine.recover(spark, repo, statePath).count() == 0)
+    assert(StateStore.loadResolved(spark, statePath)
+      .filter(col("key") === victim).count() == 0)
+    streamed.unpersist()
   }
 
   test("retry with exponential backoff: fails then succeeds, delays grow") {

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,6 +11,32 @@ import graft.sink.{GitRepo, Yaml}
 
 class SinkSpec extends AnyFunSuite {
   import TestSpark._
+
+  /** Sync's commit protocol: distributed YAML + blob write, the manifest fed
+    * into the index, one commit. Returns the batch's `(path, sha)` entries
+    * and the new commit, if any.
+    */
+  private def commitViaIndex(repo: String, batch: org.apache.spark.sql.DataFrame,
+      message: String): (Seq[(String, String)], Option[String]) = {
+    val m = Yaml.writeIssuesWithBlobsManifest(batch, repo)
+    try {
+      GitRepo.feedIndexInfo(repo, m.entries)
+      (m.entries.toSeq, GitRepo.commitFedIndex(repo, message))
+    } finally m.delete()
+  }
+
+  /** The stream's commit protocol: the same write, merged into HEAD's trees
+    * without the index.
+    */
+  private def commitDirect(repo: String, batch: org.apache.spark.sql.DataFrame,
+      message: String): (Seq[(String, String)], Option[String]) = {
+    val m = Yaml.writeIssuesWithBlobsManifest(batch, repo)
+    try (m.entries.toSeq, GitRepo.commitTreeDirect(repo, message, m.entries))
+    finally m.delete()
+  }
+
+  private def git(repo: String, args: String*): Int =
+    scala.sys.process.Process(Seq("git") ++ args, new java.io.File(repo)).!
 
   test("YAML write → read round-trips every field") {
     val repo = Files.createTempDirectory("graft-rt").toString
@@ -153,6 +181,17 @@ class SinkSpec extends AnyFunSuite {
     assert(back.getAs[java.sql.Timestamp]("updated") == null)
   }
 
+  test("readIssues on a tree without YAML records is empty, not an error") {
+    val work = Files.createTempDirectory("graft-noyaml").toString
+    // no projects/ at all
+    val none = Yaml.readIssues(spark, s"$work/repo")
+    assert(none.count() == 0)
+    assert(none.columns.toSeq == Yaml.columns ++ Yaml.relColumns)
+    // projects/ exists but holds no yaml files
+    Files.createDirectories(java.nio.file.Paths.get(work, "repo2", "projects", "P1", "issues"))
+    assert(Yaml.readIssues(spark, s"$work/repo2").count() == 0)
+  }
+
   test("git sink: init, batch commits, clean worktree, conventional messages") {
     val repo = Files.createTempDirectory("graft-git").toString
     GitRepo.init(repo)
@@ -160,19 +199,16 @@ class SinkSpec extends AnyFunSuite {
 
     // batch 1: two issues
     val b1 = Tables.issues(spark, sf).filter(col("project_key") === "P3").limit(2)
-    Yaml.writeIssues(b1, repo)
-    val h1 = GitRepo.commitBatch(repo, "feat(sync): sync batch 1 (2 issues)")
+    val (_, h1) = commitViaIndex(repo, b1, "feat(sync): sync batch 1 (2 issues)")
     assert(h1.isDefined)
     assert(GitRepo.isClean(repo))
 
     // idempotent re-run: same content → nothing to commit
-    Yaml.writeIssues(b1, repo)
-    assert(GitRepo.commitBatch(repo, "feat(sync): rerun").isEmpty)
+    assert(commitViaIndex(repo, b1, "feat(sync): rerun")._2.isEmpty)
 
     // batch 2: more issues → second commit
     val b2 = Tables.issues(spark, sf).filter(col("project_key") === "P4").limit(2)
-    Yaml.writeIssues(b2, repo)
-    val h2 = GitRepo.commitBatch(repo, "feat(sync): sync batch 2 (2 issues)")
+    val (_, h2) = commitViaIndex(repo, b2, "feat(sync): sync batch 2 (2 issues)")
     assert(h2.isDefined && h2 != h1)
 
     val log = GitRepo.log(repo)
@@ -185,9 +221,12 @@ class SinkSpec extends AnyFunSuite {
     val repo = Files.createTempDirectory("graft-blobs").toString
     GitRepo.init(repo)
     val b1 = Tables.issues(spark, sf).filter(col("project_key") === "P1").limit(50).cache()
-    val wr = Yaml.writeIssuesWithBlobs(b1, repo)
-    assert(wr.written == b1.count() && wr.failed == 0)
-    val h1 = GitRepo.commitIndexInfo(repo, "feat(sync): blob batch 1", wr.entries)
+    val m = Yaml.writeIssuesWithBlobsManifest(b1, repo)
+    assert(m.written == b1.count() && m.failed == 0)
+    val entries = m.entries.toSeq
+    GitRepo.feedIndexInfo(repo, m.entries)
+    m.delete()
+    val h1 = GitRepo.commitFedIndex(repo, "feat(sync): blob batch 1")
     assert(h1.isDefined)
     // the hand-rolled loose objects must be bit-valid to git itself
     val fsck = scala.sys.process.Process(
@@ -197,10 +236,9 @@ class SinkSpec extends AnyFunSuite {
     assert(GitRepo.isClean(repo))
     assert(GitRepo.log(repo).head == "feat(sync): blob batch 1")
     // idempotent re-run: same content → same tree → no new commit
-    val wr2 = Yaml.writeIssuesWithBlobs(b1, repo)
-    assert(GitRepo.commitIndexInfo(repo, "feat(sync): rerun", wr2.entries).isEmpty)
+    assert(commitViaIndex(repo, b1, "feat(sync): rerun")._2.isEmpty)
     // content readable back through git (not just the worktree)
-    val (path, sha) = wr.entries.head
+    val (path, sha) = entries.head
     val catOut = scala.sys.process.Process(
       Seq("git", "cat-file", "blob", sha), new java.io.File(repo)).!!
     val onDisk = new String(Files.readAllBytes(
@@ -211,8 +249,9 @@ class SinkSpec extends AnyFunSuite {
 
   test("index-free tree commit: byte-identical trees to the index path, fsck-clean") {
     // two repos, same batches: one committed through the index
-    // (commitIndexInfo), one through direct tree merging (commitTreeDirect) —
-    // the resulting TREE shas must be identical commit by commit, proving the
+    // (feedIndexInfo + commitFedIndex), one through direct tree merging
+    // (commitTreeDirect) — the resulting TREE shas must be identical commit
+    // by commit, proving the
     // hand-written tree objects (sort order, modes, binary shas) match what
     // git itself builds
     val viaIndex = Files.createTempDirectory("graft-tree-a").toString
@@ -228,11 +267,8 @@ class SinkSpec extends AnyFunSuite {
       Tables.issues(spark, sf).filter(col("project_key") === "P1").limit(30)
         .withColumn("summary", concat(col("summary"), lit(" v2"))))
     batches.zipWithIndex.foreach { case (b, i) =>
-      val w1 = Yaml.writeIssuesWithBlobs(b, viaIndex)
-      assert(GitRepo.commitIndexInfo(viaIndex, s"feat(sync): batch $i", w1.entries).isDefined)
-      val w2 = Yaml.writeIssuesWithBlobs(b, direct)
-      assert(GitRepo.commitTreeDirect(direct, s"feat(sync): batch $i",
-        w2.entries.iterator).isDefined)
+      assert(commitViaIndex(viaIndex, b, s"feat(sync): batch $i")._2.isDefined)
+      assert(commitDirect(direct, b, s"feat(sync): batch $i")._2.isDefined)
       assert(treeOf(viaIndex) == treeOf(direct),
         s"batch $i: direct tree diverged from the index-built tree")
     }
@@ -241,8 +277,7 @@ class SinkSpec extends AnyFunSuite {
       Seq("git", "fsck", "--strict"), new java.io.File(direct)).! == 0,
       "git fsck rejected directly-written tree objects")
     // idempotent replay: same adds → same root tree → no commit
-    val replay = Yaml.writeIssuesWithBlobs(batches.last, direct)
-    assert(GitRepo.commitTreeDirect(direct, "replay", replay.entries.iterator).isEmpty)
+    assert(commitDirect(direct, batches.last, "replay")._2.isEmpty)
     // history depth matches (3 commits each), messages intact
     assert(GitRepo.log(direct).take(3) == GitRepo.log(viaIndex).take(3))
   }
@@ -250,7 +285,7 @@ class SinkSpec extends AnyFunSuite {
   test("tree-direct commits: stale index self-heals; modes and special names survive") {
     val repo = Files.createTempDirectory("graft-stale").toString
     GitRepo.init(repo)
-    // seed through porcelain git: an executable (mode 100755) and a filename
+    // seed through plain git: an executable (mode 100755) and a filename
     // with bytes that default `ls-tree` would C-quote — both live in the
     // SAME directory a tree-direct commit will rebuild
     val dir = java.nio.file.Paths.get(repo, "projects", "P1", "issues")
@@ -263,12 +298,13 @@ class SinkSpec extends AnyFunSuite {
     val weird = "sp ce\"quote.yaml"
     Files.write(dir.resolve(weird),
       "k: v\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    assert(GitRepo.commitBatch(repo, "chore: seed").isDefined)
+    assert(git(repo, "add", "--", "projects") == 0)
+    assert(git(repo, "-c", "user.name=t", "-c", "user.email=t@localhost",
+      "commit", "-q", "-m", "chore: seed") == 0)
     // index-free commit into the same directory
     val b = Tables.issues(spark, sf).filter(col("project_key") === "P1").limit(5)
-    val wr = Yaml.writeIssuesWithBlobs(b, repo)
-    assert(GitRepo.commitTreeDirect(repo, "feat(sync): direct batch",
-      wr.entries.iterator).isDefined)
+    val (wr, h) = commitDirect(repo, b, "feat(sync): direct batch")
+    assert(h.isDefined)
     // -z: NUL-delimited and UNQUOTED — quote-bearing names come back raw
     def lsr() = scala.sys.process.Process(
       Seq("git", "ls-tree", "-r", "-z", "HEAD"),
@@ -286,15 +322,14 @@ class SinkSpec extends AnyFunSuite {
     // and a subsequent INDEX-path commit must not write a tree missing the
     // tree-direct batch (the write-tree-from-stale-index hazard)
     val b2 = Tables.issues(spark, sf).filter(col("project_key") === "P2").limit(3)
-    val wr2 = Yaml.writeIssuesWithBlobs(b2, repo)
-    assert(GitRepo.commitTreeDirect(repo, "feat(sync): direct 2",
-      wr2.entries.iterator).isDefined) // restale the index
+    val (wr2, h2) = commitDirect(repo, b2, "feat(sync): direct 2")
+    assert(h2.isDefined) // restale the index
     val b3 = Tables.issues(spark, sf).filter(col("project_key") === "P3").limit(3)
-    val wr3 = Yaml.writeIssuesWithBlobs(b3, repo)
-    assert(GitRepo.commitIndexInfo(repo, "feat(sync): via index", wr3.entries).isDefined)
+    val (wr3, h3) = commitViaIndex(repo, b3, "feat(sync): via index")
+    assert(h3.isDefined)
     val paths = lsr().map(l => l.substring(l.indexOf('\t') + 1)).toSet
-    assert(wr.entries.map(_._1).forall(paths) && wr2.entries.map(_._1).forall(paths) &&
-      wr3.entries.map(_._1).forall(paths),
+    assert(wr.map(_._1).forall(paths) && wr2.map(_._1).forall(paths) &&
+      wr3.map(_._1).forall(paths),
       "index-path commit dropped tree-direct files from HEAD")
     assert(paths.contains(s"projects/P1/issues/$weird") && paths.exists(_.endsWith("hook.sh")))
     assert(GitRepo.isClean(repo))
@@ -339,33 +374,6 @@ class SinkSpec extends AnyFunSuite {
       "chore(P2): add issue P2-3", "feat(P2): add issue P2-4"))
   }
 
-  test("streaming CDC writes YAML + commits per micro-batch (the full sink path)") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val repo = Files.createTempDirectory("graft-stream-sink").toString
-    GitRepo.init(repo)
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, String)]
-    val issues = Tables.issues(spark, sf).limit(0).cache() // schema template
-    val query = mem.toDF().toDF("key", "project_key")
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        // enrich the keys into full issue rows from the source table
-        val full = Tables.issues(spark, sf)
-          .join(batch.select("key"), Seq("key"), "left_semi")
-        val n = Yaml.writeIssues(full, repo)
-        GitRepo.commitBatch(repo, s"feat(sync): sync batch $id ($n issues)")
-        ()
-      }.start()
-    try {
-      val twoKeys = Tables.issues(spark, sf).select("key", "project_key")
-        .orderBy("key").limit(2).as[(String, String)].collect()
-      mem.addData(twoKeys.toIndexedSeq: _*)
-      query.processAllAvailable()
-    } finally query.stop()
-    assert(GitRepo.log(repo).exists(_.startsWith("feat(sync): sync batch 0")))
-    assert(GitRepo.isClean(repo))
-  }
-
   test("partitioned corpus layout: two-column predicate prunes to one directory") {
     import org.apache.spark.sql.functions.col
     val out = java.nio.file.Files
@@ -389,5 +397,24 @@ class SinkSpec extends AnyFunSuite {
       .count(_.getName.endsWith(".parquet"))
     assert(numFiles == dirFiles && dirFiles >= 1,
       s"scan read $numFiles files; the matching directory holds $dirFiles")
+  }
+
+  test("no file under src/main/scala stages with `add -A` or commits through porcelain") {
+    // sync feeds the index from the manifest and stream merges trees
+    // directly: a worktree scan (`add -A`) or a porcelain `commit` grows
+    // with the whole corpus on every batch
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val invocation = Seq(
+      "\"add\"\\s*,\\s*\"-A\"".r, // run(dir, "add", "-A", ...)
+      "\"commit\"".r, // run(dir, ..., "commit", ...)
+      "\"git\\s+(add\\s+-A|commit(?![\\w-]))".r) // one whole command line
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter { p =>
+        val src = new String(Files.readAllBytes(p), "UTF-8")
+        invocation.exists(_.findFirstIn(src).isDefined)
+      }
+      .map(root.relativize(_).toString).toSeq
+    assert(offenders.isEmpty, s"porcelain git invocations in $offenders")
   }
 }

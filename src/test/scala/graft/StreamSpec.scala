@@ -47,6 +47,7 @@ class StreamSpec extends AnyFunSuite {
     val log = GitRepo.log(s"$work/repo")
     assert(log.length == 2) // batch 0 and the real update; idempotent batch skipped
     assert(log.forall(_.startsWith("feat(sync): stream batch")))
+    assert(GitRepo.isClean(s"$work/repo"))
   }
 
   test("CdcStream survives a stop/restart from its checkpoint exactly-once") {
