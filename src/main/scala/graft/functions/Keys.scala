@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Issue-key column functions (SURVEY.md §2.7 F1/F2/F11/F12, §2.2 P5).
+/** Issue-key column functions (SURVEY.md §2.7 F1/F2/F12).
   *
   * The reference has two conflicting project-key extraction rules
   * (first-dash vs multi-dash; SURVEY.md F1 note) — the multi-dash rule is
@@ -11,9 +11,6 @@ import org.apache.spark.sql.functions._
   * the final `-number` segment is the project.
   */
 object Keys {
-
-  /** The reference's issue-key shape (reference: internal/cli/sync.go:335). */
-  val issueKeyRegex = "^[A-Z][A-Z0-9]*(-[A-Z0-9]+)*-\\d+$"
 
   /** F1: `PROJ-SUB-123` → `PROJ-SUB` (multi-dash rule). */
   def extractProjectKey(c: Column): Column =
@@ -26,15 +23,6 @@ object Keys {
     struct(
       extractProjectKey(c).as("project"),
       regexp_extract(c, "-(\\d+)$", 1).cast("int").as("number"))
-
-  /** P5: key validity predicate. */
-  def isValidIssueKey(c: Column): Column = c.rlike(issueKeyRegex)
-
-  /** F11: comma-separated key list → trimmed array
-    * (reference: internal/cli/sync.go:365-386).
-    */
-  def parseKeyList(c: Column): Column =
-    filter(transform(split(c, ","), v => trim(v)), v => v =!= "")
 
   /** F12: `projects/{proj}/issues/{key}.yaml` → key
     * (reference: internal/sync/incremental.go:468-475).

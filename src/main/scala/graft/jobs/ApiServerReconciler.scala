@@ -154,8 +154,8 @@ object ApiServerReconciler {
     "app.kubernetes.io/instance" -> s.name,
     "app.kubernetes.io/managed-by" -> "graft-operator")
 
-  /** ConfigMap data (reference buildConfigMapData): the env-file contract
-    * config/Config.scala reads on the serving side.
+  /** ConfigMap data (reference buildConfigMapData): the serving pod's
+    * environment.
     */
   def configMapData(s: Spec): Map[String, String] = {
     val base = Map(

@@ -1,109 +1,10 @@
 package graft.model
 
-import java.sql.Timestamp
-
-/** Core data model of the engine.
-  *
-  * Mirrors the reference's Issue record (reference: pkg/client/client.go:31-84)
-  * re-expressed as Spark-friendly case classes with Encoders derived via
-  * `spark.implicits._`. Storage is columnar parquet partitioned by
-  * `project_key` (the reference stores row-oriented YAML, one file per issue;
-  * see SURVEY.md §1.1).
+/** The job-control records the engine hands between its entry points
+  * (Cli, ApiServer, the job manager and the reconcilers). Issues, edges and
+  * the state ledger are DataFrames whose schemas their writers define
+  * (`Ingest.fromWire`, `Ingest.edges`, `StateStore.fromIssues`).
   */
-final case class Status(name: String, category: String)
-
-final case class Person(name: String, email: String)
-
-/** One typed issue link (reference: pkg/client/client.go:68-73). */
-final case class IssueLink(
-    link_type: String,
-    direction: String,
-    issue_key: String,
-    summary: String)
-
-/** Nested relationship block (reference: pkg/client/client.go:59-64). */
-final case class Relationships(
-    epic_link: Option[String],
-    parent_issue: Option[String],
-    subtasks: Seq[String],
-    issue_links: Seq[IssueLink])
-
-/** The fundamental record: one JIRA-style issue
-  * (reference: pkg/client/client.go:31-56, pkg/schema/yaml.go:30-84).
-  */
-final case class Issue(
-    key: String,
-    project_key: String,
-    summary: String,
-    description: String,
-    status: Status,
-    assignee: Person,
-    reporter: Person,
-    created: Timestamp,
-    updated: Timestamp,
-    priority: String,
-    issuetype: String,
-    sprint: Option[String],
-    relationships: Option[Relationships])
-
-/** Exploded relationship edge — replaces the reference's symlink taxonomy
-  * (reference: pkg/links/links.go:115,293-305) with a first-class edge table
-  * `(src, link_type, direction, dst, project_key)` partitionable by
-  * (project_key, link_type).
-  */
-final case class LinkEdge(
-    src: String,
-    link_type: String,
-    direction: Option[String],
-    dst: String,
-    project_key: String)
-
-/** Per-issue CDC ledger entry (reference: pkg/state/types.go:87-100). */
-final case class IssueState(
-    key: String,
-    project_key: String,
-    last_synced: Timestamp,
-    last_updated: Timestamp,
-    file_path: String,
-    file_size: Option[Long],
-    checksum: String,
-    sync_status: String,
-    sync_count: Int)
-
-/** One sync-operation journal row (reference: pkg/state/types.go:28-74);
-  * bounded history of 50 (pkg/state/manager.go:149-152).
-  */
-final case class SyncOperation(
-    id: String,
-    op_type: String, // issues | jql | incremental | full
-    query: String,
-    start_time: Timestamp,
-    end_time: Option[Timestamp],
-    status: String, // pending|running|completed|failed|cancelled|partial
-    total: Int,
-    processed: Int,
-    successful: Int,
-    failed: Int,
-    skipped: Int)
-
-/** Named, reusable sync config (reference: pkg/profile/types.go:8-44). */
-final case class SyncProfile(
-    name: String,
-    description: String,
-    jql: Option[String],
-    issue_keys: Seq[String],
-    epic_key: Option[String],
-    repository: String,
-    concurrency: Int,
-    rate_limit: String,
-    incremental: Boolean,
-    force: Boolean,
-    dry_run: Boolean,
-    include_links: Boolean,
-    tags: Seq[String],
-    times_used: Long,
-    success_count: Long,
-    total_duration_ms: Long)
 
 /** Declarative sync job spec (reference: internal/operator/types/types.go:12-67). */
 final case class SyncJobSpec(

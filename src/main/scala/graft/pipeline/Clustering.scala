@@ -211,9 +211,9 @@ object Clustering {
     * label vocabulary, same discipline as the k-means driver state) and
     * broadcasts into a map-side distance pass; the only rank is a window
     * PARTITIONED BY label. A label class holding a corpus-scale fraction
-    * would swap the rank for a count-threshold join like
-    * [[Curation.qualityCalibratedApprox]] — the output contract (top-5 per
-    * label) is unchanged. All arithmetic integer (quantize → sqd →
+    * would swap the rank for an approx-quantile threshold join — the
+    * output contract (top-5 per label) is unchanged. All arithmetic
+    * integer (quantize → sqd →
     * truncating mean), so the oracle hash pins centroid AND ranking.
     */
   private val outliers = q("pipe_emb_outliers",
@@ -265,9 +265,9 @@ object Clustering {
     * memoized trained centroids (zero training cost here — [[trained]]
     * memoizes per session/dir), and the only rank is a window partitioned
     * by cid. k is bounded by construction, but a single over-dense
-    * cluster holding a corpus-scale fraction would swap the rank for the
-    * count-threshold join ([[Curation.qualityCalibratedApprox]] shape) —
-    * same capped output, no per-cluster sort ceiling.
+    * cluster holding a corpus-scale fraction would swap the rank for an
+    * approx-quantile threshold join — same capped output, no per-cluster
+    * sort ceiling.
     */
   private val clusterSample = q("pipe_cluster_sample",
     s"""WITH $embCte,
@@ -402,40 +402,6 @@ object Clustering {
       .crossJoin(broadcast(qv0))
       .select(col("vec_id"), sqd(col("v"), col("qv")).as("dist"))
       .orderBy("dist", "vec_id").limit(10)
-  }
-
-  /** Measured recall@10 of (trained-centroid IVF, training-free IVF) for the
-    * fixed query vector, against the exhaustive integer-L2 top-10 — the
-    * harness behind "did training the cells buy recall". Both index variants
-    * share nprobe=2 and the same candidate scoring, so the ONLY degree of
-    * freedom is cell quality. Spec-pinned ([[ClusteringSpec]]); the oracle
-    * row pins the trained path itself.
-    */
-  private[graft] def ivfTrainedRecallAt10(s: SparkSession, dir: String): (Double, Double) = {
-    val vecs = qvecs(s, dir)
-    val qv0 = vecs.filter(col("vec_id") === 0).select(col("v").as("qv"))
-    def top10(cands: DataFrame): Set[Long] =
-      cands.filter(col("vec_id") =!= 0)
-        .crossJoin(broadcast(qv0))
-        .select(col("vec_id"), sqd(col("v"), col("qv")).as("dist"))
-        .orderBy("dist", "vec_id").limit(10)
-        .collect().map(_.getLong(0)).toSet
-    val truth = top10(vecs)
-    import s.implicits._
-    def probedCandidates(cents: Seq[(Long, Array[Long])]): DataFrame = {
-      val fin = assign(vecs, cents)
-      val cdf = cents.map { case (cid, c) => (cid, c.toSeq) }.toDF("cid", "c")
-      val probe = cdf.crossJoin(broadcast(qv0))
-        .select(col("cid"), sqd(col("c"), col("qv")).as("pd"))
-        .orderBy("pd", "cid").limit(2).select("cid")
-      fin.join(broadcast(probe), Seq("cid"), "left_semi")
-    }
-    val untrained: Seq[(Long, Array[Long])] =
-      vecs.filter(col("vec_id") < K).select(col("vec_id"), col("v")).collect()
-        .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toSeq.sortBy(_._1)
-    val trainedHits = top10(probedCandidates(trained(s, dir)))
-    val fixedHits = top10(probedCandidates(untrained))
-    ((trainedHits & truth).size / 10.0, (fixedHits & truth).size / 10.0)
   }
 
   val all: Seq[GQuery] =

@@ -596,10 +596,7 @@ object Curation {
     *
     * Plan shape: one doc-keyed join (quality ⨝ source) then a window
     * PARTITIONED BY source — per-source sorts, never a global one. Sources
-    * are numerous and individually bounded in a real corpus; for a
-    * pathological single-source corpus [[qualityCalibratedApprox]] swaps
-    * percent_rank for an approx-quantile threshold join (same output
-    * contract, no exact per-partition sort).
+    * are numerous and individually bounded in a real corpus.
     * Ties are broken by doc_id so rank — and therefore the percentile and
     * the hash gate — is deterministic cross-engine.
     */
@@ -621,38 +618,6 @@ object Curation {
       .withColumn("selected", col("src_pctl") >= 0.5)
       .select("doc_id", "source", "quality", "src_pctl", "selected")
       .orderBy("doc_id")
-  }
-
-  /** The production swap [[qualityCalibrated]]'s scaladoc promises for the
-    * pathological corpus where one source dominates: a per-source
-    * percent_rank window needs an exact sort of each source partition, and
-    * a source holding most of a 100 TB corpus turns that into one giant
-    * sort. This variant keeps the output contract (per-doc source
-    * percentile-ish gate, top `1-q` of each source selected) but replaces
-    * the window with an APPROX-QUANTILE THRESHOLD JOIN: one
-    * `percentile_approx` aggregate per source (map-side combinable QDigest
-    * sketch — no per-source sort, no skew ceiling), broadcast of the
-    * |sources|-row threshold table, and a map-side `quality >= threshold`
-    * gate. Selection near the cut drifts by the sketch accuracy (1/acc
-    * rank error); everything away from the boundary matches the exact
-    * form, which PipelineSpec pins.
-    *
-    * Engine API rather than a registered query: DuckDB's quantile sketch
-    * differs from Spark's, so the approximate form has no hash-stable
-    * oracle — the exact window twin is the oracle-gated surface.
-    */
-  def qualityCalibratedApprox(s: org.apache.spark.sql.SparkSession,
-      dir: String, q: Double = 0.5,
-      accuracy: Int = 10000): org.apache.spark.sql.DataFrame = {
-    val scored = TextAnalysis.qualityDf(s, dir).select("doc_id", "quality")
-      .join(graft.Tables.t(s, dir, "documents").select("doc_id", "source"),
-        Seq("doc_id"))
-    val thresholds = scored.groupBy("source")
-      .agg(percentile_approx(col("quality"), lit(q), lit(accuracy))
-        .as("q_threshold"))
-    scored.join(broadcast(thresholds), Seq("source"))
-      .select(col("doc_id"), col("source"), col("quality"),
-        col("q_threshold"), (col("quality") >= col("q_threshold")).as("selected"))
   }
 
   /** Temperature-flattened source mixing — the multilingual/multi-domain

@@ -1288,162 +1288,11 @@ object Dedup {
   }
 
   /** `(doc_id, fp)` exact-dedup fingerprints for an arbitrary
-    * `(doc_id, text)` batch — the probe side of [[bloomPrefilter]].
+    * `(doc_id, text)` batch.
     */
   def fingerprints(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     docs.select(col("doc_id"),
       sha2(normText(col("text")), 256).as("fp"))
-
-  /** Bloom pre-filter for incremental exact dedup: build a Bloom filter over
-    * the HISTORICAL fingerprint index once, broadcast it, and flag each
-    * batch document map-side as `maybe_dup`. The guarantee is one-sided (no
-    * false negatives): every fingerprint actually in the index is flagged,
-    * so docs flagged `false` are DEFINITELY new and skip the fp shuffle
-    * join entirely — under CDC-proportional ingest that is most of the
-    * batch, which turns the per-batch dedup cost from
-    * shuffle(batch ⨝ index) into a map-only pass plus a join over the
-    * (fpp-bounded) maybe set.
-    *
-    * Scale: the filter is bits ∝ index size — ~1.8 GB for 10^9 fingerprints
-    * at 0.1% fpp, a plain broadcast; an index 100× that either raises fpp
-    * (the maybe-join re-checks exactly anyway) or shards the filter by fp
-    * prefix. The probe is a broadcast-value lookup per row (a UDF, justified
-    * here: Spark ships no Catalyst expression over `util.sketch.BloomFilter`,
-    * and the alternative — always joining — is the cost being avoided).
-    */
-  def bloomPrefilter(index: org.apache.spark.sql.DataFrame,
-      batch: org.apache.spark.sql.DataFrame,
-      fpp: Double = 0.001): org.apache.spark.sql.DataFrame = {
-    val n = index.count()
-    // first sync of a fresh corpus: an empty index contains nothing, and
-    // Spark's stat.bloomFilter NPEs on an empty frame (null agg buffer)
-    if (n == 0L) return batch.withColumn("maybe_dup", lit(false))
-    val bf = index.stat.bloomFilter("fp", n, fpp)
-    val bc = batch.sparkSession.sparkContext.broadcast(bf)
-    val probe = udf((fp: String) => bc.value.mightContainString(fp))
-    batch.withColumn("maybe_dup", probe(col("fp")))
-  }
-
-  /** Maintain the persisted exact-dedup fingerprint index: replace the
-    * `(doc_id, fp)` rows of every doc in `docs`, keep everyone else's —
-    * the index is the canonical "what the corpus already contains" set the
-    * incremental flow probes. Same crash-recoverable swap as the signature
-    * and span indexes.
-    */
-  def upsertFingerprints(docs: org.apache.spark.sql.DataFrame,
-      path: String): Unit = {
-    val spark = docs.sparkSession
-    val fps = fingerprints(docs)
-    val out = graft.state.StateStore.loadTable(spark, path, fps.schema)
-      .join(docs.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-      .unionByName(fps)
-    graft.state.StateStore.save(out, path)
-  }
-
-  /** The complete incremental exact-dedup flow for one CDC batch, closing
-    * the loop the Bloom pre-filter opens: probe the HISTORICAL index
-    * map-side (`maybe_dup`), exact-recheck ONLY the fpp-bounded maybe set
-    * with a semi-join (a bloom positive is not proof), and resolve
-    * batch-internal duplicates keep-first. Verdict columns:
-    * `seen_before` (fp exists in the index — first-seen-wins, the CDC
-    * dedup contract, regardless of id order), `kept` (not seen before AND
-    * smallest doc_id among batch rows sharing the fp).
-    *
-    * Scale: the definitely-new majority of a CDC batch never enters any
-    * join — its cost is the map-side bloom probe; the semi-join is sized
-    * |maybe set| ≈ true dups + fpp·batch. Call BEFORE upserting, then
-    * [[upsertFingerprints]] the kept docs so the index stays the
-    * surviving-corpus set.
-    */
-  def incrementalExactDedup(changedDocs: org.apache.spark.sql.DataFrame,
-      path: String, fpp: Double = 0.001): org.apache.spark.sql.DataFrame = {
-    val spark = changedDocs.sparkSession
-    val probe = fingerprints(changedDocs)
-    val index = graft.state.StateStore.loadTable(spark, path, probe.schema)
-    val pre = bloomPrefilterAuto(index, probe, fpp)
-    val confirmed = pre.filter(col("maybe_dup"))
-      .join(index.select("fp").distinct(), Seq("fp"), "left_semi")
-      .select(col("doc_id"), lit(true).as("seen_before"))
-    val firstInBatch = probe.groupBy("fp").agg(min("doc_id").as("first_id"))
-    pre.join(confirmed, Seq("doc_id"), "left")
-      .join(firstInBatch, Seq("fp"))
-      .select(col("doc_id"), col("fp"), col("maybe_dup"),
-        coalesce(col("seen_before"), lit(false)).as("seen_before"),
-        (!coalesce(col("seen_before"), lit(false)) &&
-          col("doc_id") === col("first_id")).as("kept"))
-  }
-
-  /** Deterministic shard of a sha256-hex fingerprint: top 32 bits, modulo
-    * the shard count. Build and probe MUST agree on this, so both sides call
-    * this one function.
-    */
-  private[graft] def fpShard(fp: String, shards: Int): Int =
-    ((java.lang.Long.parseLong(fp.substring(0, 8), 16) % shards).toInt)
-
-  /** [[bloomPrefilter]], sharded by fingerprint prefix — the documented 100×
-    * path: one monolithic filter over 10^11 fingerprints would be a ~180 GB
-    * broadcast, but `shards` filters of index/shards fingerprints each are
-    * built in parallel (one shuffle of the fp column, grouped by the prefix
-    * shard) and broadcast together as independently-sized blobs. The flag
-    * semantics are IDENTICAL to the single filter: a fingerprint is probed
-    * against exactly the shard that indexed it, so the no-false-negative
-    * guarantee is preserved shard-locally and therefore globally.
-    *
-    * Sizing: sha256 prefixes are uniform, so each shard sees ~n/shards
-    * fingerprints; filters are sized with 1.5× slack (an over-full shard
-    * only drifts fpp upward — the maybe-join re-checks exactly anyway).
-    * On a real cluster the broadcast stays one object (a map of shard →
-    * filter); executors fault in all shards once, as with any broadcast.
-    */
-  def bloomPrefilterSharded(index: org.apache.spark.sql.DataFrame,
-      batch: org.apache.spark.sql.DataFrame,
-      fpp: Double = 0.001, shards: Int = 16): org.apache.spark.sql.DataFrame = {
-    require(shards > 0, s"shards must be positive, got $shards")
-    val n = index.count()
-    if (n == 0L) return batch.withColumn("maybe_dup", lit(false))
-    val spark = index.sparkSession
-    import spark.implicits._
-    val perShard = math.max(64L, (n / shards) * 3 / 2)
-    val built = index.select(col("fp")).as[String]
-      .groupByKey(fp => fpShard(fp, shards))
-      .mapGroups { (shard, fps) =>
-        val bf = org.apache.spark.util.sketch.BloomFilter.create(perShard, fpp)
-        fps.foreach(bf.putString)
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        (shard, bos.toByteArray)
-      }
-      .collect()
-    val filters: Map[Int, org.apache.spark.util.sketch.BloomFilter] =
-      built.map { case (shard, bytes) =>
-        shard -> org.apache.spark.util.sketch.BloomFilter.readFrom(
-          new java.io.ByteArrayInputStream(bytes))
-      }.toMap
-    val bc = spark.sparkContext.broadcast(filters)
-    val nShards = shards
-    val probe = udf { (fp: String) =>
-      // a shard with no indexed fingerprints built no filter: definitely new
-      bc.value.get(fpShard(fp, nShards)).exists(_.mightContainString(fp))
-    }
-    batch.withColumn("maybe_dup", probe(col("fp")))
-  }
-
-  /** Size-gated front door for the pre-filter (same pattern as
-    * `clusterLabels`' driver/distributed gate): small indexes take the
-    * single-aggregation single-broadcast path, large ones shard by prefix.
-    * The default gate (2^27 ≈ 134M fingerprints ≈ 250 MB of filter at 0.1%
-    * fpp) keeps the monolithic broadcast under typical
-    * `maxResultSize`/broadcast budgets.
-    */
-  def bloomPrefilterAuto(index: org.apache.spark.sql.DataFrame,
-      batch: org.apache.spark.sql.DataFrame, fpp: Double = 0.001,
-      shardGateRows: Long = 1L << 27): org.apache.spark.sql.DataFrame = {
-    val n = index.count()
-    if (n == 0L) batch.withColumn("maybe_dup", lit(false))
-    else if (n <= shardGateRows) bloomPrefilter(index, batch, fpp)
-    else bloomPrefilterSharded(index, batch, fpp,
-      shards = math.max(2, math.ceil(n.toDouble / shardGateRows).toInt))
-  }
 
   /** Soft dedup — duplicate-aware loss weights instead of dropping. Real
     * pretraining runs often keep every near-duplicate but downweight each
@@ -1529,7 +1378,7 @@ object Dedup {
 
   /** Corpus snapshot diff — the operator that PRODUCES the changed batch
     * every incremental index here consumes ([[upsertSignatures]],
-    * [[upsertSpans]], [[incrementalExactDedup]], the IVF upsert): given
+    * [[upsertSpans]], the IVF upsert): given
     * two corpus versions, classify every document as `added`, `removed`,
     * or `changed` by content fingerprint; unchanged docs don't appear.
     * Snapshot B is derived with seeded damage so both engines diff the

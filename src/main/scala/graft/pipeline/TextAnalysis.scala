@@ -99,10 +99,9 @@ object TextAnalysis {
   /** Frame-generic quality scorer: appends the metric columns
     * (n_chars/n_words/avg_word_len/stopword_ratio/punct_ratio/quality) to
     * ANY frame carrying a `text` column, preserving its other columns.
-    * Pure map-side expressions — the SAME plan fragment runs over a batch
-    * table (where [[qualityDf]] memoizes it) or an unbounded stream (the
-    * [[graft.streaming.Curate]] gate), which is what keeps the streaming
-    * twin's scores bit-identical to the batch oracle's.
+    * Pure map-side expressions, so the same plan fragment runs over a
+    * batch table (where [[qualityDf]] memoizes it) or an unbounded stream
+    * with scores identical to the batch oracle's.
     */
   def qualityOf(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     docs.filter(length(col("text")) > 0)
@@ -1026,27 +1025,6 @@ object TextAnalysis {
           / count(lit(1))).as("pos_rate"))
       .orderBy("bin")
   }
-
-  /** Compression-ratio quality signal — the Gopher-family redundancy filter
-    * n-gram heuristics can't replicate: `deflate_len(text) / octet_length
-    * (text)` per document. Near-zero ratios are long-period repetition and
-    * template spam (DEFLATE's 32 KB window sees what duplicate-word
-    * fractions miss); ratios near 1 on supposed prose are binary junk in a
-    * text field. Map-only, one native codegen'd [[graft.functions.DeflateLen]]
-    * evaluation per row — no shuffle at any scale.
-    *
-    * Engine API rather than a registered query: DuckDB exposes no DEFLATE
-    * surface, so no cross-engine oracle exists; the determinism contract
-    * (fixed level, fresh Deflater, JDK-pinned zlib) is spec-pinned instead
-    * (NativeFunctionsSpec).
-    */
-  def compressionSignal(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    docs.filter(length(col("text")) > 0)
-      .select(col("doc_id"),
-        expr("octet_length(text)").as("n_bytes"),
-        graft.functions.DeflateLen(col("text")).as("deflate_bytes"))
-      .withColumn("compression_ratio",
-        col("deflate_bytes").cast("double") / col("n_bytes"))
 
   /** k-anonymity rare-combination gate — the release-side privacy pass that
     * [[pii]]'s content scan can't do: a document whose QUASI-IDENTIFIER

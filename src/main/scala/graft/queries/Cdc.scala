@@ -366,8 +366,6 @@ object Cdc {
     * whose interval contains ts), so this composes
     * [[graft.operators.Asof]] — one co-partitioned sort-merge pass, no
     * range probe, no broadcast requirement on the (event-scale) dimension.
-    * The broadcast [[graft.streaming.Enrich.withScd2]] form is the
-    * streaming/static-dim twin of the same semantics (StreamSpec).
     * Equal-timestamp version chains resolve deterministically by the
     * version's source event id (the as-of tieBreak = the oracle's
     * `ORDER BY s.ts DESC, s.event_id DESC` rank).

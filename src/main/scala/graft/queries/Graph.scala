@@ -54,16 +54,12 @@ object Graph {
     * bounded slice, never the base tables, and the audit bypass still
     * sees the raw construction.
     */
-  private def edgesInt(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+  private[graft] def edgesInt(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     graft.Caches.fragment(s, dir, "graph_edges_int") {
       graft.Tables.links(s, dir)
         .filter(col("link_type") === "blocks" && col("project_key") === "P1")
         .select(encNode(col("src")).as("a"), encNode(col("dst")).as("b"))
     }
-
-  /** Test access to the shared bounded edge slice (GraphSpec). */
-  def edgesIntPublic(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    edgesInt(s, dir)
 
   /** Symmetrized distinct adjacency of the bounded edge slice — the frame
     * nearly every undirected card re-derived per query (the 3-hop census
@@ -452,69 +448,12 @@ object Graph {
     }
   }
 
-  /** PageRank run TO CONVERGENCE — the production twin of the fixed-round
-    * [[pagerank]], stopping when the L1 rank movement falls to
-    * `epsPerNode × |nodes|` (fixed-point units; 1000 ≈ 1e-6 of a rank).
-    * The per-round delta doubles as telemetry AND the stop test: one
-    * full-outer join of consecutive SPARSE contribution tables + one
-    * map-side-combinable sum — same cost class as the round itself, no
-    * dense rank materialization. Integer fixed-point means no float drift
-    * ever masks convergence, but truncating division can leave a ±1-unit
-    * flicker per node — which is exactly why the stop is a threshold, not
-    * delta == 0. Returns (ranks, rounds run, last delta).
-    */
-  def pagerankConverged(edges: DataFrame, epsPerNode: Long = 1000L,
-      maxRounds: Int = 50): (DataFrame, Int, Long) = {
-    val SCALE = "1000000000"
-    val BASE = "150000000"
-    val e = edges.toDF("a", "b")
-      .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-      .distinct()
-    val outd = e.groupBy(col("a").as("node")).agg(count(lit(1)).as("d"))
-    val ed = e.join(outd.withColumnRenamed("node", "a"), Seq("a"))
-      .transform(graft.Iterative.truncate)
-    val nNodes = ed.select(col("a").as("node"))
-      .union(ed.select(col("b").as("node"))).distinct().count()
-    val eps = epsPerNode * math.max(1L, nNodes)
-    def prOf(s: org.apache.spark.sql.Column) =
-      expr("85 * coalesce(s, 0L) div 100") // pr minus the constant BASE
-    // sum() over an empty frame is SQL NULL: read through the boxed type and
-    // default to 0 (getLong(0) on a null cell throws before any Option wrap
-    // can catch it — an edge-free input graph must return, not crash)
-    def sumOrZero(df: DataFrame): Long =
-      Option(df.head.getAs[java.lang.Long](0)).map(_.longValue).getOrElse(0L)
-    var contrib = ed.groupBy(col("b").as("node"))
-      .agg(sum(expr(s"$SCALE div d")).as("s")).transform(graft.Iterative.truncate)
-    // round-1 delta vs the BASE-only init: every contribution IS movement
-    var delta = sumOrZero(contrib.agg(sum(prOf(col("s")))))
-    var rounds = 1
-    while (delta > eps && rounds < maxRounds) {
-      val next = ed.join(contrib.withColumnRenamed("node", "a"), Seq("a"), "left")
-        .groupBy(col("b").as("node"))
-        .agg(sum(expr(s"($BASE + (85 * coalesce(s, 0L)) div 100) div d")).as("s"))
-        .transform(graft.Iterative.truncate)
-      delta = sumOrZero(next.withColumnRenamed("s", "sn")
-        .join(contrib.withColumnRenamed("s", "sp"), Seq("node"), "full_outer")
-        .agg(sum(abs(expr("85 * coalesce(sn, 0L) div 100") -
-          expr("85 * coalesce(sp, 0L) div 100"))).cast("long")))
-      contrib = next
-      rounds += 1
-    }
-    val nodes = ed.select(col("a").as("node"))
-      .union(ed.select(col("b").as("node"))).distinct()
-    val ranks = nodes.join(contrib, Seq("node"), "left")
-      .select(col("node"),
-        (lit(BASE.toLong) + expr("85 * coalesce(s, 0L) div 100")).as("pr"))
-    (ranks, rounds, delta)
-  }
-
   /** Per-round L1 rank movement for the first 3 PageRank rounds — the
-    * oracle-checkable window into [[pagerankConverged]]'s stop test. Both
+    * convergence telemetry of [[pagerank]]'s contribution chain. Both
     * engines chain the SAME sparse contribution tables and diff
     * consecutive rounds with a full-outer join, so a drift anywhere in the
-    * delta accounting (the thing the converged loop trusts) breaks the
-    * hash. Monotone-decreasing deltas on this slice are also asserted in
-    * GraphSpec against the converged runner itself.
+    * delta accounting breaks the hash. GraphSpec asserts the deltas shrink
+    * monotonically on this slice.
     */
   private val pagerankDeltaQ = {
     val SCALE = "1000000000"
@@ -1216,26 +1155,6 @@ object Graph {
       .groupBy(col("lbl").as("component"))
       .agg(count(lit(1)).as("n_nodes"))
       .orderBy("component")
-  }
-
-  /** Maintain a PERSISTED component labeling under continuous edge ingest:
-    * load the label table, merge the batch via [[componentsIncremental]],
-    * commit back through the state store's crash-recoverable tmp+rename.
-    * This is the graph twin of the incremental MinHash/IVF/span/phash
-    * indexes — call it from `foreachBatch` and a streaming edge source
-    * keeps whole-corpus connectivity current at batch-proportional cost
-    * (StreamSpec pins two-micro-batch convergence to the one-shot
-    * [[componentsBigStar]] labeling).
-    */
-  def upsertComponents(newEdges: DataFrame, path: String): Unit = {
-    val spark = newEdges.sparkSession
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("lbl",
-        org.apache.spark.sql.types.LongType)))
-    val base = graft.state.StateStore.loadTable(spark, path, schema)
-    graft.state.StateStore.save(componentsIncremental(base, newEdges), path)
   }
 
   /** k-core decomposition (k = 2, 3 fixed peeling rounds) — iterative
@@ -2600,61 +2519,16 @@ object Graph {
     }
   }
 
-  /** Bounded strongly-connected components by forward/backward label
-    * intersection — DIRECTED cycle structure, which the undirected
-    * [[components]] erases: `fwd(v)` is the smallest id that can REACH v
-    * in ≤ k hops (mins flow along edges), `bwd(v)` the smallest id v can
-    * reach, and `fwd(v) = bwd(v) = m` certifies v and m lie on a common
-    * cycle — m reaches v AND v reaches m. On a dependency graph these are
-    * the deadlock knots ("A blocks B blocks C blocks A") that a DAG-shaped
-    * workflow must surface; the forward-backward intersection is the
-    * standard first phase of distributed SCC (FW-BW / coloring family).
-    *
-    * The k-bound makes the answer deterministic for the oracle AND keeps
-    * the guarantee one-sided in the safe direction: every emitted
-    * membership is a REAL cycle certificate (soundness needs no
-    * convergence). What one phase does NOT promise is completeness: this
-    * is the PIVOT phase of the distributed coloring algorithm (Orzan's
-    * FW-BW family) — it certifies, per label region, the SCC of the
-    * region's minimum pivot; a knot whose forward label is tainted by a
-    * smaller OUTSIDE id that reaches it one-way stays uncertified until
-    * the production iteration re-colors the residual regions, phase by
-    * phase (the same contract as the engine's other bounded/converged
-    * operator pairs — the card pins phase 1, GraphSpec pins the
-    * soundness side). Scale shape: two
-    * independent k-round min-propagation chains — one shuffle join + one
-    * map-combinable min-aggregate per round per direction, O(k·|E|) total,
-    * the same machinery as components with the edge orientation flipped
-    * for the backward pass. Nothing dense, no transitive closure.
-    *
-    * Unlike the other graph cards this one runs DIRECTION-AWARE over the
-    * WHOLE link table (an `inward` link points INTO src — the reference's
-    * link-direction semantics), because cycle knots are precisely what a
-    * per-project, single-type slice destroys: the blocks-within-P1 slice
-    * is near-bipartite and acyclic, while the full oriented graph carries
-    * a handful of genuine knots — the expected shape of a real dependency
-    * corpus (mostly DAG, a few deadlocks worth surfacing).
-    */
-  /** One FW-BW pivot phase over a directed `(a, b)` edge frame: `rounds`
-    * bounded min-label propagations in each direction, intersected into
-    * `(node, root, certified)` for EVERY node (certified ⇒ node lies on a
-    * common ≤rounds-hop cycle with root; root = node otherwise). The
-    * engine API under [[sccBounded]] — size-gated driver replay for
-    * broadcast-sized graphs, the distributed join chain beyond, same
+  /** One FW-BW pivot phase over a directed `(a, b)` edge frame, restricted
+    * to the KNOTS. The phase runs `rounds` bounded min-label propagations
+    * in each direction and intersects them into `(node, root, certified)`
+    * (certified ⇒ node lies on a common ≤rounds-hop cycle with root). This
+    * is the engine API under [[sccBounded]]: a size-gated driver replay for
+    * broadcast-sized graphs, the distributed join chain beyond, the same
     * contract as [[fixedRoundLabels]]. Production SCC iterates this phase
     * over residual color regions; each phase's certificates are final.
-    */
-  def sccPivot(edges: DataFrame, rounds: Int,
-      driverGateEdges: Long = DriverGateEdges): DataFrame =
-    sccPivotCore(edges, rounds, driverGateEdges) match {
-      case Left(full) =>
-        val spark = edges.sparkSession
-        import spark.implicits._
-        full.toSeq.toDF("node", "root", "certified")
-      case Right(df) => df
-    }
-
-  /** [[sccPivot]] restricted to the KNOTS — certified members plus the
+    *
+    * The knots are the certified members plus the
     * roots they share: the rows a cycle report cares about, a near-empty
     * frame on a mostly-DAG graph. The driver-gated path filters BEFORE
     * encoding rows (so a 10^5-node DAG ships a handful of rows, not a
@@ -2752,6 +2626,41 @@ object Graph {
     }
   }
 
+  /** Bounded strongly-connected components by forward/backward label
+    * intersection — DIRECTED cycle structure, which the undirected
+    * [[components]] erases: `fwd(v)` is the smallest id that can REACH v
+    * in ≤ k hops (mins flow along edges), `bwd(v)` the smallest id v can
+    * reach, and `fwd(v) = bwd(v) = m` certifies v and m lie on a common
+    * cycle — m reaches v AND v reaches m. On a dependency graph these are
+    * the deadlock knots ("A blocks B blocks C blocks A") that a DAG-shaped
+    * workflow must surface; the forward-backward intersection is the
+    * standard first phase of distributed SCC (FW-BW / coloring family).
+    *
+    * The k-bound makes the answer deterministic for the oracle AND keeps
+    * the guarantee one-sided in the safe direction: every emitted
+    * membership is a REAL cycle certificate (soundness needs no
+    * convergence). What one phase does NOT promise is completeness: this
+    * is the PIVOT phase of the distributed coloring algorithm (Orzan's
+    * FW-BW family) — it certifies, per label region, the SCC of the
+    * region's minimum pivot; a knot whose forward label is tainted by a
+    * smaller OUTSIDE id that reaches it one-way stays uncertified until
+    * the production iteration re-colors the residual regions, phase by
+    * phase (the same contract as the engine's other bounded/converged
+    * operator pairs — the card pins phase 1, GraphSpec pins the
+    * soundness side). Scale shape: two
+    * independent k-round min-propagation chains — one shuffle join + one
+    * map-combinable min-aggregate per round per direction, O(k·|E|) total,
+    * the same machinery as components with the edge orientation flipped
+    * for the backward pass. Nothing dense, no transitive closure.
+    *
+    * Unlike the other graph cards this one runs DIRECTION-AWARE over the
+    * WHOLE link table (an `inward` link points INTO src — the reference's
+    * link-direction semantics), because cycle knots are precisely what a
+    * per-project, single-type slice destroys: the blocks-within-P1 slice
+    * is near-bipartite and acyclic, while the full oriented graph carries
+    * a handful of genuine knots — the expected shape of a real dependency
+    * corpus (mostly DAG, a few deadlocks worth surfacing).
+    */
   private val sccBounded = {
     val k = 3
     // MATERIALIZED: every round references its predecessor twice and the

@@ -251,9 +251,6 @@ object Misc {
     * pair set through [[graft.operators.RangeJoin.intervalJoinKeyed]]: the
     * shuffle key is (user_id, time bucket), so fan-out is per-user density
     * per span — never co-temporal-rows² — and AQE splits any hot user.
-    * The streaming twin ([[graft.streaming.IntervalJoin]]) runs the same
-    * predicate as a watermarked stream-stream join; StreamSpec pins the
-    * twins pair-set-equal.
     */
   private val intervalJoin = q("stream_interval_join",
     """WITH ev AS (
@@ -918,11 +915,8 @@ object Misc {
     * table, so a green row proves the write→read round trip preserved
     * block assignment AND the box/prunability math. Bins here are LINEAR
     * min-max bins in exact integer arithmetic (`(x−min)·2^bits div span`)
-    * because quantile fences aren't replayable in static SQL; the
-    * production writer ([[graft.pipeline.CorpusSink.writeZOrdered]])
-    * uses skew-robust quantile fences and aligned block cuts — same
-    * interleave, same block semantics, fenced bins. Scale shape: one
-    * 4-scalar bounds aggregate (the same bounded collect as a centroid
+    * because quantile fences aren't replayable in static SQL. Scale shape:
+    * one 4-scalar bounds aggregate (the same bounded collect as a centroid
     * pull), one map-side code projection, one shuffle keyed on the ≤16
     * block ids for the write, and a 16-group aggregate on the read —
     * nothing corpus² anywhere.

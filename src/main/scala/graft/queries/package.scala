@@ -15,7 +15,4 @@ package object queries {
 
   def q(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): GQuery =
     GQuery(name, fn, Some(oracle))
-
-  def qNoOracle(name: String)(fn: (SparkSession, String) => DataFrame): GQuery =
-    GQuery(name, fn, None)
 }

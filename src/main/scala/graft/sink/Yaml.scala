@@ -574,17 +574,4 @@ object Yaml {
       }
     }.toDF("file_path", "checksum")
   }
-
-  /** F9: conventional-commit message column — `{type}({project}): {action}
-    * issue {key}` with the reference's issue-type → commit-type mapping
-    * (reference: pkg/git/git.go:293-327 message format, :343-358 Bug→fix etc.).
-    */
-  def commitMessage(issuetype: Column, project: Column, key: Column,
-      action: Column): Column = {
-    val ctype = when(lower(issuetype) === "bug", "fix")
-      .when(lower(issuetype).isin("story", "epic"), "feat")
-      .when(lower(issuetype).isin("task", "sub-task", "subtask"), "chore")
-      .otherwise("feat")
-    concat(ctype, lit("("), project, lit("): "), action, lit(" issue "), key)
-  }
 }

@@ -4,9 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 
-import graft.model.Issue
 import graft.state.DirSwap
 
 /** Field-mapping ingest (SURVEY.md §2.1 S5): JIRA wire JSON → the flat issue
@@ -80,45 +79,6 @@ object Ingest {
              |  'issue_key', coalesce(l.inwardIssue.key, l.outwardIssue.key),
              |  'summary', coalesce(l.inwardIssue.summary, l.outwardIssue.summary)))""".stripMargin)
         .as("issue_links"))
-  }
-
-  /** Lift flat issue rows into the typed model (`Dataset[Issue]` with nested
-    * Status/Person/Relationships, SURVEY.md §1.1) — the type-safe surface for
-    * Scala consumers; absent columns (e.g. a source without link arrays)
-    * become empty.
-    */
-  def asIssues(flat: DataFrame): Dataset[Issue] = {
-    val spark = flat.sparkSession
-    import spark.implicits._
-    val linksType =
-      "array<struct<link_type:string,direction:string,issue_key:string,summary:string>>"
-    val withAll = Seq(
-      "sprint" -> "string", "epic_link" -> "string", "parent_issue" -> "string",
-      "subtasks" -> "array<string>", "issue_links" -> linksType)
-      .foldLeft(flat) { case (df, (c, t)) =>
-        if (df.columns.contains(c)) df else df.withColumn(c, lit(null).cast(t))
-      }
-    withAll.select(
-      col("key"), col("project_key"), col("summary"), col("description"),
-      struct(col("status_name").as("name"), col("status_category").as("category"))
-        .as("status"),
-      struct(col("assignee_name").as("name"), col("assignee_email").as("email"))
-        .as("assignee"),
-      struct(col("reporter_name").as("name"), col("reporter_email").as("email"))
-        .as("reporter"),
-      col("created").cast("timestamp").as("created"),
-      col("updated").cast("timestamp").as("updated"),
-      col("priority"), col("issuetype"), col("sprint"),
-      when(col("epic_link").isNotNull || col("parent_issue").isNotNull ||
-          size(coalesce(col("subtasks"), array())) > 0 ||
-          size(coalesce(col("issue_links"), expr(s"cast(array() as $linksType)"))) > 0,
-        struct(
-          col("epic_link"), col("parent_issue"),
-          coalesce(col("subtasks"), array()).as("subtasks"),
-          coalesce(col("issue_links"), expr(s"cast(array() as $linksType)"))
-            .as("issue_links")))
-        .as("relationships")
-    ).as[Issue]
   }
 
   /** Inverse of [[fromWire]]: render flat issue rows as JIRA wire JSON —
@@ -278,40 +238,12 @@ object Ingest {
   }
 
   /** Make the edge table whole again after a crashed writer: finish an
-    * interrupted swap of a full rewrite or compaction (staged at
-    * `__compact`) or of an upsert (staged at `__upsert`). Every edge-table
+    * interrupted swap of a full rewrite (staged at `__compact`) or of an
+    * upsert (staged at `__upsert`). Every edge-table
     * writer runs this first.
     */
   private def recover(fs: FileSystem, path: String): Unit =
     Seq("__compact" -> "__old", "__upsert" -> "__cold").foreach { case (stage, cold) =>
       DirSwap.recover(fs, new Path(path), new Path(path + stage), new Path(path + cold))
     }
-
-  /** S11 maintenance: compact the edge table's accumulated small files.
-    * Appends and file-size splits leave a partition in several files, so
-    * file counts can grow and scans degrade. Rewrite with one task per
-    * (project_key, link_type) partition (bounded by `maxRecordsPerFile`)
-    * into `<path>__compact` and swap it in, like a full rewrite.
-    */
-  def compactEdges(spark: org.apache.spark.sql.SparkSession, path: String,
-      maxRecordsPerFile: Long = 1L << 20): Unit = {
-    val src = new Path(path)
-    val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recover(fs, path)
-    if (!fs.exists(src)) return
-    spark.read.parquet(path)
-      .repartition(col("project_key"), col("link_type"))
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("project_key", "link_type")
-      .parquet(path + "__compact")
-    swapAll(fs, path)
-  }
-
-  /** S12: broken-link GC — dangling edges found by anti-join instead of a
-    * filesystem walk (reference: pkg/links/links.go:132-232).
-    */
-  def brokenEdges(edges: DataFrame, issues: DataFrame): DataFrame =
-    edges.join(issues.select(col("key").as("__t")),
-      col("dst") === col("__t"), "left_anti")
 }

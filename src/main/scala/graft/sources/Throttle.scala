@@ -1,7 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row}
-
 /** C8: reader-side rate limiting — the analogue of the reference's
   * rate-limited REST transport (reference: pkg/ratelimit/ratelimit.go:67-210,
   * transport wrapper pkg/ratelimit/transport.go:17-85). A remote source's
@@ -58,53 +56,4 @@ object Throttle {
       case (Some(rem), Some(reset)) if rem > 0 => math.max(baseDelayMs, reset / rem)
       case _ => baseDelayMs
     }
-
-  /** Drive a paged fetch under the adaptive policy: paced between pages,
-    * bounded 429 retries (same page re-requested), rows streamed as one
-    * iterator. This is the transport loop a real REST client plugs into —
-    * the fixture connector's per-partition throttle is the budget half; this
-    * is the server-feedback half.
-    */
-  def adaptiveFetch[T](
-      fetchPage: Int => (RateSignal, Seq[T]),
-      baseDelayMs: Long = 100,
-      maxRetries: Int = 5,
-      backoffCapMs: Long = 30000,
-      sleepMs: Long => Unit = Thread.sleep): Iterator[T] = new Iterator[T] {
-    private var pending: Iterator[T] = Iterator.empty
-    private var page = 0
-    private var finished = false
-    private var delay = 0L
-    private var attempt = 0
-    @annotation.tailrec private def advance(): Unit =
-      if (!finished && !pending.hasNext) {
-        if (delay > 0) sleepMs(delay)
-        val (sig, items) = fetchPage(page)
-        if (sig.status == 429) {
-          attempt += 1
-          if (attempt > maxRetries)
-            throw new java.io.IOException(s"still rate-limited after $maxRetries retries")
-          delay = nextDelayMs(sig, baseDelayMs, attempt - 1, backoffCapMs)
-          advance()
-        } else {
-          attempt = 0
-          delay = nextDelayMs(sig, baseDelayMs, 0, backoffCapMs)
-          if (items.isEmpty) finished = true
-          else { pending = items.iterator; page += 1 }
-        }
-      }
-    override def hasNext: Boolean = { advance(); pending.hasNext }
-    override def next(): T = { advance(); pending.next() }
-  }
-
-  /** Throttle a DataFrame scan per partition (each task independently honors
-    * its own budget — aggregate rate = partitions × maxPerSecond, mirroring
-    * the reference's per-worker limits).
-    */
-  def throttled(df: DataFrame, maxPerSecondPerPartition: Int): DataFrame = {
-    val spark = df.sparkSession
-    val schema = df.schema
-    val rdd = df.rdd.mapPartitions(it => rateLimited(it, maxPerSecondPerPartition))
-    spark.createDataFrame(rdd, schema)
-  }
 }

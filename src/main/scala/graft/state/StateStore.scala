@@ -1,6 +1,6 @@
 package graft.state
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -276,9 +276,8 @@ object StateStore {
   private def fsOf(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Committed delta dirs for `path`, oldest first. */
-  private[graft] def deltaDirs(spark: SparkSession, path: String): Seq[(Int, Path)] = {
-    val fs = fsOf(spark, path)
+  /** Every `__delta_<n>` dir of `path`, committed or not, oldest first. */
+  private def deltaDirsAll(fs: FileSystem, path: String): Seq[(Int, Path)] = {
     val parent = new Path(path).getParent
     val name = new Path(path).getName
     if (parent == null || !fs.exists(parent)) Nil
@@ -291,8 +290,13 @@ object StateStore {
           case _ => None
         }
       }
-      .filter { case (_, p) => fs.exists(new Path(p, "_SUCCESS")) }
       .sortBy(_._1)
+  }
+
+  /** Committed delta dirs for `path`, oldest first. */
+  private[graft] def deltaDirs(spark: SparkSession, path: String): Seq[(Int, Path)] = {
+    val fs = fsOf(spark, path)
+    deltaDirsAll(fs, path).filter { case (_, p) => fs.exists(new Path(p, "_SUCCESS")) }
   }
 
   def deltaCount(spark: SparkSession, path: String): Int =
@@ -444,9 +448,13 @@ object StateStore {
     val fs = fsOf(spark, path)
     val tmp = new Path(path + "__dtmp")
     rows.write.mode("overwrite").parquet(tmp.toString)
-    val next = (0 +: deltaDirs(spark, path).map(_._1)).max + 1
+    // number past every delta dir, committed or not: a compaction that
+    // crashed inside its recursive delete leaves `__delta_<n>` without
+    // `_SUCCESS`, and a rename onto an existing dir moves the batch INTO
+    // it, where no reader looks
+    val next = (0 +: deltaDirsAll(fs, path).map(_._1)).max + 1
     val dst = new Path(path + s"__delta_$next")
-    if (!fs.rename(tmp, dst))
+    if (fs.exists(dst) || !fs.rename(tmp, dst))
       throw new java.io.IOException(s"delta commit rename failed: $tmp -> $dst")
   }
 
@@ -712,16 +720,6 @@ object StateStore {
         .drop("s_key", "last_synced")
     }
   }
-
-  /** High-water-mark: the latest successful sync instant
-    * (reference: pkg/state/manager.go:457-470).
-    */
-  def highWaterMark(state: DataFrame): Option[java.sql.Timestamp] =
-    state.agg(max("last_synced")).head.get(0) match {
-      case t: java.sql.Timestamp => Some(t)
-      case ldt: java.time.LocalDateTime => Some(java.sql.Timestamp.valueOf(ldt))
-      case _ => None
-    }
 
   /** Aggregate sync statistics (A3, reference: pkg/state/manager.go:599-633). */
   def stats(state: DataFrame): DataFrame =

@@ -33,15 +33,6 @@ object Progress {
       stateRows: Long,
       stateMemoryBytes: Long)
 
-  /** Whole-replay rollup: the numbers a progress dashboard tiles. */
-  final case class CardSummary(
-      batches: Long,
-      totalRows: Long,
-      maxBatchDurationMs: Long,
-      minRowsPerSec: Double,
-      maxStateRows: Long,
-      maxStateMemoryBytes: Long)
-
   /** One card per completed micro-batch, oldest first. Idle (zero-input)
     * batches — watermark-advance ticks, empty triggers — are dropped unless
     * `includeIdle`, so bounds pinned on the card are about batches that did
@@ -61,16 +52,4 @@ object Progress {
           stateRows = state.map(_.numRowsTotal).sum,
           stateMemoryBytes = state.map(_.memoryUsedBytes).sum)
       }
-
-  def summarize(cards: Seq[BatchCard]): CardSummary =
-    CardSummary(
-      batches = cards.size.toLong,
-      totalRows = cards.map(_.inputRows).sum,
-      maxBatchDurationMs =
-        if (cards.isEmpty) 0L else cards.map(_.batchDurationMs).max,
-      minRowsPerSec =
-        if (cards.isEmpty) 0.0 else cards.map(_.processedRowsPerSec).min,
-      maxStateRows = if (cards.isEmpty) 0L else cards.map(_.stateRows).max,
-      maxStateMemoryBytes =
-        if (cards.isEmpty) 0L else cards.map(_.stateMemoryBytes).max)
 }

@@ -420,7 +420,7 @@ class DeploySpec extends AnyFunSuite {
         assert(e.path("secretRef").path("optional").asBoolean(false),
           "the secret is applied out-of-band; the ref must be optional")
     }
-    // config keys are REAL Config.scala knobs, not invented ones
+    // config keys are the reference's rate-limit knobs, not invented ones
     val cm = docs.find(_.path("kind").asText == "ConfigMap").get
     val knownKnobs = Set("JIRA_RATE_LIMIT_DELAY_MS", "JIRA_MAX_CONCURRENT_REQUESTS",
       "JIRA_BACKOFF_BASE_MS", "JIRA_BACKOFF_CAP_MS")

@@ -440,9 +440,6 @@ class EngineSpec extends AnyFunSuite {
       ("Blocks", "PROJ-3", "inward"), ("Cloners", "PROJ-4", "outward"),
       ("epic", "PROJ-1", "outward"), ("parent", "PROJ-2", "outward"),
       ("subtask", "PROJ-8", "outward"), ("subtask", "PROJ-9", "outward")))
-
-    // broken-link GC: only PROJ-7 exists as an issue → all 6 edges dangle
-    assert(Ingest.brokenEdges(edges, df).count() == 6)
   }
 
   test("edge sink writes partitioned parquet that reads back") {
@@ -464,8 +461,5 @@ class EngineSpec extends AnyFunSuite {
       sleepMs = { ms => sleeps += ms; clock += ms * 1000000 }).toList
     assert(out == (1 to 10).toList) // lossless
     assert(sleeps.nonEmpty && sleeps.forall(_ <= 500)) // 2/sec → 500ms spacing
-    // throttled DataFrame keeps all rows
-    val df = Tables.t(spark, sf, "region")
-    assert(Throttle.throttled(df, 1000).count() == df.count())
   }
 }

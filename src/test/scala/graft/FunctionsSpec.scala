@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.config.Config
 import graft.functions.{Keys, Time}
 import graft.jql.Lexer
 
@@ -32,8 +31,6 @@ class FunctionsSpec extends AnyFunSuite {
     val df = samples.map { case (p, n) => (p, s"$p-$n") }.toDF("proj", "key")
     val bad = df.filter(Keys.extractProjectKey(col("key")) =!= col("proj")).count()
     assert(bad == 0)
-    val invalid = df.filter(!Keys.isValidIssueKey(col("key"))).count()
-    assert(invalid == 0)
   }
 
   test("parseEpicKey and keyFromFilePath round-trip through the path rule") {
@@ -45,13 +42,6 @@ class FunctionsSpec extends AnyFunSuite {
     val parsed = df.select(Keys.parseEpicKey(col("key")).as("e"), col("key"))
       .select(concat(col("e.project"), lit("-"), col("e.number")).as("re"), col("key"))
     assert(parsed.filter(col("re") =!= col("key")).count() == 0)
-  }
-
-  test("parseKeyList splits, trims, and drops empties") {
-    import spark.implicits._
-    val r = Seq("P1-1, P1-2 ,,P1-3").toDF("s")
-      .select(Keys.parseKeyList(col("s")).as("ks")).head
-    assert(r.getSeq[String](0).toList == List("P1-1", "P1-2", "P1-3"))
   }
 
   test("jira timestamp format → parse round-trips across the fallback formats") {
@@ -73,41 +63,6 @@ class FunctionsSpec extends AnyFunSuite {
     assert(df.sparkSession.range(1)
       .select(Time.parseJiraTimestamp(lit("not a date")).isNull.as("n"))
       .head.getBoolean(0))
-  }
-
-  test("dotenv parser: quotes, comments, export prefix, precedence (property)") {
-    checkAll(Gen.zip(Gen.alphaUpperStr.suchThat(_.nonEmpty), Gen.alphaNumStr)) {
-      case (k, v) =>
-        val parsed = Config.parseDotenv(s"$k=$v")
-        assert(parsed.get(k).contains(v))
-    }
-    val env = Config.parseDotenv(
-      """# comment
-        |export JIRA_BASE_URL="https://jira.example.com"
-        |JIRA_EMAIL='a@b.c'
-        |JIRA_PAT=tok123  # inline comment
-        |EMPTY=
-        |""".stripMargin)
-    assert(env("JIRA_BASE_URL") == "https://jira.example.com")
-    assert(env("JIRA_EMAIL") == "a@b.c")
-    assert(env("JIRA_PAT") == "tok123")
-    assert(env("EMPTY") == "")
-  }
-
-  test("config load: env over dotenv, defaults, validation errors") {
-    val dotenv = Map("JIRA_BASE_URL" -> "https://a.example.com",
-      "JIRA_EMAIL" -> "x@y.z", "JIRA_PAT" -> "t1")
-    val ok = Config.load(Map.empty, dotenv)
-    assert(ok.exists(c => c.rateLimitDelayMs == 100 && c.maxConcurrentRequests == 5))
-    val precedence = Config.load(Map("JIRA_PAT" -> "envtok"), dotenv)
-    assert(precedence.exists(_.token == "envtok"))
-    val bad = Config.load(Map("JIRA_BASE_URL" -> "ftp://x",
-      "JIRA_MAX_CONCURRENT_REQUESTS" -> "99"))
-    assert(bad.isLeft)
-    val errs = bad.left.getOrElse(Nil)
-    assert(errs.exists(_.contains("http")))
-    assert(errs.exists(_.contains("JIRA_EMAIL")))
-    assert(errs.exists(_.contains("[1, 10]")))
   }
 
   test("lexer: doubled-quote escapes round-trip (property)") {

@@ -322,136 +322,6 @@ class PipelineSpec extends AnyFunSuite {
     df.unpersist()
   }
 
-  test("corpus sink: hive layout, right-sized files, exact round-trip") {
-    val out = java.nio.file.Files.createTempDirectory("graft-corpus-out").toString
-    val docs = Tables.t(spark, sf, "documents")
-    pipeline.CorpusSink.write(docs, out, partitionCols = Seq("lang"))
-    val back = spark.read.parquet(out)
-    assert(back.count() == docs.count())
-    // hive-style lang=... directories exist for partition pruning
-    val dirs = new java.io.File(out).listFiles().filter(_.isDirectory)
-      .map(_.getName).filter(_.startsWith("lang=")).toSet
-    val langs = docs.select("lang").distinct().collect().map(_.getString(0)).toSet
-    assert(dirs == langs.map(l => s"lang=$l"))
-    // rebalance must coalesce the 32 shuffle slivers: tiny data ends up as
-    // ONE file per partition directory, not one per task per directory
-    dirs.foreach { d =>
-      val files = new java.io.File(s"$out/$d").listFiles()
-        .count(_.getName.endsWith(".parquet"))
-      assert(files <= 2, s"$d holds $files files — rebalance did not coalesce")
-    }
-    // pruned read only touches the one directory
-    val one = spark.read.parquet(out).filter(col("lang") === langs.head)
-    assert(one.queryExecution.executedPlan.toString.contains("PartitionFilters: [isnotnull(lang"),
-      "lang filter must prune partitions at the scan")
-  }
-
-  test("z-order layout: box predicates touch far fewer files than a time-sorted layout") {
-    // the writer's promise is DATA SKIPPING: with files laid out along the
-    // interleaved (user_id, ts) key, a two-column box predicate must
-    // intersect the min-max footprint of only a handful of files, where a
-    // time-only sort (the natural ingest order) prunes one dimension and
-    // scans every file for the other
-    // 64k rows uniform over 256 users x 2^20 time units — enough per-file
-    // rows that min-max footprints reflect the layout, not sampling noise
-    val nFiles = 64
-    val df = spark.range(65536).select(
-      col("id").as("event_id"),
-      pmod(hash(col("id")), lit(256)).cast("long").as("user_id"),
-      pmod(hash(col("id") * 7 + 1), lit(1 << 20)).cast("long").as("t"))
-    val zOut = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-    pipeline.CorpusSink.writeZOrdered(df, zOut, Seq("user_id", "t"),
-      bits = 8, targetFiles = nFiles)
-    val tOut = java.nio.file.Files.createTempDirectory("graft-tsort").toString
-    df.repartitionByRange(nFiles, col("t"))
-      .sortWithinPartitions("t").write.mode("overwrite").parquet(tOut)
-    // clustering must not lose or duplicate a row
-    val back = spark.read.parquet(zOut)
-    assert(back.count() == df.count() &&
-      back.select("event_id").except(df.select("event_id")).count() == 0)
-    // the canonical lakehouse probe: ONE user inside a time window. The
-    // window spans a QUARTER of the time range so the sorted layout must
-    // touch ~16 files however the range sampler drew its boundaries
-    // (repartitionByRange boundaries are rdd-id-seeded and shift a file or
-    // two between runs) — the z-win assertion stays structural, not flaky
-    val (uLo, uHi) = (57L, 57L)
-    val (tLo, tHi) = (1L << 19, (1L << 19) + (1L << 18))
-    def touched(path: String): Long =
-      spark.read.parquet(path)
-        .groupBy(input_file_name().as("f"))
-        .agg(min("user_id").as("ulo"), max("user_id").as("uhi"),
-          min("t").as("tlo"), max("t").as("thi"))
-        .filter(col("uhi") >= uLo && col("ulo") <= uHi &&
-          col("thi") >= tLo && col("tlo") <= tHi)
-        .count()
-    val (zt, tt) = (touched(zOut), touched(tOut))
-    assert(zt >= 1, "box must hit at least one z-ordered file")
-    assert(zt * 2 <= tt,
-      s"z-order touches $zt of $nFiles files vs $tt for the sorted layout — no skipping win")
-    // the low-cardinality path stays sane too: real events (15 users at
-    // this SF) must round-trip exactly and never skip WORSE than the
-    // one-column layout
-    val events = Tables.events(spark, sf)
-    val ezOut = java.nio.file.Files.createTempDirectory("graft-zorder-ev").toString
-    pipeline.CorpusSink.writeZOrdered(events, ezOut, Seq("user_id", "ts"),
-      bits = 8, targetFiles = 16)
-    val eback = spark.read.parquet(ezOut)
-    assert(eback.count() == events.count() &&
-      eback.select("event_id").except(events.select("event_id")).count() == 0)
-  }
-
-  test("corpus sink sizes files under skew: no oversize, no sliver storm") {
-    // the sink's actual promise is FILE SIZING, not just layout: a skewed
-    // partition column must split into ~advisory-sized files instead of one
-    // straggler file, and small partitions must not shatter into slivers.
-    // Payload is chained-md5 hex — incompressible enough that on-disk bytes
-    // track shuffle bytes, so the advisory meaningfully bounds file size.
-    val out = java.nio.file.Files.createTempDirectory("graft-sizing").toString
-    val advisoryMB = 1
-    val payload = concat_ws("",
-      (0 until 32).map(i => md5(concat(col("id"), lit(i)))): _*)
-    // 90% of rows land in source=web (~12 MB), the rest spread over 5 tiny
-    // sources — the classic skew a curation job writes
-    val df = spark.range(13000).select(
-      col("id").as("doc_id"),
-      when(col("id") % 50 < 45, "web")
-        .otherwise(concat(lit("s"), (col("id") % 50).cast("string"))).as("source"),
-      payload.as("text"))
-    pipeline.CorpusSink.write(df, out, partitionCols = Seq("source"),
-      advisoryMB = advisoryMB)
-    assert(spark.read.parquet(out).count() == 13000)
-    val advisoryBytes = advisoryMB * 1024L * 1024L
-    val dirs = new java.io.File(out).listFiles().filter(_.isDirectory)
-      .filter(_.getName.startsWith("source="))
-    assert(dirs.map(_.getName).toSet.size == 6)
-    val sizes = dirs.map { d =>
-      d.getName -> d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(_.length()).toSeq
-    }.toMap
-    // band 1: no file more than 2x the advisory (oversize = AQE failed to
-    // split the skewed slice)
-    sizes.foreach { case (d, fs) =>
-      fs.foreach(sz => assert(sz <= 2 * advisoryBytes,
-        s"$d holds a ${sz / 1024 / 1024} MB file — advisory not applied"))
-    }
-    // band 2: the skewed partition splits into multiple files, but the count
-    // stays proportional to its volume (no per-task sliver storm)
-    val webFiles = sizes("source=web")
-    val webBytes = webFiles.sum
-    assert(webFiles.length >= 3,
-      s"web wrote ${webFiles.length} file(s) for ${webBytes / 1024 / 1024} MB — skew not split")
-    // the census budgets on UNCOMPRESSED (json-proxy) bytes, so file count
-    // can run up to the compression ratio above the on-disk ideal — allow
-    // 3x; a real sliver storm (files per map task per directory) is 10-100x
-    val expected = math.ceil(webBytes.toDouble / advisoryBytes).toInt
-    assert(webFiles.length <= 3 * expected + 2,
-      s"web shattered into ${webFiles.length} files for ~$expected advisory units")
-    // band 3: each tiny source coalesces to a file or two, not one per task
-    (sizes - "source=web").foreach { case (d, fs) =>
-      assert(fs.length <= 2, s"$d holds ${fs.length} sliver files")
-    }
-  }
-
   test("zorder skipping card: one file per aligned block, boxes honest, pruning bites") {
     val out = java.nio.file.Files.createTempDirectory("graft-zskip").toString +
       "/events_z"
@@ -679,65 +549,6 @@ class PipelineSpec extends AnyFunSuite {
       "every dirty block is pure-late — upsert never exercised a merge")
   }
 
-  test("bloom prefilter with an empty index flags nothing") {
-    import spark.implicits._
-    val docs = Tables.t(spark, sf, "documents").select("doc_id", "text").limit(20)
-    val emptyIndex = Seq.empty[String].toDF("fp")
-    val flagged = pipeline.Dedup.bloomPrefilter(emptyIndex,
-      pipeline.Dedup.fingerprints(docs))
-    assert(flagged.filter(col("maybe_dup")).count() == 0,
-      "an empty index cannot contain anything")
-  }
-
-  test("bloom prefilter: zero false negatives, bounded false positives") {
-    val docs = Tables.t(spark, sf, "documents").select("doc_id", "text")
-    val fps = pipeline.Dedup.fingerprints(docs).cache()
-    // index = docs 0..249; batch = 200..499 (50 seen, 300 candidates)
-    val index = fps.filter(col("doc_id") < 250).select("fp")
-    val batch = fps.filter(col("doc_id") >= 200)
-    val flagged = pipeline.Dedup.bloomPrefilter(index, batch, fpp = 0.001).cache()
-    // one-sided guarantee: every batch fp genuinely in the index is flagged
-    val missed = flagged.join(index, Seq("fp"), "left_semi")
-      .filter(!col("maybe_dup")).count()
-    assert(missed == 0, s"$missed indexed fingerprints escaped the filter")
-    // docs definitely not in the index are mostly unflagged (fpp-bounded;
-    // 5% is 50x the configured 0.1% — structural headroom, not a tight bound)
-    val fresh = flagged.join(index, Seq("fp"), "left_anti")
-    val fp = fresh.filter(col("maybe_dup")).count().toDouble /
-      math.max(1, fresh.count())
-    assert(fp < 0.05, s"false-positive rate $fp implausible for fpp=0.001")
-    flagged.unpersist(); fps.unpersist()
-  }
-
-  test("approx-quantile calibration matches the exact window off-boundary") {
-    val exact = run("pipe_quality_calibrated")
-      .select(col("doc_id"), col("source"), col("quality"),
-        col("src_pctl"), col("selected").as("sel_exact"))
-    val joined = exact.join(
-      pipeline.Curation.qualityCalibratedApprox(spark, sf)
-        .select(col("doc_id"), col("selected").as("sel_approx")),
-      Seq("doc_id")).cache()
-    assert(joined.count() == exact.count(),
-      "approx variant must score every doc the window form scores")
-    // off the percentile boundary the two selections must agree exactly;
-    // the sketch may only flip docs whose exact percentile sits near q=0.5
-    val offBoundary = joined.filter(
-      col("src_pctl") < 0.45 || col("src_pctl") > 0.55)
-    assert(offBoundary.filter(col("sel_exact") =!= col("sel_approx"))
-      .count() == 0,
-      "approx threshold flipped a doc far from the percentile boundary")
-    // both keep roughly the top half of every source
-    val shares = pipeline.Curation.qualityCalibratedApprox(spark, sf)
-      .groupBy("source")
-      .agg((sum(col("selected").cast("long")) / count(lit(1))).as("share"))
-      .collect()
-    shares.foreach { r =>
-      val sh = r.getAs[Double]("share")
-      assert(sh > 0.2 && sh < 0.8, s"${r.getString(0)}: share $sh off-contract")
-    }
-    joined.unpersist()
-  }
-
   test("span dedup: coverage bounded by dup windows; near-dup docs covered") {
     val df = run("pipe_dedup_spans").cache()
     // structural invariants of the sliding-window census
@@ -836,95 +647,12 @@ class PipelineSpec extends AnyFunSuite {
     df.unpersist()
   }
 
-  test("incremental exact dedup: verdicts match a first-seen local recompute") {
-    val docs = Tables.t(spark, sf, "documents").select("doc_id", "text")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-incr-fps").toString + "/fps"
-    // duplicate some batch docs' TEXT against existing corpus docs so the
-    // seen_before path is exercised, and against each other for keep-first
-    val existing = docs.filter(col("doc_id") % 10 =!= 0)
-    pipeline.Dedup.upsertFingerprints(existing, path)
-    // 5 re-sends of indexed docs (seen_before path) and 5 pairs of docs
-    // new to the corpus but duplicated WITHIN the batch (keep-first path)
-    val seenCopies = existing.limit(5)
-      .select((col("doc_id") + 1000000).as("doc_id"), col("text"))
-    val uniqBase = docs.filter(col("doc_id") % 10 === 0).limit(5)
-      .select(col("doc_id"), concat(col("text"), lit(" graftuniq")).as("text"))
-    val batch = docs.filter(col("doc_id") % 10 === 0)
-      .unionByName(seenCopies)
-      .unionByName(uniqBase.select((col("doc_id") + 2000000).as("doc_id"),
-        col("text")))
-      .unionByName(uniqBase.select((col("doc_id") + 3000000).as("doc_id"),
-        col("text")))
-    val verdicts = pipeline.Dedup.incrementalExactDedup(batch, path).cache()
-    assert(verdicts.count() == batch.count())
-    // bloom one-sidedness: anything confirmed seen was flagged maybe
-    assert(verdicts.filter(col("seen_before") && !col("maybe_dup"))
-      .count() == 0)
-    // recompute every verdict locally from first principles
-    val oldFps = pipeline.Dedup.fingerprints(existing)
-      .collect().map(_.getString(1)).toSet
-    val batchFps = pipeline.Dedup.fingerprints(batch)
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    val firstIn = batchFps.groupBy(_._2).view.mapValues(_.map(_._1).min).toMap
-    val expect = batchFps.map { case (id, fp) =>
-      (id, oldFps(fp), !oldFps(fp) && firstIn(fp) == id)
-    }.toSet
-    val got = verdicts.select("doc_id", "seen_before", "kept")
-      .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getBoolean(2)))
-      .toSet
-    assert(got == expect,
-      s"verdicts diverge: ${(got diff expect).take(3)} vs ${(expect diff got).take(3)}")
-    // the seeded copies must be caught: 5 seen-before, 5 batch-internal dups
-    assert(verdicts.filter(col("seen_before")).count() >= 5)
-    assert(verdicts.filter(!col("kept") && !col("seen_before")).count() >= 5)
-    // and the index upsert of kept docs round-trips
-    pipeline.Dedup.upsertFingerprints(
-      batch.join(verdicts.filter(col("kept")).select("doc_id"), Seq("doc_id")),
-      path)
-    val after = pipeline.Dedup.incrementalExactDedup(batch, path)
-    assert(after.filter(!col("seen_before")).count() == 0,
-      "every batch doc must be seen after its kept set is upserted")
-    verdicts.unpersist()
-  }
-
-  test("sharded bloom prefilter preserves the single-filter guarantee") {
-    val docs = Tables.t(spark, sf, "documents").select("doc_id", "text")
-    val fps = pipeline.Dedup.fingerprints(docs).cache()
-    val index = fps.filter(col("doc_id") < 250).select("fp")
-    val batch = fps.filter(col("doc_id") >= 200)
-    // forced multi-shard build (4 prefix shards over a tiny index)
-    val sharded = pipeline.Dedup
-      .bloomPrefilterSharded(index, batch, fpp = 0.001, shards = 4).cache()
-    // the no-false-negative guarantee must hold shard-locally
-    val missed = sharded.join(index, Seq("fp"), "left_semi")
-      .filter(!col("maybe_dup")).count()
-    assert(missed == 0, s"$missed indexed fingerprints escaped the shards")
-    // fresh docs stay mostly unflagged, same structural bound as monolithic
-    val fresh = sharded.join(index, Seq("fp"), "left_anti")
-    val fpRate = fresh.filter(col("maybe_dup")).count().toDouble /
-      math.max(1, fresh.count())
-    assert(fpRate < 0.05, s"sharded false-positive rate $fpRate implausible")
-    // every fp the monolithic filter marks definitely-new, the sharded one
-    // must too (both one-sided; positives may differ only within fpp noise)
-    val mono = pipeline.Dedup.bloomPrefilter(index, batch, fpp = 0.001)
-      .withColumnRenamed("maybe_dup", "mono_dup")
-    val disagree = sharded.join(mono, Seq("doc_id", "fp"))
-      .filter(col("maybe_dup") =!= col("mono_dup")).count()
-    assert(disagree <= 3,
-      s"$disagree flag disagreements beyond fpp noise between sharded and mono")
-    // and the size-gated front door routes a small index to a working path
-    val auto = pipeline.Dedup.bloomPrefilterAuto(index, batch)
-    assert(auto.join(index, Seq("fp"), "left_semi")
-      .filter(!col("maybe_dup")).count() == 0)
-    sharded.unpersist(); fps.unpersist()
-  }
-
   test("end-to-end curation: final corpus ⨝ leakage-safe split ⨝ sized output") {
     // the composition a real job runs: near-dup survivor + rule gate
     // (pipe_corpus_final), split by cluster label (leakage-safe), written
-    // with sized files — every stage is the already-verified operator, this
-    // pins that they COMPOSE (shared doc_id keys, no row loss, no split leak)
+    // out partitioned by split — every stage is the already-verified
+    // operator, this pins that they COMPOSE (shared doc_id keys, no row loss,
+    // no split leak)
     val corpus = run("pipe_corpus_final").select("doc_id", "cluster", "quality")
     val split = run("pipe_split_leakage_safe").select("doc_id", "split")
     val joined = corpus.join(split, Seq("doc_id")).cache()
@@ -936,7 +664,7 @@ class PipelineSpec extends AnyFunSuite {
       .agg(countDistinct("split").as("k")).filter(col("k") > 1).count()
     assert(leaks == 0, s"$leaks clusters leak across splits in the final corpus")
     val out = java.nio.file.Files.createTempDirectory("graft-e2e-out").toString
-    pipeline.CorpusSink.write(joined, out, partitionCols = Seq("split"))
+    joined.write.mode("overwrite").partitionBy("split").parquet(out)
     val back = spark.read.parquet(out)
     assert(back.count() == joined.count())
     assert(back.select("doc_id").except(joined.select("doc_id")).count() == 0)

@@ -361,19 +361,6 @@ class SinkSpec extends AnyFunSuite {
     }
   }
 
-  test("commit message column maps issue types to conventional types") {
-    import spark.implicits._
-    val df = Seq(("Bug", "P1", "P1-1"), ("Story", "P1", "P1-2"),
-      ("Task", "P2", "P2-3"), ("Epic", "P2", "P2-4"))
-      .toDF("issuetype", "project", "key")
-      .select(Yaml.commitMessage(col("issuetype"), col("project"), col("key"),
-        lit("add")).as("msg"))
-    val msgs = df.collect().map(_.getString(0)).toSeq
-    assert(msgs == Seq(
-      "fix(P1): add issue P1-1", "feat(P1): add issue P1-2",
-      "chore(P2): add issue P2-3", "feat(P2): add issue P2-4"))
-  }
-
   test("partitioned corpus layout: two-column predicate prunes to one directory") {
     import org.apache.spark.sql.functions.col
     val out = java.nio.file.Files

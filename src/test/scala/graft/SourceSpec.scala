@@ -177,25 +177,6 @@ class SourceSpec extends AnyFunSuite {
     assert(df.count() > 0)
   }
 
-  test("typed model: asIssues lifts flat rows into Dataset[Issue]") {
-    val typed = Ingest.asIssues(Tables.issues(spark, sf).limit(200)).cache()
-    val issues = typed.collect()
-    assert(issues.length == 200)
-    val withEpic = issues.filter(_.relationships.exists(_.epic_link.isDefined))
-    assert(withEpic.nonEmpty)
-    assert(issues.forall(i => i.status.name.nonEmpty && i.assignee.email.contains("@")))
-    // no-relationship issues collapse to None, not an empty struct
-    val epics = issues.filter(i => i.issuetype == "Epic" && i.relationships.isEmpty)
-    assert(epics.nonEmpty)
-    // typed state round-trip through the IssueState encoder
-    import spark.implicits._
-    val st = graft.state.StateStore.fromIssues(
-      Tables.issues(spark, sf).limit(10),
-      java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
-      .as[graft.model.IssueState].collect()
-    assert(st.length == 10 && st.forall(_.sync_count == 1))
-  }
-
   test("upsertEdges deletes changed issues' stale edges across all partitions") {
     import spark.implicits._
     val path = s"${Files.createTempDirectory("graft-edges")}/relationships"
@@ -247,40 +228,24 @@ class SourceSpec extends AnyFunSuite {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(path + "__old")))
   }
 
-  test("compactEdges collapses accumulated small files, content unchanged") {
+  test("upsertEdges first completes a full rewrite that crashed before promoting") {
     import spark.implicits._
-    val path = s"${Files.createTempDirectory("graft-compact")}/relationships"
+    val path = s"${Files.createTempDirectory("graft-rewrite-crash")}/relationships"
     def edf(rows: (String, String, String, String, String)*) =
       rows.toDF("src", "link_type", "direction", "dst", "project_key")
-        .repartition(8) // force multi-file writes
     Ingest.writeEdges(edf(("P1-1", "epic", "outward", "E-1", "P1"),
-      ("P1-2", "epic", "outward", "E-1", "P1")), path)
-    // fragment the (P1, epic) partition the way a large partition would be
-    // at scale (file-size/AQE splits): append one-row files directly
-    edf(("P1-3", "epic", "outward", "E-1", "P1"),
-      ("P1-4", "epic", "outward", "E-1", "P1"))
-      .repartition(col("project_key"), col("link_type"))
-      .write.mode("append").option("maxRecordsPerFile", 1)
-      .partitionBy("project_key", "link_type").parquet(path)
-    def files() = {
-      val d = new java.io.File(s"$path/project_key=P1/link_type=epic")
-      d.listFiles().count(_.getName.endsWith(".parquet"))
-    }
-    val before = spark.read.parquet(path).select("src").as[String].collect().toSet
-    assert(files() > 1)
-    Ingest.compactEdges(spark, path)
-    assert(files() == 1)
-    assert(spark.read.parquet(path).select("src").as[String].collect().toSet == before)
-
-    // crash window: compaction wrote __compact and parked the table at __old
-    // but died before promoting — src is absent, the complete data sits in
-    // __compact. An incremental upsert that runs NEXT (before any compaction)
-    // must recover the full table first, not recreate it with only its batch.
+      ("P1-2", "epic", "outward", "E-1", "P1"),
+      ("P1-3", "epic", "outward", "E-1", "P1"),
+      ("P1-4", "epic", "outward", "E-1", "P1")), path)
+    // crash window: a full rewrite staged __compact and parked the table at
+    // __old but died before promoting — src is absent, the complete data
+    // sits in __compact. An incremental upsert that runs NEXT must recover
+    // the full table first, not recreate it with only its batch.
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(new org.apache.hadoop.fs.Path(path),
       new org.apache.hadoop.fs.Path(path + "__compact2"))) // stash
-    // simulate: __compact complete, src gone, __old holds the pre-compaction copy
+    // simulate: __compact complete, src gone, __old holds the pre-rewrite copy
     assert(fs.rename(new org.apache.hadoop.fs.Path(path + "__compact2"),
       new org.apache.hadoop.fs.Path(path + "__compact")))
     fs.mkdirs(new org.apache.hadoop.fs.Path(path + "__old"))
@@ -357,13 +322,13 @@ class SourceSpec extends AnyFunSuite {
         }
         val afterU1 = Set(("P1-1", "parent", "E-1"), ("P1-2", "epic", "E-1"),
           ("P3-1", "parent", "P3-0"), ("P3-2", "blocks", "P3-7"), ("P4-1", "epic", "E-4"))
-        Ingest.compactEdges(spark, path)
-        assert(table() == afterU1)
+        // the next upsert is the next writer: it rolls the crashed swap
+        // forward before it reads the table
+        Ingest.upsertEdges(edf(("P1-2", "epic", "outward", "E-5", "P1")), keys("P1-2"), path)
+        assert(table() == afterU1 - (("P1-2", "epic", "E-1")) + (("P1-2", "epic", "E-5")))
         assert(!new java.io.File(s"$path/project_key=P2").exists())
         assert(!fs.exists(new org.apache.hadoop.fs.Path(path + "__upsert")))
         assert(!fs.exists(new org.apache.hadoop.fs.Path(path + "__cold")))
-        Ingest.upsertEdges(edf(("P1-2", "epic", "outward", "E-5", "P1")), keys("P1-2"), path)
-        assert(table() == afterU1 - (("P1-2", "epic", "E-1")) + (("P1-2", "epic", "E-5")))
       }
     }
   }
@@ -403,40 +368,23 @@ class SourceSpec extends AnyFunSuite {
       .as[String].collect().toSeq == Seq("P3-7"))
   }
 
-  test("adaptive fetch honors Retry-After, spreads budget, bounds retries") {
+  test("rate policy: Retry-After, budget spread, reset wait, capped backoff") {
     import graft.sources.Throttle
     import graft.sources.Throttle.RateSignal
-    val sleeps = scala.collection.mutable.ArrayBuffer.empty[Long]
-    // page 0 OK (budget 5 over 1000ms); page 1 rate-limited once with
-    // Retry-After 500; then OK; page 2 empty → end
-    val responses = scala.collection.mutable.Queue[(RateSignal, Seq[String])](
-      (RateSignal(200, remaining = Some(5), resetInMs = Some(1000)), Seq("a", "b")),
-      (RateSignal(429, retryAfterMs = Some(500)), Nil),
-      (RateSignal(200), Seq("c")),
-      (RateSignal(200), Nil))
-    val pagesSeen = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val out = Throttle.adaptiveFetch[String](
-      p => { pagesSeen += p; responses.dequeue() },
-      baseDelayMs = 100, sleepMs = d => { sleeps += d; () }).toSeq
-    assert(out == Seq("a", "b", "c"))
-    assert(pagesSeen.toSeq == Seq(0, 1, 1, 2)) // 429 retried the SAME page
-    // delays: 200 = 1000/5 budget spread after page 0, 500 = Retry-After,
-    // 100 = base delay after the retried page succeeded
-    assert(sleeps.toSeq == Seq(200L, 500L, 100L))
-
+    // 429 honors Retry-After; a known budget is spread across the reset
+    // window, never faster than the base delay
+    assert(Throttle.nextDelayMs(RateSignal(429, retryAfterMs = Some(500)), 100, 0) == 500)
+    assert(Throttle.nextDelayMs(
+      RateSignal(200, remaining = Some(5), resetInMs = Some(1000)), 100, 0) == 200)
+    assert(Throttle.nextDelayMs(
+      RateSignal(200, remaining = Some(50), resetInMs = Some(1000)), 100, 0) == 100)
+    assert(Throttle.nextDelayMs(RateSignal(200), 100, 0) == 100)
     // exhausted budget waits out the reset window
     assert(Throttle.nextDelayMs(
       RateSignal(200, remaining = Some(0), resetInMs = Some(750)), 100, 0) == 750)
     // missing Retry-After → exponential backoff, capped
     assert(Throttle.nextDelayMs(RateSignal(429), 100, 3) == 800)
     assert(Throttle.nextDelayMs(RateSignal(429), 100, 20, backoffCapMs = 30000) == 30000)
-
-    // persistent 429 gives up after maxRetries
-    val ex = intercept[java.io.IOException] {
-      Throttle.adaptiveFetch[String](_ => (RateSignal(429), Nil),
-        maxRetries = 2, sleepMs = _ => ()).toSeq
-    }
-    assert(ex.getMessage.contains("rate-limited"))
   }
 
   test("wire round-trip preserves values end to end") {

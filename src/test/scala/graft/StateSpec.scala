@@ -170,9 +170,9 @@ class StateSpec extends AnyFunSuite {
     val state = StateStore.fromIssues(
       batchDf(Seq(("P1-1", "P1", "a", "2024-01-01 00:00:00"),
         ("P2-9", "P2", "b", "2024-01-03 00:00:00"))), ts("2024-01-04 00:00:00"))
-    assert(StateStore.highWaterMark(state).contains(ts("2024-01-04 00:00:00")))
-    assert(StateStore.highWaterMark(StateStore.empty(spark)).isEmpty)
     val st = StateStore.stats(state).head
+    // the high-water mark: the latest successful sync instant
+    assert(st.getAs[java.sql.Timestamp]("last_sync_time") == ts("2024-01-04 00:00:00"))
     assert(st.getAs[Long]("total_issues") == 2)
     assert(st.getAs[String]("projects") == "P1,P2")
   }
@@ -269,6 +269,27 @@ class StateSpec extends AnyFunSuite {
     val replayed = StateStore.loadResolved(spark, path).collect()
       .map(r => r.getString(0) -> r.getAs[Int]("sync_count")).toMap
     assert(replayed == afterCompact, "re-applied folded delta must be a no-op")
+  }
+
+  test("a delta appended past a stray uncommitted delta dir stays visible") {
+    val dir = Files.createTempDirectory("graft-stray-delta").toString
+    val path = s"$dir/state"
+    StateStore.save(StateStore.fromIssues(batchDf(Seq(
+      ("P1-1", "P1", "a", "2024-01-01 00:00:00"))), ts("2024-01-02 00:00:00")), path)
+    // a compaction that crashed inside its recursive delete of __delta_1:
+    // `_SUCCESS` is gone, a data file is left
+    val stray = new java.io.File(s"${path}__delta_1")
+    assert(stray.mkdirs())
+    java.nio.file.Files.write(new java.io.File(stray, "part-00000.parquet").toPath,
+      Array[Byte](1, 2, 3))
+    assert(StateStore.deltaCount(spark, path) == 0)
+    val b = StateStore.fromIssues(
+      batchDf(Seq(("P1-2", "P1", "b", "2024-02-01 00:00:00"))), ts("2024-02-02 00:00:00"))
+    StateStore.appendDelta(b, path)
+    // the batch commits under its own name, not inside the stray dir
+    assert(StateStore.deltaCount(spark, path) == 1)
+    val keys = StateStore.loadResolved(spark, path).collect().map(_.getString(0)).toSet
+    assert(keys == Set("P1-1", "P1-2"))
   }
 
   test("loadResolved split plan equals the definitional one-window resolution") {
