@@ -30,26 +30,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * keyed by batch state belongs here (the incremental index pipelines manage
   * their own per-batch frames and release them eagerly).
   *
-  * Two escape hatches, both honored at call time:
-  *   - conf `spark.graft.fragmentCache=false` disables memoization for a
-  *     session (one-shot batch jobs that run each query once gain nothing
-  *     from long-lived caches);
-  *   - [[bypassed]] disables it for the current thread — plan-shape audits
-  *     use this so they always see the raw construction, never an
-  *     `InMemoryTableScan` over a previously cached fragment.
+  * One escape hatch, honored at call time: [[bypassed]] disables
+  * memoization for the current thread — plan-shape audits use this so they
+  * always see the raw construction, never an `InMemoryTableScan` over a
+  * previously cached fragment.
   */
 object Caches {
 
-  /** Conf key: set "false" to disable fragment memoization for a session. */
-  val EnabledKey = "spark.graft.fragmentCache"
-
-  /** Conf key: max distinct dataset DIRS a session keeps fragments for
+  /** Max distinct dataset DIRS a session keeps fragments for
     * (least-recently-used dir evicted + unpersisted beyond it). A long-lived
     * driver cycling many directories otherwise accumulates one persisted
     * fragment set per dir until the session stops.
     */
-  val MaxDirsKey = "spark.graft.fragmentCacheMaxDirs"
-  private val DefaultMaxDirs = 8
+  val MaxDirs = 8
 
   /** One per-JVM scratch root for queries that materialize a small local
     * index (incremental BM25 postings, incremental IVF). Previously each
@@ -100,13 +93,12 @@ object Caches {
   def stats: Stats = synchronized(Stats(nHits, nBuilds, nEvictions))
   def resetStats(): Unit = synchronized { nHits = 0; nBuilds = 0; nEvictions = 0 }
 
-  /** True when memoization is off for this (thread, session) — the check
-    * [[fragment]] applies, exposed for memo registries that cache non-
-    * DataFrame artifacts (e.g. the tokenizer's trained merge table) so they
-    * honor the same bypass/conf contract.
+  /** True when memoization is off for this thread — the check [[fragment]]
+    * applies, exposed for memo registries that cache non-DataFrame
+    * artifacts (e.g. the tokenizer's trained merge table) so they honor the
+    * same bypass.
     */
-  def disabled(s: SparkSession): Boolean =
-    bypass.get() || s.conf.get(EnabledKey, "true") == "false"
+  def disabled: Boolean = bypass.get()
 
   /** Run `body` with fragment memoization disabled on this thread. */
   def bypassed[T](body: => T): T = {
@@ -122,7 +114,7 @@ object Caches {
     */
   def fragment(s: SparkSession, dir: String, name: String,
       persisted: Boolean = true)(build: => DataFrame): DataFrame = {
-    if (bypass.get() || s.conf.get(EnabledKey, "true") == "false") return build
+    if (disabled) return build
     synchronized {
       reg.filterInPlace { case ((sess, _, _), _) => !sess.sparkContext.isStopped }
       dirLru.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
@@ -141,13 +133,10 @@ object Caches {
           kept
       }
       // LRU cap on dirs per session: evict (and unpersist) the stalest dirs
-      // beyond the configured bound so a driver cycling dataset directories
-      // can't grow storage memory without limit
-      val cap = math.max(1,
-        s.conf.get(MaxDirsKey, DefaultMaxDirs.toString).toIntOption
-          .getOrElse(DefaultMaxDirs))
+      // beyond the bound so a driver cycling dataset directories can't grow
+      // storage memory without limit
       val mine = dirLru.keys.filter(_._1 eq s).toSeq // LRU-first order
-      mine.dropRight(cap).foreach { case (_, staleDir) => clearDir(s, staleDir) }
+      mine.dropRight(MaxDirs).foreach { case (_, staleDir) => clearDir(s, staleDir) }
       out
     }
   }

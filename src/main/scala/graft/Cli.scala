@@ -337,8 +337,8 @@ object Cli {
       case "render" =>
         // the no-client-go operator story completed: parse GraftApiServer
         // CRs, render the managed ConfigMap/Deployment/Service trio
-        // (jobs/ApiServerReconciler — the same manifests the reconcile loop
-        // applies), and write them as kubectl-appliable YAML. A CI pipeline
+        // (jobs/ApiServerReconciler), and write them as kubectl-appliable
+        // YAML. A CI pipeline
         // gets drift-free manifests from the CR without a controller in the
         // cluster.
         val missing = Seq("resources", "out").filterNot(kv.contains)

@@ -1,36 +1,23 @@
 package graft.jobs
 
-import java.sql.Timestamp
-
-import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.JsonNode
 
-/** GraftApiServer reconciler — the deterministic twin of the reference
-  * operator's APIServer controller (reference:
-  * internal/operator/controllers/apiserver_controller.go:82-215 Reconcile,
-  * :244-325 reconcileConfigMap/Deployment/Service, :340-453 builders,
-  * CRD deploy/crds/graftapiserver-crd.yaml): the operator deploys and
-  * manages the API server ITSELF as a custom resource.
+/** GraftApiServer spec parsing and manifest rendering — the desired-state
+  * half of the reference operator's APIServer controller (reference:
+  * internal/operator/controllers/apiserver_controller.go:244-325
+  * reconcileConfigMap/Deployment/Service, :340-453 builders,
+  * CRD deploy/crds/graftapiserver-crd.yaml): `graft.Cli render` turns a
+  * GraftApiServer resource into the ConfigMap/Deployment/Service trio it
+  * manages, and `kubectl apply` is the loop that converges the cluster on
+  * it. No client-go, no code generation: manifests are plain JsonNode
+  * trees, rendered by the same grammar `kubectl apply` consumes.
   *
-  * Same design stance as [[Reconciler]]: everything is injected — the
-  * cluster is an interface ([[ApiServerReconciler.Cluster]]) and every pass
-  * takes `now` — so a test drives create → ready → scale → drift-repair
-  * with a fake clock and an in-memory cluster, and a production driver
-  * wires the same loop to a real apply/get. No client-go, no code
-  * generation: manifests are plain JsonNode trees, rendered by the same
-  * grammar `kubectl apply` consumes.
-  *
-  * Phase machine (reference constants, apiserver_controller.go:33-58):
-  * Pending → Creating (manifests applied) → Running (observed ready ==
-  * desired) | Failed (spec validation), Deleting on [[delete]]. Drift
-  * (reference DriftDetector, :178-211): each pass re-renders the desired
-  * trio and compares against what the cluster currently holds — a diff
-  * publishes `ConfigurationSynced=False` and re-applies; the repaired pass
-  * publishes `True`. The deployment pod template carries a config-hash
-  * annotation of the ConfigMap content (reference :385) so a config change
-  * rolls pods by construction.
+  * A bad spec is rejected with every violated field named
+  * ([[ApiServerReconciler.parseSpec]]), never rendered. The deployment pod
+  * template carries a config-hash annotation of the ConfigMap content
+  * (reference :385) so a config change rolls pods by construction.
   */
 object ApiServerReconciler {
 
@@ -71,8 +58,8 @@ object ApiServerReconciler {
 
   /** Parse a GraftApiServer manifest into a [[Spec]], applying CRD defaults;
     * Left = validation errors (the ConfigValidator arc,
-    * apiserver_controller.go:112-119 — a bad spec fails the resource, it
-    * does not crash the loop).
+    * apiserver_controller.go:112-119 — every violated field is named, and
+    * a bad spec is never rendered).
     */
   def parseSpec(manifest: JsonNode): Either[Seq[String], Spec] = {
     val errs = Seq.newBuilder[String]
@@ -236,132 +223,4 @@ object ApiServerReconciler {
     */
   def desired(s: Spec): Seq[JsonNode] =
     Seq(renderConfigMap(s), renderDeployment(s), renderService(s))
-
-  // ---- cluster interface ----------------------------------------------------
-
-  /** What the loop needs from a cluster: createOrUpdate + read-back +
-    * observed deployment readiness. [[InMemoryCluster]] is the test/dry-run
-    * double; a production driver adapts this to server-side apply.
-    */
-  trait Cluster {
-    def apply(manifest: JsonNode): Unit
-    def get(kind: String, namespace: String, name: String): Option[JsonNode]
-    def delete(kind: String, namespace: String, name: String): Unit
-    def readyReplicas(namespace: String, name: String): Int
-  }
-
-  /** In-memory [[Cluster]]: manifests keyed by (kind, ns, name); tests move
-    * readiness explicitly (`setReady`) and can mutate stored manifests to
-    * inject drift.
-    */
-  final class InMemoryCluster extends Cluster {
-    val store: TrieMap[(String, String, String), JsonNode] = TrieMap.empty
-    private val ready = TrieMap.empty[(String, String), Int]
-    private def key(m: JsonNode) = (m.path("kind").asText,
-      m.path("metadata").path("namespace").asText("default"),
-      m.path("metadata").path("name").asText)
-    def apply(manifest: JsonNode): Unit = { store.put(key(manifest), manifest.deepCopy()); () }
-    def get(kind: String, namespace: String, name: String): Option[JsonNode] =
-      store.get((kind, namespace, name))
-    def delete(kind: String, namespace: String, name: String): Unit =
-      { store.remove((kind, namespace, name)); () }
-    def readyReplicas(namespace: String, name: String): Int =
-      ready.getOrElse((namespace, name), 0)
-    def setReady(namespace: String, name: String, n: Int): Unit =
-      { ready.put((namespace, name), n); () }
-  }
-}
-
-/** The reconcile loop over registered GraftApiServer resources. */
-final class ApiServerReconciler(cluster: ApiServerReconciler.Cluster) {
-  import ApiServerReconciler._
-
-  /** Published status (CRD status.*): phase + conditions + observed
-    * deployment/service state.
-    */
-  final case class Status(
-      spec: Option[Spec],
-      phase: String, // Pending | Creating | Running | Failed | Deleting
-      conditions: Map[String, (String, String, Timestamp)], // type -> (status, message, at)
-      readyReplicas: Int,
-      endpoint: Option[String],
-      lastError: Option[String])
-
-  // keyed by namespace/name — the reference reconciles by NamespacedName,
-  // so same-named CRs in two namespaces are distinct resources
-  private val resources = TrieMap.empty[String, (JsonNode, Status)]
-
-  private def keyOf(manifest: JsonNode): String =
-    manifest.path("metadata").path("namespace").asText("default") + "/" +
-      manifest.path("metadata").path("name").asText("(unnamed)")
-
-  /** Register or update a CR manifest (create/update event). Parse errors
-    * fail the RESOURCE (phase Failed + ValidationFailed condition), not the
-    * loop.
-    */
-  def upsert(manifest: JsonNode, now: Timestamp): Status = {
-    val st = parseSpec(manifest) match {
-      case Right(spec) => Status(Some(spec), "Pending", Map.empty, 0, None, None)
-      case Left(errs) => Status(None, "Failed",
-        Map("ValidationFailed" -> (("True", errs.mkString("; "), now))),
-        0, None, Some(errs.mkString("; ")))
-    }
-    resources.put(keyOf(manifest), (manifest, st))
-    st
-  }
-
-  /** Deletion event: phase Deleting, owned trio removed (the ownership
-    * cascade, reference handleDeletion :218-241), then the CR is gone.
-    */
-  def delete(name: String, now: Timestamp, namespace: String = "default"): Unit = {
-    resources.remove(s"$namespace/$name").foreach { case (_, st) =>
-      st.spec.foreach { s =>
-        cluster.delete("Deployment", s.namespace, s.deploymentName)
-        cluster.delete("Service", s.namespace, s.serviceName)
-        cluster.delete("ConfigMap", s.namespace, s.configMapName)
-      }
-    }
-  }
-
-  def status(name: String, namespace: String = "default"): Option[Status] =
-    resources.get(s"$namespace/$name").map(_._2)
-
-  /** One reconcile pass at `now` over every registered resource:
-    * render desired state, detect + repair drift, fold observed readiness
-    * into the phase.
-    */
-  def tick(now: Timestamp): Unit = resources.toSeq.foreach { case (name, (manifest, st)) =>
-    st.spec match {
-      case None => () // validation-failed: rests in Failed until re-upserted
-      case Some(spec) =>
-        val want = desired(spec)
-        // drift: what the cluster holds vs what the spec renders — byte
-        // equality on the canonical JSON is the spec-hash/actual-hash
-        // comparison of the reference's DriftDetector
-        val drifted = want.exists { m =>
-          val kind = m.path("kind").asText
-          val n = m.path("metadata").path("name").asText
-          !cluster.get(kind, spec.namespace, n).contains(m)
-        }
-        if (drifted) want.foreach(cluster.apply)
-        val ready = cluster.readyReplicas(spec.namespace, spec.deploymentName)
-        val phase =
-          if (ready >= spec.replicas) "Running"
-          else "Creating"
-        val endpoint =
-          if (phase == "Running")
-            Some(s"http://${spec.serviceName}.${spec.namespace}.svc:${spec.servicePort}")
-          else None
-        val synced = if (drifted)
-          ("False", "configuration drift detected; re-applied", now)
-        else ("True", "all configuration synchronized", now)
-        val conditions = st.conditions +
-          ("ConfigurationSynced" -> synced) +
-          ("Ready" -> ((if (phase == "Running") "True" else "False",
-            s"$ready/${spec.replicas} replicas ready", now)))
-        resources.put(name, (manifest, st.copy(phase = phase,
-          conditions = conditions, readyReplicas = ready,
-          endpoint = endpoint)))
-    }
-  }
 }

@@ -102,7 +102,7 @@ object Clustering {
     * not repeat. Same bypass/prune contract as [[graft.Caches.fragment]]
     * (driver-held k×dim longs, bounded by construction). */
   def trained(s: SparkSession, dir: String): Seq[(Long, Array[Long])] = {
-    if (graft.Caches.disabled(s)) return train(qvecs(s, dir))
+    if (graft.Caches.disabled) return train(qvecs(s, dir))
     memo.synchronized {
       memo.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
       memo.getOrElseUpdate((s, dir), train(qvecs(s, dir)))

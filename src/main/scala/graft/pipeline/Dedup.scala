@@ -859,24 +859,14 @@ object Dedup {
     * the signature rows of every doc in `docs`, keep everyone else's. This is
     * the piece that makes near-dup detection viable under continuous ingest —
     * signatures are computed once per document VERSION (CDC-proportional),
-    * never per sync over the whole corpus. The swap reuses the state store's
-    * tmp+rename commit, so a crashed upsert is recoverable and the new table
-    * never overwrites a path it is reading. At 100 TB the table would live
-    * bucketed by (band, sig) in a table format with row-level merge; the
-    * atomic-parquet stand-in keeps identical semantics.
+    * never per sync over the whole corpus. The swap is the state store's
+    * crash-recoverable keyed replace ([[graft.state.StateStore.replaceKeys]]).
+    * At 100 TB the table would live bucketed by (band, sig) in a table
+    * format with row-level merge; the atomic-parquet stand-in keeps
+    * identical semantics.
     */
-  def upsertSignatures(docs: org.apache.spark.sql.DataFrame, path: String): Unit = {
-    val spark = docs.sparkSession
-    val sigs = bandSignatures(docs)
-    // loadTable, NOT a raw exists() check: a save that crashed inside its
-    // commit window leaves the complete index at __tmp/__bak — a raw check
-    // would read "absent" and silently rebuild the index from this batch
-    // alone, permanently losing every other document's signatures
-    val out = graft.state.StateStore.loadTable(spark, path, sigs.schema)
-      .join(docs.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-      .unionByName(sigs)
-    graft.state.StateStore.save(out, path)
-  }
+  def upsertSignatures(docs: org.apache.spark.sql.DataFrame, path: String): Unit =
+    graft.state.StateStore.replaceKeys(bandSignatures(docs), docs, "doc_id", path)
 
   /** Candidate near-dup pairs TOUCHING a changed batch, via the persisted
     * index: the batch's signatures probe the index on (band, sig) — a
@@ -1197,16 +1187,10 @@ object Dedup {
     * the [[upsertSignatures]] discipline applied to span dedup, so verbatim
     * -overlap detection under continuous ingest costs one span pass over
     * the changed batch, never a corpus re-census. Same crash-recoverable
-    * tmp+rename commit via the state store.
+    * keyed replace via the state store.
     */
-  def upsertSpans(docs: org.apache.spark.sql.DataFrame, path: String): Unit = {
-    val spark = docs.sparkSession
-    val sp = spanHashes(docs)
-    val out = graft.state.StateStore.loadTable(spark, path, sp.schema)
-      .join(docs.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-      .unionByName(sp)
-    graft.state.StateStore.save(out, path)
-  }
+  def upsertSpans(docs: org.apache.spark.sql.DataFrame, path: String): Unit =
+    graft.state.StateStore.replaceKeys(spanHashes(docs), docs, "doc_id", path)
 
   /** Span-coverage stats for a changed batch via the persisted index —
     * [[spans]]' output contract restricted to the batch. The corpus-wide

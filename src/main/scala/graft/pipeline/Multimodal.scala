@@ -329,17 +329,11 @@ object Multimodal {
   /** Maintain the persisted phash band index incrementally: replace the
     * rows of every doc in `media`, keep everyone else's — the media twin
     * of [[Dedup.upsertSignatures]], on the same crash-recoverable
-    * tmp+rename commit. Hashing is per media VERSION (CDC-proportional);
-    * the corpus is never re-decoded.
+    * keyed replace. Hashing is per media VERSION (CDC-proportional); the
+    * corpus is never re-decoded.
     */
-  def upsertPhash(media: DataFrame, path: String): Unit = {
-    val spark = media.sparkSession
-    val rows = phashChunks(media)
-    val out = graft.state.StateStore.loadTable(spark, path, rows.schema)
-      .join(media.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-      .unionByName(rows)
-    graft.state.StateStore.save(out, path)
-  }
+  def upsertPhash(media: DataFrame, path: String): Unit =
+    graft.state.StateStore.replaceKeys(phashChunks(media), media, "doc_id", path)
 
   /** Candidate near-dup pairs TOUCHING a changed media batch via the
     * persisted index: batch chunks probe on (kind, chunk, key) — a

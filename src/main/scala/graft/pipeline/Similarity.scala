@@ -446,20 +446,14 @@ object Similarity {
     * `vecs` (new or re-embedded), keep everyone else's posting rows. Same
     * CDC-proportional argument as [[Dedup.upsertSignatures]] — assignment
     * cost follows the changed batch, never the corpus — and the same
-    * crash-recoverable tmp+rename swap. At 100 TB the table lives
+    * crash-recoverable keyed replace. At 100 TB the table lives
     * partitioned by `cid` in a row-merge table format; the atomic-parquet
     * stand-in keeps identical semantics. Centroids are fixed at index
     * creation (re-clustering is a rebuild, as in any IVF system).
     */
   def upsertIvf(vecs: org.apache.spark.sql.DataFrame,
-      cents: org.apache.spark.sql.DataFrame, path: String): Unit = {
-    val spark = vecs.sparkSession
-    val rows = ivfAssign(vecs, cents)
-    val out = graft.state.StateStore.loadTable(spark, path, rows.schema)
-      .join(vecs.select("vec_id").distinct(), Seq("vec_id"), "left_anti")
-      .unionByName(rows)
-    graft.state.StateStore.save(out, path)
-  }
+      cents: org.apache.spark.sql.DataFrame, path: String): Unit =
+    graft.state.StateStore.replaceKeys(ivfAssign(vecs, cents), vecs, "vec_id", path)
 
   /** Top-k neighbors for a query batch via the persisted index: each query
     * probes its top-`nprobe` centroid buckets; candidates come from the
@@ -1200,14 +1194,8 @@ object Similarity {
     * the index parquet is written sorted by `tok` so a term lookup is a
     * pushed-down range scan, not a full index read.
     */
-  def upsertPostings(docs: org.apache.spark.sql.DataFrame, path: String): Unit = {
-    val sp = postingsOf(docs)
-    val out = graft.state.StateStore
-      .loadTable(docs.sparkSession, path, sp.schema)
-      .join(docs.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-      .unionByName(sp)
-    graft.state.StateStore.save(out, path)
-  }
+  def upsertPostings(docs: org.apache.spark.sql.DataFrame, path: String): Unit =
+    graft.state.StateStore.replaceKeys(postingsOf(docs), docs, "doc_id", path)
 
   /** BM25 query over a PERSISTED postings index maintained incrementally:
     * index the 90% "existing corpus", upsert the 10% "late batch", then

@@ -60,12 +60,12 @@ object Tokenizer {
     * Trained state is memoized per (session, dir, merges) — a tokenizer is
     * trained once and consumed by everything downstream (the apply query,
     * token budgeting), and the cached artifact is merge-table-sized plus a
-    * vocab-sized unpersisted frame handle. Honors the same bypass/conf
-    * contract as [[graft.Caches.fragment]]; stopped sessions are pruned.
+    * vocab-sized unpersisted frame handle. Honors the same bypass as
+    * [[graft.Caches.fragment]]; stopped sessions are pruned.
     */
   def train(s: SparkSession, dir: String,
       merges: Int = Merges): (Seq[(Int, String, String, Long)], DataFrame) = {
-    if (graft.Caches.disabled(s)) return trainUncached(s, dir, merges)
+    if (graft.Caches.disabled) return trainUncached(s, dir, merges)
     memo.synchronized {
       memo.filterInPlace { case ((sess, _, _), _) => !sess.sparkContext.isStopped }
       memo.getOrElseUpdate((s, dir, merges), trainUncached(s, dir, merges))

@@ -596,7 +596,7 @@ object Cdc {
       StateStore.appendDelta(delta, path)
       (path, StateStore.touchedSegs(delta.select("key")))
     }
-    if (graft.Caches.disabled(s)) return build()
+    if (graft.Caches.disabled) return build()
     ledgerMemo.synchronized {
       ledgerMemo.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
       ledgerMemo.get((s, dir))

@@ -170,7 +170,7 @@ object Graph {
     def probe(): Option[Array[(Long, Long)]] =
       if (df.count() < gate) Some(df.collect().map(r => (r.getLong(0), r.getLong(1))))
       else None
-    if (graft.Caches.disabled(df.sparkSession)) return probe()
+    if (graft.Caches.disabled) return probe()
     gatherMemo.synchronized {
       val it = gatherMemo.keySet().iterator()
       while (it.hasNext) if (it.next()._1.sparkSession.sparkContext.isStopped) it.remove()

@@ -174,7 +174,7 @@ object GitRepo {
     * Adds only (the CDC stream never deletes); returns None when the merged
     * root tree equals HEAD's (idempotent replays). The repo's index is left
     * untouched and thus stale — a marker records that, and every index-path
-    * entry point ([[isClean]]/[[status]]/[[feedIndexInfo]]/
+    * entry point ([[status]]/[[feedIndexInfo]]/
     * [[removeFromIndex]]) self-heals via [[syncIndexToHead]] before reading;
     * the YAML corpus itself is byte-identical either way.
     */
@@ -288,17 +288,6 @@ object GitRepo {
     }
     java.nio.file.Files.deleteIfExists(staleMarker(repoDir))
     ()
-  }
-
-  /** A clean worktree has no pending changes
-    * (reference: pkg/git/git.go:104-119 ValidateWorkingTree). Compares the
-    * worktree against HEAD (index refreshed first) so a streaming run's
-    * index-free commits don't read as phantom dirt.
-    */
-  def isClean(repoDir: String): Boolean = {
-    syncIndexToHead(repoDir)
-    val (code, out) = run(new File(repoDir), "status", "--porcelain")
-    code == 0 && out.trim.isEmpty
   }
 
   /** Repo status introspection (reference: pkg/git/git.go:149-211). */

@@ -157,6 +157,24 @@ object StateStore {
       throw new java.io.IOException(s"atomic state rename failed: $tmp -> $dst")
   }
 
+  /** Replace-by-key upsert of a table under [[save]]'s commit: every row
+    * whose `key` appears in `batch` goes, `rows` (the batch's new rows)
+    * come in, everyone else's rows stay. The dropped keys come from the
+    * BATCH, not from `rows`, so a batch key whose new version yields no
+    * rows (a document edited down to text too short to index) still loses
+    * its old ones.
+    *
+    * The old table is read through [[loadTable]], never a raw exists(): a
+    * save that crashed inside its commit window leaves the complete table
+    * at `__tmp`/`__bak`, and a raw check would read "absent" and rebuild
+    * the table from this batch alone, silently losing every other key's
+    * rows.
+    */
+  def replaceKeys(rows: DataFrame, batch: DataFrame, key: String, path: String): Unit =
+    save(loadTable(rows.sparkSession, path, rows.schema)
+      .join(batch.select(key).distinct(), Seq(key), "left_anti")
+      .unionByName(rows), path)
+
   // ---- partitioned base layout (per-batch partition pruning) ---------------
   //
   // The delta log below makes the state COMMIT O(batch); this layout makes
@@ -166,11 +184,11 @@ object StateStore {
   // resolved view restricted to the batch's blocks is exact for them, and a
   // base physically partitioned by block turns that restriction into parquet
   // partition pruning: the base read is O(touched blocks) ≈ O(batch) for an
-  // append-mostly stream, instead of the full-corpus scan (twice, in the
-  // split plan) that was the last O(corpus) term in the streaming path
-  // (SCALING_MEASURED.md round 13). Same argument that chose range blocks
-  // for git trees: sequence-assigned issue numbers make a CDC batch touch
-  // only each project's tail block.
+  // append-mostly stream, instead of the full-corpus scan and exchange that
+  // was the last O(corpus) term in the streaming path (SCALING_MEASURED.md
+  // round 13). Same argument that chose range blocks for git trees:
+  // sequence-assigned issue numbers make a CDC batch touch only each
+  // project's tail block.
 
   /** Partition column of the partitioned base layout (never leaves this
     * object — every reader drops or consumes it internally).
@@ -264,9 +282,10 @@ object StateStore {
   // [[CompactEvery]] commits — LSM shape: per-batch cost is O(batch) plus
   // the amortized compaction share, which on a partitioned base is itself
   // O(touched blocks) (partition-incremental fold), never the whole table
-  // per batch. Readers resolve latest-per-key across base + deltas;
-  // re-applying an already-compacted delta is a no-op (rows identical), so a
-  // crash between base promotion and delta cleanup stays correct.
+  // per batch. Readers resolve latest-per-key across base + deltas in one
+  // window ([[resolve]]); re-applying an already-compacted delta is a no-op
+  // (rows identical), so a crash between base promotion and delta cleanup
+  // stays correct.
 
   /** Fold deltas into the base once this many are pending. */
   val CompactEvery: Int = 8
@@ -302,104 +321,35 @@ object StateStore {
   def deltaCount(spark: SparkSession, path: String): Int =
     deltaDirs(spark, path).size
 
-  /** Combined on-disk size of the pending delta dirs — the broadcast gate
-    * for [[loadResolved]]'s split plan (metadata only, no job).
-    */
-  private def deltaBytes(spark: SparkSession, path: String): Long = {
-    val fs = fsOf(spark, path)
-    // any failed size lookup means the backlog is UNMEASURABLE — treat the
-    // whole set as too-big (one saturated value, never summed: summing a
-    // MaxValue sentinel with real sizes overflows negative and would slip
-    // an unbounded backlog PAST the broadcast gate)
-    val sizes = deltaDirs(spark, path).map { case (_, p) =>
-      scala.util.Try(fs.getContentSummary(p).getLength).toOption
-    }
-    if (sizes.exists(_.isEmpty)) Long.MaxValue
-    else sizes.flatten.foldLeft(0L) { (a, b) =>
-      if (a > Long.MaxValue - b) Long.MaxValue else a + b
-    }
-  }
+  /** Every committed delta's rows, unioned; `deltas` must be non-empty. */
+  private def readDeltas(spark: SparkSession, deltas: Seq[(Int, Path)]): DataFrame =
+    deltas.map(d => spark.read.schema(schema).parquet(d._2.toString))
+      .reduce(_ unionByName _)
 
-  /** Deltas up to this combined size resolve through the broadcast split
-    * plan; larger backlogs (a compaction that kept failing) fall back to the
-    * full window. 256 MB of parquet ≈ a few million touched keys — well
-    * inside executor broadcast budgets.
+  /** Latest row per key over `base` ∪ `deltas` — [[merge]]'s winner rule:
+    * strictly-newer `last_updated` wins, `sync_count` (monotone per key)
+    * breaks same-instant replays.
     */
-  private val DeltaBroadcastBytes = 256L << 20
-
-  /** Conf key selecting [[loadResolved]]'s resolution plan:
-    * `auto` (default) uses the broadcast split only when the base is at
-    * least [[SplitMinBaseBytes]] — the regime where a per-batch exchange is
-    * real network I/O; below it a local shuffle is cheaper than the split's
-    * second base scan (measured at sfg1.0: split +4s/batch on a 100 MB
-    * tmpfs base, while the exchange it saves is memory-local). `always` /
-    * `never` pin the plan (tests; clusters that know better).
-    */
-  val SplitResolveKey = "spark.graft.state.splitResolve"
-
-  /** Base size from which `auto` picks the split plan. 1 GB of state
-    * parquet ≈ 15M keys — past any size where shuffling the ledger per
-    * micro-batch is acceptable on a real cluster.
-    */
-  private val SplitMinBaseBytes = 1L << 30
-
-  /** Latest state per key across the base table and every committed delta.
-    * The winner rule reproduces [[merge]]'s: strictly-newer `last_updated`
-    * wins, `sync_count` (monotone per key) breaks same-instant replays.
-    * With no deltas this IS [[load]].
-    *
-    * Plan shape matters more than anything else here — this runs EVERY
-    * micro-batch: the base holds each key exactly once ([[save]] writes
-    * resolved rows), so only delta-touched keys can conflict. Resolving the
-    * deltas first (a DELTA-sized window) and splitting the base with a
-    * broadcast semi/anti join on the touched keys means the corpus-sized
-    * base is scanned but never exchanged — the original single window over
-    * base ∪ deltas shuffled the WHOLE ledger per micro-batch, the
-    * state-side O(corpus) term the sfg1.0 soak's late batches showed once
-    * the git terms were fixed (SCALING_MEASURED.md round 13). Plan choice
-    * is size-gated ([[SplitResolveKey]]): the split pays a SECOND base scan
-    * to avoid the exchange, which only wins once the exchange is real
-    * network I/O — `auto` switches at [[SplitMinBaseBytes]]; a delta
-    * backlog too big to broadcast ([[DeltaBroadcastBytes]]) always falls
-    * back to the full window.
-    */
-  def loadResolved(spark: SparkSession, path: String): DataFrame = {
-    val deltas = deltaDirs(spark, path)
-    val base = load(spark, path)
-    if (deltas.isEmpty) return base
+  private def resolve(base: DataFrame, deltas: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("key"))
       .orderBy(col("last_updated").desc, col("sync_count").desc,
         col("last_synced").desc)
-    val dAll = deltas.map(d => spark.read.schema(schema).parquet(d._2.toString))
-      .reduce(_ unionByName _)
-    val useSplit = spark.conf.get(SplitResolveKey, "auto") match {
-      case "always" => deltaBytes(spark, path) <= DeltaBroadcastBytes
-      case "never" => false
-      case _ =>
-        deltaBytes(spark, path) <= DeltaBroadcastBytes && {
-          val fs = fsOf(spark, path)
-          scala.util.Try(fs.getContentSummary(new Path(path)).getLength)
-            .getOrElse(0L) >= SplitMinBaseBytes
-        }
-    }
-    if (!useSplit) {
-      // the one window over everything — correct at any size, and cheaper
-      // than a second base scan while the ledger is small enough that its
-      // exchange stays node-local
-      base.unionByName(dAll).withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-    } else {
-      val dRes = dAll.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-      val dKeys = broadcast(dRes.select("key"))
-      val untouched = base.join(dKeys, Seq("key"), "left_anti")
-      val contested = base.join(dKeys, Seq("key"), "left_semi")
-        .unionByName(dRes)
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-      untouched.unionByName(contested)
-    }
+    base.unionByName(deltas).withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
+  }
+
+  /** Latest state per key across the base table and every committed delta,
+    * by one window over base ∪ deltas. With no deltas this IS [[load]] —
+    * no window at all, the path every batch sync's incremental and no-op
+    * cycle takes. A per-micro-batch reader that only looks up a batch's
+    * keys uses [[loadResolvedPruned]] instead, which keeps the window
+    * O(touched blocks) on a [[setPartitionedBase]] ledger.
+    */
+  def loadResolved(spark: SparkSession, path: String): DataFrame = {
+    val deltas = deltaDirs(spark, path)
+    val base = load(spark, path)
+    if (deltas.isEmpty) base else resolve(base, readDeltas(spark, deltas))
   }
 
   /** The distinct state-partition blocks covering `keys` — the touched-block
@@ -417,9 +367,8 @@ object StateStore {
     * resolution). This is the per-micro-batch state read: with a
     * [[setPartitionedBase]] ledger the base scan is partition-pruned to the
     * touched blocks — O(batch) I/O — and the resolve window runs over
-    * O(touched) rows, so neither the split plan nor its broadcast gate is
-    * needed. With an unpartitioned base it is still correct (the filter
-    * prunes rows, not I/O), so callers can adopt it unconditionally.
+    * O(touched) rows. With an unpartitioned base it is still correct (the
+    * filter prunes rows, not I/O), so callers can adopt it unconditionally.
     */
   def loadResolvedPruned(spark: SparkSession, path: String,
       segs: Seq[String]): DataFrame = {
@@ -427,16 +376,9 @@ object StateStore {
     val base = loadBaseWithSeg(spark, path)
       .filter(col(SegCol).isin(segs: _*)).drop(SegCol)
     val deltas = deltaDirs(spark, path)
-    if (deltas.isEmpty) return base
-    val dAll = deltas.map(d => spark.read.schema(schema).parquet(d._2.toString))
-      .reduce(_ unionByName _)
-      .filter(statePartCol(col("key")).isin(segs: _*))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("key"))
-      .orderBy(col("last_updated").desc, col("sync_count").desc,
-        col("last_synced").desc)
-    base.unionByName(dAll).withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+    if (deltas.isEmpty) base
+    else resolve(base, readDeltas(spark, deltas)
+      .filter(statePartCol(col("key")).isin(segs: _*)))
   }
 
   /** Append one batch's merged state rows (touched keys ONLY) as a new
@@ -481,9 +423,7 @@ object StateStore {
     val baseDir = resolveReadDir(spark, path)
     val partitioned = baseDir.exists(dirPartitioned(spark, _))
     if (partitioned) {
-      val dAll = deltas.map(d => spark.read.schema(schema).parquet(d._2.toString))
-        .reduce(_ unionByName _)
-      val segs = touchedSegs(dAll.select("key"))
+      val segs = touchedSegs(readDeltas(spark, deltas).select("key"))
       val baseSegs = fs.listStatus(baseDir.get)
         .filter(st => st.isDirectory && st.getPath.getName.startsWith(SegCol + "="))
         .length

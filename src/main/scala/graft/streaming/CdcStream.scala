@@ -45,8 +45,8 @@ object CdcStream {
     *               candidate filter, the touched-key semi-join, the merge —
     *               only looks up the BATCH's keys, and the block is a pure
     *               function of the key, so the pruned resolved view is exact
-    *               for them while the base read drops from O(corpus)
-    *               (scanned twice, in the split plan) to O(touched blocks) ≈
+    *               for them while the base read drops from O(corpus) (one
+    *               full scan and exchange) to O(touched blocks) ≈
     *               O(batch): the last O(corpus) term in the steady-state
     *               streaming path. Off by default only for layout stability
     *               of existing ledgers; it is THE setting for a long-running

@@ -34,13 +34,12 @@ object Progress {
       stateMemoryBytes: Long)
 
   /** One card per completed micro-batch, oldest first. Idle (zero-input)
-    * batches — watermark-advance ticks, empty triggers — are dropped unless
-    * `includeIdle`, so bounds pinned on the card are about batches that did
-    * work.
+    * batches — watermark-advance ticks, empty triggers — are dropped, so
+    * bounds pinned on the card are about batches that did work.
     */
-  def card(q: StreamingQuery, includeIdle: Boolean = false): Seq[BatchCard] =
+  def card(q: StreamingQuery): Seq[BatchCard] =
     q.recentProgress.toSeq
-      .filter(p => includeIdle || p.numInputRows > 0)
+      .filter(_.numInputRows > 0)
       .sortBy(_.batchId)
       .map { p =>
         val state = Option(p.stateOperators).map(_.toSeq).getOrElse(Nil)

@@ -4,17 +4,14 @@ import org.apache.spark.sql.functions._
 
 import graft.state.StateStore
 
-/** State-ledger scale rehearsal: exercise [[StateStore.loadResolved]]'s
-  * auto split-resolve AT ITS DESIGN SCALE — a base past the 1 GB
-  * [[StateStore]] gate, which local soaks (~100 MB bases) never reach, so
-  * until this tool the gate's switch point was an argument, not a
-  * measurement. Generates a synthetic ledger of `rows` state rows
-  * (realistic column widths: 64-hex checksum, full file_path), appends
-  * delta logs, then times the resolved read under all three
-  * `spark.graft.state.splitResolve` modes and records which plan `auto`
-  * actually picked. Also measures the round-14 partition-pruning lever at
-  * the same scale: the base converted to the partitioned layout, a
-  * touched-block pruned read vs the full resolve.
+/** State-ledger scale rehearsal: exercise the per-micro-batch state path
+  * at ledger scale, which local soaks (~100 MB bases) never reach.
+  * Generates a synthetic ledger of `rows` state rows (realistic column
+  * widths: 64-hex checksum, full file_path), appends delta logs, converts
+  * the base to the partitioned layout, and times a touched-block
+  * [[StateStore.loadResolvedPruned]] read against the full
+  * [[StateStore.loadResolved]], then the partition-incremental
+  * compaction of those deltas.
   *
   * Usage: runMain graft.tools.StateScale <workDir> [rows] [out.json]
   */
@@ -63,24 +60,6 @@ object StateScale {
         stateRows(50000, s"2024-02-0$d 00:00:00", 2), statePath)
     }
 
-    def timeResolve(mode: String): (Double, Boolean) = {
-      spark.conf.set(StateStore.SplitResolveKey, mode)
-      try {
-        val df = StateStore.loadResolved(spark, statePath)
-        val split = df.queryExecution.executedPlan.toString.contains("BroadcastHashJoin")
-        val t = System.nanoTime()
-        df.count()
-        ((System.nanoTime() - t) / 1e9, split)
-      } finally spark.conf.set(StateStore.SplitResolveKey, "auto")
-    }
-    // warm the fs cache once so the three modes compare plans, not page cache
-    StateStore.load(spark, statePath).count()
-    val (tNever, _) = timeResolve("never")
-    val (tAlways, alwaysSplit) = timeResolve("always")
-    val (tAuto, autoSplit) = timeResolve("auto")
-    println(f"[state-scale] resolve never=$tNever%.1fs always=$tAlways%.1fs " +
-      f"auto=$tAuto%.1fs (auto picked split=$autoSplit)")
-
     // the partition-pruning lever at the same scale: convert, then read a
     // 3-block touched set (a realistic per-batch footprint) vs the full base
     println("[state-scale] converting to partitioned layout")
@@ -110,9 +89,6 @@ object StateScale {
     def f2(d: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, d)
     val json =
       s"""{"rows":$rows,"base_bytes":$baseBytes,"gen_sec":${f2(gen)},""" +
-      s""""gate_bytes":${1L << 30},"resolve_sec":{"never":${f2(tNever)},""" +
-      s""""always":${f2(tAlways)},"auto":${f2(tAuto)}},""" +
-      s""""auto_picked_split":$autoSplit,"always_picked_split":$alwaysSplit,""" +
       s""""convert_sec":${f2(convert)},"pruned_blocks":${segs.size},""" +
       s""""pruned_rows":$prunedRows,"pruned_sec":${f2(tPruned)},""" +
       s""""full_resolve_after_convert_sec":${f2(tFull)},""" +

@@ -89,38 +89,37 @@ class CacheAuditSpec extends AnyFunSuite {
   test("LRU dir cap evicts and unpersists the stalest dir's fragments") {
     Caches.clear(spark)
     spark.catalog.clearCache()
-    spark.conf.set(Caches.MaxDirsKey, "2")
     try {
       // distinct row counts per dir so no two probe plans canonicalize to
       // the same CacheManager entry
-      def reg(dir: String) = Caches.fragment(spark, dir, "probe") {
-        spark.range(10 + dir.last.toLong).toDF("n")
+      def reg(i: Int) = Caches.fragment(spark, s"/lru/dir$i", "probe") {
+        spark.range(10 + i).toDF("n")
       }
-      val a = reg("/lru/dirA"); val b = reg("/lru/dirB")
-      assert(Caches.fragments(spark).map(_._1).sorted ==
-        Seq("/lru/dirA#probe", "/lru/dirB#probe"))
-      val c = reg("/lru/dirC") // over cap: dirA is LRU, must be evicted
-      assert(Caches.fragments(spark).map(_._1).sorted ==
-        Seq("/lru/dirB#probe", "/lru/dirC#probe"),
-        "cap 2 with 3 dirs must keep only the 2 most recently used")
-      assert(classicDf(a).storageLevel ==
+      def live = Caches.fragments(spark).map(_._1).sorted
+      def names(is: Seq[Int]) = is.map(i => s"/lru/dir$i#probe").sorted
+      val cap = Caches.MaxDirs
+      val first = reg(0)
+      (1 until cap).foreach(reg)
+      assert(live == names(0 until cap))
+      reg(cap) // over cap: dir0 is LRU, must be evicted
+      assert(live == names(1 to cap),
+        s"cap $cap with ${cap + 1} dirs must keep only the $cap most recently used")
+      assert(classicDf(first).storageLevel ==
         org.apache.spark.storage.StorageLevel.NONE,
         "evicted dir's fragment must be unpersisted")
       // the cache manager holds exactly the surviving allowlist
-      b.collect(); c.collect()
+      Caches.fragments(spark).foreach(_._2.collect())
       val accounted = Caches.fragments(spark)
         .flatMap { case (_, f) => cm.lookupCachedData(classicDf(f)) }
         .map(System.identityHashCode).toSet.size
       assert(org.apache.spark.sql.GraftCacheProbe.numCachedEntries(session) == accounted)
-      // touching dirB refreshes its recency: next eviction takes dirC
-      reg("/lru/dirB"); reg("/lru/dirD")
-      assert(Caches.fragments(spark).map(_._1).sorted ==
-        Seq("/lru/dirB#probe", "/lru/dirD#probe"))
+      // touching dir1 refreshes its recency: next eviction takes dir2
+      reg(1); reg(cap + 1)
+      assert(live == names(Seq(1) ++ (3 to cap + 1)))
       // explicit dir retirement releases without waiting for the cap
-      Caches.clearDir(spark, "/lru/dirB")
-      assert(Caches.fragments(spark).map(_._1) == Seq("/lru/dirD#probe"))
+      Caches.clearDir(spark, "/lru/dir1")
+      assert(live == names(3 to cap + 1))
     } finally {
-      spark.conf.unset(Caches.MaxDirsKey)
       Caches.clear(spark)
       spark.catalog.clearCache()
     }

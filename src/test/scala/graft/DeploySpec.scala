@@ -155,7 +155,7 @@ class DeploySpec extends AnyFunSuite {
 
   test("operator CRD family: APIServer/Project/Schedule surfaces match the reference types") {
     // GraftApiServer (reference apiserver-crd.yaml): required trio, phase
-    // machine enum covers ApiServerReconciler's phases, replicas bounded
+    // machine enum is the reference controller's, replicas bounded
     val api = crdsByKind("GraftApiServer")
     val apiSpec = schemaOf(api).path("properties").path("spec")
     assert(apiSpec.path("required").elements().asScala.map(_.asText).toSet ==
@@ -164,7 +164,7 @@ class DeploySpec extends AnyFunSuite {
       .path("properties").path("phase").path("enum")
       .elements().asScala.map(_.asText).toSet
     assert(apiPhases == Set("Pending", "Creating", "Running", "Failed", "Deleting"),
-      s"APIServer phase enum $apiPhases must cover the reconciler's machine")
+      s"APIServer phase enum $apiPhases must match the reference controller's")
     assert(apiSpec.path("properties").path("replicas").path("maximum").asInt == 10)
     // GraftProject (reference jiraproject-crd.yaml): schema-only parity
     val proj = crdsByKind("GraftProject")

@@ -600,6 +600,22 @@ class PipelineSpec extends AnyFunSuite {
     assert(incr.nonEmpty)
   }
 
+  test("incremental span index: a doc edited below span length loses its old rows") {
+    // the keyed replace drops the BATCH's keys, not the new rows' keys: a
+    // doc whose new version yields no span rows must not keep stale ones
+    import graft.pipeline.Dedup
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft-spans").toString + "/spans"
+    val text = "the quick brown fox jumps over the lazy dog again"
+    Dedup.upsertSpans(Seq((1L, text), (2L, text + " today")).toDF("doc_id", "text"), path)
+    def rows(doc: Long) = spark.read.parquet(path).filter(col("doc_id") === doc).count()
+    val kept = rows(2L)
+    assert(rows(1L) > 0 && kept > 0)
+    Dedup.upsertSpans(Seq((1L, "too short")).toDF("doc_id", "text"), path)
+    assert(rows(1L) == 0, "an edited doc kept spans of its old version")
+    assert(rows(2L) == kept)
+  }
+
   test("dsir: pool docs only, exact feature accounting, sign drives selection") {
     val df = run("pipe_select_dsir").cache()
     val docs = Tables.t(spark, sf, "documents")

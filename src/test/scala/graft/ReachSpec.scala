@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * starting from those roots, a type is reached when the code of a reached
   * type (or of perfbench) names it. Comments never count, so a scaladoc
   * link cannot keep dead code alive; tests never count, so nothing stays
-  * for a test alone.
+  * for a test alone. A class (or trait) with a companion object is scanned
+  * apart from it: naming the object does not reach the class, which only
+  * `new X`, `extends`/`with X` or `X` in a type position reaches.
   */
 class ReachSpec extends AnyFunSuite {
   import ReachSpec._
@@ -27,15 +29,15 @@ class ReachSpec extends AnyFunSuite {
     "graft.tools.Measure" -> "main: per-query build/exec measurement",
     "graft.tools.StateScale" -> "main: state-ledger scale run",
     "graft.tools.StreamSoak" -> "main: streaming soak",
-    "graft.GraftExtensions" -> "loaded by name through spark.sql.extensions",
-    "graft.sources.v2.JiraFixtureSource" -> "DSv2 provider loaded by format name",
-    "graft.sources.v2.JiraHttpSource" -> "DSv2 provider loaded by format name")
+    "graft.GraftExtensions (class)" -> "loaded by name through spark.sql.extensions",
+    "graft.sources.v2.JiraFixtureSource (class)" -> "DSv2 provider loaded by format name",
+    "graft.sources.v2.JiraHttpSource (class)" -> "DSv2 provider loaded by format name")
 
   private lazy val main = sources(Paths.get("src/main/scala"))
   private lazy val types = main.flatMap(_.types)
 
   test("every top-level src/main type is reached from an entry point") {
-    val byName = types.map(t => t.fqn -> t).toMap
+    val byName = types.map(t => t.id -> t).toMap
     val unknown = allowlist.keySet -- byName.keySet
     assert(unknown.isEmpty, s"allowlisted types that do not exist: $unknown")
     allowlist.collect { case (fqn, why) if why.startsWith("main:") => fqn }.foreach { fqn =>
@@ -43,7 +45,7 @@ class ReachSpec extends AnyFunSuite {
     }
     val roots = sources(Paths.get("perfbench/src/main/scala")).map(f => (f, f.body))
     val reached = reach(types, allowlist.keySet, roots)
-    val dead = types.map(_.fqn).filterNot(reached).sorted
+    val dead = types.map(_.id).filterNot(reached).sorted
     assert(dead.isEmpty, s"types no entry point reaches: ${dead.mkString(", ")}")
   }
 
@@ -55,34 +57,58 @@ class ReachSpec extends AnyFunSuite {
       "package graft\n\n// [[graft.jql.Gone]]\n/** Gone */\nobject Cli {\n" +
         "  val a = jql.Builder.b\n  type Gone = SparkSession.Gone\n}\n")
     val gone = src("graft/jql/Gone.scala", "package graft.jql\n\nobject Gone\n")
-    val all = Seq(jql, user, gone).flatMap(_.types)
-    val reached = reach(all, Set("graft.Cli"), Nil)
-    assert(reached == Set("graft.Cli", "graft.jql.Builder", "graft.jql.Helper"))
+    // a class and its companion: naming the object reaches only the object;
+    // `new`, `extends`/`with` and type positions reach the class
+    val companions = src("graft/jobs/Loop.scala",
+      "package graft.jobs\n\nobject Loop { def parse = 1 }\n\n" +
+        "final class Loop { def tick = Loop.parse }\n\n" +
+        "object Pool\n\nclass Pool\n\nobject Step\n\ntrait Step\n\n" +
+        "object Cell\n\nclass Cell\n\ncase class Row(a: Int)\n\nobject Row\n")
+    val jobsUser = src("graft/jobs/Runner.scala",
+      "package graft.jobs\n\nobject Runner {\n  val n = Loop.parse + Row(1).a\n" +
+        "  val p = new Pool\n  object S extends Step\n  def c(x: Seq[Cell]): Option[Cell] = None\n}\n")
+    val all = Seq(jql, user, gone, companions, jobsUser).flatMap(_.types)
+    val reached = reach(all, Set("graft.Cli", "graft.jobs.Runner"), Nil)
+    assert(reached == Set("graft.Cli", "graft.jql.Builder", "graft.jql.Helper",
+      "graft.jobs.Runner", "graft.jobs.Loop", "graft.jobs.Row",
+      "graft.jobs.Pool", "graft.jobs.Pool (class)", "graft.jobs.Step",
+      "graft.jobs.Step (class)", "graft.jobs.Cell", "graft.jobs.Cell (class)"))
   }
 }
 
 object ReachSpec {
 
-  /** A top-level type: its fully qualified name and its code (companions
-    * share a name and merge into one).
+  /** A top-level type: its fully qualified name and its code. A case class
+    * merges with its companion object (the companion's `apply` builds it);
+    * any other class or trait with a companion is its own `classOnly` type.
     */
-  final case class TopType(file: Source, name: String, code: String) {
+  final case class TopType(file: Source, name: String, code: String,
+      classOnly: Boolean = false) {
     def fqn: String = if (file.pkg.isEmpty) name else s"${file.pkg}.$name"
+    def id: String = if (classOnly) s"$fqn (class)" else fqn
   }
 
   final case class Source(rel: String, pkg: String, imports: Seq[String], body: String) {
     private val decl =
-      ("(?m)^(?:(?:final|sealed|abstract|case|implicit|private(?:\\[\\w+\\])?)\\s+)*" +
-        "(?:object|class|trait)\\s+(\\w+)").r
+      ("(?m)^((?:(?:final|sealed|abstract|case|implicit|private(?:\\[\\w+\\])?)\\s+)*)" +
+        "(object|class|trait)\\s+(\\w+)").r
 
     lazy val types: Seq[TopType] = {
       val ds = decl.findAllMatchIn(body).toSeq
       ds.zipWithIndex
         .map { case (m, i) =>
-          m.group(1) -> body.substring(m.start, if (i + 1 < ds.size) ds(i + 1).start else body.length)
+          val isObject = m.group(2) == "object"
+          val isCase = m.group(1).split("\\s+").contains("case")
+          (m.group(3), isObject || isCase,
+            body.substring(m.start, if (i + 1 < ds.size) ds(i + 1).start else body.length))
         }
         .groupBy(_._1).toSeq
-        .map { case (n, parts) => TopType(this, n, parts.map(_._2).mkString("\n")) }
+        .flatMap { case (n, parts) =>
+          val (merged, classes) = parts.partition(_._2)
+          if (merged.isEmpty || classes.isEmpty) Seq(TopType(this, n, parts.map(_._3).mkString("\n")))
+          else Seq(TopType(this, n, merged.map(_._3).mkString("\n")),
+            TopType(this, n, classes.map(_._3).mkString("\n"), classOnly = true))
+        }
     }
 
     /** Whether `code` (text of this file) names `t`: qualified by its
@@ -97,13 +123,24 @@ object ReachSpec {
             (m.group(2).startsWith("{") && s"\\b${t.name}\\b".r.findFirstIn(m.group(2)).isDefined))
         }
       }
-      s"(?<![\\w.])([\\w.]*?)\\.?\\b${t.name}\\b".r.findAllMatchIn(code).exists { m =>
-        if (m.group(1).isEmpty) inScope else isPkg(m.group(1))
+      val ref = if (t.classOnly) classRef(t.name) else s"(?<![\\w.])([\\w.]*?)\\.?\\b${t.name}\\b".r
+      ref.findAllMatchIn(code).exists { m =>
+        val q = m.subgroups.find(_ != null).getOrElse("")
+        if (q.isEmpty) inScope else isPkg(q)
       }
     }
   }
 
   private val charLit = "'(\\\\.|[^\\\\'\\n])'".r
+
+  /** A reference to the CLASS `name`, not to its companion object:
+    * `new X`, `extends X`, `with X`, or a type position (`: X`, `[X`, `X#`);
+    * the group that matched holds the qualifier. `X.member` names the
+    * object.
+    */
+  private def classRef(name: String) =
+    (s"(?:(?:\\bnew|\\bextends|\\bwith)\\s+|:\\s*|\\[\\s*)([\\w.]*?)\\.?\\b$name\\b(?!\\.)|" +
+      s"(?<![\\w.])([\\w.]*?)\\.?\\b$name#").r
 
   private val importRe = "^([\\w.]+)\\.(_|\\w+|\\{[^}]*\\})\\s*$".r
 
@@ -131,10 +168,10 @@ object ReachSpec {
     var reached = roots
     var grew = true
     while (grew) {
-      val code = rootCode ++ types.filter(t => reached(t.fqn)).map(t => (t.file, t.code))
-      val next = reached ++ types.filterNot(t => reached(t.fqn))
+      val code = rootCode ++ types.filter(t => reached(t.id)).map(t => (t.file, t.code))
+      val next = reached ++ types.filterNot(t => reached(t.id))
         .filter(t => code.exists { case (f, c) => f.names(c, t) })
-        .map(_.fqn)
+        .map(_.id)
       grew = next.size > reached.size
       reached = next
     }

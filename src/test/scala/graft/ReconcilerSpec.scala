@@ -128,82 +128,16 @@ class ReconcilerSpec extends AnyFunSuite {
       |  replicas: 2
       |""".stripMargin
 
-  test("apiserver reconcile: create -> ready -> scale, with drift repair and delete") {
+  test("apiserver parseSpec: validation failures name every bad field") {
     import graft.jobs.ApiServerReconciler
-    val cluster = new ApiServerReconciler.InMemoryCluster
-    val rec = new ApiServerReconciler(cluster)
-    val t0 = ts("2024-01-01 00:00:00")
-    // create: CR registered, first tick applies the trio and sits Creating
-    assert(rec.upsert(apiManifest(apiYaml), t0).phase == "Pending")
-    rec.tick(t0)
-    val st1 = rec.status("demo", "ns1").get
-    assert(st1.phase == "Creating" && st1.endpoint.isEmpty)
-    assert(cluster.get("ConfigMap", "ns1", "demo-api-config").isDefined)
-    assert(cluster.get("Deployment", "ns1", "demo-api").isDefined)
-    assert(cluster.get("Service", "ns1", "demo-api").isDefined)
-    // the applied deployment carries the config-hash annotation and the
-    // CRD-default resources (apiserver_controller.go:44-57)
-    val dep = cluster.get("Deployment", "ns1", "demo-api").get
-    val tpl = dep.path("spec").path("template")
-    assert(tpl.path("metadata").path("annotations")
-      .path("graft.dev/config-hash").asText.nonEmpty)
-    assert(tpl.path("spec").path("containers").get(0).path("resources")
-      .path("requests").path("cpu").asText == "100m")
-    assert(dep.path("spec").path("replicas").asInt == 2)
-    // readiness reaches desired → Running + endpoint published
-    cluster.setReady("ns1", "demo-api", 2)
-    rec.tick(ts("2024-01-01 00:01:00"))
-    val st2 = rec.status("demo", "ns1").get
-    assert(st2.phase == "Running" && st2.readyReplicas == 2)
-    assert(st2.endpoint.contains("http://demo-api.ns1.svc:80"))
-    assert(st2.conditions("Ready")._1 == "True")
-    assert(st2.conditions("ConfigurationSynced")._1 == "True")
-    // scale: spec update to 5 replicas → re-applied, Creating until ready
-    rec.upsert(apiManifest(apiYaml.replace("replicas: 2", "replicas: 5")),
-      ts("2024-01-01 00:02:00"))
-    rec.tick(ts("2024-01-01 00:02:00"))
-    assert(cluster.get("Deployment", "ns1", "demo-api").get
-      .path("spec").path("replicas").asInt == 5)
-    assert(rec.status("demo", "ns1").get.phase == "Creating")
-    cluster.setReady("ns1", "demo-api", 5)
-    rec.tick(ts("2024-01-01 00:03:00"))
-    assert(rec.status("demo", "ns1").get.phase == "Running")
-    // drift: mutate the stored deployment out-of-band → next tick repairs
-    // it and publishes ConfigurationSynced=False for that pass
-    val broken = dep.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-    broken.path("spec").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      .put("replicas", 1)
-    cluster.apply(broken)
-    rec.tick(ts("2024-01-01 00:04:00"))
-    assert(rec.status("demo", "ns1").get.conditions("ConfigurationSynced")._1 == "False")
-    assert(cluster.get("Deployment", "ns1", "demo-api").get
-      .path("spec").path("replicas").asInt == 5, "drift must be repaired")
-    rec.tick(ts("2024-01-01 00:05:00"))
-    assert(rec.status("demo", "ns1").get.conditions("ConfigurationSynced")._1 == "True")
-    // delete: owned trio removed with the CR (ownership cascade)
-    rec.delete("demo", ts("2024-01-01 00:06:00"), "ns1")
-    assert(rec.status("demo", "ns1").isEmpty)
-    assert(cluster.get("Deployment", "ns1", "demo-api").isEmpty)
-    assert(cluster.get("Service", "ns1", "demo-api").isEmpty)
-    assert(cluster.get("ConfigMap", "ns1", "demo-api-config").isEmpty)
-  }
-
-  test("apiserver reconcile: validation failures park the resource, not the loop") {
-    import graft.jobs.ApiServerReconciler
-    val cluster = new ApiServerReconciler.InMemoryCluster
-    val rec = new ApiServerReconciler(cluster)
     val bad = apiManifest(apiYaml
       .replace("replicas: 2", "replicas: 99")
       .replace("name: jira-creds", "name: ''"))
-    val st = rec.upsert(bad, ts("2024-01-01 00:00:00"))
-    assert(st.phase == "Failed")
-    assert(st.lastError.exists(e => e.contains("replicas") && e.contains("secretRef")))
-    rec.tick(ts("2024-01-01 00:01:00"))
-    // nothing applied for the failed resource; a later good spec recovers it
-    assert(cluster.store.isEmpty)
-    rec.upsert(apiManifest(apiYaml), ts("2024-01-01 00:02:00"))
-    rec.tick(ts("2024-01-01 00:02:00"))
-    assert(rec.status("demo", "ns1").get.phase == "Creating")
+    val errs = ApiServerReconciler.parseSpec(bad).left.toOption
+      .getOrElse(fail("an out-of-range spec must not parse"))
+    assert(errs.exists(_.contains("replicas")) && errs.exists(_.contains("secretRef")))
+    // the corrected spec parses
+    assert(ApiServerReconciler.parseSpec(apiManifest(apiYaml)).isRight)
   }
 
   test("apiserver rendered manifests validate as the CRD example's shape") {
@@ -233,6 +167,22 @@ class ReconcilerSpec extends AnyFunSuite {
     val h1 = ApiServerReconciler.configHash(spec)
     val h2 = ApiServerReconciler.configHash(spec.copy(logLevel = "DEBUG"))
     assert(h1 != h2)
+    // the desired trio, ConfigMap first; the deployment carries the
+    // config-hash annotation, the spec's replicas and the CRD-default
+    // resources (apiserver_controller.go:44-57)
+    val trio = ApiServerReconciler.desired(minimal)
+    assert(trio.map(m => m.path("kind").asText -> m.path("metadata").path("name").asText) ==
+      Seq("ConfigMap" -> "demo-api-config", "Deployment" -> "demo-api", "Service" -> "demo-api"))
+    val dep = trio(1)
+    val tpl = dep.path("spec").path("template")
+    assert(tpl.path("metadata").path("annotations")
+      .path("graft.dev/config-hash").asText == ApiServerReconciler.configHash(minimal))
+    assert(tpl.path("spec").path("containers").get(0).path("resources")
+      .path("requests").path("cpu").asText == "100m")
+    assert(dep.path("spec").path("replicas").asInt == 2)
+    val scaled = ApiServerReconciler.parseSpec(apiManifest(apiYaml
+      .replace("replicas: 2", "replicas: 5"))).toOption.get
+    assert(ApiServerReconciler.desired(scaled)(1).path("spec").path("replicas").asInt == 5)
   }
 
   test("success resets the retry budget; one-shots rest in Completed") {

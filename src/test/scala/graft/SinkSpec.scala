@@ -195,13 +195,13 @@ class SinkSpec extends AnyFunSuite {
   test("git sink: init, batch commits, clean worktree, conventional messages") {
     val repo = Files.createTempDirectory("graft-git").toString
     GitRepo.init(repo)
-    assert(GitRepo.isClean(repo))
+    assert(SinkSpec.isClean(repo))
 
     // batch 1: two issues
     val b1 = Tables.issues(spark, sf).filter(col("project_key") === "P3").limit(2)
     val (_, h1) = commitViaIndex(repo, b1, "feat(sync): sync batch 1 (2 issues)")
     assert(h1.isDefined)
-    assert(GitRepo.isClean(repo))
+    assert(SinkSpec.isClean(repo))
 
     // idempotent re-run: same content → nothing to commit
     assert(commitViaIndex(repo, b1, "feat(sync): rerun")._2.isEmpty)
@@ -233,7 +233,7 @@ class SinkSpec extends AnyFunSuite {
       Seq("git", "fsck", "--strict"), new java.io.File(repo)).!
     assert(fsck == 0, "git fsck rejected executor-written objects")
     // worktree content matches the index → status clean
-    assert(GitRepo.isClean(repo))
+    assert(SinkSpec.isClean(repo))
     assert(GitRepo.log(repo).head == "feat(sync): blob batch 1")
     // idempotent re-run: same content → same tree → no new commit
     assert(commitViaIndex(repo, b1, "feat(sync): rerun")._2.isEmpty)
@@ -317,7 +317,7 @@ class SinkSpec extends AnyFunSuite {
       Seq("git", "fsck", "--strict"), new java.io.File(repo)).! == 0)
     // the index is stale now, but validation self-heals instead of reporting
     // the tree-direct files as phantom dirt
-    assert(GitRepo.isClean(repo), "stale index must self-heal for validate")
+    assert(SinkSpec.isClean(repo), "stale index must self-heal for validate")
     assert(GitRepo.status(repo)("dirty") == "false")
     // and a subsequent INDEX-path commit must not write a tree missing the
     // tree-direct batch (the write-tree-from-stale-index hazard)
@@ -332,7 +332,7 @@ class SinkSpec extends AnyFunSuite {
       wr3.map(_._1).forall(paths),
       "index-path commit dropped tree-direct files from HEAD")
     assert(paths.contains(s"projects/P1/issues/$weird") && paths.exists(_.endsWith("hook.sh")))
-    assert(GitRepo.isClean(repo))
+    assert(SinkSpec.isClean(repo))
   }
 
   test("property: writeTree's keyed sort equals the definitional tree order") {
@@ -403,5 +403,19 @@ class SinkSpec extends AnyFunSuite {
       }
       .map(root.relativize(_).toString).toSeq
     assert(offenders.isEmpty, s"porcelain git invocations in $offenders")
+  }
+}
+
+object SinkSpec {
+
+  /** A clean worktree has no pending changes
+    * (reference: pkg/git/git.go:104-119 ValidateWorkingTree). Compares the
+    * worktree against HEAD (index refreshed first) so a streaming run's
+    * index-free commits don't read as phantom dirt.
+    */
+  def isClean(repoDir: String): Boolean = {
+    GitRepo.syncIndexToHead(repoDir)
+    scala.util.Try(scala.sys.process.Process(Seq("git", "status", "--porcelain"),
+      new java.io.File(repoDir)).!!).toOption.exists(_.trim.isEmpty)
   }
 }

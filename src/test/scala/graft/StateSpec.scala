@@ -292,11 +292,10 @@ class StateSpec extends AnyFunSuite {
     assert(keys == Set("P1-1", "P1-2"))
   }
 
-  test("loadResolved split plan equals the definitional one-window resolution") {
-    // the per-batch hot path resolves deltas-first and splits the base with
-    // broadcast joins (the corpus must never be exchanged per micro-batch);
-    // this pins it row-for-row against the definitional single window over
-    // base ∪ deltas, under overlaps, replays, and multi-delta churn
+  test("loadResolved under multi-delta churn equals the inline definitional window") {
+    // pins the resolved read row-for-row against a single window over
+    // base ∪ deltas written out here, under overlaps, replays, and
+    // multi-delta churn
     import org.apache.spark.sql.expressions.Window
     val dir = Files.createTempDirectory("graft-delta-eq").toString
     val path = s"$dir/state"
@@ -338,25 +337,12 @@ class StateSpec extends AnyFunSuite {
       .filter(col("__rn") === 1).drop("__rn")
       .collect().map(r => r.getString(0) ->
         (r.getAs[Timestamp]("last_updated"), r.getAs[Int]("sync_count"))).toMap
-    def resolvedMap() = StateStore.loadResolved(spark, path)
+    val resolved = StateStore.loadResolved(spark, path)
       .collect().map(r => r.getString(0) ->
         (r.getAs[Timestamp]("last_updated"), r.getAs[Int]("sync_count"))).toMap
-    // force the split plan (auto would pick the window below 1 GB of base)
-    spark.conf.set(StateStore.SplitResolveKey, "always")
-    try {
-      val split = resolvedMap()
-      assert(split == definitional,
-        s"split plan diverged: ${(split.toSet diff definitional.toSet).take(3)}")
-      assert(split.size == 45 && split("P1-7")._2 == 3 && split("P1-20")._2 == 1)
-      // and the split plan's base side is exchange-free: the touched-key
-      // set is broadcast, never a corpus-sized hashpartitioning
-      val plan = StateStore.loadResolved(spark, path)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("BroadcastHashJoin"),
-        s"base split must broadcast the touched-key set:\n${plan.take(1200)}")
-    } finally spark.conf.set(StateStore.SplitResolveKey, "auto")
-    // the auto plan (window, at this size) resolves identically
-    assert(resolvedMap() == definitional)
+    assert(resolved == definitional,
+      s"resolved read diverged: ${(resolved.toSet diff definitional.toSet).take(3)}")
+    assert(resolved.size == 45 && resolved("P1-7")._2 == 3 && resolved("P1-20")._2 == 1)
   }
 
   test("partitioned base: invisible layout, pruned resolve == unpruned, partition-pruned scan") {
