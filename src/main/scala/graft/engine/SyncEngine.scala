@@ -239,16 +239,17 @@ object SyncEngine {
       val skipped = total - attempted
 
       // one git commit per batch (S9), retried with backoff (C7). The blobs
-      // are already in the object store — this is index metadata + tree
-      // build only, streamed from the on-disk manifest (never materialized
-      // on the driver); a retry re-feeds the identical lines from disk.
-      // Runs while the edge/state cluster jobs drain.
+      // are already in the object store — the commit merges the manifest's
+      // (path, sha) pairs, read from disk and held on the driver for the
+      // merge, into HEAD's trees; a retry re-reads the identical lines. The
+      // index then reads HEAD once, so `git status` stays clean. Runs while
+      // the edge/state cluster jobs drain.
       progress.step("committing", 80)
       try {
         withRetry(opts.maxRetries, opts.backoffBaseMs, opts.backoffCapMs) { () =>
-          GitRepo.feedIndexInfo(repoDir, wr.entries)
-          GitRepo.commitFedIndex(repoDir,
-            s"feat(sync): sync $written issues ($opId)")
+          GitRepo.commitTreeDirect(repoDir,
+            s"feat(sync): sync $written issues ($opId)", wr.entries)
+          GitRepo.resetIndexToHead(repoDir)
         }
       } finally wr.delete()
 
@@ -283,10 +284,16 @@ object SyncEngine {
     } finally if (useCache) toSync.unpersist()
   }
 
+  /** Orphaned paths removed per repair commit — caps driver memory at one
+    * batch of paths during a mass-drift repair.
+    */
+  private val RepairIndexBatch = 10000
+
   /** C10: state recovery — reconcile state vs files and repair
     * (reference: pkg/state/manager.go:553-591 RecoverState). Returns the
-    * issue report; `repair` removes orphaned files and drops state rows whose
-    * files are missing (a later sync re-writes them).
+    * issue report; `repair` removes orphaned files — from the worktree and,
+    * one commit per [[RepairIndexBatch]] paths, from HEAD — and drops state
+    * rows whose files are missing (a later sync re-writes them).
     *
     * The checksum pass is the reference's ValidateState content check: every
     * file on disk is parsed back (distributed — one scan of the YAML tree)
@@ -295,11 +302,6 @@ object SyncEngine {
     * (reference: pkg/state/manager.go:497-500). Mismatches are report-only,
     * like the reference's warnings — repair touches only structural issues.
     */
-  /** Paths removed from the git index per exec — caps driver memory at one
-    * batch of paths during a mass-drift repair.
-    */
-  private val RepairIndexBatch = 10000
-
   def recover(spark: SparkSession, repoDir: String, statePath: String,
       repair: Boolean = false): DataFrame = {
     // base + pending deltas, or every issue streamed since the last
@@ -320,24 +322,31 @@ object SyncEngine {
     val findings = spark.read.schema(StateStore.validateSchema).parquet(outDir)
     if (repair) {
       // orphaned files: stream the subset — one partition's rows in driver
-      // memory at a time — deleting as we go and batching the git index
-      // removals (feedIndexInfo never stages deletions, so skipping the
-      // index here would resurface the paths in every future tree)
+      // memory at a time — committing each batch's removal from HEAD's
+      // trees BEFORE deleting its files: a crash in between leaves
+      // untracked orphans the next repair finds again, never a deleted
+      // file that HEAD still tracks
       val haveGit = new java.io.File(repoDir, ".git").exists()
       val pending = scala.collection.mutable.ArrayBuffer.empty[String]
+      var removedAny = false
       def flush(): Unit = if (pending.nonEmpty) {
-        if (haveGit) GitRepo.removeFromIndex(repoDir, pending.toSeq)
+        if (haveGit)
+          GitRepo.commitTreeDirect(repoDir,
+            s"fix(recover): remove ${pending.size} orphaned files",
+            Iterator.empty, pending.iterator)
+        pending.foreach(p =>
+          java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(repoDir, p)))
+        removedAny = true
         pending.clear()
       }
       val it = findings.filter(col("issue") === "orphaned_file")
         .select("file_path").toLocalIterator()
       while (it.hasNext) {
-        val p = it.next().getString(0)
-        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(repoDir, p))
-        pending += p
+        pending += it.next().getString(0)
         if (pending.size >= RepairIndexBatch) flush()
       }
       flush()
+      if (haveGit && removedAny) GitRepo.resetIndexToHead(repoDir)
       // missing-file keys: a distributed anti-join against the snapshot —
       // the mass-drift case never passes through the driver at all. The
       // rewrite replaces the base only, so fold the deltas in first: a

@@ -860,10 +860,9 @@ object Curation {
         size(org.apache.spark.sql.functions.split(normText(col("text")), " "))
           .cast("long").as("t"))
 
-  /** Conf key: max census rows [[allocationOf]] collects for the driver
-    * water-fill; a larger census takes the truncated in-plan rounds. */
-  private[pipeline] val AllocSourceGateKey = "spark.graft.allocSourceGate"
-  private val DefaultAllocSourceGate = 65536
+  /** Max census rows [[allocationOf]] collects for the driver water-fill;
+    * a larger census takes the truncated in-plan rounds. */
+  private val AllocSourceGate = 65536
 
   /** Spark twin of [[allocCtes]]: `(source, n_tokens, weight, cap, alloc)`
     * from a [[docTokens]]-shaped frame. Sources-table sized (the corpus
@@ -889,13 +888,11 @@ object Curation {
     * exact — BigInt on the driver, DECIMAL(38,0) with integral `DIV` in
     * plan — matching the oracle's HUGEINT; same 3 rounds.
     */
-  private def allocationOf(
-      dt: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  private[graft] def allocationOf(dt: org.apache.spark.sql.DataFrame,
+      gate: Int = AllocSourceGate): org.apache.spark.sql.DataFrame = {
     val s = dt.sparkSession
     import s.implicits._
     val census = dt.groupBy("source").agg(sum("t").as("n_tokens"))
-    val gate = s.conf.getOption(AllocSourceGateKey).flatMap(_.toIntOption)
-      .getOrElse(DefaultAllocSourceGate)
     val head = census.limit(gate + 1).collect()
     if (head.length <= gate) {
       var rows = head.map { r =>

@@ -14,8 +14,7 @@ import java.util.zip.{Deflater, DeflaterOutputStream}
   * This distributes the hashing + object creation that `git add` would do
   * serially on the driver (reference's per-issue commit loop:
   * pkg/git/git.go:214-287); the driver then commits tree metadata only
-  * ([[GitRepo.feedIndexInfo]] + [[GitRepo.commitFedIndex]], or
-  * [[GitRepo.commitTreeDirect]]).
+  * ([[GitRepo.commitTreeDirect]]).
   */
 object GitObjects {
 

@@ -5,8 +5,8 @@ import java.nio.charset.StandardCharsets
 
 import scala.sys.process._
 
-/** Git commit sink (SURVEY.md §2.1 S9/S10): repo init/validate plus one
-  * commit per micro-batch — the scalable re-design of the reference's
+/** Git commit sink (SURVEY.md §2.1 S9/S10): repo init plus one commit per
+  * batch — the scalable re-design of the reference's
   * commit-per-issue loop (reference: pkg/git/git.go:61-119 init/validate,
   * :214-287 CommitIssueFile; per-batch rationale SURVEY.md §4.2).
   *
@@ -22,28 +22,6 @@ object GitRepo {
     val logger = ProcessLogger(l => out.append(l).append('\n'), l => out.append(l).append('\n'))
     val code = Process("git" +: args.toSeq, dir).!(logger)
     (code, out.result())
-  }
-
-  /** Run git with stdin produced incrementally by `write`, so an input never
-    * has to be materialized (a huge batch's index-info lines).
-    */
-  private def runStreamingInput(dir: File, write: java.io.OutputStream => Unit,
-      args: String*): (Int, String) = {
-    val out = new StringBuilder
-    val sync = new Object
-    def drain(is: java.io.InputStream): Unit = {
-      val src = scala.io.Source.fromInputStream(is)(scala.io.Codec.UTF8)
-      try src.getLines().foreach(l => sync.synchronized {
-        out.append(l).append('\n'); ()
-      })
-      finally src.close()
-    }
-    val io = new ProcessIO(
-      in => try write(in) finally in.close(),
-      drain, drain)
-    val p = Process("git" +: args.toSeq, dir).run(io)
-    val code = p.exitValue()
-    (code, sync.synchronized(out.result()))
   }
 
   /** One long-lived `git cat-file --batch` pipe serving raw TREE object
@@ -83,63 +61,6 @@ object GitRepo {
     }
   }
 
-  /** Stream `100644 <sha> 0\t<path>` lines into `update-index --index-info`
-    * without materializing the entry list. Safe to re-run with the same
-    * entries (index adds are idempotent).
-    */
-  def feedIndexInfo(repoDir: String, entries: Iterator[(String, String)]): Unit = {
-    if (!entries.hasNext) return
-    // the feed BUILDS ON the current index — if a tree-direct streaming run
-    // left it stale, write-tree would emit a tree missing those commits'
-    // files; start from HEAD's tree instead (no-op when already in sync)
-    syncIndexToHead(repoDir)
-    val (code, out) = runStreamingInput(new File(repoDir), os => {
-      val w = new java.io.BufferedWriter(
-        new java.io.OutputStreamWriter(os, StandardCharsets.UTF_8), 1 << 16)
-      entries.foreach { case (path, sha) =>
-        w.write("100644 "); w.write(sha); w.write(" 0\t"); w.write(path); w.write("\n")
-      }
-      w.flush()
-    }, "update-index", "--index-info")
-    require(code == 0, s"git update-index failed: $out")
-  }
-
-  /** Turn the already-fed index into a commit (write-tree → commit-tree →
-    * update-ref), returning None when the tree is unchanged. The index-feed /
-    * commit split lets a retry re-run the cheap metadata steps — or re-feed
-    * from a persistent manifest — without re-materializing anything.
-    */
-  def commitFedIndex(repoDir: String, message: String): Option[String] = {
-    val dir = new File(repoDir)
-    val (wtCode, wtOut) = run(dir, "write-tree")
-    require(wtCode == 0, s"git write-tree failed: $wtOut")
-    val tree = wtOut.trim
-    val (pCode, pOut) = run(dir, "rev-parse", "--verify", "-q", "HEAD")
-    val parent = if (pCode == 0) Some(pOut.trim) else None
-    val unchanged = parent.exists { p =>
-      val (tc, tOut) = run(dir, "rev-parse", s"$p^{tree}")
-      tc == 0 && tOut.trim == tree
-    }
-    if (unchanged) None
-    else {
-      val msgFile = File.createTempFile("graft-commit", ".txt")
-      try {
-        java.nio.file.Files.write(msgFile.toPath,
-          message.getBytes(StandardCharsets.UTF_8))
-        val args = Seq("-c", "user.name=graft-sync",
-          "-c", "user.email=graft-sync@localhost", "commit-tree", tree) ++
-          parent.toSeq.flatMap(p => Seq("-p", p)) ++
-          Seq("-F", msgFile.getAbsolutePath)
-        val (cCode, cOut) = run(dir, args: _*)
-        require(cCode == 0, s"git commit-tree failed: $cOut")
-        val commit = cOut.trim
-        val (rCode, rOut) = run(dir, "update-ref", "HEAD", commit)
-        require(rCode == 0, s"git update-ref failed: $rOut")
-        Some(commit)
-      } finally msgFile.delete()
-    }
-  }
-
   /** Initialize the repo if absent (reference: pkg/git/git.go:61-95).
     * Loose-object compression is disabled for the sync store: staging a
     * 20k-file batch is zlib-bound (measured 3.3s → 0.9s with compression
@@ -159,47 +80,50 @@ object GitRepo {
     }
   }
 
-  /** Index-free commit for CONTINUOUS ingest: merge this batch's
-    * `(path, blob-sha)` adds into HEAD's trees directly — read each touched
-    * directory's current tree with `ls-tree`, overlay the adds, write the
-    * merged tree objects ourselves ([[GitObjects.writeTree]]), then
-    * `commit-tree` + `update-ref`. The git INDEX is a worktree-sync
-    * structure with O(existing entries) insertion per update-index call;
-    * on a corpus that grows every micro-batch that made the commit step
-    * quadratic (sfg1.0 soak: 8s → 99s per batch; a 75k feed into a
-    * 1.5M-entry index measures 55s, split-index worse under successive
-    * feeds). This path's cost is the touched directories' tree size — the
-    * unavoidable git floor — and nothing else.
+  /** The one commit path, for sync, recover and the stream: merge this
+    * batch's `(path, blob-sha)` adds and its path removals into HEAD's
+    * trees directly — read each touched directory's current tree over one
+    * `cat-file` pipe, overlay the changes, write the merged tree objects
+    * ourselves ([[GitObjects.writeTree]]), then `commit-tree` +
+    * `update-ref`. The git INDEX is never fed: its insertion is O(existing
+    * entries) per update, which made per-batch commits quadratic over a
+    * growing corpus (sfg1.0 soak: 8s → 99s per batch; a 75k feed into a
+    * 1.5M-entry index measures 55s). This path's cost is the touched
+    * directories' tree size plus the batch's `(path, sha)` pairs held on
+    * the driver, grouped per directory, for the merge.
     *
-    * Adds only (the CDC stream never deletes); returns None when the merged
-    * root tree equals HEAD's (idempotent replays). The repo's index is left
-    * untouched and thus stale — a marker records that, and every index-path
-    * entry point ([[status]]/[[feedIndexInfo]]/
-    * [[removeFromIndex]]) self-heals via [[syncIndexToHead]] before reading;
-    * the YAML corpus itself is byte-identical either way.
+    * An add wins over a removal of the same path; removing a path HEAD does
+    * not track is a no-op, and a directory the removals empty is dropped
+    * from its parent. Returns None when the merged root tree equals HEAD's
+    * (idempotent replays). The index is left as it was — callers that
+    * promise a clean `git status` follow with [[resetIndexToHead]].
     */
   def commitTreeDirect(repoDir: String, message: String,
-      adds: Iterator[(String, String)]): Option[String] = {
+      adds: Iterator[(String, String)],
+      removes: Iterator[String] = Iterator.empty): Option[String] = {
     val dir = new File(repoDir)
     val gitDir = java.nio.file.Paths.get(repoDir, ".git")
-    // group adds per directory
+    def parentOf(path: String): String = path.lastIndexOf('/') match {
+      case -1 => ""
+      case i => path.substring(0, i)
+    }
+    // per directory: name → Some(blob sha) to add, None to remove
     val byDir = scala.collection.mutable.Map
-      .empty[String, scala.collection.mutable.Map[String, String]]
-    adds.foreach { case (path, sha) =>
-      val i = path.lastIndexOf('/')
-      val d = if (i < 0) "" else path.substring(0, i)
-      byDir.getOrElseUpdate(d, scala.collection.mutable.Map.empty)
-        .update(path.substring(i + 1), sha)
-    }
+      .empty[String, scala.collection.mutable.Map[String, Option[String]]]
+    def put(path: String, sha: Option[String]): Unit =
+      byDir.getOrElseUpdate(parentOf(path), scala.collection.mutable.Map.empty)
+        .update(path.substring(path.lastIndexOf('/') + 1), sha)
+    removes.foreach(put(_, None))
+    adds.foreach { case (path, sha) => put(path, Some(sha)) }
     if (byDir.isEmpty) return None
-    // every directory on the path from the root to an add-dir gets rebuilt
-    val needed = scala.collection.mutable.Set("")
+    // every directory on the path from the root to a touched dir gets
+    // rebuilt, children looked up by parent
+    val needed = scala.collection.mutable.Set.empty[String]
     byDir.keys.foreach { d =>
-      if (d.nonEmpty) {
-        val parts = d.split('/')
-        (1 to parts.length).foreach(k => needed += parts.take(k).mkString("/"))
-      }
+      var n = d
+      while (n.nonEmpty && needed.add(n)) n = parentOf(n)
     }
+    val children = needed.toSeq.groupBy(parentOf)
     val headCommit = {
       val (code, out) = run(dir, "rev-parse", "-q", "--verify", "HEAD")
       if (code == 0) Some(out.trim) else None
@@ -207,39 +131,39 @@ object GitRepo {
     // trees are read as RAW object bodies over one cat-file pipe: names
     // byte-exact (no C-quoting), original modes preserved (executables,
     // symlinks, gitlinks re-emit byte-identically), one subprocess per
-    // commit no matter how many directories the adds touch
+    // commit no matter how many directories the batch touches
     val treeReader = new TreeBatchReader(dir)
-    def lsTree(sha: String): Seq[GitObjects.TreeEntry] = treeReader.tree(sha)
-    def rebuild(d: String, treeSha: Option[String]): String = {
-      val existing = treeSha.map(lsTree).getOrElse(Nil)
+    // the merged tree's sha, or None for a directory left empty
+    def rebuild(d: String, treeSha: Option[String]): Option[String] = {
       val merged = scala.collection.mutable.LinkedHashMap.empty[String, GitObjects.TreeEntry]
-      existing.foreach(e => merged.update(e.name, e))
-      // recurse into child directories that need rebuilding
-      needed.filter { n =>
-        val parent = n.lastIndexOf('/') match {
-          case -1 => ""
-          case i => n.substring(0, i)
-        }
-        n.nonEmpty && parent == d
-      }.foreach { n =>
+      treeSha.foreach(treeReader.tree(_).foreach(e => merged.update(e.name, e)))
+      def isTreeEntry(name: String) = merged.get(name).exists(_.isTree)
+      children.getOrElse(d, Nil).foreach { n =>
         val childName = n.substring(if (d.isEmpty) 0 else d.length + 1)
-        val childSha = merged.get(childName).filter(_.isTree).map(_.sha)
-        merged.update(childName,
-          GitObjects.TreeEntry(childName, rebuild(n, childSha), isTree = true))
+        rebuild(n, merged.get(childName).filter(_.isTree).map(_.sha)) match {
+          case Some(sha) =>
+            merged.update(childName, GitObjects.TreeEntry(childName, sha, isTree = true))
+          case None => if (isTreeEntry(childName)) merged.remove(childName)
+        }
       }
-      // overlay this directory's file adds
-      byDir.get(d).foreach(_.foreach { case (name, sha) =>
-        merged.update(name, GitObjects.TreeEntry(name, sha, isTree = false))
+      byDir.get(d).foreach(_.foreach {
+        case (name, Some(sha)) =>
+          merged.update(name, GitObjects.TreeEntry(name, sha, isTree = false))
+        case (name, None) => if (!isTreeEntry(name)) merged.remove(name)
       })
-      GitObjects.writeTree(gitDir, merged.values.toSeq)
+      if (merged.isEmpty) None
+      else Some(GitObjects.writeTree(gitDir, merged.values.toSeq))
     }
     val headTree = headCommit.map { c =>
       val (code, out) = run(dir, "rev-parse", s"$c^{tree}")
       require(code == 0, s"git rev-parse tree failed: $out")
       out.trim
     }
-    val newRoot = try rebuild("", headTree) finally treeReader.close()
-    if (headTree.contains(newRoot)) return None // idempotent replay
+    val root = try rebuild("", headTree) finally treeReader.close()
+    // a root the removals emptied is git's empty tree; an unborn HEAD with
+    // nothing left to add has nothing to commit
+    val newRoot = root.orElse(headTree.map(_ => GitObjects.writeTree(gitDir, Nil)))
+    if (newRoot.isEmpty || newRoot == headTree) return None // idempotent replay
     val msgFile = File.createTempFile("graft-commit", ".txt")
     try {
       java.nio.file.Files.write(msgFile.toPath,
@@ -247,81 +171,26 @@ object GitRepo {
       val parentArgs = headCommit.toSeq.flatMap(c => Seq("-p", c))
       val (ccode, cout) = run(dir,
         ("-c" +: "user.name=graft-sync" +: "-c" +: "user.email=graft-sync@localhost" +:
-          "commit-tree" +: newRoot +: "-F" +: msgFile.getAbsolutePath +: parentArgs): _*)
+          "commit-tree" +: newRoot.get +: "-F" +: msgFile.getAbsolutePath +: parentArgs): _*)
       require(ccode == 0, s"git commit-tree failed: $cout")
       val commit = cout.trim
-      // mark the index stale BEFORE moving HEAD: a crash between update-ref
-      // and a marker write would leave the index stale-but-unmarked, and a
-      // later index-path commit would write-tree a tree silently missing
-      // these files. Marker-first closes that window — a marker with an
-      // unmoved HEAD just makes [[syncIndexToHead]] a harmless read-tree.
-      java.nio.file.Files.write(staleMarker(repoDir), Array.emptyByteArray)
       val (ucode, uout) = run(dir, "update-ref", "HEAD", commit)
       require(ucode == 0, s"git update-ref failed: $uout")
       Some(commit)
     } finally { msgFile.delete(); () }
   }
 
-  /** Marker dropped by [[commitTreeDirect]]: the index no longer reflects
-    * HEAD. Guarding the `read-tree` repair on it keeps the streaming loop's
-    * commits O(touched dirs) — an unconditional read-tree per index entry
-    * point would reintroduce the O(corpus) term the tree-direct path removed.
+  /** Reset the index to HEAD's tree (`read-tree HEAD`; worktree untouched,
+    * no-op on an unborn HEAD) so `git status` compares the worktree with
+    * what [[commitTreeDirect]] committed. One O(corpus) pass — sync and
+    * recover run it once after their commits; the stream leaves the index
+    * alone, so each micro-batch stays O(touched dirs).
     */
-  private def staleMarker(repoDir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(repoDir, ".git", "graft-index-stale")
-
-  /** If a tree-direct streaming run left the index stale relative to HEAD,
-    * reset it to HEAD's tree (worktree untouched). Without this, any later
-    * index-based reader on the same repo (`git status`, `update-index
-    * --index-info` feeds) would see the tree-direct commits as spurious dirt
-    * — or worse, write-tree a tree MISSING them. No-op when the marker is
-    * absent, so it cannot wipe deliberately staged state (e.g. [[recover]]'s
-    * batched deletions awaiting the next sync commit).
-    */
-  def syncIndexToHead(repoDir: String): Unit = {
-    if (!java.nio.file.Files.exists(staleMarker(repoDir))) return
+  def resetIndexToHead(repoDir: String): Unit = {
     val dir = new File(repoDir)
-    val (hCode, _) = run(dir, "rev-parse", "--verify", "-q", "HEAD")
-    if (hCode == 0) {
+    if (run(dir, "rev-parse", "--verify", "-q", "HEAD")._1 == 0) {
       val (code, out) = run(dir, "read-tree", "HEAD")
       require(code == 0, s"git read-tree HEAD failed: $out")
     }
-    java.nio.file.Files.deleteIfExists(staleMarker(repoDir))
-    ()
-  }
-
-  /** Repo status introspection (reference: pkg/git/git.go:149-211). */
-  def status(repoDir: String): Map[String, String] = {
-    syncIndexToHead(repoDir)
-    val (_, branch) = run(new File(repoDir), "rev-parse", "--abbrev-ref", "HEAD")
-    val (_, porcelain) = run(new File(repoDir), "status", "--porcelain")
-    Map("branch" -> branch.trim, "dirty" -> porcelain.trim.nonEmpty.toString)
-  }
-
-  /** Stage deletions for paths already removed from the worktree
-    * (`update-index --remove --stdin`; a no-op for paths still present or
-    * never indexed). Needed alongside [[feedIndexInfo]], which only
-    * adds/updates entries: without this, files deleted by
-    * [[graft.engine.SyncEngine.recover]]'s repair pass would stay in every
-    * future committed tree and leave `git status` permanently dirty.
-    */
-  def removeFromIndex(repoDir: String, paths: Seq[String]): Unit = {
-    if (paths.isEmpty) return
-    // clear any tree-direct staleness BEFORE staging removals — once they are
-    // staged, a later read-tree repair would silently resurrect the paths
-    syncIndexToHead(repoDir)
-    val (code, out) = runStreamingInput(new File(repoDir), os => {
-      val w = new java.io.BufferedWriter(
-        new java.io.OutputStreamWriter(os, StandardCharsets.UTF_8), 1 << 16)
-      paths.foreach { p => w.write(p); w.write("\n") }
-      w.flush()
-    }, "update-index", "--remove", "--stdin")
-    require(code == 0, s"git update-index --remove failed: $out")
-  }
-
-  /** Commit subjects, newest first. */
-  def log(repoDir: String, n: Int = 50): Seq[String] = {
-    val (_, out) = run(new File(repoDir), "log", s"-$n", "--pretty=%s")
-    out.linesIterator.filter(_.nonEmpty).toSeq
   }
 }

@@ -316,10 +316,10 @@ object Yaml {
       issue_key: String)
 
   /** Handle to a distributed blob-write's on-disk manifest: per-partition
-    * entry files under `.git/graft-manifest/<token>/`. The driver never holds
+    * entry files under `.git/graft-manifest/<token>/`. The handle never holds
     * the entry list in memory — `written`/`failedKeys` come from one
     * streaming scan at construction, and [[entries]] re-opens the files on
-    * demand (so a commit retry can re-feed `git update-index` byte-for-byte).
+    * demand (so a commit retry re-reads the same entries byte-for-byte).
     */
   final case class BlobManifest(dir: java.nio.file.Path, written: Long,
       failedKeys: Seq[String]) {
@@ -404,12 +404,11 @@ object Yaml {
     * serially on the driver run distributed with the data. The `(sha, path)`
     * outcomes go to a per-partition MANIFEST file instead of a driver collect
     * (temp + atomic rename — a retried or speculative attempt republishes
-    * identical content, so the winning file is always well-formed). Driver
-    * memory is bounded by one partition's manifest, not the batch; the
-    * manifest feeds `git update-index` ([[GitRepo.feedIndexInfo]]) or the
-    * tree-direct commit ([[GitRepo.commitTreeDirect]]) by streaming and
-    * persists until [[BlobManifest.delete]], so commit retries re-feed from
-    * disk.
+    * identical content, so the winning file is always well-formed). The
+    * manifest feeds the tree-direct commit ([[GitRepo.commitTreeDirect]]),
+    * which holds the batch's pairs on the driver for the merge, and
+    * persists until [[BlobManifest.delete]], so commit retries re-read it
+    * from disk.
     *
     * Requires an initialized repo ([[GitRepo.init]]) at `repoDir`.
     */

@@ -440,16 +440,6 @@ object StateStore {
     deltas.foreach { case (_, p) => fs.delete(p, true) }
   }
 
-  /** Test-only crash injection for [[compactTouched]]'s swap (see
-    * [[DirSwap.Crash]]): `AfterDeltas` dies after delta deletion but before
-    * scratch cleanup.
-    */
-  private[graft] type CompactionCrash = DirSwap.Crash
-  private[graft] val AfterOut = DirSwap.AfterOut
-  private[graft] val AfterSwap = DirSwap.AfterSwap
-  private[graft] val AfterDeltas = DirSwap.BeforeCleanup
-  private[graft] type InjectedCrash = DirSwap.InjectedCrash
-
   /** Partition-incremental compaction: rewrite ONLY the touched block dirs.
     *
     * Protocol (every boundary crash-safe; every read recovers first, in
@@ -466,7 +456,7 @@ object StateStore {
     */
   private[graft] def compactTouched(spark: SparkSession, path: String,
       segs: Seq[String], deltas: Seq[(Int, Path)],
-      crash: Option[CompactionCrash] = None): Unit = {
+      crash: Option[DirSwap.Crash] = None): Unit = {
     val fs = fsOf(spark, path)
     val ctmp = new Path(path + "__ctmp")
     // 1. materialized fold of just the touched blocks
@@ -624,42 +614,24 @@ object StateStore {
   }
 
   /** The incremental candidate filter (P3/C1): keep issues that are new
-    * (absent from state) or modified (updated strictly after last_synced),
-    * with the reference's options — project allow-list, `since` lower bound,
-    * `force` bypass (reference: internal/sync/incremental.go:298-363,
-    * pkg/state/manager.go:386-442).
+    * (absent from state) or modified (updated strictly after last_synced);
+    * `force` bypasses the filter (reference:
+    * internal/sync/incremental.go:298-363, pkg/state/manager.go:386-442).
+    * Callers scope projects on `issues` themselves.
     */
   def changedIssues(
       issues: DataFrame,
       state: DataFrame,
-      includeNew: Boolean = true,
-      includeModified: Boolean = true,
-      projects: Seq[String] = Nil,
-      since: Option[java.sql.Timestamp] = None,
-      maxAge: Option[(java.sql.Timestamp, Int)] = None, // (now, days)
-      force: Boolean = false): DataFrame = {
-    val scoped0 =
-      if (projects.nonEmpty) issues.filter(col("project_key").isin(projects: _*))
-      else issues
-    val scoped1 = since.fold(scoped0)(t => scoped0.filter(col("updated") >= lit(t)))
-    // MaxAge: ignore issues untouched for longer than `days` before `now`
-    // (reference: internal/sync/incremental.go:298-363)
-    val scoped = maxAge.fold(scoped1) { case (now, days) =>
-      scoped1.filter(col("updated") >= expr(s"timestampadd(DAY, ${-days}, '$now')"))
-    }
-    if (force) scoped.withColumn("change_type", lit("forced"))
+      force: Boolean = false): DataFrame =
+    if (force) issues.withColumn("change_type", lit("forced"))
     else {
       val st = state.select(col("key").as("s_key"), col("last_synced"))
-      val joined = scoped.join(st, col("key") === col("s_key"), "left")
       val isNew = col("s_key").isNull
-      val isMod = col("s_key").isNotNull && col("updated") > col("last_synced")
-      val keep = (if (includeNew) isNew else lit(false)) ||
-        (if (includeModified) isMod else lit(false))
-      joined.filter(keep)
+      issues.join(st, col("key") === col("s_key"), "left")
+        .filter(isNew || col("updated") > col("last_synced"))
         .withColumn("change_type", when(isNew, "new").otherwise("modified"))
         .drop("s_key", "last_synced")
     }
-  }
 
   /** Aggregate sync statistics (A3, reference: pkg/state/manager.go:599-633). */
   def stats(state: DataFrame): DataFrame =

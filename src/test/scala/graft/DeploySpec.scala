@@ -420,12 +420,13 @@ class DeploySpec extends AnyFunSuite {
         assert(e.path("secretRef").path("optional").asBoolean(false),
           "the secret is applied out-of-band; the ref must be optional")
     }
-    // config keys are the reference's rate-limit knobs, not invented ones
-    val cm = docs.find(_.path("kind").asText == "ConfigMap").get
-    val knownKnobs = Set("JIRA_RATE_LIMIT_DELAY_MS", "JIRA_MAX_CONCURRENT_REQUESTS",
-      "JIRA_BACKOFF_BASE_MS", "JIRA_BACKOFF_CAP_MS")
-    cm.path("data").properties().asScala.foreach(e =>
-      assert(knownKnobs(e.getKey), s"unknown config knob ${e.getKey}"))
+    // a bundle ConfigMap may only inject env the serving pod reads: the
+    // auth token (Cli) and the session's cores/master (Session)
+    val engineKnobs = Set("GRAFT_AUTH_TOKEN", "SPARK_GRAFT_CPUS", "SPARK_MASTER")
+    docs.filter(_.path("kind").asText == "ConfigMap").foreach { cm =>
+      cm.path("data").properties().asScala.foreach(e =>
+        assert(engineKnobs(e.getKey), s"config knob ${e.getKey} is read by no code"))
+    }
     // the PVC the deployment mounts exists in the bundle
     val pvcNames = docs.filter(_.path("kind").asText == "PersistentVolumeClaim")
       .map(_.path("metadata").path("name").asText).toSet

@@ -41,7 +41,7 @@ class EngineSpec extends AnyFunSuite {
     assert(steps.containsSlice(Seq("planning", "filtering", "writing",
       "relationships", "committing", "state", "done")))
     // artifacts exist
-    assert(GitRepo.log(repo).exists(_.startsWith("feat(sync): sync")))
+    assert(SinkSpec.log(repo).exists(_.startsWith("feat(sync): sync")))
     assert(StateStore.load(spark, statePath).count() == result.successful)
     assert(new java.io.File(s"$repo/relationships").exists())
 
@@ -302,9 +302,8 @@ class EngineSpec extends AnyFunSuite {
     SyncEngine.recover(spark, repo, statePath, repair = true)
     val victimPath = s"projects/P3/issues/$victim.yaml"
     assert(!Files.exists(java.nio.file.Paths.get(repo, victimPath)))
-    // the deletion must be staged, not just on disk (feedIndexInfo can
-    // only add entries, so an un-removed index entry would resurface in
-    // every future tree)
+    // the deletion must reach the index too, not just the disk (a stale
+    // index entry would show as a lingering deletion in `git status`)
     val lsFiles = scala.sys.process.Process(
       Seq("git", "ls-files"), new java.io.File(repo)).!!
     assert(!lsFiles.linesIterator.contains(victimPath))
@@ -328,6 +327,41 @@ class EngineSpec extends AnyFunSuite {
       (c, out.result())
     }
     assert(code == 0 && !lsTree.linesIterator.contains(victimPath))
+  }
+
+  test("repair commits its removals: a stream commit and a later sync keep them out of HEAD") {
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-repaircommit").toString
+    val repo = s"$work/repo"
+    val statePath = s"$work/state"
+    SyncEngine.run(spark, Tables.issues(spark, sf), Tables.links(spark, sf),
+      repo, statePath, SyncOptions(jql = Some("project = P3")), now = now1)
+    val st = StateStore.load(spark, statePath)
+    val victim = st.select("key").as[String].orderBy("key").head()
+    StateStore.save(st.filter(col("key") =!= victim), statePath)
+    SyncEngine.recover(spark, repo, statePath, repair = true)
+    val victimPath = s"projects/P3/issues/$victim.yaml"
+    def headPaths(): Seq[String] = scala.sys.process.Process(
+      Seq("git", "ls-tree", "-r", "--name-only", "HEAD"),
+      new java.io.File(repo)).!!.linesIterator.toSeq
+    // the repair is in HEAD itself, not only staged for a later commit
+    assert(!headPaths().contains(victimPath))
+    // a tree-direct commit (what a stream batch runs) builds on that HEAD
+    val m = graft.sink.Yaml.writeIssuesWithBlobsManifest(
+      Tables.issues(spark, sf).filter(col("project_key") === "P4").limit(5), repo)
+    try assert(GitRepo.commitTreeDirect(repo, "feat(sync): stream batch 0 (5 issues)",
+      m.entries).isDefined)
+    finally m.delete()
+    val r = SyncEngine.run(spark, Tables.issues(spark, sf),
+      Tables.links(spark, sf), repo, statePath,
+      SyncOptions(jql = Some(s"""project = P3 AND key != "$victim"""")),
+      now = now2)
+    assert(r.successful > 0)
+    assert(!headPaths().contains(victimPath))
+    assert(headPaths().exists(_.startsWith("projects/P4/")))
+    val porcelain = scala.sys.process.Process(
+      Seq("git", "status", "--porcelain"), new java.io.File(repo)).!!
+    assert(!porcelain.linesIterator.exists(_.take(2).contains('D')), porcelain)
   }
 
   test("batch sync and recover read the ledger's pending stream deltas") {

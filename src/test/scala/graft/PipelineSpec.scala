@@ -1344,6 +1344,25 @@ class PipelineSpec extends AnyFunSuite {
     assert(got.values.map(_._3).sum <= budget)
   }
 
+  test("token budget: distributed water-fill rounds equal the driver rounds") {
+    // gate 0 clips every census, so allocationOf runs its in-plan rounds
+    val dt = Tables.t(spark, sf, "documents")
+      .select(col("doc_id"), col("source"), col("n_chars").cast("long").as("t"))
+    val driverDf = pipeline.Curation.allocationOf(dt)
+    val distDf = pipeline.Curation.allocationOf(dt, gate = 0)
+    def local(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collectLeaves()
+        .forall(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(local(driverDf) && !local(distDf), "each gate must take its own branch")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("source", "n_tokens", "weight", "cap", "alloc").collect()
+        .map(r => r.getString(0) ->
+          (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
+    val driver = rows(driverDf)
+    assert(driver.size > 1 && driver.values.exists(_._4 > 0))
+    assert(rows(distDf) == driver)
+  }
+
   test("hard negatives: every hit differs in label from its query, ≤3 each, ranked") {
     val labels = Tables.t(spark, sf, "embeddings")
       .select("vec_id", "label").collect()

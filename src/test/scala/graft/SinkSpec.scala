@@ -12,21 +12,9 @@ import graft.sink.{GitRepo, Yaml}
 class SinkSpec extends AnyFunSuite {
   import TestSpark._
 
-  /** Sync's commit protocol: distributed YAML + blob write, the manifest fed
-    * into the index, one commit. Returns the batch's `(path, sha)` entries
-    * and the new commit, if any.
-    */
-  private def commitViaIndex(repo: String, batch: org.apache.spark.sql.DataFrame,
-      message: String): (Seq[(String, String)], Option[String]) = {
-    val m = Yaml.writeIssuesWithBlobsManifest(batch, repo)
-    try {
-      GitRepo.feedIndexInfo(repo, m.entries)
-      (m.entries.toSeq, GitRepo.commitFedIndex(repo, message))
-    } finally m.delete()
-  }
-
-  /** The stream's commit protocol: the same write, merged into HEAD's trees
-    * without the index.
+  /** The engine's commit protocol: distributed YAML + blob write, the
+    * manifest merged into HEAD's trees. Returns the batch's `(path, sha)`
+    * entries and the new commit, if any.
     */
   private def commitDirect(repo: String, batch: org.apache.spark.sql.DataFrame,
       message: String): (Seq[(String, String)], Option[String]) = {
@@ -199,44 +187,43 @@ class SinkSpec extends AnyFunSuite {
 
     // batch 1: two issues
     val b1 = Tables.issues(spark, sf).filter(col("project_key") === "P3").limit(2)
-    val (_, h1) = commitViaIndex(repo, b1, "feat(sync): sync batch 1 (2 issues)")
+    val (_, h1) = commitDirect(repo, b1, "feat(sync): sync batch 1 (2 issues)")
     assert(h1.isDefined)
     assert(SinkSpec.isClean(repo))
 
     // idempotent re-run: same content → nothing to commit
-    assert(commitViaIndex(repo, b1, "feat(sync): rerun")._2.isEmpty)
+    assert(commitDirect(repo, b1, "feat(sync): rerun")._2.isEmpty)
 
     // batch 2: more issues → second commit
     val b2 = Tables.issues(spark, sf).filter(col("project_key") === "P4").limit(2)
-    val (_, h2) = commitViaIndex(repo, b2, "feat(sync): sync batch 2 (2 issues)")
+    val (_, h2) = commitDirect(repo, b2, "feat(sync): sync batch 2 (2 issues)")
     assert(h2.isDefined && h2 != h1)
 
-    val log = GitRepo.log(repo)
+    val log = SinkSpec.log(repo)
     assert(log == Seq("feat(sync): sync batch 2 (2 issues)",
       "feat(sync): sync batch 1 (2 issues)"))
-    assert(GitRepo.status(repo)("dirty") == "false")
+    assert(SinkSpec.isClean(repo))
   }
 
-  test("distributed blob write + index-info commit: valid repo, clean tree, idempotent") {
+  test("distributed blob write + tree-direct commit: valid repo, clean tree, idempotent") {
     val repo = Files.createTempDirectory("graft-blobs").toString
     GitRepo.init(repo)
     val b1 = Tables.issues(spark, sf).filter(col("project_key") === "P1").limit(50).cache()
     val m = Yaml.writeIssuesWithBlobsManifest(b1, repo)
     assert(m.written == b1.count() && m.failed == 0)
     val entries = m.entries.toSeq
-    GitRepo.feedIndexInfo(repo, m.entries)
+    val h1 = GitRepo.commitTreeDirect(repo, "feat(sync): blob batch 1", m.entries)
     m.delete()
-    val h1 = GitRepo.commitFedIndex(repo, "feat(sync): blob batch 1")
     assert(h1.isDefined)
     // the hand-rolled loose objects must be bit-valid to git itself
     val fsck = scala.sys.process.Process(
       Seq("git", "fsck", "--strict"), new java.io.File(repo)).!
     assert(fsck == 0, "git fsck rejected executor-written objects")
-    // worktree content matches the index → status clean
+    // worktree content matches HEAD → status clean
     assert(SinkSpec.isClean(repo))
-    assert(GitRepo.log(repo).head == "feat(sync): blob batch 1")
+    assert(SinkSpec.log(repo).head == "feat(sync): blob batch 1")
     // idempotent re-run: same content → same tree → no new commit
-    assert(commitViaIndex(repo, b1, "feat(sync): rerun")._2.isEmpty)
+    assert(commitDirect(repo, b1, "feat(sync): rerun")._2.isEmpty)
     // content readable back through git (not just the worktree)
     val (path, sha) = entries.head
     val catOut = scala.sys.process.Process(
@@ -248,18 +235,23 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("index-free tree commit: byte-identical trees to the index path, fsck-clean") {
-    // two repos, same batches: one committed through the index
-    // (feedIndexInfo + commitFedIndex), one through direct tree merging
+    // two repos, same batches: one committed by plain git (`git add` +
+    // `git commit` through its index), one through direct tree merging
     // (commitTreeDirect) — the resulting TREE shas must be identical commit
-    // by commit, proving the
-    // hand-written tree objects (sort order, modes, binary shas) match what
-    // git itself builds
-    val viaIndex = Files.createTempDirectory("graft-tree-a").toString
+    // by commit, proving the hand-written tree objects (sort order, modes,
+    // binary shas, emptied directories dropped) match what git itself builds
+    val viaGit = Files.createTempDirectory("graft-tree-a").toString
     val direct = Files.createTempDirectory("graft-tree-b").toString
-    GitRepo.init(viaIndex)
+    assert(git(viaGit, "init", "-q") == 0)
     GitRepo.init(direct)
+    def commitViaGit(message: String): Unit = assert(git(viaGit,
+      "-c", "user.name=t", "-c", "user.email=t@localhost",
+      "commit", "-q", "-m", message) == 0)
     def treeOf(repo: String): String = scala.sys.process.Process(
       Seq("git", "rev-parse", "HEAD^{tree}"), new java.io.File(repo)).!!.trim
+    def tracked(repo: String): Seq[String] = scala.sys.process.Process(
+      Seq("git", "ls-tree", "-r", "--name-only", "HEAD"),
+      new java.io.File(repo)).!!.linesIterator.toSeq
     val batches = Seq(
       Tables.issues(spark, sf).filter(col("project_key").isin("P1", "P2")).limit(60),
       Tables.issues(spark, sf).filter(col("project_key").isin("P2", "P3")).limit(80),
@@ -267,23 +259,44 @@ class SinkSpec extends AnyFunSuite {
       Tables.issues(spark, sf).filter(col("project_key") === "P1").limit(30)
         .withColumn("summary", concat(col("summary"), lit(" v2"))))
     batches.zipWithIndex.foreach { case (b, i) =>
-      assert(commitViaIndex(viaIndex, b, s"feat(sync): batch $i")._2.isDefined)
+      Yaml.writeIssues(b, viaGit)
+      assert(git(viaGit, "add", "--", "projects") == 0)
+      commitViaGit(s"feat(sync): batch $i")
       assert(commitDirect(direct, b, s"feat(sync): batch $i")._2.isDefined)
-      assert(treeOf(viaIndex) == treeOf(direct),
-        s"batch $i: direct tree diverged from the index-built tree")
+      assert(treeOf(viaGit) == treeOf(direct),
+        s"batch $i: direct tree diverged from git's own tree")
     }
+    // idempotent replay: same adds → same root tree → no commit
+    assert(commitDirect(direct, batches.last, "replay")._2.isEmpty)
+    // removals: one project emptied (its directories must leave the tree)
+    // and two files of another, plus a path HEAD never tracked (a no-op)
+    val before = tracked(direct)
+    val projects = before.map(_.split('/')(1)).distinct.sorted
+    assert(projects.size >= 2)
+    val gone = before.filter(_.startsWith(s"projects/${projects.last}/")) ++
+      before.filter(_.startsWith(s"projects/${projects.head}/")).take(2)
+    assert(git(viaGit, Seq("rm", "-q", "--") ++ gone: _*) == 0)
+    commitViaGit("fix(recover): removals")
+    val removes = gone :+ "projects/PX/issues/PX-0.yaml"
+    assert(GitRepo.commitTreeDirect(direct, "fix(recover): removals",
+      Iterator.empty, removes.iterator).isDefined)
+    gone.foreach(p => Files.delete(java.nio.file.Paths.get(direct, p)))
+    assert(treeOf(viaGit) == treeOf(direct), "removal tree diverged from git's own tree")
+    assert(tracked(direct) == before.filterNot(gone.toSet))
+    assert(GitRepo.commitTreeDirect(direct, "replay",
+      Iterator.empty, removes.iterator).isEmpty)
     // hand-written tree objects are bit-valid to git itself
     assert(scala.sys.process.Process(
       Seq("git", "fsck", "--strict"), new java.io.File(direct)).! == 0,
       "git fsck rejected directly-written tree objects")
-    // idempotent replay: same adds → same root tree → no commit
-    assert(commitDirect(direct, batches.last, "replay")._2.isEmpty)
-    // history depth matches (3 commits each), messages intact
-    assert(GitRepo.log(direct).take(3) == GitRepo.log(viaIndex).take(3))
+    // history depth matches (4 commits each), messages intact
+    assert(SinkSpec.log(direct) == SinkSpec.log(viaGit))
+    assert(SinkSpec.log(direct).length == 4)
+    assert(SinkSpec.isClean(direct))
   }
 
-  test("tree-direct commits: stale index self-heals; modes and special names survive") {
-    val repo = Files.createTempDirectory("graft-stale").toString
+  test("tree-direct commits: modes and special names survive") {
+    val repo = Files.createTempDirectory("graft-modes").toString
     GitRepo.init(repo)
     // seed through plain git: an executable (mode 100755) and a filename
     // with bytes that default `ls-tree` would C-quote — both live in the
@@ -315,23 +328,8 @@ class SinkSpec extends AnyFunSuite {
     assert(lsr().exists(_.endsWith(weird)), "special-byte name corrupted")
     assert(scala.sys.process.Process(
       Seq("git", "fsck", "--strict"), new java.io.File(repo)).! == 0)
-    // the index is stale now, but validation self-heals instead of reporting
-    // the tree-direct files as phantom dirt
-    assert(SinkSpec.isClean(repo), "stale index must self-heal for validate")
-    assert(GitRepo.status(repo)("dirty") == "false")
-    // and a subsequent INDEX-path commit must not write a tree missing the
-    // tree-direct batch (the write-tree-from-stale-index hazard)
-    val b2 = Tables.issues(spark, sf).filter(col("project_key") === "P2").limit(3)
-    val (wr2, h2) = commitDirect(repo, b2, "feat(sync): direct 2")
-    assert(h2.isDefined) // restale the index
-    val b3 = Tables.issues(spark, sf).filter(col("project_key") === "P3").limit(3)
-    val (wr3, h3) = commitViaIndex(repo, b3, "feat(sync): via index")
-    assert(h3.isDefined)
     val paths = lsr().map(l => l.substring(l.indexOf('\t') + 1)).toSet
-    assert(wr.map(_._1).forall(paths) && wr2.map(_._1).forall(paths) &&
-      wr3.map(_._1).forall(paths),
-      "index-path commit dropped tree-direct files from HEAD")
-    assert(paths.contains(s"projects/P1/issues/$weird") && paths.exists(_.endsWith("hook.sh")))
+    assert(wr.map(_._1).forall(paths))
     assert(SinkSpec.isClean(repo))
   }
 
@@ -387,14 +385,15 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("no file under src/main/scala stages with `add -A` or commits through porcelain") {
-    // sync feeds the index from the manifest and stream merges trees
-    // directly: a worktree scan (`add -A`) or a porcelain `commit` grows
-    // with the whole corpus on every batch
+    // every commit merges trees directly: a worktree scan (`add -A`), a
+    // porcelain `commit` or an index feed (`update-index`, `write-tree`)
+    // grows with the whole corpus on every batch
     val root = java.nio.file.Paths.get("src/main/scala")
     val invocation = Seq(
       "\"add\"\\s*,\\s*\"-A\"".r, // run(dir, "add", "-A", ...)
-      "\"commit\"".r, // run(dir, ..., "commit", ...)
-      "\"git\\s+(add\\s+-A|commit(?![\\w-]))".r) // one whole command line
+      "\"(commit|update-index|write-tree)\"".r, // run(dir, ..., "commit", ...)
+      // one whole command line
+      "\"git\\s+(add\\s+-A|(commit|update-index|write-tree)(?![\\w-]))".r)
     val offenders = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .filter { p =>
@@ -409,13 +408,18 @@ class SinkSpec extends AnyFunSuite {
 object SinkSpec {
 
   /** A clean worktree has no pending changes
-    * (reference: pkg/git/git.go:104-119 ValidateWorkingTree). Compares the
-    * worktree against HEAD (index refreshed first) so a streaming run's
-    * index-free commits don't read as phantom dirt.
+    * (reference: pkg/git/git.go:104-119 ValidateWorkingTree). Resets the
+    * index to HEAD first, so it compares the worktree with HEAD: a
+    * stream's index-free commits don't read as phantom dirt.
     */
   def isClean(repoDir: String): Boolean = {
-    GitRepo.syncIndexToHead(repoDir)
+    GitRepo.resetIndexToHead(repoDir)
     scala.util.Try(scala.sys.process.Process(Seq("git", "status", "--porcelain"),
       new java.io.File(repoDir)).!!).toOption.exists(_.trim.isEmpty)
   }
+
+  /** Commit subjects, newest first. */
+  def log(repoDir: String, n: Int = 50): Seq[String] =
+    scala.sys.process.Process(Seq("git", "log", s"-$n", "--pretty=%s"),
+      new java.io.File(repoDir)).!!.linesIterator.filter(_.nonEmpty).toSeq
 }

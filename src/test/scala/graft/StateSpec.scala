@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.state.StateStore
+import graft.state.{DirSwap, StateStore}
 
 class StateSpec extends AnyFunSuite {
   import TestSpark._
@@ -124,7 +124,7 @@ class StateSpec extends AnyFunSuite {
     assert(!StateStore.restore(spark, path))
   }
 
-  test("changedIssues: new + modified only; force bypasses; project scoping") {
+  test("changedIssues: new + modified only; force bypasses") {
     val issues = batchDf(Seq(
       ("P1-1", "P1", "a", "2024-01-05 00:00:00"), // modified (state older)
       ("P1-2", "P1", "b", "2024-01-01 00:00:00"), // unchanged
@@ -138,17 +138,6 @@ class StateSpec extends AnyFunSuite {
       .map(r => r.getAs[String]("key") -> r.getAs[String]("change_type")).toMap
     assert(types == Map("P1-1" -> "modified", "P2-1" -> "new"))
     assert(StateStore.changedIssues(issues, state, force = true).count() == 3)
-    assert(StateStore.changedIssues(issues, state, projects = Seq("P2")).count() == 1)
-    assert(StateStore.changedIssues(issues, state, includeModified = false).count() == 1)
-  }
-
-  test("changedIssues maxAge drops stale issues") {
-    val issues = batchDf(Seq(
-      ("P1-1", "P1", "recent", "2024-01-10 00:00:00"),
-      ("P1-2", "P1", "stale", "2023-06-01 00:00:00")))
-    val changed = StateStore.changedIssues(issues, StateStore.empty(spark),
-      maxAge = Some((ts("2024-01-15 00:00:00"), 30)))
-    assert(changed.select("key").collect().map(_.getString(0)).toSeq == Seq("P1-1"))
   }
 
   test("staleness report: lag anchored to corpus max, covers every project") {
@@ -476,9 +465,9 @@ class StateSpec extends AnyFunSuite {
     def deltas() = StateStore.deltaDirs(spark, path)
     // A: the one unsafe window — block renamed OUT, not yet in. The block
     // dir is genuinely absent until recovery rolls the new content forward.
-    intercept[StateStore.InjectedCrash] {
+    intercept[DirSwap.InjectedCrash] {
       StateStore.compactTouched(spark, path, segs, deltas(),
-        Some(StateStore.AfterOut(0)))
+        Some(DirSwap.AfterOut(0)))
     }
     assert(!new java.io.File(s"$path/__seg=00000").exists(),
       "the crash must leave the unsafe state this test is about")
@@ -488,16 +477,16 @@ class StateSpec extends AnyFunSuite {
       !new java.io.File(path + "__ctmp").exists())
     assert(StateStore.deltaCount(spark, path) == 1, "deltas survive until folded")
     // B: crash between swaps — block 0 new, block 1 still old
-    intercept[StateStore.InjectedCrash] {
+    intercept[DirSwap.InjectedCrash] {
       StateStore.compactTouched(spark, path, segs, deltas(),
-        Some(StateStore.AfterSwap(0)))
+        Some(DirSwap.AfterSwap(0)))
     }
     assert(resolvedMap(path) == expected)
     assert(StateStore.deltaCount(spark, path) == 1)
     // C: crash after delta deletion, scratch left behind
-    intercept[StateStore.InjectedCrash] {
+    intercept[DirSwap.InjectedCrash] {
       StateStore.compactTouched(spark, path, segs, deltas(),
-        Some(StateStore.AfterDeltas))
+        Some(DirSwap.BeforeCleanup))
     }
     assert(StateStore.deltaCount(spark, path) == 0)
     assert(resolvedMap(path) == expected)

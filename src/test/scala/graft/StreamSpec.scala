@@ -44,7 +44,7 @@ class StreamSpec extends AnyFunSuite {
     val state = StateStore.loadResolved(spark, s"$work/state").cache()
     assert(state.count() == 2)
     assert(state.filter(col("key") === "P1-1").head.getAs[Int]("sync_count") == 2)
-    val log = GitRepo.log(s"$work/repo")
+    val log = SinkSpec.log(s"$work/repo")
     assert(log.length == 2) // batch 0 and the real update; idempotent batch skipped
     assert(log.forall(_.startsWith("feat(sync): stream batch")))
     assert(SinkSpec.isClean(s"$work/repo"))
@@ -72,7 +72,7 @@ class StreamSpec extends AnyFunSuite {
       .coalesce(1).write.mode("append").parquet(srcDir)
     val q1 = startQuery(ts("2024-01-15 00:00:00"))
     try q1.processAllAvailable() finally q1.stop()
-    assert(GitRepo.log(s"$work/repo").length == 1)
+    assert(SinkSpec.log(s"$work/repo").length == 1)
     // the "crash": query gone; new input lands while nothing is running
     Seq(("P1-1", "P1", "v2", ts("2024-02-01 00:00:00")),
       ("P1-3", "P1", "v1", ts("2024-02-01 00:00:00")))
@@ -87,11 +87,11 @@ class StreamSpec extends AnyFunSuite {
       "the update must sync exactly once more after restart")
     assert(state.filter(col("key") === "P1-2").head.getAs[Int]("sync_count") == 1,
       "an already-committed batch must not replay after restart")
-    assert(GitRepo.log(s"$work/repo").length == 2)
+    assert(SinkSpec.log(s"$work/repo").length == 2)
     // a third restart with nothing new is a no-op: no commit, no state churn
     val q3 = startQuery(ts("2024-03-15 00:00:00"))
     try q3.processAllAvailable() finally q3.stop()
-    assert(GitRepo.log(s"$work/repo").length == 2)
+    assert(SinkSpec.log(s"$work/repo").length == 2)
     assert(StateStore.loadResolved(spark, s"$work/state")
       .filter(col("key") === "P1-1").head.getAs[Int]("sync_count") == 2)
     state.unpersist()
@@ -146,7 +146,7 @@ class StreamSpec extends AnyFunSuite {
         query.processAllAvailable()
       }
     } finally query.stop()
-    val log = GitRepo.log(s"$work/repo")
+    val log = SinkSpec.log(s"$work/repo")
     assert(log.length == 2, s"cadence 2 over 4 batches must commit twice: $log")
     assert(log.forall(_.matches("feat\\(sync\\): stream batch \\d+ \\(2 issues\\)")),
       s"each commit carries its window's 2 issues: $log")
@@ -197,7 +197,7 @@ class StreamSpec extends AnyFunSuite {
     // immediately (a future cadence boundary may never come)
     val q2 = startQuery()
     try q2.processAllAvailable() finally q2.stop()
-    val log = GitRepo.log(s"$work/repo")
+    val log = SinkSpec.log(s"$work/repo")
     assert(log == Seq("feat(sync): recover 1 issues from interrupted stream"),
       s"unexpected log: $log")
     val lsr = scala.sys.process.Process(
@@ -262,7 +262,7 @@ class StreamSpec extends AnyFunSuite {
       repo, s"$work/state", s"$work/ckpt",
       clock = () => ts("2024-01-15 00:00:00"))
     q.stop() // recovery already ran inside start()
-    assert(GitRepo.log(repo) ==
+    assert(SinkSpec.log(repo) ==
       Seq("feat(sync): recover 1 issues from interrupted stream"))
     val lsr = scala.sys.process.Process(
       Seq("git", "ls-tree", "-r", "--name-only", "HEAD"),
@@ -700,7 +700,7 @@ class StreamSpec extends AnyFunSuite {
           .filter(p => p.toString.endsWith(".yaml"))
           .map(p => root.relativize(p).toString).toSeq.sorted
       }
-      (work, state, files, GitRepo.log(s"$work/repo").length)
+      (work, state, files, SinkSpec.log(s"$work/repo").length)
     }
     val (workP, stateP, filesP, commitsP) = run(partitioned = true)
     val (_, stateF, filesF, commitsF) = run(partitioned = false)
