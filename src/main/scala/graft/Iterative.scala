@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Lineage truncation for iterative operators (components, PageRank, k-hop,
-  * dedup label propagation): every round must restart from a materialized
+/** Lineage truncation for iterative operators (the min-label propagation
+  * kernel `Graph.minLabels` behind components, SCC and the near-dup
+  * resolves; PageRank, k-hop, LPA): every round must restart from a materialized
   * plan, or the plan deepens by one join per round and each depth compiles
   * its own whole-stage-codegen class (measured seconds of pure janino time
   * on tiny graphs — see SCALING.md).

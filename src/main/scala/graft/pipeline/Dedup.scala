@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.queries.{q, GQuery}
+import graft.queries.{q, GQuery, Graph}
 
 /** Deduplication operators over `documents` (SURVEY.md north-star extension;
   * generalizes the reference's only similarity op, GetSimilarProfiles,
@@ -628,19 +628,9 @@ object Dedup {
         .select("va", "vb")
       val und = pairs.select(col("va").as("a"), col("vb").as("b"))
         .unionByName(pairs.select(col("vb").as("a"), col("va").as("b")))
-      val adj = und.unionByName(
-        en.select(col("vec_id").as("a"), col("vec_id").as("b")))
-        .transform(graft.Iterative.truncate)
-      var labels = en.select(col("vec_id").as("node"), col("vec_id").as("lbl"))
-        .transform(graft.Iterative.truncate)
-      for (_ <- 1 to SemanticRounds)
-        labels = adj.join(labels, col("node") === col("b"))
-          .groupBy(col("a")).agg(min("lbl").as("lbl"))
-          .withColumnRenamed("a", "node")
-          .transform(graft.Iterative.truncate)
-      val w = Window.partitionBy("lbl").orderBy("node")
-      labels
-        .select(col("node").as("vec_id"), col("lbl").as("cluster"),
+      val w = Window.partitionBy("lbl").orderBy("vec_id")
+      labelsOver(en.select("vec_id"), und, SemanticRounds)
+        .select(col("vec_id"), col("lbl").as("cluster"),
           (row_number().over(w) === 1).as("survivor"))
         .orderBy("vec_id")
     }
@@ -693,86 +683,17 @@ object Dedup {
         .orderBy("doc_id")
     }
 
-  /** `(doc_id, cluster)` labels after the bounded label propagation.
-    * Memoized unpersisted: the frame itself is corpus-sized (one map-side
-    * join over `documents` — cheap to re-run), but building it costs two
-    * driver jobs (edge-count gate + collected label propagation) that the
-    * four consuming queries shouldn't each repeat.
+  /** `(doc_id, cluster)` labels after the bounded label propagation over
+    * the raw LSH candidates. Memoized unpersisted: the frame itself is
+    * corpus-sized (one map-side join over `documents` — cheap to re-run),
+    * but building it costs two driver jobs (the kernel's edge-count gate
+    * and its collect) that the four consuming queries shouldn't each repeat.
     */
   private[pipeline] def clusterLabels(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     graft.Caches.fragment(s, dir, "minhash_cluster_labels", persisted = false) {
-      val cand = minhashCandidates(s, dir)
-      // map-only derivation of the already-cached candidate fragment — a
-      // second cache entry here would just shadow minhash_cand
-      val edges = cand.select(col("doc_a").as("a"), col("doc_b").as("b"))
-        .unionByName(cand.select(col("doc_b").as("a"), col("doc_a").as("b")))
-      labelsOverEdges(s, dir, edges)
+      resolveLabels(s, dir, verified = false)
     }
-
-  /** [[ResolveRounds]] bounded label propagation of `documents` ids over a
-    * symmetrized `(a, b)` edge frame — the shared core of the
-    * candidate-based [[clusterLabels]] and the verified-pair variant.
-    */
-  private def labelsOverEdges(s: org.apache.spark.sql.SparkSession,
-      dir: String,
-      edges: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-      val rounds = ResolveRounds
-      // Near-dup edge lists are orders of magnitude smaller than the corpus.
-      // When the persisted edge set measures small (size-gated, not assumed),
-      // run the bounded rounds over the collected edge list — the same move a
-      // broadcast hash join makes with its small side — and apply the result
-      // as ONE broadcast mapping join against the full corpus, which is never
-      // shuffled. Docs untouched by any edge keep their own id and need no
-      // mapping entry. Falls back to the distributed iterative join chain
-      // when the edge set is genuinely large.
-      val docs = graft.Tables.t(s, dir, "documents")
-        .select(col("doc_id"), col("doc_id").as("cluster"))
-      // one bounded action answers "small enough?" AND delivers the rows:
-      // a result shorter than the cap is the whole edge set (same move as
-      // Graph.gatherUnder); a clipped one falls through to the
-      // distributed chain without ever holding more than the cap
-      val gathered = edges.limit(1000000).collect()
-      val lab =
-        if (gathered.length < 1000000) {
-          val es = gathered.map(r => (r.getLong(0), r.getLong(1)))
-          val nbrs = es.groupBy(_._1).map { case (a, bs) => (a, bs.map(_._2)) }
-          var m = es.iterator.flatMap(e => Iterator(e._1, e._2))
-            .map(id => id -> id).toMap
-          for (_ <- 1 to rounds) {
-            val prev = m // synchronous rounds: all reads see the prior state
-            m = m.map { case (id, c) =>
-              val nm = nbrs.get(id).fold(c)(bs => bs.map(prev).min)
-              id -> math.min(c, nm)
-            }
-          }
-          val spark = s
-          import spark.implicits._
-          val mapping = m.toSeq.filter { case (id, c) => c != id }
-            .toDF("m_doc_id", "m_cluster")
-          docs.join(broadcast(mapping), col("doc_id") === col("m_doc_id"), "left")
-            .select(col("doc_id"),
-              coalesce(col("m_cluster"), col("cluster")).as("cluster"))
-        } else {
-          var l = docs
-          for (_ <- 1 to rounds) {
-            val nbrMin = edges
-              .join(l.select(col("doc_id").as("b"), col("cluster")), Seq("b"))
-              .groupBy(col("a").as("doc_id")).agg(min("cluster").as("nm"))
-            // each round reads `l` twice (neighbor scan + outer join), and
-            // the plan deepens by one join per round — truncate lineage like
-            // every other iterative operator. Checkpoint blocks release on
-            // GC via the ContextCleaner instead of pinning CacheManager
-            // entries per round forever (the round-8 hygiene leak).
-            l = l.join(nbrMin, Seq("doc_id"), "left")
-              .select(col("doc_id"),
-                least(col("cluster"), coalesce(col("nm"), col("cluster"))).as("cluster"))
-              .transform(graft.Iterative.truncate)
-          }
-          l
-        }
-      lab
-  }
 
   /** Near-dup clusters over VERIFIED pairs — the production-honest resolve:
     * [[clusterLabels]] propagates over raw LSH candidates, which is the
@@ -780,20 +701,53 @@ object Dedup {
     * when the exact n-gram Jaccard clears 0.7 (compared as the integer
     * cross-product `10·i ≥ 7·(na+nb−i)` — no double in the verdict), so a
     * banding collision can never glue two unrelated documents into one
-    * cluster. Same bounded rounds, same size-gated driver/distributed
-    * machinery; the verify step itself is the candidate-bounded
-    * [[verifiedPairs]] join, so admitting precision costs nothing
-    * corpus-scale.
+    * cluster. Same bounded rounds on the same kernel; the verify step
+    * itself is the candidate-bounded [[verifiedPairs]] join, so admitting
+    * precision costs nothing corpus-scale.
     */
   private[pipeline] def verifiedClusterLabels(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     graft.Caches.fragment(s, dir, "verified_cluster_labels", persisted = false) {
-      val vp = verifiedPairs(s, dir)
-        .filter(lit(10) * col("i") >= lit(7) * (col("na") + col("nb") - col("i")))
-      val edges = vp.select(col("doc_a").as("a"), col("doc_b").as("b"))
-        .unionByName(vp.select(col("doc_b").as("a"), col("doc_a").as("b")))
-      labelsOverEdges(s, dir, edges)
+      resolveLabels(s, dir, verified = true)
     }
+
+  /** [[ResolveRounds]] bounded label propagation of `documents` ids over
+    * the symmetrized near-dup pairs — the LSH candidates, or with
+    * `verified` the pairs clearing the Jaccard verdict. Unmemoized: the
+    * resolves read it through [[clusterLabels]] / [[verifiedClusterLabels]].
+    */
+  private[graft] def resolveLabels(s: org.apache.spark.sql.SparkSession,
+      dir: String, verified: Boolean,
+      gate: Long = Graph.DriverGateEdges): org.apache.spark.sql.DataFrame = {
+    // map-only derivations of the already-cached pair fragments
+    val pairs = if (!verified) minhashCandidates(s, dir)
+      else verifiedPairs(s, dir)
+        .filter(lit(10) * col("i") >= lit(7) * (col("na") + col("nb") - col("i")))
+    val edges = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
+      .unionByName(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
+    labelsOver(graft.Tables.t(s, dir, "documents").select("doc_id"), edges,
+      ResolveRounds, gate)
+      .withColumnRenamed("lbl", "cluster")
+  }
+
+  /** `(id, lbl)` for every row of the one-column frame `ids`: `rounds` of
+    * `Graph.minLabels` over the symmetrized `(a, b)` edges, whose labels
+    * cover only edge endpoints — near-dup edge lists are orders of
+    * magnitude smaller than the corpus — applied to the corpus by ONE left
+    * join; an id no edge touches keeps itself. Labels the kernel replayed
+    * on the driver are a local frame it already holds, so they broadcast
+    * and the corpus side is never shuffled.
+    */
+  private def labelsOver(ids: org.apache.spark.sql.DataFrame,
+      edges: org.apache.spark.sql.DataFrame, rounds: Int,
+      gate: Long = Graph.DriverGateEdges): org.apache.spark.sql.DataFrame = {
+    val id = col(ids.columns.head)
+    val (lab, _) = Graph.minLabels(edges, rounds, driverGateEdges = gate)
+    val local = lab.queryExecution.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    ids.join(if (local) broadcast(lab) else lab, id === col("node"), "left")
+      .select(id, coalesce(col("lbl"), id).as("lbl"))
+  }
 
   private val resolveVerified =
     q("pipe_dedup_clusters_verified",

@@ -207,20 +207,13 @@ object StateStore {
     */
   val StatePartBlock: Long = 65536L
 
-  /** Partition value for the partitioned base layout: zero-padded
-    * `issue-number div 65536` range block for numeric-suffix keys, 2-hex md5
-    * fallback otherwise. Integer `div` (see [[shardSegCol]] for why `/` is
-    * wrong), deterministic from the key alone — which is what makes
-    * restriction commute with per-key resolution: every row of a key, base
-    * or delta, carries the same block.
+  /** Partition value for the partitioned base layout: the [[rangeBlockCol]]
+    * of [[StatePartBlock]], deterministic from the key alone — which is what
+    * makes restriction commute with per-key resolution: every row of a key,
+    * base or delta, carries the same block.
     */
-  def statePartCol(key: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val suffix = element_at(split(key, "-"), -1)
-    when(suffix.rlike("^[0-9]{1,18}$"),
-      format_string("%05d",
-        call_function("div", suffix.cast("long"), lit(StatePartBlock))))
-      .otherwise(substring(md5(key), 1, 2))
-  }
+  def statePartCol(key: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    rangeBlockCol(key, StatePartBlock)
 
   /** Opt this ledger into the partitioned base layout: every future
     * [[save]]/[[compactDeltas]] rewrite partitions by [[statePartCol]]. An
@@ -537,19 +530,25 @@ object StateStore {
 
   /** Column twin of [[graft.sink.Yaml.shardSeg]] — the sharded layout's
     * directory segment derived in-plan by [[graft.sink.Yaml.issuePath]], so
-    * the writers and the ledger name the same file: zero-padded
-    * `issue-number / 8192` range block for numeric-suffix keys, 2-hex md5
-    * fallback otherwise.
+    * the writers and the ledger name the same file: the [[rangeBlockCol]]
+    * of `Yaml.ShardBlock`.
     */
-  def shardSegCol(key: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+  def shardSegCol(key: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    rangeBlockCol(key, graft.sink.Yaml.ShardBlock)
+
+  /** Zero-padded `issue-number div block` range block for numeric-suffix
+    * keys, 2-hex md5 fallback otherwise — the one expression behind both
+    * the state partitions and the YAML shard directories.
+    */
+  private def rangeBlockCol(key: org.apache.spark.sql.Column,
+      block: Long): org.apache.spark.sql.Column = {
     val suffix = element_at(split(key, "-"), -1)
     // integer `div`, never `/`: Divide is double division, and doubles lose
     // integer precision above 2^53 — an 18-digit suffix near a block
     // boundary would shard differently here than in the Scala twin
     // [[graft.sink.Yaml.shardSeg]]'s exact `suffix.toLong / ShardBlock`
     when(suffix.rlike("^[0-9]{1,18}$"),
-      format_string("%05d",
-        call_function("div", suffix.cast("long"), lit(graft.sink.Yaml.ShardBlock))))
+      format_string("%05d", call_function("div", suffix.cast("long"), lit(block))))
       .otherwise(substring(md5(key), 1, 2))
   }
 

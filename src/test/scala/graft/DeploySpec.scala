@@ -420,11 +420,14 @@ class DeploySpec extends AnyFunSuite {
         assert(e.path("secretRef").path("optional").asBoolean(false),
           "the secret is applied out-of-band; the ref must be optional")
     }
-    // a bundle ConfigMap may only inject env the serving pod reads: the
-    // auth token (Cli) and the session's cores/master (Session)
+    // a bundle ConfigMap, and the out-of-band secret template, may only
+    // inject env the serving pod reads: the auth token (Cli) and the
+    // session's cores/master (Session)
     val engineKnobs = Set("GRAFT_AUTH_TOKEN", "SPARK_GRAFT_CPUS", "SPARK_MASTER")
-    docs.filter(_.path("kind").asText == "ConfigMap").foreach { cm =>
-      cm.path("data").properties().asScala.foreach(e =>
+    val envMaps = docs.filter(_.path("kind").asText == "ConfigMap").map(_.path("data")) :+
+      readDocs("deploy/api-server/secret-template.yaml").head.path("stringData")
+    envMaps.foreach { m =>
+      m.properties().asScala.foreach(e =>
         assert(engineKnobs(e.getKey), s"config knob ${e.getKey} is read by no code"))
     }
     // the PVC the deployment mounts exists in the bundle

@@ -12,6 +12,18 @@ class GraphSpec extends AnyFunSuite {
   private def edgeSlice = Tables.links(spark, sf)
     .filter(col("link_type") === "blocks" && col("project_key") === "P1")
 
+  /** Long `(a, b)` edges in both directions, the undirected kernel input. */
+  private def sym(edges: org.apache.spark.sql.DataFrame) = {
+    val e = edges.toDF("a", "b")
+      .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
+    e.union(e.select(col("b").as("a"), col("a").as("b"))).distinct()
+  }
+
+  /** Connected components to convergence: `(labels, rounds)`. */
+  private def converged(edges: org.apache.spark.sql.DataFrame,
+      gate: Long = queries.Graph.DriverGateEdges) =
+    queries.Graph.minLabels(sym(edges), 50, untilStable = true, driverGateEdges = gate)
+
   test("kcore: independent peeling replay; survivors all have degree >= 2") {
     val got = SparkEntry.queries("graph_kcore")(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -32,13 +44,13 @@ class GraphSpec extends AnyFunSuite {
       expected.values.groupBy(identity).view.mapValues(_.size).toMap)
   }
 
-  test("fixedRoundLabels: gated and distributed paths agree label for label") {
+  test("minLabels fixed rounds: gated and distributed paths agree label for label") {
     val enc = (c: String) =>
       expr(s"substring($c, 2, 1)").cast("long") * lit(1000000000000L) +
         element_at(split(col(c), "-"), 2).cast("long")
-    val edges = edgeSlice.select(enc("src").as("a"), enc("dst").as("b"))
-    val gated = queries.Graph.fixedRoundLabels(edges, 5)
-    val dist = queries.Graph.fixedRoundLabels(edges, 5, driverGateEdges = 0L)
+    val edges = sym(edgeSlice.select(enc("src").as("a"), enc("dst").as("b")))
+    val gated = queries.Graph.minLabels(edges, 5)._1
+    val dist = queries.Graph.minLabels(edges, 5, driverGateEdges = 0L)._1
     assert(gated.except(dist).count() == 0 && dist.except(gated).count() == 0)
     assert(gated.count() == dist.count() && gated.count() > 0)
   }
@@ -55,7 +67,7 @@ class GraphSpec extends AnyFunSuite {
     // LPA communities REFINE connected components: two nodes sharing an LPA
     // label must share a component label (a community never straddles two
     // components — labels only travel over edges)
-    val comp = queries.Graph.componentsConverged(edges)._1
+    val comp = converged(edges)._1
       .withColumnRenamed("lbl", "comp")
     val straddle = gated.join(comp, Seq("node"))
       .groupBy("lbl").agg(countDistinct("comp").as("nc"))
@@ -140,7 +152,7 @@ class GraphSpec extends AnyFunSuite {
       expr(s"substring($c, 2, 1)").cast("long") * lit(1000000000000L) +
         element_at(split(col(c), "-"), 2).cast("long")
     val edges = edgeSlice.select(enc("src").as("a"), enc("dst").as("b"))
-    val (labels, rounds) = queries.Graph.componentsConverged(edges, maxRounds = 50)
+    val (labels, rounds) = converged(edges)
     assert(rounds > 0 && rounds < 50, s"did not converge in $rounds rounds")
     val lab = labels.cache()
     // defining property of CONVERGED components: both endpoints of every
@@ -159,8 +171,7 @@ class GraphSpec extends AnyFunSuite {
     // the size-gated driver path and the distributed fallback are the SAME
     // algorithm: forcing the gate off must reproduce labels AND rounds
     val (labD, roundsD) =
-      queries.Graph.componentsConverged(edges, maxRounds = 50,
-        driverGateEdges = 0L)
+      converged(edges, gate = 0L)
     assert(roundsD == rounds, s"gated $rounds vs distributed $roundsD rounds")
     assert(labD.except(lab).count() == 0 && lab.except(labD).count() == 0,
       "gated and distributed labels diverge")
@@ -195,7 +206,7 @@ class GraphSpec extends AnyFunSuite {
     // plus ONE confirming round, so rounds must be exactly 4 + 1 = 5
     val edges = Seq((2L, 1L), (3L, 2L), (4L, 3L), (5L, 4L),
       (10L, 11L), (11L, 12L), (12L, 10L)).toDF("a", "b")
-    val (labels, rounds) = queries.Graph.componentsConverged(edges)
+    val (labels, rounds) = converged(edges)
     assert(rounds == 5, s"expected ecc+1 = 5 rounds, got $rounds")
     val m = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((1L to 5L).forall(m(_) == 1L), s"path labels wrong: $m")
@@ -222,7 +233,7 @@ class GraphSpec extends AnyFunSuite {
     val (star, rounds) = queries.Graph.componentsBigStar(edges)
     assert(rounds > 0 && rounds < 50, s"did not converge in $rounds rounds")
     // the two algorithms reach the SAME fixpoint: min-of-component labels
-    val (prop, _) = queries.Graph.componentsConverged(edges)
+    val (prop, _) = converged(edges)
     assert(star.except(prop).count() == 0 && prop.except(star).count() == 0,
       "star-contraction labels diverge from min-label propagation")
     // gated driver replay and the distributed branch are the same algorithm
@@ -427,7 +438,7 @@ class GraphSpec extends AnyFunSuite {
   test("componentsConverged on an empty edge list returns no labels, zero rounds") {
     import spark.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("a", "b")
-    val (labels, rounds) = queries.Graph.componentsConverged(empty)
+    val (labels, rounds) = converged(empty)
     assert(rounds == 0 && labels.isEmpty)
   }
 
@@ -487,12 +498,16 @@ class GraphSpec extends AnyFunSuite {
         Gen.zip(Gen.choose(100L, 130L), Gen.choose(100L, 130L)))
       bridge <- Gen.choose(100L, 130L)
     } yield (c, noise :+ ((bridge, 1L))) // noise may point INTO the cycle
-    Iterator.continually(genCase.sample).flatten.take(20).foreach {
-      case (c, noise) =>
+    Iterator.continually(genCase.sample).flatten.take(20).zipWithIndex.foreach {
+      case ((c, noise), n) =>
         val cycle = (1 to c).map(i => (i.toLong, (i % c + 1).toLong))
         val es = (cycle ++ noise).distinct
-        val got = queries.Graph.sccKnots(es.toDF("a", "b"), k).collect()
-          .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+        def knots(gate: Long) =
+          queries.Graph.sccKnots(es.toDF("a", "b"), k, driverGateEdges = gate).collect()
+            .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+        val got = knots(queries.Graph.DriverGateEdges)
+        // the distributed chains are the same algorithm as the driver replay
+        if (n < 3) assert(knots(0L) == got, s"edges=$es: distributed knots diverge")
         // soundness on EVERY certified row: root reaches node and back in <= k
         val fwd = es.filter(e => e._1 != e._2).groupBy(_._1)
           .map { case (u, vs) => u -> vs.map(_._2).toSet }
@@ -848,5 +863,23 @@ class GraphSpec extends AnyFunSuite {
     val rb = returnRate(biased)
     val ru = returnRate(unbiased)
     assert(rb < ru, s"biased return rate $rb must undercut uniform $ru")
+  }
+
+  test("no src/main size probe collects through a large limit") {
+    // a `limit(n).collect()` with n in the thousands funnels up to n rows to
+    // the driver just to learn "too big"; size gates go through
+    // Graph.gatherUnder's distributed count. A top-1 fetch stays legal.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val probe = """\.limit\(\s*([0-9][0-9_]*)L?\s*\)\s*\.collect\(\)""".r
+    val offenders = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { p =>
+        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        probe.findAllMatchIn(src)
+          .filter(_.group(1).replace("_", "").toLong >= 1000)
+          .map(m => s"${root.relativize(p)}: ${m.matched}")
+      }
+    assert(offenders.isEmpty, s"large limit-collect size probes: $offenders")
   }
 }

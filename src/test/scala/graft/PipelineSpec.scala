@@ -846,6 +846,26 @@ class PipelineSpec extends AnyFunSuite {
     assert(lab.count() == Tables.t(spark, sf, "documents").count())
   }
 
+  test("dedup resolve: distributed label rounds equal the driver replay on both edge sets") {
+    // gate 0 sends the edges past the driver replay into the distributed loop
+    def local(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collectLeaves()
+        .exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "cluster").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val nDocs = Tables.t(spark, sf, "documents").count()
+    Seq(false, true).foreach { verified =>
+      val driverDf = pipeline.Dedup.resolveLabels(spark, sf, verified)
+      val distDf = pipeline.Dedup.resolveLabels(spark, sf, verified, gate = 0L)
+      assert(local(driverDf) && !local(distDf), "each gate must take its own branch")
+      val driver = rows(driverDf)
+      assert(driver.size == nDocs && driver.exists { case (d, c) => d != c },
+        s"verified=$verified: resolve must label every doc and merge some")
+      assert(rows(distDf) == driver, s"verified=$verified: labels diverge")
+    }
+  }
+
   test("split assignment is disjoint, exhaustive, and stable; sample rates hold") {
     val split = run("pipe_split_assign").cache()
     val total = Tables.t(spark, sf, "documents").count()
