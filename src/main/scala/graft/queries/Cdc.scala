@@ -570,9 +570,9 @@ object Cdc {
       .orderBy("key")
   }
 
-  /** The card's on-disk ledger (partitioned base + one delta), built once
+  /** The card's on-disk ledger (range-block base + one delta), built once
     * per (session, dir) — the build is SETUP (physical writes the operator
-    * under test does not include: save, conversion, delta commit); the
+    * under test does not include: save, delta commit); the
     * operator the card times and oracles is the pruned resolved READ. Same
     * memo contract as [[graft.pipeline.Clustering.trained]]: bypassed when
     * fragment caching is disabled, pruned with the session, rebuilt if the
@@ -590,8 +590,7 @@ object Cdc {
       val batch = StateStore.fromIssues(fresh, W2)
       val touched = base.join(batch.select("key"), Seq("key"), "left_semi")
       val delta = StateStore.merge(touched, batch).localCheckpoint(true)
-      val path = graft.Caches.scratchDir("pstate-card").toString + "/state"
-      StateStore.setPartitionedBase(s, path)
+      val path = graft.Caches.scratchDir("pruned-card").toString + "/state"
       StateStore.save(base, path)
       StateStore.appendDelta(delta, path)
       (path, StateStore.touchedSegs(delta.select("key")))

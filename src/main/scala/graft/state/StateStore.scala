@@ -13,10 +13,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The reference keeps a driver-side `map[issueKey]IssueState` serialized to
   * one YAML file — the anti-pattern to avoid at scale (SURVEY.md §7.4). Here
-  * state is a parquet table partitioned like the issues table (shuffle on
-  * `key` only at merge time, co-partitionable with the issue source), and the
-  * save is the reference's tmp-file-then-rename commit re-expressed with the
-  * Hadoop FS API.
+  * state is a parquet table partitioned on disk by the key's range block
+  * ([[statePartCol]]; every ledger write lays it out so), which makes a
+  * batch's state read prune to the blocks the batch touches. The save is the
+  * reference's tmp-file-then-rename commit re-expressed with the Hadoop FS
+  * API.
   */
 object StateStore {
 
@@ -44,16 +45,17 @@ object StateStore {
 
   /** Load the state table, or an empty one on first run
     * (reference: pkg/state/manager.go:99-136 returns fresh state when the
-    * file is absent). Layout-adaptive: a base written in the partitioned
-    * layout ([[setPartitionedBase]]) reads back with its partition column
-    * dropped — the layout is invisible to every consumer, exactly like the
-    * YAML corpus's sharded layout.
+    * file is absent). The partition column of the range-block layout is
+    * dropped, so the layout is invisible to every consumer, exactly like the
+    * YAML corpus's sharded layout. A flat base written before every ledger
+    * write partitioned still reads; its next save or compaction converts it.
     */
   def load(spark: SparkSession, path: String): DataFrame =
     loadBaseWithSeg(spark, path).drop(SegCol)
 
-  /** [[load]] generalized to ANY table managed by [[save]]'s tmp+bak commit
-    * (the signature index reuses the same protocol): same crash recovery —
+  /** [[load]] generalized to ANY table managed by [[commitStaged]]'s tmp+bak
+    * commit (the flat keyed indexes of [[replaceKeys]] share the protocol,
+    * not the layout): same crash recovery —
     * finish an interrupted commit from its complete tmp, fall back to the
     * backup when the tmp marker proves an interrupted save, empty otherwise.
     * Callers that branch on "does the table exist" must go through this (or
@@ -123,14 +125,16 @@ object StateStore {
     * metadata-only) commit still happens strictly after those barriers.
     */
   private[graft] def stage(state: DataFrame, path: String): Unit =
-    if (isPartitionedBase(state.sparkSession, path)) {
-      // one shuffle keyed on the partition value so each shard block lands
-      // in ONE task → one parquet file per block dir, not tasks×blocks
-      // small files
-      state.withColumn(SegCol, statePartCol(col("key")))
-        .repartition(col(SegCol))
-        .write.mode("overwrite").partitionBy(SegCol).parquet(path + "__tmp")
-    } else state.write.mode("overwrite").parquet(path + "__tmp")
+    writeBlocks(state, path + "__tmp")
+
+  /** The one ledger write layout: rows partitioned into `__seg=<block>` dirs
+    * by [[statePartCol]]. One shuffle keyed on the block lands each block in
+    * ONE task → one parquet file per block dir, not tasks×blocks small files.
+    */
+  private def writeBlocks(rows: DataFrame, dir: String): Unit =
+    rows.withColumn(SegCol, statePartCol(col("key")))
+      .repartition(col(SegCol))
+      .write.mode("overwrite").partitionBy(SegCol).parquet(dir)
 
   /** Abandon a staged-but-uncommitted state (failure paths): delete the tmp
     * dir so loadTable's interrupted-commit recovery can never promote a state
@@ -169,13 +173,18 @@ object StateStore {
     * at `__tmp`/`__bak`, and a raw check would read "absent" and rebuild
     * the table from this batch alone, silently losing every other key's
     * rows.
+    * A keyed index is not a ledger (not keyed by `key`): it is written
+    * flat, never in [[stage]]'s block layout.
     */
-  def replaceKeys(rows: DataFrame, batch: DataFrame, key: String, path: String): Unit =
-    save(loadTable(rows.sparkSession, path, rows.schema)
+  def replaceKeys(rows: DataFrame, batch: DataFrame, key: String, path: String): Unit = {
+    loadTable(rows.sparkSession, path, rows.schema)
       .join(batch.select(key).distinct(), Seq(key), "left_anti")
-      .unionByName(rows), path)
+      .unionByName(rows)
+      .write.mode("overwrite").parquet(path + "__tmp")
+    commitStaged(rows.sparkSession, path)
+  }
 
-  // ---- partitioned base layout (per-batch partition pruning) ---------------
+  // ---- range-block base layout (per-batch partition pruning) ---------------
   //
   // The delta log below makes the state COMMIT O(batch); this layout makes
   // the per-micro-batch state READ O(batch) too. Every per-batch consumer
@@ -190,7 +199,7 @@ object StateStore {
   // sequence-assigned issue numbers make a CDC batch touch only each
   // project's tail block.
 
-  /** Partition column of the partitioned base layout (never leaves this
+  /** Partition column of the ledger's base layout (never leaves this
     * object — every reader drops or consumes it internally).
     */
   private val SegCol = "__seg"
@@ -207,7 +216,7 @@ object StateStore {
     */
   val StatePartBlock: Long = 65536L
 
-  /** Partition value for the partitioned base layout: the [[rangeBlockCol]]
+  /** Partition value of the ledger's base layout: the [[rangeBlockCol]]
     * of [[StatePartBlock]], deterministic from the key alone — which is what
     * makes restriction commute with per-key resolution: every row of a key,
     * base or delta, carries the same block.
@@ -215,32 +224,8 @@ object StateStore {
   def statePartCol(key: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     rangeBlockCol(key, StatePartBlock)
 
-  /** Opt this ledger into the partitioned base layout: every future
-    * [[save]]/[[compactDeltas]] rewrite partitions by [[statePartCol]]. An
-    * existing unpartitioned base is rewritten NOW (one-time conversion, the
-    * same cost as one compaction). Readers never consult the marker — they
-    * detect the PHYSICAL layout of the dir they scan — so a crash between
-    * the marker write and the conversion rewrite leaves a correctly-read
-    * unpartitioned base that the next save converts.
-    */
-  def setPartitionedBase(spark: SparkSession, path: String): Unit = {
-    val fs = fsOf(spark, path)
-    val marker = new Path(path + "__pbase")
-    if (fs.exists(marker)) return
-    val existing = resolveReadDir(spark, path).map(_ =>
-      load(spark, path).localCheckpoint(true))
-    fs.create(marker).close()
-    existing.foreach(df => save(df, path))
-  }
-
-  /** Whether [[save]] should write the partitioned layout (sticky per-ledger
-    * opt-in, [[setPartitionedBase]]).
-    */
-  def isPartitionedBase(spark: SparkSession, path: String): Boolean =
-    fsOf(spark, path).exists(new Path(path + "__pbase"))
-
-  /** Whether `dir` physically holds the partitioned layout (`__seg=` child
-    * dirs). Read-side truth — the marker only governs writes.
+  /** Whether `dir` physically holds the range-block layout (`__seg=` child
+    * dirs); only a flat base written by an older version does not.
     */
   private def dirPartitioned(spark: SparkSession, dir: Path): Boolean = {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -249,8 +234,8 @@ object StateStore {
   }
 
   /** The base table with its partition column materialized — from the dirs
-    * for a partitioned base (free), derived from the key otherwise (so
-    * callers can filter on [[SegCol]] either way; only the partitioned
+    * for a range-block base (free), derived from the key for a legacy flat
+    * one (so callers can filter on [[SegCol]] either way; only the block
     * layout turns that filter into pruned I/O).
     */
   private def loadBaseWithSeg(spark: SparkSession, path: String): DataFrame =
@@ -273,7 +258,7 @@ object StateStore {
   // instead APPENDS a delta of just the touched keys (atomic dir rename, the
   // same commit primitive) and folds deltas into the base every
   // [[CompactEvery]] commits — LSM shape: per-batch cost is O(batch) plus
-  // the amortized compaction share, which on a partitioned base is itself
+  // the amortized compaction share, which on the block layout is itself
   // O(touched blocks) (partition-incremental fold), never the whole table
   // per batch. Readers resolve latest-per-key across base + deltas in one
   // window ([[resolve]]); re-applying an already-compacted delta is a no-op
@@ -337,7 +322,7 @@ object StateStore {
     * no window at all, the path every batch sync's incremental and no-op
     * cycle takes. A per-micro-batch reader that only looks up a batch's
     * keys uses [[loadResolvedPruned]] instead, which keeps the window
-    * O(touched blocks) on a [[setPartitionedBase]] ledger.
+    * O(touched blocks).
     */
   def loadResolved(spark: SparkSession, path: String): DataFrame = {
     val deltas = deltaDirs(spark, path)
@@ -357,11 +342,10 @@ object StateStore {
   /** [[loadResolved]] restricted to the given state-partition blocks — EXACT
     * for any consumer that only looks up keys inside them (the block is a
     * pure function of the key, so restriction commutes with latest-per-key
-    * resolution). This is the per-micro-batch state read: with a
-    * [[setPartitionedBase]] ledger the base scan is partition-pruned to the
-    * touched blocks — O(batch) I/O — and the resolve window runs over
-    * O(touched) rows. With an unpartitioned base it is still correct (the
-    * filter prunes rows, not I/O), so callers can adopt it unconditionally.
+    * resolution). This is the per-micro-batch state read: the base scan is
+    * partition-pruned to the touched blocks — O(batch) I/O — and the
+    * resolve window runs over O(touched) rows. On a legacy flat base it is
+    * still correct (the filter prunes rows, not I/O).
     */
   def loadResolvedPruned(spark: SparkSession, path: String,
       segs: Seq[String]): DataFrame = {
@@ -395,13 +379,13 @@ object StateStore {
 
   /** Fold every committed delta into the base, then drop the folded deltas.
     *
-    * Unpartitioned base (or a touched set too wide to be worth pruning):
-    * the whole-table atomic [[save]] protocol — crash-safe at every
-    * boundary: before the save commit the base is untouched and deltas
-    * still apply; after it, re-applying a folded delta resolves to
-    * identical rows.
+    * Absent or legacy flat base (or a touched set too wide to be worth
+    * pruning): the whole-table atomic [[save]] protocol, which writes the
+    * block layout — crash-safe at every boundary: before the save commit
+    * the base is untouched and deltas still apply; after it, re-applying a
+    * folded delta resolves to identical rows.
     *
-    * Partitioned base: PARTITION-INCREMENTAL — only the delta-touched
+    * Block-layout base: PARTITION-INCREMENTAL — only the delta-touched
     * block dirs are rewritten ([[compactTouched]]), which removes the last
     * O(corpus) term from the steady-state streaming loop: reads were made
     * O(batch) by [[loadResolvedPruned]]; this makes the amortized
@@ -453,10 +437,7 @@ object StateStore {
     val fs = fsOf(spark, path)
     val ctmp = new Path(path + "__ctmp")
     // 1. materialized fold of just the touched blocks
-    loadResolvedPruned(spark, path, segs)
-      .withColumn(SegCol, statePartCol(col("key")))
-      .repartition(col(SegCol))
-      .write.mode("overwrite").partitionBy(SegCol).parquet(ctmp.toString)
+    writeBlocks(loadResolvedPruned(spark, path, segs), ctmp.toString)
     // 2. per-block swap; 3. deltas only AFTER every swap landed
     val newSegDirs = fs.listStatus(ctmp)
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(SegCol + "="))

@@ -15,9 +15,12 @@ import graft.state.StateStore
   * `Trigger.ProcessingTime`; the reference's "real-time CDC" is repeated
   * incremental batch sync, SURVEY.md §2.8).
   *
-  * Keyed state lives in the partitioned state table, never in driver memory —
-  * the explicit inversion of the reference's `map[issueKey]IssueState`
+  * Keyed state lives in the state table, never in driver memory — the
+  * explicit inversion of the reference's `map[issueKey]IssueState`
   * (reference: pkg/state/manager.go; anti-pattern note SURVEY.md §7.4).
+  * Each micro-batch reads that table pruned to the range blocks its keys
+  * fall in ([[StateStore.loadResolvedPruned]]): exact, because every
+  * per-batch consumer only looks up the batch's keys, and O(batch) I/O.
   */
 object CdcStream {
 
@@ -38,22 +41,9 @@ object CdcStream {
     *               creation — the layouts don't mix within one corpus
     *               (reads handle both, the state ledger's paths follow the
     *               flag).
-    * @param partitionedState partition the state ledger's base by the
-    *               key-derived range block ([[StateStore.statePartCol]]) and
-    *               prune each micro-batch's state read to the blocks the
-    *               batch touches. Every per-batch state consumer — the
-    *               candidate filter, the touched-key semi-join, the merge —
-    *               only looks up the BATCH's keys, and the block is a pure
-    *               function of the key, so the pruned resolved view is exact
-    *               for them while the base read drops from O(corpus) (one
-    *               full scan and exchange) to O(touched blocks) ≈
-    *               O(batch): the last O(corpus) term in the steady-state
-    *               streaming path. Off by default only for layout stability
-    *               of existing ledgers; it is THE setting for a long-running
-    *               stream. Compaction is partition-incremental on this
-    *               layout too (only delta-touched blocks rewrite, with a
-    *               wide-backlog fallback), so read, commit, AND compaction
-    *               are all O(batch) in the steady state.
+    * @param partitionedState must be `true`: the former opt-in into the
+    *               range-block ledger, now its only layout, kept so callers
+    *               that still pass it by name compile.
     * @param commitEvery git-commit cadence in micro-batches (default 1 =
     *               every batch). Any commit touching a flat directory of N
     *               files must serialize an O(N) tree object — git's floor,
@@ -76,11 +66,11 @@ object CdcStream {
       commitToGit: Boolean = true,
       commitEvery: Int = 1,
       sharded: Boolean = false,
-      partitionedState: Boolean = false,
+      partitionedState: Boolean = true,
       clock: () => Timestamp = () => new Timestamp(System.currentTimeMillis())): StreamingQuery = {
     val spark = updates.sparkSession
     require(commitEvery >= 1, s"commitEvery must be >= 1, got $commitEvery")
-    if (partitionedState) StateStore.setPartitionedBase(spark, statePath)
+    require(partitionedState, "the state ledger has one layout; partitionedState must be true")
     if (commitToGit) {
       GitRepo.init(repoDir)
       // durability: a prior run stopped (or crashed) between a batch's
@@ -116,27 +106,24 @@ object CdcStream {
         // write becomes nondeterministic last-writer-wins between them
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("key")).orderBy(col("updated").desc)
-        val latest0 = batch
+        // `latest` feeds both the touched-block collect and the state join —
+        // persist so the dedup window runs once
+        val latest = batch
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn")
-        // with pruning on, `latest` feeds both the touched-block collect and
-        // the state join — persist so the dedup window runs once
-        val latest = if (partitionedState) latest0.persist() else latest0
+          .persist()
         // resolved view across base + pending deltas: continuous ingest
         // APPENDS per-batch deltas instead of rewriting the whole table —
         // the sfg1.0 soak measured the rewrite-per-batch shape growing
         // 8s → 55s per micro-batch (quadratic in corpus); the delta log
         // keeps the state commit O(batch) with an amortized compaction.
+        // Pruned to the batch's touched blocks — exact for this loop's
+        // consumers (they only look up batch keys) and O(batch) base I/O.
         // Persisted for the batch: the candidate filter, the touched-key
         // semi-join and the merge all read it, and the resolve window over
         // base+deltas must run once, not per consumer.
-        // partitionedState prunes that view to the batch's touched blocks —
-        // exact for this loop's consumers (they only look up batch keys) and
-        // O(batch) base I/O on the partitioned layout.
-        val state = (if (partitionedState)
-          StateStore.loadResolvedPruned(spark, statePath,
-            StateStore.touchedSegs(latest.select("key")))
-        else StateStore.loadResolved(spark, statePath)).persist()
+        val state = StateStore.loadResolvedPruned(spark, statePath,
+          StateStore.touchedSegs(latest.select("key"))).persist()
         try {
           // upsert-on-newer keeps replayed micro-batches idempotent (C2) —
           // exactly-once effect on the state table under at-least-once
@@ -163,11 +150,14 @@ object CdcStream {
             else fresh.filter(!col("key").isin(failedKeys: _*))
           // delta = the merge result restricted to this batch's fresh keys:
           // merge() computes the correct sync_count against the CURRENT rows
-          // of exactly those keys, and only those rows are committed
+          // of exactly those keys, and only those rows are committed. One row
+          // per synced key, so the writer's count stands in for an isEmpty
+          // job; a key a speculative retry counted written AND failed can
+          // leave it empty, which the resolve reads as no rows
           val freshState = StateStore.fromIssues(synced, syncedAt, sharded)
           val touched = state.join(freshState.select("key"), Seq("key"), "left_semi")
           val delta = StateStore.merge(touched, freshState)
-          if (!delta.isEmpty) {
+          if (written > 0) {
             StateStore.appendDelta(delta, statePath)
             if (StateStore.deltaCount(spark, statePath) >= StateStore.CompactEvery)
               StateStore.compactDeltas(spark, statePath)
@@ -196,7 +186,7 @@ object CdcStream {
           }
         } finally {
           state.unpersist()
-          if (partitionedState) { latest.unpersist(); () }
+          latest.unpersist()
         }
         ()
       }

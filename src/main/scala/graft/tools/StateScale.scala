@@ -7,8 +7,8 @@ import graft.state.StateStore
 /** State-ledger scale rehearsal: exercise the per-micro-batch state path
   * at ledger scale, which local soaks (~100 MB bases) never reach.
   * Generates a synthetic ledger of `rows` state rows (realistic column
-  * widths: 64-hex checksum, full file_path), appends delta logs, converts
-  * the base to the partitioned layout, and times a touched-block
+  * widths: 64-hex checksum, full file_path) in the range-block layout every
+  * ledger write uses, appends delta logs, and times a touched-block
   * [[StateStore.loadResolvedPruned]] read against the full
   * [[StateStore.loadResolved]], then the partition-incremental
   * compaction of those deltas.
@@ -60,12 +60,8 @@ object StateScale {
         stateRows(50000, s"2024-02-0$d 00:00:00", 2), statePath)
     }
 
-    // the partition-pruning lever at the same scale: convert, then read a
-    // 3-block touched set (a realistic per-batch footprint) vs the full base
-    println("[state-scale] converting to partitioned layout")
-    t0 = System.nanoTime()
-    StateStore.setPartitionedBase(spark, statePath)
-    val convert = (System.nanoTime() - t0) / 1e9
+    // partition pruning at the same scale: read a 3-block touched set (a
+    // realistic per-batch footprint) vs the full base
     val segs = Seq(0L, rows / 131072, rows / 65536).distinct
       .map(b => f"$b%05d")
     t0 = System.nanoTime()
@@ -89,9 +85,9 @@ object StateScale {
     def f2(d: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, d)
     val json =
       s"""{"rows":$rows,"base_bytes":$baseBytes,"gen_sec":${f2(gen)},""" +
-      s""""convert_sec":${f2(convert)},"pruned_blocks":${segs.size},""" +
+      s""""pruned_blocks":${segs.size},""" +
       s""""pruned_rows":$prunedRows,"pruned_sec":${f2(tPruned)},""" +
-      s""""full_resolve_after_convert_sec":${f2(tFull)},""" +
+      s""""full_resolve_sec":${f2(tFull)},""" +
       s""""compact_incremental_sec":${f2(tCompact)}}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), json + "\n")
     println(json)

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * the given path (committed as stream_soak_sfg1.json).
   *
   * Usage: runMain graft.tools.StreamSoak <sfgDir> <out.json> [slices]
-  *          [cadence=N] [sharded] [slice=range] [pstate] [skew=P1:0.9] [nogit]
+  *          [cadence=N] [sharded] [slice=range] [skew=P1:0.9] [nogit]
   */
 object StreamSoak {
 
@@ -67,9 +67,6 @@ object StreamSoak {
     // (mod) interleaves every batch across the full key range, kept for
     // comparability with soak runs 1-6.
     val sliceRange = args.contains("slice=range")
-    // pstate: the partitioned state ledger + per-batch pruned reads
-    // (CdcStream partitionedState) — the state-side O(batch) lever
-    val pstate = args.contains("pstate")
     // skew=P1:0.9 re-keys the corpus so the named project holds that
     // fraction of all issues (dense re-numbered sequence; the remainder
     // round-robins over synthetic cold projects). Real ingest is
@@ -158,7 +155,6 @@ object StreamSoak {
     val cdcQuery = graft.streaming.CdcStream.start(
       srcStream, s"$work/repo", s"$work/state", s"$work/ckpt",
       commitToGit = withGit, commitEvery = cadence, sharded = sharded,
-      partitionedState = pstate,
       clock = () => java.sql.Timestamp.valueOf("2002-01-01 00:00:00"))
     val cdcCards =
       try { cdcQuery.processAllAvailable(); graft.streaming.Progress.card(cdcQuery) }
@@ -218,7 +214,7 @@ object StreamSoak {
     val json =
       s"""{"scale":"${new java.io.File(dir).getName}",
          |"cadence":$cadence,"sharded":$sharded,"slice":"${if (sliceRange) "range" else "mod"}",
-         |"pstate":$pstate,"skew":"${skew.map(s => s"${s._1}:${s._2}").getOrElse("none")}",
+         |"skew":"${skew.map(s => s"${s._1}:${s._2}").getOrElse("none")}",
          |"update_batches":$updates,
          |"cdc":{"batches":${cdcCards.size},"rows":$nIssues,
          |  "p95_batch_ms":$cdcP95,"max_batch_ms":${(0L +: cdcDur).max},

@@ -614,6 +614,10 @@ class PipelineSpec extends AnyFunSuite {
     Dedup.upsertSpans(Seq((1L, "too short")).toDF("doc_id", "text"), path)
     assert(rows(1L) == 0, "an edited doc kept spans of its old version")
     assert(rows(2L) == kept)
+    // a keyed index, not a ledger: replaceKeys writes it flat
+    val children = new java.io.File(path).listFiles().map(_.getName).toSeq
+    assert(!children.exists(_.startsWith("__seg=")),
+      s"index written in the ledger's block layout: $children")
   }
 
   test("dsir: pool docs only, exact feature accounting, sign drives selection") {

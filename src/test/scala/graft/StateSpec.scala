@@ -33,6 +33,11 @@ class StateSpec extends AnyFunSuite {
     val loaded = StateStore.load(spark, path)
     assert(loaded.count() == 2)
     assert(new java.io.File(path + "__bak").exists()) // previous state retained
+    // an emptied ledger (a repair that drops every key) has no block dir
+    // at all and still reads as an empty table
+    StateStore.save(StateStore.empty(spark), path)
+    assert(StateStore.load(spark, path).count() == 0)
+    assert(StateStore.loadResolvedPruned(spark, path, Seq("00000")).count() == 0)
   }
 
   test("merge: newer wins, idempotent re-sync keeps state, new keys insert") {
@@ -335,7 +340,7 @@ class StateSpec extends AnyFunSuite {
   }
 
   test("partitioned base: invisible layout, pruned resolve == unpruned, partition-pruned scan") {
-    val dir = Files.createTempDirectory("graft-pstate").toString
+    val dir = Files.createTempDirectory("graft-blockstate").toString
     val path = s"$dir/state"
     // suffixes spanning three numeric range blocks (0, 1, 3 at
     // StatePartBlock=65536) plus one md5-fallback key
@@ -346,8 +351,7 @@ class StateSpec extends AnyFunSuite {
       ("P1-200000", "P1", "d", "2024-01-01 00:00:00"),
       ("ABC-DEF", "P2", "e", "2024-01-01 00:00:00"))),
       ts("2024-01-02 00:00:00")), path)
-    // opt-in converts the existing unpartitioned base in place
-    StateStore.setPartitionedBase(spark, path)
+    // every ledger save writes one dir per range block
     def segDirs() = new java.io.File(path).listFiles().toSeq
       .filter(_.isDirectory).map(_.getName).filter(_.startsWith("__seg="))
     assert(segDirs().toSet.size == 4, s"expected 4 block dirs, got ${segDirs()}")
@@ -388,12 +392,59 @@ class StateSpec extends AnyFunSuite {
     assert(StateStore.loadResolvedPruned(spark, path, Nil).count() == 0)
   }
 
-  // nine-block partitioned ledger + a delta touching blocks 0 (update) and
+  test("legacy flat base: reads row for row, prunes exactly, next save converts") {
+    val dir = Files.createTempDirectory("graft-flatstate").toString
+    val path = s"$dir/state"
+    val rows = StateStore.fromIssues(batchDf(Seq(
+      ("P1-1", "P1", "a", "2024-01-01 00:00:00"),
+      ("P1-70000", "P1", "b", "2024-01-01 00:00:00"),
+      ("P1-200000", "P1", "c", "2024-01-01 00:00:00"),
+      ("ABC-DEF", "P2", "d", "2024-01-01 00:00:00"))),
+      ts("2024-01-02 00:00:00")).localCheckpoint(true)
+    // the ledger as older versions saved it: one flat parquet dir
+    rows.write.parquet(path)
+    def m(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      StateStore.schema.fieldNames.map(f => r.get(r.fieldIndex(f))).toSeq).toSet
+    def segDirs() = new java.io.File(path).listFiles().toSeq
+      .filter(_.isDirectory).map(_.getName).filter(_.startsWith("__seg="))
+    assert(segDirs().isEmpty)
+    val loaded = StateStore.load(spark, path)
+    assert(loaded.columns.toSeq == StateStore.schema.fieldNames.toSeq)
+    assert(m(loaded) == m(rows))
+    // a delta touching block 0 (update) and block 3 (insert)
+    val d = StateStore.fromIssues(batchDf(Seq(
+      ("P1-1", "P1", "a2", "2024-02-01 00:00:00"),
+      ("P1-200001", "P1", "n", "2024-02-01 00:00:00"))), ts("2024-02-02 00:00:00"))
+    StateStore.appendDelta(StateStore.merge(
+      StateStore.loadResolved(spark, path)
+        .join(d.select("key"), Seq("key"), "left_semi"), d), path)
+    val segs = StateStore.touchedSegs(d.select("key"))
+    assert(segs.toSet == Set("00000", "00003"))
+    val pruned = StateStore.loadResolvedPruned(spark, path, segs)
+    assert(m(pruned) == m(StateStore.loadResolved(spark, path)
+      .filter(StateStore.statePartCol(col("key")).isin(segs: _*))))
+    assert(pruned.count() == 3)
+    // the next save rewrites the base in the range-block layout
+    val resolved = StateStore.loadResolved(spark, path).localCheckpoint(true)
+    StateStore.save(resolved, path)
+    val md5Seg = spark.range(1).select(StateStore.statePartCol(lit("ABC-DEF")))
+      .head.getString(0)
+    assert(segDirs().toSet ==
+      Set("00000", "00001", "00003", md5Seg).map(b => s"__seg=$b"))
+    // nothing else: no flat data file or dir beside the blocks, only the
+    // commit marker (and its checksum)
+    val top = new java.io.File(path).listFiles().toSeq
+    assert(top.forall(f => if (f.isDirectory) f.getName.startsWith("__seg=")
+      else f.getName.startsWith("_") || f.getName.startsWith(".")),
+      s"flat data left beside the block dirs: ${top.map(_.getName)}")
+    assert(m(StateStore.load(spark, path)) == m(resolved))
+  }
+
+  // nine-block ledger + a delta touching blocks 0 (update) and
   // 1 (insert) — the fixture for the incremental-compaction tests
   private def nineBlockLedger(): (String, Seq[String]) = {
     val dir = Files.createTempDirectory("graft-icompact").toString
     val path = s"$dir/state"
-    StateStore.setPartitionedBase(spark, path)
     val suffixes = Seq(5, 70000, 140000, 200000, 270000, 330000, 400000,
       460000, 530000)
     StateStore.save(StateStore.fromIssues(batchDf(
@@ -440,7 +491,6 @@ class StateSpec extends AnyFunSuite {
     // rewrite: two-block ledger, both touched
     val dir2 = Files.createTempDirectory("graft-icompact2").toString
     val path2 = s"$dir2/state"
-    StateStore.setPartitionedBase(spark, path2)
     StateStore.save(StateStore.fromIssues(batchDf(Seq(
       ("P1-1", "P1", "a", "2024-01-01 00:00:00"),
       ("P1-70000", "P1", "b", "2024-01-01 00:00:00"))),

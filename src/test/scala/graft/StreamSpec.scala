@@ -664,61 +664,94 @@ class StreamSpec extends AnyFunSuite {
     } finally query.stop()
   }
 
-  test("partitionedState stream == full-read stream: state, YAML corpus, git history") {
+  test("stream ledger: state, YAML corpus, git history, block dirs after compaction") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    // identical 3-batch replay (insert across two range blocks, update, new
-    // key) through both state-read plans; every observable — resolved state
-    // rows, YAML file set, commit count — must be identical, and the pruned
-    // run's ledger must be physically partitioned
-    def run(partitioned: Boolean): (String, Map[String, (Timestamp, Int)], Seq[String], Int) = {
-      val work = Files.createTempDirectory(s"graft-pstream-$partitioned").toString
-      val clockTimes = Iterator(ts("2024-01-15 00:00:00"),
-        ts("2024-02-15 00:00:00"), ts("2024-03-15 00:00:00"))
-      val mem = MemoryStream[(String, String, String, Timestamp)]
-      val query = CdcStream.start(
-        mem.toDF().toDF("key", "project_key", "summary", "updated"),
-        s"$work/repo", s"$work/state", s"$work/ckpt",
-        sharded = true, partitionedState = partitioned,
-        clock = () => clockTimes.next())
-      try {
-        mem.addData(("P1-1", "P1", "v1", ts("2024-01-01 00:00:00")),
-          ("P1-70000", "P1", "v1", ts("2024-01-01 00:00:00")))
-        query.processAllAvailable()
-        mem.addData(("P1-1", "P1", "v2", ts("2024-02-01 00:00:00")))
-        query.processAllAvailable()
-        mem.addData(("P2-9", "P2", "v1", ts("2024-03-01 00:00:00")))
-        query.processAllAvailable()
-      } finally query.stop()
-      val state = StateStore.loadResolved(spark, s"$work/state")
-        .collect().map(r => r.getAs[String]("key") ->
-          (r.getAs[Timestamp]("last_updated"), r.getAs[Int]("sync_count"))).toMap
-      val files = {
-        val root = java.nio.file.Paths.get(work, "repo")
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(root).iterator().asScala
-          .filter(p => p.toString.endsWith(".yaml"))
-          .map(p => root.relativize(p).toString).toSeq.sorted
-      }
-      (work, state, files, SinkSpec.log(s"$work/repo").length)
-    }
-    val (workP, stateP, filesP, commitsP) = run(partitioned = true)
-    val (_, stateF, filesF, commitsF) = run(partitioned = false)
-    assert(stateP == stateF, "resolved state diverged between read plans")
-    assert(stateP("P1-1")._2 == 2 && stateP.size == 3)
-    assert(filesP == filesF && filesP.size == 3, s"YAML corpus diverged: $filesP vs $filesF")
-    assert(commitsP == commitsF && commitsP == 3)
-    // the pruned run's ledger really is partitioned on disk (base exists
-    // once a compaction or conversion ran; here conversion ran at start
-    // only if a base existed — so check marker + post-compaction layout)
-    assert(StateStore.isPartitionedBase(spark, s"$workP/state"))
-    StateStore.compactDeltas(spark, s"$workP/state")
-    val segDirs = new java.io.File(s"$workP/state").listFiles().toSeq
-      .filter(_.isDirectory).map(_.getName).filter(_.startsWith("__seg="))
-    assert(segDirs.nonEmpty, "compacted pruned ledger must be physically partitioned")
-    assert(StateStore.loadResolved(spark, s"$workP/state")
+    // 3-batch replay: insert across two range blocks, update, new key
+    val work = Files.createTempDirectory("graft-pstream").toString
+    val clockTimes = Iterator(ts("2024-01-15 00:00:00"),
+      ts("2024-02-15 00:00:00"), ts("2024-03-15 00:00:00"))
+    val mem = MemoryStream[(String, String, String, Timestamp)]
+    val query = CdcStream.start(
+      mem.toDF().toDF("key", "project_key", "summary", "updated"),
+      s"$work/repo", s"$work/state", s"$work/ckpt",
+      sharded = true, clock = () => clockTimes.next())
+    try {
+      mem.addData(("P1-1", "P1", "v1", ts("2024-01-01 00:00:00")),
+        ("P1-70000", "P1", "v1", ts("2024-01-01 00:00:00")))
+      query.processAllAvailable()
+      mem.addData(("P1-1", "P1", "v2", ts("2024-02-01 00:00:00")))
+      query.processAllAvailable()
+      mem.addData(("P2-9", "P2", "v1", ts("2024-03-01 00:00:00")))
+      query.processAllAvailable()
+    } finally query.stop()
+    def state() = StateStore.loadResolved(spark, s"$work/state")
       .collect().map(r => r.getAs[String]("key") ->
-        (r.getAs[Timestamp]("last_updated"), r.getAs[Int]("sync_count"))).toMap == stateF)
+        (r.getAs[Timestamp]("last_updated"), r.getAs[Int]("sync_count"))).toMap
+    val expected = Map(
+      "P1-1" -> (ts("2024-02-01 00:00:00"), 2),
+      "P1-70000" -> (ts("2024-01-01 00:00:00"), 1),
+      "P2-9" -> (ts("2024-03-01 00:00:00"), 1))
+    assert(state() == expected)
+    val files = {
+      val root = java.nio.file.Paths.get(work, "repo")
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(root).iterator().asScala
+        .filter(p => p.toString.endsWith(".yaml"))
+        .map(p => root.relativize(p).toString).toSeq.sorted
+    }
+    assert(files == Seq("projects/P1/issues/00000/P1-1.yaml",
+      "projects/P1/issues/00008/P1-70000.yaml",
+      "projects/P2/issues/00000/P2-9.yaml"), s"YAML corpus: $files")
+    assert(SinkSpec.log(s"$work/repo").length == 3)
+    // the folded base is physically range-block partitioned and resolves
+    // to the same rows
+    StateStore.compactDeltas(spark, s"$work/state")
+    val segDirs = new java.io.File(s"$work/state").listFiles().toSeq
+      .filter(_.isDirectory).map(_.getName).filter(_.startsWith("__seg="))
+    assert(segDirs.toSet == Set("__seg=00000", "__seg=00001"),
+      s"compacted ledger must be range-block partitioned: $segDirs")
+    assert(state() == expected)
+  }
+
+  test("a non-empty micro-batch starts at most 11 Spark jobs") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val work = Files.createTempDirectory("graft-stream-jobs").toString
+    val mem = MemoryStream[(String, String, String, Timestamp)]
+    val query = CdcStream.start(
+      mem.toDF().toDF("key", "project_key", "summary", "updated"),
+      s"$work/repo", s"$work/state", s"$work/ckpt",
+      clock = () => ts("2024-01-15 00:00:00"))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    // the second batch: new keys and an update over an existing ledger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("sql.streaming.queryId") == query.id.toString &&
+              p.getProperty("streaming.sql.batchId") == "1"))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      mem.addData(("P1-1", "P1", "v1", ts("2024-01-01 00:00:00")),
+        ("P1-2", "P1", "v1", ts("2024-01-01 00:00:00")))
+      query.processAllAvailable()
+      mem.addData(("P1-1", "P1", "v2", ts("2024-01-02 00:00:00")),
+        ("P1-3", "P1", "v1", ts("2024-01-02 00:00:00")))
+      query.processAllAvailable()
+      org.apache.spark.sql.graftbridge.drainListenerBus(sc)
+    } finally {
+      query.stop()
+      sc.removeSparkListener(listener)
+    }
+    // the touched-block collect, the YAML+blob write, the delta append and
+    // the state reads they share, each split into jobs by AQE; an
+    // isEmpty probe of the delta before the append started 14
+    assert(jobs.get > 0, "no job was attributed to the batch")
+    assert(jobs.get <= 11, s"${jobs.get} jobs")
+    assert(StateStore.loadResolved(spark, s"$work/state").count() == 3)
   }
 
   test("progress card: per-batch rows/latency/state telemetry with pinned bounds") {
