@@ -128,12 +128,15 @@ object StateStore {
     writeBlocks(state, path + "__tmp")
 
   /** The one ledger write layout: rows partitioned into `__seg=<block>` dirs
-    * by [[statePartCol]]. One shuffle keyed on the block lands each block in
-    * ONE task → one parquet file per block dir, not tasks×blocks small files.
+    * by [[statePartCol]]. No shuffle: each task of `rows` writes one file
+    * per block it holds, so the write adds no stage and is as parallel as
+    * its input. A shuffle on the block (one file per block) wrote a large
+    * block from one task and cost full-sync throughput: sync stages the
+    * state beside the YAML write, and each stage it adds queues behind
+    * that write's tasks.
     */
   private def writeBlocks(rows: DataFrame, dir: String): Unit =
     rows.withColumn(SegCol, statePartCol(col("key")))
-      .repartition(col(SegCol))
       .write.mode("overwrite").partitionBy(SegCol).parquet(dir)
 
   /** Abandon a staged-but-uncommitted state (failure paths): delete the tmp
@@ -210,8 +213,8 @@ object StateStore {
     * [[graft.sink.Yaml.ShardBlock]] (8192): state rows are ~150 B of parquet,
     * so 65536 keys/block ≈ 10 MB per partition dir — big enough that the
     * dir count stays manageable at ledger scale (a 12B-key corpus is ~180k
-    * dirs, each a single ~10 MB file thanks to [[stage]]'s repartition) and
-    * each pruned read is still a handful of row groups. The git tree floor
+    * dirs, each holding one file per task that wrote it, see [[writeBlocks]])
+    * and each pruned read is still a handful of row groups. The git tree floor
     * that forced 8192 for YAML dirs does not exist here.
     */
   val StatePartBlock: Long = 65536L
