@@ -3,44 +3,62 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
-/** Session-scoped memoization of shared plan fragments.
+/** Session-scoped memoization: the one registry for every artifact that is
+  * a deterministic function of (session, dataset dir).
   *
-  * Several pipeline queries are compositions over the same expensive
-  * sub-plans (MinHash band signatures, banded candidate pairs, the quality
-  * scorer). Before round 9 each query builder persisted its own copy of
-  * those fragments and never released them: every rebuild re-registered the
-  * same plan with the session `CacheManager` ("Asked to cache already cached
-  * data" warn spam) and a long-lived driver accumulated storage-memory
-  * pressure one dead entry at a time.
+  * Several queries are compositions over the same expensive sub-plans
+  * (MinHash band signatures, banded candidate pairs, the quality scorer,
+  * the graph adjacency frames) or consume the same driver-side result (the
+  * trained k-means centroids, the tokenizer's merge table, the CDC card's
+  * on-disk ledger). Before round 9 each query builder persisted its own
+  * copy of those fragments and never released them: every rebuild
+  * re-registered the same plan with the session `CacheManager` ("Asked to
+  * cache already cached data" warn spam) and a long-lived driver
+  * accumulated storage-memory pressure one dead entry at a time.
   *
-  * This registry is the single cache lifecycle authority instead:
-  *   - [[fragment]] builds + persists a fragment ONCE per (session, dir,
-  *     name) and hands every later consumer the same DataFrame, so the
-  *     `CacheManager` holds exactly one entry per distinct fragment — by
-  *     construction, no re-persist warnings and no unbounded growth.
+  * This registry is the single lifecycle authority instead, with two entry
+  * points over one map:
+  *   - [[memo]] builds any value ONCE per (session, dir, name) and hands
+  *     every later caller the same object.
+  *   - [[fragment]] is [[memo]] for a DataFrame that is also persisted, so
+  *     the `CacheManager` holds exactly one entry per distinct fragment —
+  *     by construction, no re-persist warnings and no unbounded growth.
+  *   - Every entry shares one policy: one lock (a build runs while holding
+  *     it, so concurrent callers of the same name wait for the first build
+  *     instead of repeating it; nested calls from the same thread re-enter),
+  *     the [[Stats]] counters, the [[bypassed]] escape hatch, the per-session
+  *     [[MaxDirs]] dir LRU, [[clear]] / [[clearDir]], and the pruning of
+  *     entries whose SparkContext has stopped, so harnesses that cycle
+  *     sessions don't pin dead plans. Releasing an entry unpersists it when
+  *     it is a cached DataFrame; every other value is just dropped (a
+  *     truncated frame's localCheckpoint blocks go with its last reference).
   *   - The registry is enumerable: [[fragments]] is the allowlist the
-  *     cache-hygiene audit checks `CacheManager` contents against, and
-  *     [[clear]] releases everything for a session (tests; or a driver
-  *     retiring a dataset directory).
-  *   - Entries whose SparkContext has stopped are pruned on the next call,
-  *     so harnesses that cycle sessions don't pin dead plans.
+  *     cache-hygiene audit checks `CacheManager` contents against.
   *
-  * Fragments must be DETERMINISTIC functions of (session, dir) — nothing
+  * Entries must be DETERMINISTIC functions of (session, dir) — nothing
   * keyed by batch state belongs here (the incremental index pipelines manage
   * their own per-batch frames and release them eagerly).
   *
-  * One escape hatch, honored at call time: [[bypassed]] disables
-  * memoization for the current thread — plan-shape audits use this so they
-  * always see the raw construction, never an `InMemoryTableScan` over a
-  * previously cached fragment.
+  * Three session-lifetime caches stay outside on purpose:
+  *   - `Graph.gatherMemo` is keyed by a DataFrame handle, not by (session,
+  *     dir): an LRU of 4 collected edge arrays of up to
+  *     `Graph.DriverGateEdges` edges each on the driver. Under the per-dir
+  *     LRU that bound would grow to [[MaxDirs]] × the gated frames per dir.
+  *   - `Misc.statsSessions` is keyed weakly by the parent session alone, so
+  *     the child sessions a driver drops are not pinned.
+  *   - `Tables.t`'s parquet schema resolution runs on every read and is not
+  *     memoized here: pinning a schema changes what gets read, so that move
+  *     needs its own A/B.
   */
 object Caches {
 
-  /** Max distinct dataset DIRS a session keeps fragments for
-    * (least-recently-used dir evicted + unpersisted beyond it). A long-lived
+  /** Max distinct dataset DIRS a session keeps entries for
+    * (least-recently-used dir evicted + released beyond it). A long-lived
     * driver cycling many directories otherwise accumulates one persisted
-    * fragment set per dir until the session stops.
+    * fragment set (and one set of trained artifacts) per dir until the
+    * session stops.
     */
   val MaxDirs = 8
 
@@ -65,14 +83,12 @@ object Caches {
   def scratchDir(prefix: String): java.nio.file.Path =
     java.nio.file.Files.createTempDirectory(scratchRoot, prefix)
 
-  private final case class Entry(df: DataFrame, persisted: Boolean)
-
   // keyed strongly; stopped-context entries are pruned on the next access
-  // (a WeakHashMap would never evict anyway: the DataFrame value holds a
+  // (a WeakHashMap would never evict anyway: a DataFrame value holds a
   // strong reference back to its session key)
-  private val reg = mutable.LinkedHashMap[(SparkSession, String, String), Entry]()
+  private val reg = mutable.LinkedHashMap[(SparkSession, String, String), Any]()
 
-  // per-session dir recency: touched on every fragment() call, re-inserted
+  // per-session dir recency: touched on every memo() call, re-inserted
   // so LinkedHashMap order IS least-recently-used order
   private val dirLru = mutable.LinkedHashMap[(SparkSession, String), Unit]()
 
@@ -80,11 +96,12 @@ object Caches {
     override def initialValue(): java.lang.Boolean = java.lang.Boolean.FALSE
   }
 
-  /** Fragment lifecycle counters since [[resetStats]] — the diagnostic for
-    * "did a sweep silently rebuild fragments?": a healthy full sweep shows
-    * `builds` == distinct fragments and `evictions` == 0; anything else
-    * means mid-sweep eviction/rebuild and explains tail blowups on the
-    * fragment-composed queries. Bench stamps these into bench_full.json.
+  /** Registry lifecycle counters since [[resetStats]], over [[memo]] and
+    * [[fragment]] entries alike — the diagnostic for "did a sweep silently
+    * rebuild entries?": a healthy full sweep shows `builds` == distinct
+    * entries and `evictions` == 0; anything else means mid-sweep
+    * eviction/rebuild and explains tail blowups on the fragment-composed
+    * queries. Bench stamps these into bench_full.json.
     */
   final case class Stats(hits: Long, builds: Long, evictions: Long)
   private var nHits = 0L
@@ -93,27 +110,31 @@ object Caches {
   def stats: Stats = synchronized(Stats(nHits, nBuilds, nEvictions))
   def resetStats(): Unit = synchronized { nHits = 0; nBuilds = 0; nEvictions = 0 }
 
-  /** True when memoization is off for this thread — the check [[fragment]]
-    * applies, exposed for memo registries that cache non-DataFrame
-    * artifacts (e.g. the tokenizer's trained merge table) so they honor the
-    * same bypass.
-    */
+  /** True when memoization is off for this thread. */
   def disabled: Boolean = bypass.get()
 
-  /** Run `body` with fragment memoization disabled on this thread. */
+  /** Run `body` with memoization disabled on this thread — plan-shape
+    * audits use this so they always see the raw construction, never an
+    * `InMemoryTableScan` over a previously cached fragment.
+    */
   def bypassed[T](body: => T): T = {
     bypass.set(java.lang.Boolean.TRUE)
     try body finally bypass.set(java.lang.Boolean.FALSE)
   }
 
-  /** The memoized fragment `name` for (`s`, `dir`), building (and, when
-    * `persisted`, caching) it on first use. `persisted = false` memoizes
-    * only the DataFrame handle — for fragments whose materialization is
-    * corpus-sized but whose CONSTRUCTION is expensive driver-side work
-    * (e.g. the collected label-propagation mapping).
+  /** The memoized value `name` for (`s`, `dir`), built on first use and
+    * never persisted: for artifacts whose CONSTRUCTION is expensive but
+    * which the `CacheManager` should not hold — driver-side results
+    * (centroids, merge tables, a scratch ledger path) and frames that are
+    * already materialized by `Iterative.truncate`. A truncated frame is the
+    * choice for a frame re-read several times PER QUERY (census hops, walk
+    * steps, wedge legs, both pair sides of a verify join): its
+    * localCheckpoint blocks are row-format, while a persisted fragment pays
+    * a columnar decode on every read (measured on the graph wedge cards:
+    * −0.3 s/query); the memoized handle still shares the one
+    * materialization across the sweep.
     */
-  def fragment(s: SparkSession, dir: String, name: String,
-      persisted: Boolean = true)(build: => DataFrame): DataFrame = {
+  def memo[T](s: SparkSession, dir: String, name: String)(build: => T): T = {
     if (disabled) return build
     synchronized {
       reg.filterInPlace { case ((sess, _, _), _) => !sess.sparkContext.isStopped }
@@ -122,17 +143,16 @@ object Caches {
       dirLru.remove((s, dir)); dirLru.put((s, dir), ())
       val key = (s, dir, name)
       val out = reg.get(key) match {
-        case Some(e) => nHits += 1; e.df
+        case Some(v) => nHits += 1; v.asInstanceOf[T]
         case None =>
           nBuilds += 1
-          // build OUTSIDE reg.getOrElseUpdate: nested fragment() calls
+          // build OUTSIDE reg.getOrElseUpdate: nested memo() calls
           // (candidates build on top of band signatures) re-enter this map
-          val df = build
-          val kept = if (persisted) df.persist() else df
-          reg.put(key, Entry(kept, persisted))
-          kept
+          val v = build
+          reg.put(key, v)
+          v
       }
-      // LRU cap on dirs per session: evict (and unpersist) the stalest dirs
+      // LRU cap on dirs per session: evict (and release) the stalest dirs
       // beyond the bound so a driver cycling dataset directories can't grow
       // storage memory without limit
       val mine = dirLru.keys.filter(_._1 eq s).toSeq // LRU-first order
@@ -141,39 +161,47 @@ object Caches {
     }
   }
 
+  /** The memoized fragment `name` for (`s`, `dir`): [[memo]] of `build`,
+    * persisted on first use.
+    */
+  def fragment(s: SparkSession, dir: String, name: String)(
+      build: => DataFrame): DataFrame =
+    if (disabled) build else memo(s, dir, name)(build.persist())
+
+  private def cached(v: Any): Option[DataFrame] = v match {
+    case df: DataFrame @unchecked if !df.sparkSession.sparkContext.isStopped &&
+        df.storageLevel != StorageLevel.NONE => Some(df)
+    case _ => None
+  }
+
   /** Live PERSISTED fragments registered under `s` — `(name, df)` pairs.
     * This is the audit allowlist: after any registered query runs, the
     * session `CacheManager` must contain these entries and nothing else.
     */
   def fragments(s: SparkSession): Seq[(String, DataFrame)] = synchronized {
-    reg.collect {
-      case ((sess, dir, name), Entry(df, true)) if sess eq s =>
-        (s"$dir#$name", df)
-    }.toSeq
+    reg.toSeq.flatMap { case ((sess, dir, name), v) =>
+      if (sess eq s) cached(v).map(s"$dir#$name" -> _) else None
+    }
   }
 
-  /** Unpersist and forget every fragment registered under `s`. */
+  /** Release and forget every entry registered under `s`. */
   def clear(s: SparkSession): Unit = synchronized {
-    reg.filterInPlace { case ((sess, _, _), e) =>
-      if (sess eq s) {
-        if (e.persisted && !sess.sparkContext.isStopped)
-          e.df.unpersist(blocking = false)
-        false
-      } else true
+    reg.filterInPlace { case ((sess, _, _), v) =>
+      if (sess eq s) { cached(v).foreach(_.unpersist(blocking = false)); false }
+      else true
     }
     dirLru.filterInPlace { case ((sess, _), _) => !(sess eq s) }
   }
 
-  /** Unpersist and forget the fragments of one dataset dir under `s` — the
+  /** Release and forget the entries of one dataset dir under `s` — the
     * hook an engine calls when it retires a directory (also the LRU-cap
     * eviction path).
     */
   def clearDir(s: SparkSession, dir: String): Unit = synchronized {
-    reg.filterInPlace { case ((sess, d, _), e) =>
+    reg.filterInPlace { case ((sess, d, _), v) =>
       if ((sess eq s) && d == dir) {
         nEvictions += 1
-        if (e.persisted && !sess.sparkContext.isStopped)
-          e.df.unpersist(blocking = false)
+        cached(v).foreach(_.unpersist(blocking = false))
         false
       } else true
     }

@@ -141,15 +141,4 @@ final class JobManager(spark: SparkSession) {
       jobs(job.id)
     }
   }
-
-  /** Drain the queue to a terminal state (bounded by retries). */
-  def drain(issues: DataFrame, links: => DataFrame, repoRoot: String,
-      stateRoot: String, now: Timestamp,
-      sleep: Long => Unit = Thread.sleep): Unit = {
-    var guard = 0
-    while (list(phase = Some("Pending")).nonEmpty && guard < 100) {
-      runPending(issues, links, repoRoot, stateRoot, now, sleep)
-      guard += 1
-    }
-  }
 }

@@ -234,19 +234,4 @@ final class Reconciler(
     }
     fired
   }
-
-  /** Advance a fake clock from `from` to `to` in `stepMs` increments,
-    * ticking once per step — the deterministic test/demo driver.
-    * Returns (fire time, job id) for every submission.
-    */
-  def run(from: Timestamp, to: Timestamp, stepMs: Long,
-      sleep: Long => Unit = Thread.sleep): Seq[(Timestamp, String)] = {
-    var now = from
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Timestamp, String)]
-    while (!now.after(to)) {
-      tick(now, sleep).foreach(id => out += ((now, id)))
-      now = new Timestamp(now.getTime + stepMs)
-    }
-    out.toSeq
-  }
 }

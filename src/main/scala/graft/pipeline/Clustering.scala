@@ -96,21 +96,13 @@ object Clustering {
     cents
   }
 
-  /** [[train]] memoized per (session, dir) — the trained centroids are
-    * consumed by the k-means telemetry AND cluster-balanced sampling, and
-    * training costs `Iters` collect rounds that downstream queries must
-    * not repeat. Same bypass/prune contract as [[graft.Caches.fragment]]
-    * (driver-held k×dim longs, bounded by construction). */
-  def trained(s: SparkSession, dir: String): Seq[(Long, Array[Long])] = {
-    if (graft.Caches.disabled) return train(qvecs(s, dir))
-    memo.synchronized {
-      memo.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-      memo.getOrElseUpdate((s, dir), train(qvecs(s, dir)))
-    }
-  }
-
-  private val memo = scala.collection.mutable.LinkedHashMap[
-    (SparkSession, String), Seq[(Long, Array[Long])]]()
+  /** [[train]] memoized per (session, dir) through [[graft.Caches.memo]] —
+    * the trained centroids are consumed by the k-means telemetry AND
+    * cluster-balanced sampling, and training costs `Iters` collect rounds
+    * that downstream queries must not repeat (driver-held k×dim longs,
+    * bounded by construction). */
+  def trained(s: SparkSession, dir: String): Seq[(Long, Array[Long])] =
+    graft.Caches.memo(s, dir, "kmeans_centroids")(train(qvecs(s, dir)))
 
   // ---- DuckDB oracle fragments --------------------------------------------
 

@@ -130,14 +130,13 @@ object Dedup {
     * pruned to docs that appear in a banded candidate pair. Shared by the
     * verify join ([[verifiedPairs]]) AND the estimator's signature fold
     * ([[minhashEst]]) so the corpus shingle pass behind it runs once per
-    * (session, dir), not once per consumer. persisted = false + truncate:
-    * every consumer reads this frame TWICE (doc_a and doc_b pair sides) —
-    * a row-format localCheckpoint block skips the per-read columnar decode
-    * a persisted fragment pays (the graph_und_int discipline, guide §2.4).
+    * (session, dir), not once per consumer. A memoized truncated frame, not
+    * a persisted fragment: every consumer reads it TWICE (doc_a and doc_b
+    * pair sides).
     */
   private def candSets(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    graft.Caches.fragment(s, dir, "minhash_cand_sets", persisted = false) {
+    graft.Caches.memo(s, dir, "minhash_cand_sets") {
       val cand = minhashCandidates(s, dir)
       // only docs that appear in a candidate pair need their shingle set —
       // near-dup candidates are orders of magnitude fewer than the corpus.
@@ -684,14 +683,15 @@ object Dedup {
     }
 
   /** `(doc_id, cluster)` labels after the bounded label propagation over
-    * the raw LSH candidates. Memoized unpersisted: the frame itself is
-    * corpus-sized (one map-side join over `documents` — cheap to re-run),
-    * but building it costs two driver jobs (the kernel's edge-count gate
-    * and its collect) that the four consuming queries shouldn't each repeat.
+    * the raw LSH candidates. A [[graft.Caches.memo]], not persisted: the
+    * frame itself is corpus-sized (one map-side join over `documents` —
+    * cheap to re-run), but building it costs two driver jobs (the kernel's
+    * edge-count gate and its collect) that the four consuming queries
+    * shouldn't each repeat.
     */
   private[pipeline] def clusterLabels(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    graft.Caches.fragment(s, dir, "minhash_cluster_labels", persisted = false) {
+    graft.Caches.memo(s, dir, "minhash_cluster_labels") {
       resolveLabels(s, dir, verified = false)
     }
 
@@ -707,7 +707,7 @@ object Dedup {
     */
   private[pipeline] def verifiedClusterLabels(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    graft.Caches.fragment(s, dir, "verified_cluster_labels", persisted = false) {
+    graft.Caches.memo(s, dir, "verified_cluster_labels") {
       resolveLabels(s, dir, verified = true)
     }
 

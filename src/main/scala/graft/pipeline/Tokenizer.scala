@@ -57,41 +57,30 @@ object Tokenizer {
     * `replace` (symbols are alphanumeric by construction — no quoting
     * hazards). Lineage is truncated per round like every iterative op.
     *
-    * Trained state is memoized per (session, dir, merges) — a tokenizer is
-    * trained once and consumed by everything downstream (the apply query,
-    * token budgeting), and the cached artifact is merge-table-sized plus a
-    * vocab-sized unpersisted frame handle. Honors the same bypass as
-    * [[graft.Caches.fragment]]; stopped sessions are pruned.
+    * Trained state is memoized per (session, dir, merges) through
+    * [[graft.Caches.memo]] — a tokenizer is trained once and consumed by
+    * everything downstream (the apply query, token budgeting), and the
+    * cached artifact is merge-table-sized plus a vocab-sized truncated
+    * frame handle.
     */
   def train(s: SparkSession, dir: String,
-      merges: Int = Merges): (Seq[(Int, String, String, Long)], DataFrame) = {
-    if (graft.Caches.disabled) return trainUncached(s, dir, merges)
-    memo.synchronized {
-      memo.filterInPlace { case ((sess, _, _), _) => !sess.sparkContext.isStopped }
-      memo.getOrElseUpdate((s, dir, merges), trainUncached(s, dir, merges))
-    }
-  }
-
-  private val memo = scala.collection.mutable.LinkedHashMap[
-    (SparkSession, String, Int), (Seq[(Int, String, String, Long)], DataFrame)]()
-
-  private def trainUncached(s: SparkSession, dir: String,
-      merges: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
-    var wt = census(s, dir).transform(graft.Iterative.truncate)
-    val out = Seq.newBuilder[(Int, String, String, Long)]
-    (1 to merges).foreach { r =>
-      val top = pairCounts(wt)
-        .orderBy(desc("cnt"), col("a"), col("b")).limit(1).collect()
-      if (top.nonEmpty) {
-        val (a, b, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        out += ((r, a, b, c))
-        wt = wt.withColumn("wstr",
-            expr(s"replace(wstr, '$a  $b', '$a$b')"))
-          .transform(graft.Iterative.truncate)
+      merges: Int = Merges): (Seq[(Int, String, String, Long)], DataFrame) =
+    graft.Caches.memo(s, dir, s"bpe_merges_$merges") {
+      var wt = census(s, dir).transform(graft.Iterative.truncate)
+      val out = Seq.newBuilder[(Int, String, String, Long)]
+      (1 to merges).foreach { r =>
+        val top = pairCounts(wt)
+          .orderBy(desc("cnt"), col("a"), col("b")).limit(1).collect()
+        if (top.nonEmpty) {
+          val (a, b, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+          out += ((r, a, b, c))
+          wt = wt.withColumn("wstr",
+              expr(s"replace(wstr, '$a  $b', '$a$b')"))
+            .transform(graft.Iterative.truncate)
+        }
       }
+      (out.result(), wt)
     }
-    (out.result(), wt)
-  }
 
   // ---- DuckDB oracle fragments --------------------------------------------
 

@@ -571,15 +571,14 @@ object Cdc {
   }
 
   /** The card's on-disk ledger (range-block base + one delta), built once
-    * per (session, dir) — the build is SETUP (physical writes the operator
-    * under test does not include: save, delta commit); the
-    * operator the card times and oracles is the pruned resolved READ. Same
-    * memo contract as [[graft.pipeline.Clustering.trained]]: bypassed when
-    * fragment caching is disabled, pruned with the session, rebuilt if the
-    * scratch dir is gone.
+    * per (session, dir) through [[graft.Caches.memo]] — the build is SETUP
+    * (physical writes the operator under test does not include: save, delta
+    * commit); the operator the card times and oracles is the pruned
+    * resolved READ. The ledger lives under [[graft.Caches.scratchRoot]],
+    * which only the JVM shutdown hook deletes.
     */
-  private def prunedLedger(s: SparkSession, dir: String): (String, Seq[String]) = {
-    def build(): (String, Seq[String]) = {
+  private def prunedLedger(s: SparkSession, dir: String): (String, Seq[String]) =
+    graft.Caches.memo(s, dir, "cdc_pruned_ledger") {
       val first = Tables.issues(s, dir).filter(col("project_key") === "P1")
         .withColumn("key", expr(scaleKeySpark))
       val inc = incoming(s, dir).filter(col("project_key") === "P1")
@@ -595,21 +594,6 @@ object Cdc {
       StateStore.appendDelta(delta, path)
       (path, StateStore.touchedSegs(delta.select("key")))
     }
-    if (graft.Caches.disabled) return build()
-    ledgerMemo.synchronized {
-      ledgerMemo.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-      ledgerMemo.get((s, dir))
-        .filter { case (p, _) => new java.io.File(p).exists() }
-        .getOrElse {
-          val b = build()
-          ledgerMemo.put((s, dir), b)
-          b
-        }
-    }
-  }
-
-  private val ledgerMemo = scala.collection.mutable.LinkedHashMap[
-    (SparkSession, String), (String, Seq[String])]()
 
   val all: Seq[GQuery] = Seq(changed, upsert, stats, enrich, stateful, history,
     validate, scd2, scd2Enrich, staleness, islands, statusHistoryQ,

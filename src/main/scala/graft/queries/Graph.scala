@@ -42,6 +42,11 @@ object Graph {
     substring(c, 2, 1).cast("long") * lit(1000000000000L) +
       element_at(split(c, "-"), 2).cast("long")
 
+  /** Inverse of [[encNode]]: `3 * 10^12 + 1234` → `"P3-1234"`. */
+  private def decNode(c: Column): Column =
+    concat(lit("P"), call_function("div", c, lit(1000000000000L)).cast("string"),
+      lit("-"), (c % lit(1000000000000L)).cast("string"))
+
   /** DuckDB spelling of [[encNode]]. */
   private def encSql(e: String): String =
     s"(substring($e, 2, 1)::BIGINT * 1000000000000 + string_split($e, '-')[2]::BIGINT)"
@@ -66,18 +71,14 @@ object Graph {
     * plans re-read it up to 12×: once per differently-pruned reference,
     * because per-consumer column pruning blocks ReuseExchange). One
     * persisted fragment per (session, dir) = one distinct-shuffle per
-    * sweep, every consumer reads the cached rows. Self-loops preserved;
-    * use [[undIntNS]] for the a≠b form (a narrow filter over the cache —
-    * filter-before and filter-after symmetrize+distinct are equivalent).
+    * sweep, every consumer reads the truncated rows (a [[graft.Caches.memo]]
+    * of a truncated frame, like the canon/adj/oriented/capped siblings
+    * below). Self-loops preserved; use [[undIntNS]] for the a≠b form (a
+    * narrow filter over the cache — filter-before and filter-after
+    * symmetrize+distinct are equivalent).
     */
   private def undInt(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    // persisted = false + truncate (here and in the canon/adj/capped
-    // siblings below): these frames are re-read several times PER QUERY
-    // (census hops, walk steps, wedge legs), and a persisted fragment pays
-    // columnar decode on every read — row-format localCheckpoint blocks
-    // don't, while the memoized handle still shares one materialization
-    // across the sweep (measured on the wedge cards: −0.3 s/query).
-    graft.Caches.fragment(s, dir, "graph_und_int", persisted = false) {
+    graft.Caches.memo(s, dir, "graph_und_int") {
       val e = edgesInt(s, dir)
       e.union(e.select(col("b").as("a"), col("a").as("b"))).distinct()
         .transform(graft.Iterative.truncate)
@@ -92,7 +93,7 @@ object Graph {
     * predictors' exclusion side).
     */
   private def canonInt(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    graft.Caches.fragment(s, dir, "graph_canon_int", persisted = false) {
+    graft.Caches.memo(s, dir, "graph_canon_int") {
       edgesInt(s, dir).filter(col("a") =!= col("b"))
         .select(least(col("a"), col("b")).as("a"),
           greatest(col("a"), col("b")).as("b")).distinct()
@@ -112,7 +113,7 @@ object Graph {
     * (previously re-windowed once per walk STEP).
     */
   private def adjRnInt(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    graft.Caches.fragment(s, dir, "graph_adj_rn", persisted = false) {
+    graft.Caches.memo(s, dir, "graph_adj_rn") {
       undIntNS(s, dir).withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy("a").orderBy("b")))
         .transform(graft.Iterative.truncate)
@@ -122,11 +123,7 @@ object Graph {
     * clustering coeff (identical tie-break by construction).
     */
   private def orientedInt(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    // persisted = false + truncate: the wedge self-join reads this frame
-    // twice per query — localCheckpoint blocks are row-format (no columnar
-    // decode per read like a persisted fragment), and the memoized handle
-    // still shares the one materialization across queries
-    graft.Caches.fragment(s, dir, "graph_oriented_int", persisted = false) {
+    graft.Caches.memo(s, dir, "graph_oriented_int") {
       orientEdges(canonInt(s, dir)).transform(graft.Iterative.truncate)
     }
 
@@ -493,9 +490,7 @@ object Graph {
         .select(col("node"),
           (lit(BASE.toLong) + expr("85 * coalesce(s, 0L) div 100")).as("pr"))
         .orderBy(desc("pr"), col("node")).limit(20)
-        .select(concat(lit("P"), expr("node div 1000000000000").cast("string"),
-          lit("-"), (col("node") % lit(1000000000000L)).cast("string")).as("node_key"),
-          col("pr"))
+        .select(decNode(col("node")).as("node_key"), col("pr"))
         .orderBy(desc("pr"), col("node_key"))
     }
   }
@@ -615,9 +610,7 @@ object Graph {
       }
       reached.groupBy("seed")
         .agg((count(lit(1)) - 1).as("n_reached"))
-        .select(concat(lit("P"), expr("seed div 1000000000000").cast("string"),
-          lit("-"), (col("seed") % lit(1000000000000L)).cast("string")).as("seed_key"),
-          col("n_reached"))
+        .select(decNode(col("seed")).as("seed_key"), col("n_reached"))
         .orderBy("seed_key")
     }
   }
@@ -1687,7 +1680,7 @@ object Graph {
     val e = edges.toDF("a", "b")
       .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
       .filter(col("a") =!= col("b"))
-    // a caller-provided und is already a persisted fragment — only the
+    // a caller-provided und is already a memoized truncated frame — only the
     // locally-derived form needs its lineage truncated to materialize once
     val und = if (und0 != null) und0.filter(col("a") =!= col("b"))
       else e.select("a", "b")
@@ -2177,7 +2170,7 @@ object Graph {
     */
   private def cappedAdjInt(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
-    graft.Caches.fragment(s, dir, "graph_capped_adj", persisted = false) {
+    graft.Caches.memo(s, dir, "graph_capped_adj") {
       val capW = org.apache.spark.sql.expressions.Window
         .partitionBy("a").orderBy("hk", "b")
       undIntNS(s, dir)
@@ -2381,9 +2374,7 @@ object Graph {
           expr("(85 * coalesce(s, 0L)) div 100").as("pr"))
         .filter(col("pr") > 0)
         .orderBy(desc("pr"), col("node")).limit(20)
-        .select(concat(lit("P"), expr("node div 1000000000000").cast("string"),
-          lit("-"), (col("node") % lit(1000000000000L)).cast("string"))
-          .as("node_key"), col("pr"))
+        .select(decNode(col("node")).as("node_key"), col("pr"))
         .orderBy(desc("pr"), col("node_key"))
     }
   }
@@ -2470,9 +2461,7 @@ object Graph {
         .select(col("node"), coalesce(col("authority"), lit(0L)).as("authority"),
           coalesce(col("hub"), lit(0L)).as("hub"))
         .orderBy(desc("authority"), col("node")).limit(20)
-        .select(concat(lit("P"), expr("node div 1000000000000").cast("string"),
-          lit("-"), (col("node") % lit(1000000000000L)).cast("string"))
-          .as("node_key"), col("authority"), col("hub"))
+        .select(decNode(col("node")).as("node_key"), col("authority"), col("hub"))
         .orderBy(desc("authority"), col("node_key"))
     }
   }
@@ -2655,12 +2644,9 @@ object Graph {
       // report only cycle members (certified nodes + the roots they
       // share): the full node list is the components card's job, and at
       // corpus scale the interesting output is the knots, not the DAG bulk
-      def dec(name: String) =
-        concat(lit("P"), expr(s"$name div 1000000000000").cast("string"),
-          lit("-"), (col(name) % lit(1000000000000L)).cast("string"))
       sccKnots(e, k, normalized = true)
-        .select(dec("node").as("node_key"), dec("root").as("scc_key"),
-          col("certified"))
+        .select(decNode(col("node")).as("node_key"),
+          decNode(col("root")).as("scc_key"), col("certified"))
         .orderBy("node_key")
     }
   }
@@ -2725,9 +2711,7 @@ object Graph {
       dist.groupBy("s")
         .agg((count(lit(1)) - 1).as("n_reached"),
           max("d").as("max_dist"), sum("d").as("total_dist"))
-        .select(concat(lit("P"), expr("s div 1000000000000").cast("string"),
-            lit("-"), (col("s") % lit(1000000000000L)).cast("string"))
-            .as("seed_key"),
+        .select(decNode(col("s")).as("seed_key"),
           col("n_reached"), col("max_dist"), col("total_dist"))
         .orderBy("seed_key")
     }
@@ -2852,9 +2836,7 @@ object Graph {
       .select(col("v"), (col("sigma") * col("sdown")).as("c"))
       .groupBy("v").agg(sum("c").as("stress"))
       .filter(col("stress") > 0)
-      .select(concat(lit("P"), expr("v div 1000000000000").cast("string"),
-          lit("-"), (col("v") % lit(1000000000000L)).cast("string"))
-          .as("node_key"), col("stress"))
+      .select(decNode(col("v")).as("node_key"), col("stress"))
       .orderBy("node_key")
   }
 

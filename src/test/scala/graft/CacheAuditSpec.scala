@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Cache lifecycle audit: the session `CacheManager` is a shared, unbounded
@@ -142,5 +146,45 @@ class CacheAuditSpec extends AnyFunSuite {
     assert(org.apache.spark.sql.GraftCacheProbe.numCachedEntries(session) == Caches.fragments(spark)
       .flatMap { case (_, f) => cm.lookupCachedData(classicDf(f)) }
       .map(System.identityHashCode).toSet.size)
+  }
+
+  test("clearDir releases every memo of the dir: the next call rebuilds it") {
+    def cdc() = SparkEntry.queries("cdc_state_pruned_resolve")(spark, sf)
+    val km = pipeline.Clustering.trained(spark, sf)
+    val bpe = pipeline.Tokenizer.train(spark, sf)
+    cdc()
+    assert(pipeline.Clustering.trained(spark, sf) eq km, "centroids are memoized")
+    assert(pipeline.Tokenizer.train(spark, sf) eq bpe, "merge table is memoized")
+    Caches.clearDir(spark, sf)
+    val before = Caches.stats.builds
+    cdc()
+    val survived = Seq(
+      "cdc_state_pruned_resolve's ledger" -> (Caches.stats.builds == before),
+      "trained centroids" -> (pipeline.Clustering.trained(spark, sf) eq km),
+      "trained merge table" -> (pipeline.Tokenizer.train(spark, sf) eq bpe))
+      .collect { case (what, true) => what }
+    assert(survived.isEmpty, s"survived clearDir: ${survived.mkString(", ")}")
+  }
+
+  // the session-lifetime caches that prune stopped sessions themselves, each
+  // with the reason it stays outside the Caches registry
+  private val ownPrune = Map(
+    "graft/Caches.scala" -> "the registry itself",
+    "graft/queries/Graph.scala" -> ("gatherMemo: keyed by a DataFrame handle, " +
+      "an LRU of 4 collected edge arrays; under the per-dir LRU its driver " +
+      "bound would grow to MaxDirs x the gated frames per dir"))
+
+  test("no file under src/main/scala but Caches keeps a per-session registry") {
+    val root = Paths.get("src/main/scala")
+    val registries = Files.walk(root).iterator().asScala
+      .filter { p =>
+        val src = if (p.toString.endsWith(".scala"))
+          new String(Files.readAllBytes(p), "UTF-8") else ""
+        src.contains("sparkContext.isStopped") ||
+          src.contains("LinkedHashMap[(SparkSession")
+      }
+      .map(root.relativize(_).toString).toSet
+    assert((registries -- ownPrune.keySet).isEmpty,
+      s"memo registries outside Caches: ${(registries -- ownPrune.keySet).toSeq.sorted}")
   }
 }

@@ -13,6 +13,17 @@ class JobManagerSpec extends AnyFunSuite {
 
   private val at = Timestamp.valueOf("2002-01-01 00:00:00")
 
+  /** Run pending jobs until none is left Pending (bounded by retries). */
+  private def drain(mgr: JobManager, work: String,
+      sleep: Long => Unit = Thread.sleep): Unit = {
+    var guard = 0
+    while (mgr.list(phase = Some("Pending")).nonEmpty && guard < 100) {
+      mgr.runPending(Tables.issues(spark, sf), Tables.links(spark, sf),
+        s"$work/repos", s"$work/states", at, sleep)
+      guard += 1
+    }
+  }
+
   private def spec(jql: String, retries: Int = 0, dryRun: Boolean = false) =
     SyncJobSpec("jql", Nil, Some(jql), None, None, "repo", None,
       max_retries = retries, backoff_base_sec = 1, backoff_cap_sec = 2,
@@ -25,8 +36,7 @@ class JobManagerSpec extends AnyFunSuite {
     val id2 = mgr.submit(spec("project = P2", dryRun = true), at)
     assert(id1 != id2 && id1.startsWith("jql-20020101"))
     assert(mgr.queueStatus() == Map("Pending" -> 2))
-    mgr.drain(Tables.issues(spark, sf), Tables.links(spark, sf),
-      s"$work/repos", s"$work/states", at)
+    drain(mgr, work)
     assert(mgr.queueStatus() == Map("Completed" -> 2))
     val done = mgr.status(id1).get
     assert(done.result.exists(_.total > 0))
@@ -38,8 +48,7 @@ class JobManagerSpec extends AnyFunSuite {
     val mgr = new JobManager(spark)
     val sleeps = scala.collection.mutable.ArrayBuffer.empty[Long]
     val id = mgr.submit(spec("project = AND AND", retries = 2), at)
-    mgr.drain(Tables.issues(spark, sf), Tables.links(spark, sf),
-      s"$work/repos", s"$work/states", at, sleep = sleeps += _)
+    drain(mgr, work, sleep = sleeps += _)
     val job = mgr.status(id).get
     assert(job.phase == "Failed")
     assert(job.attempts == 3) // 1 try + 2 retries
@@ -54,8 +63,7 @@ class JobManagerSpec extends AnyFunSuite {
     val cancelled = mgr.submit(spec("project = P2", dryRun = true),
       Timestamp.valueOf("2002-01-01 00:00:01"))
     assert(mgr.cancel(cancelled))
-    mgr.drain(Tables.issues(spark, sf), Tables.links(spark, sf),
-      s"$work/repos", s"$work/states", at)
+    drain(mgr, work)
     // the cancelled job was never executed
     assert(mgr.status(cancelled).get.phase == "Cancelled")
     assert(mgr.status(cancelled).get.result.isEmpty)

@@ -59,6 +59,21 @@ class ReconcilerSpec extends AnyFunSuite {
       max_retries = 0, backoff_base_sec = 1, backoff_cap_sec = 2,
       dry_run = true)
 
+  /** Advance a fake clock from `from` to `to` in `stepMs` increments,
+    * ticking once per step. Returns (fire time, job id) for every
+    * submission.
+    */
+  private def run(rec: Reconciler, from: Timestamp, to: Timestamp,
+      stepMs: Long): Seq[(Timestamp, String)] = {
+    var now = from
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Timestamp, String)]
+    while (!now.after(to)) {
+      rec.tick(now, sleep = _ => ()).foreach(id => out += ((now, id)))
+      now = new Timestamp(now.getTime + stepMs)
+    }
+    out.toSeq
+  }
+
   private def mkReconciler(tag: String): (Reconciler, JobManager) = {
     val work = Files.createTempDirectory(s"graft-reconcile-$tag").toString
     val mgr = new JobManager(spark)
@@ -73,8 +88,7 @@ class ReconcilerSpec extends AnyFunSuite {
     rec.apply(SyncResource("quarterly", jqlSpec("project = P1"),
       schedule = Some(Cron.parse("*/15 * * * *"))), ts("2002-01-01 00:00:00"))
     // one tick per simulated minute over one hour
-    val fires = rec.run(ts("2002-01-01 00:01:00"), ts("2002-01-01 01:00:00"),
-      60000L, sleep = _ => ())
+    val fires = run(rec, ts("2002-01-01 00:01:00"), ts("2002-01-01 01:00:00"), 60000L)
     assert(fires.map(_._1) == Seq(
       ts("2002-01-01 00:15:00"), ts("2002-01-01 00:30:00"),
       ts("2002-01-01 00:45:00"), ts("2002-01-01 01:00:00")),
@@ -95,8 +109,7 @@ class ReconcilerSpec extends AnyFunSuite {
     rec.apply(SyncResource("doomed", jqlSpec("project = AND AND"),
       retryPolicy = Some(RetryPolicy(maxRetries = 3, backoffMultiplier = 2.0,
         initialDelaySec = 10))), ts("2002-01-01 00:00:00"))
-    val fires = rec.run(ts("2002-01-01 00:00:00"), ts("2002-01-01 00:02:00"),
-      1000L, sleep = _ => ())
+    val fires = run(rec, ts("2002-01-01 00:00:00"), ts("2002-01-01 00:02:00"), 1000L)
     val t0 = ts("2002-01-01 00:00:00").getTime
     val offsets = fires.map(f => (f._1.getTime - t0) / 1000)
     // initial attempt, then retries delayed 10, 10×2, 10×2² seconds
@@ -189,8 +202,7 @@ class ReconcilerSpec extends AnyFunSuite {
     val (rec, _) = mkReconciler("oneshot")
     rec.apply(SyncResource("once", jqlSpec("project = P1")),
       ts("2002-01-01 00:00:00"))
-    val fires = rec.run(ts("2002-01-01 00:00:00"), ts("2002-01-01 00:00:05"),
-      1000L, sleep = _ => ())
+    val fires = run(rec, ts("2002-01-01 00:00:00"), ts("2002-01-01 00:00:05"), 1000L)
     assert(fires.size == 1)
     val st = rec.status("once").get
     assert(st.phase == "Completed" && st.nextRunAt.isEmpty && st.retryCount == 0)
