@@ -201,6 +201,36 @@ object Bench {
       s""""epoch_ms":${System.currentTimeMillis()},"timing":"best_of_2"}"""
   }
 
+  /** Defensive start-up sweep of `tmpRoot`: stale `graft-*` temp trees from
+    * earlier crashed runs (~100k small files each) measurably throttle
+    * filesystem metadata performance — 2-5x swings on the sync number were
+    * traced to exactly this. Only our own prefix, only dirs whose mtime is
+    * before `cutoffMillis`, and never a [[Caches.scratchRoot]] whose owning
+    * JVM is still alive: a root's mtime moves only when a scratch dir is
+    * created directly under it, so a long-lived driver idle for an hour
+    * still holds live state there (memoized ledger paths, index dirs).
+    */
+  private[graft] def sweepStaleTemp(tmpRoot: java.nio.file.Path, cutoffMillis: Long): Unit = {
+    import scala.jdk.CollectionConverters._
+    val ownedRoot = (Caches.ScratchPrefix + """(\d+)-.*""").r
+    def liveOwner(name: String): Boolean = name match {
+      case ownedRoot(pid) => ProcessHandle.of(pid.toLong).filter(_.isAlive).isPresent
+      case _ => false
+    }
+    val dirs = java.nio.file.Files.list(tmpRoot)
+    try dirs.iterator().asScala.toList
+      .filter { p =>
+        val name = p.getFileName.toString
+        name.startsWith("graft-") && !liveOwner(name) &&
+          scala.util.Try(java.nio.file.Files.getLastModifiedTime(p).toMillis)
+            .getOrElse(Long.MaxValue) < cutoffMillis
+      }
+      .foreach(p => scala.util.Try(java.nio.file.Files.walk(p)
+        .sorted(java.util.Comparator.reverseOrder())
+        .forEach(q => { java.nio.file.Files.deleteIfExists(q); () })))
+    finally dirs.close()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local(Session.cpus(32))
@@ -222,22 +252,9 @@ object Bench {
       i.unpersist()
     } catch { case _: Throwable => }
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // defensive sweep: stale graft-* temp trees from earlier crashed runs
-    // (~100k small files each) measurably throttle filesystem metadata
-    // performance — 2-5x swings on the sync number were traced to exactly
-    // this. Only our own prefix, only dirs idle for over an hour.
-    try {
-      import scala.jdk.CollectionConverters._
-      val tmpRoot = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-      val cutoff = System.currentTimeMillis() - 60L * 60 * 1000
-      java.nio.file.Files.list(tmpRoot).iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith("graft-") &&
-          scala.util.Try(java.nio.file.Files.getLastModifiedTime(p).toMillis)
-            .getOrElse(Long.MaxValue) < cutoff)
-        .foreach(p => scala.util.Try(java.nio.file.Files.walk(p)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => { java.nio.file.Files.deleteIfExists(q); () })))
-    } catch { case _: Throwable => () }
+    try sweepStaleTemp(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
+      System.currentTimeMillis() - 60L * 60 * 1000)
+    catch { case _: Throwable => () }
     // end-to-end sync throughput vs BASELINE's issues/sec: a bounded slice
     // (~60k issues) through the full pipeline — JQL plan, YAML files,
     // edge parquet, git commit, state merge — then an incremental no-op rerun

@@ -68,16 +68,23 @@ object Caches {
     * every 224-query sweep leaked a postings tree under /tmp — rounds of
     * sweeps accumulated until the stale-dir reaper caught them an hour
     * later. One root, removed by a shutdown hook, bounds the leak to the
-    * live JVM; per-call subdirs keep executions isolated.
+    * live JVM; per-call subdirs keep executions isolated. The root's name
+    * carries the owning JVM's pid ([[ScratchPrefix]]`<pid>-…`), so another
+    * JVM's stale-temp sweep ([[Bench.sweepStaleTemp]]) can tell a live
+    * driver's root from a crashed run's.
     */
   lazy val scratchRoot: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft-scratch")
+    val root = java.nio.file.Files.createTempDirectory(
+      s"$ScratchPrefix${ProcessHandle.current().pid()}-")
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       scala.util.Try(java.nio.file.Files.walk(root)
         .sorted(java.util.Comparator.reverseOrder())
         .forEach(p => { java.nio.file.Files.deleteIfExists(p); () }))))
     root
   }
+
+  /** Name prefix of every [[scratchRoot]], followed by its JVM's pid. */
+  val ScratchPrefix = "graft-scratch-"
 
   /** A fresh subdirectory under [[scratchRoot]] (deleted at JVM exit). */
   def scratchDir(prefix: String): java.nio.file.Path =

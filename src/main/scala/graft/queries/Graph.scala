@@ -47,6 +47,28 @@ object Graph {
     concat(lit("P"), call_function("div", c, lit(1000000000000L)).cast("string"),
       lit("-"), (c % lit(1000000000000L)).cast("string"))
 
+  /** `(a, b)` edges as a long, symmetrized, distinct adjacency (self-loops
+    * kept): [[undInt]] over the slice, the public entry points over theirs.
+    */
+  private def symmetrize(edges: DataFrame): DataFrame = {
+    val e = edges.toDF("a", "b")
+      .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
+    e.union(e.select(col("b").as("a"), col("a").as("b"))).distinct()
+  }
+
+  /** THE hash-order per-key cap: the first `n` rows of each `key` in
+    * md5-prefix order of `key:other`, ties on `other` — content-determined
+    * and replayable in SQL, never "whatever rows arrived first"; the rank
+    * window is partitioned by `key`, never global.
+    */
+  private def hashCap(df: DataFrame, key: String, other: String, n: Int): DataFrame =
+    df.withColumn("hk", graft.functions.Md5Prefix64(
+        concat_ws(":", col(key).cast("string"), col(other).cast("string"))))
+      .withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(key).orderBy("hk", other)))
+      .filter(col("rn") <= n)
+      .select(key, other)
+
   /** DuckDB spelling of [[encNode]]. */
   private def encSql(e: String): String =
     s"(substring($e, 2, 1)::BIGINT * 1000000000000 + string_split($e, '-')[2]::BIGINT)"
@@ -79,9 +101,7 @@ object Graph {
     */
   private def undInt(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     graft.Caches.memo(s, dir, "graph_und_int") {
-      val e = edgesInt(s, dir)
-      e.union(e.select(col("b").as("a"), col("a").as("b"))).distinct()
-        .transform(graft.Iterative.truncate)
+      symmetrize(edgesInt(s, dir)).transform(graft.Iterative.truncate)
     }
 
   /** [[undInt]] without self-loops. */
@@ -133,6 +153,21 @@ object Graph {
        |  SELECT ${encSql("src")} AS a, ${encSql("dst")} AS b FROM links
        |  WHERE link_type = 'blocks' AND project_key = 'P1')""".stripMargin
 
+  /** The oracle's symmetrized distinct adjacency `und`: with self-loops
+    * (the twin of [[undInt]]) and without them (of [[undIntNS]]).
+    */
+  private val undSql: String =
+    """und AS (
+      |  SELECT DISTINCT a, b FROM (
+      |    SELECT a, b FROM eint
+      |    UNION ALL
+      |    SELECT b, a FROM eint))""".stripMargin
+  private val undNsSql: String =
+    """und AS (
+      |  SELECT DISTINCT a, b FROM (
+      |    SELECT a, b FROM eint UNION ALL SELECT b, a FROM eint)
+      |  WHERE a <> b)""".stripMargin
+
   /** Default edge-count gate below which the iterative operators replay on
     * the driver — ONE constant shared by every size-gated replay so a tuning
     * change cannot silently leave one gate behind. Its callers, all through
@@ -140,7 +175,9 @@ object Graph {
     * graph_components_converged, and the near-dup
     * resolves `Dedup.clusterLabels`, `Dedup.verifiedClusterLabels` and
     * pipe_dedup_semantic), [[sccKnots]] (graph_scc_bounded),
-    * [[componentsBigStar]], [[lpaLabels]] and k-core ([[kcoreOf]]).
+    * [[bigStar]] (componentsBigStar and the star-contraction cards),
+    * [[lpaRun]] (lpaLabels and graph_lpa_communities) and k-core
+    * ([[kcoreOf]]).
     */
   private[graft] val DriverGateEdges = 1000000L
 
@@ -366,22 +403,43 @@ object Graph {
     val deg = canonical.select(col("a").as("n"))
       .unionByName(canonical.select(col("b").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
-    val lowFirst = col("da") < col("db") ||
-      (col("da") === col("db") && col("a") < col("b"))
-    canonical
+    orientByDegree(canonical
       .join(deg.select(col("n").as("a"), col("d").as("da")), Seq("a"))
-      .join(deg.select(col("n").as("b"), col("d").as("db")), Seq("b"))
-      .select(when(lowFirst, col("a")).otherwise(col("b")).as("s"),
-        when(lowFirst, col("b")).otherwise(col("a")).as("t"))
+      .join(deg.select(col("n").as("b"), col("d").as("db")), Seq("b")))
   }
 
+  /** The orientation step of [[orientEdges]] over edges that already carry
+    * their endpoint degrees `(a, b, da, db)` — k-truss carries them through
+    * its peels and orients map-side with zero joins.
+    */
+  private def orientByDegree(e: DataFrame): DataFrame = {
+    val lowFirst = col("da") < col("db") ||
+      (col("da") === col("db") && col("a") < col("b"))
+    e.select(when(lowFirst, col("a")).otherwise(col("b")).as("s"),
+      when(lowFirst, col("b")).otherwise(col("a")).as("t"))
+  }
+
+  /** THE oriented wedge enumeration: over a degree-ordered frame `o (s, t)`
+    * ([[orientEdges]]), every pair of out-neighbours `v < x` of a common
+    * source `s`, as `(s, v, x)`. Out-degrees are bounded by the degeneracy,
+    * so this is O(Σ outdeg²) ≤ O(|E|^1.5) rows where the unoriented wedge
+    * join is per-hub quadratic. [[triangles]] counts these as its wedges.
+    */
+  private def wedges(o: DataFrame): DataFrame =
+    o.select(col("s"), col("t").as("t1"))
+      .join(o.select(col("s"), col("t").as("t2")), Seq("s"))
+      .filter(col("t1") < col("t2"))
+      .select(col("s"), col("t1").as("v"), col("t2").as("x"))
+
+  /** The [[wedges]] a canonical `(a < b)` edge of `canon` closes: every
+    * triangle of the oriented graph EXACTLY once, as `(s, v, x)`, closed by
+    * an equi-join — never an OR-join, never a cross product. Shared by
+    * [[triangles]], [[clusteringCoeff]] and the [[ktruss]] support count.
+    */
+  private def closedWedges(o: DataFrame, canon: DataFrame): DataFrame =
+    wedges(o).join(canon.select(col("a").as("v"), col("b").as("x")), Seq("v", "x"))
+
   private val components = {
-    val undSql =
-      """und AS (
-        |  SELECT DISTINCT a, b FROM (
-        |    SELECT a, b FROM eint
-        |    UNION ALL
-        |    SELECT b, a FROM eint))""".stripMargin
     val adjSql =
       """adj AS (
         |  SELECT a, b FROM und
@@ -413,6 +471,73 @@ object Graph {
     }
   }
 
+  private val RankScale = 1000000000L // 1e9 fixed-point
+  private val RankBase = 150000000L   // 0.15 * RankScale
+  private val PrRounds = 3
+
+  /** `ed (a, b, d)`: distinct directed edges `e`, each pre-joined ONCE with
+    * its source's out-degree `d` — the edge side of every [[rankChain]]
+    * round. Truncated like the rounds; a persisted `ed` fragment was tried
+    * and REVERTED: +0.5-0.7 s per card — the cached frame keeps its
+    * AQE-coalesced layout, where the localCheckpoint keeps the shuffle's
+    * parallelism.
+    */
+  private def rankEdges(e: DataFrame): DataFrame = {
+    val outd = e.groupBy(col("a").as("node")).agg(count(lit(1)).as("d"))
+    e.join(outd.withColumnRenamed("node", "a"), Seq("a"))
+      .transform(graft.Iterative.truncate)
+  }
+
+  /** Every endpoint of `ed` once. One exploded scan, so the distinct's
+    * stage reads each partition of `ed` in ONE task: as the first reader of
+    * a lazily truncated `ed` (graph_ppr), two tasks per partition would race
+    * for its not-yet-stored blocks ("Block rdd_N_0 already exists").
+    */
+  private def rankNodes(ed: DataFrame): DataFrame =
+    ed.select(explode(array(col("a"), col("b"))).as("node")).distinct()
+
+  /** THE integer PageRank contribution chain of [[pagerank]],
+    * [[pagerankDeltaQ]] and [[pprQ]] over [[rankEdges]]' `ed`: the sparse
+    * inbound sums `c1 … c_rounds` as `(node, s)`. A node absent from `c_i`
+    * holds just its teleport mass, so a round is ONE `ed ⟕ c_{i-1}` join +
+    * ONE aggregate of `rank div d`, with rank = `teleport + (85 * s) div
+    * 100` — never a dense per-round rank table. Without `seeds` every node
+    * starts at SCALE and teleports BASE; with them only the seeds do, at
+    * BASE (round 1 semi-joins `ed` to them). Every round is truncated for
+    * the plan-depth bound of [[minRounds]] (cold run 21 s → 3 s).
+    */
+  private def rankChain(ed: DataFrame, rounds: Int,
+      seeds: Option[DataFrame]): Seq[DataFrame] = {
+    val (starts, r0) = seeds.fold((ed, RankScale))(sd =>
+      (ed.join(sd.withColumnRenamed("node", "a"), Seq("a"), "left_semi"), RankBase))
+    val c1 = starts.groupBy(col("b").as("node"))
+      .agg(sum(expr(s"$r0 div d")).as("s")).transform(graft.Iterative.truncate)
+    val teleport: DataFrame => DataFrame = seeds.fold(
+      (df: DataFrame) => df.withColumn("t", lit(RankBase)))(sd =>
+      _.join(sd.select(col("node").as("a"), lit(RankBase).as("t")), Seq("a"), "left"))
+    (2 to rounds).scanLeft(c1) { (prev, _) =>
+      teleport(ed.join(prev.withColumnRenamed("node", "a"), Seq("a"), "left"))
+        .groupBy(col("b").as("node"))
+        .agg(sum(expr("(coalesce(t, 0L) + (85 * coalesce(s, 0L)) div 100) div d")).as("s"))
+        .transform(graft.Iterative.truncate)
+    }
+  }
+
+  /** The oracle's unseeded [[rankChain]]: `c1` plus the chained rounds
+    * over the `ed` CTE, shared by [[pagerank]] and [[pagerankDeltaQ]].
+    */
+  private val rankChainSql: String = {
+    val c1 = s"c1 AS (SELECT b AS node, sum($RankScale // d)::BIGINT AS s FROM ed GROUP BY b)"
+    val steps = (2 to PrRounds).map { i =>
+      s"""c$i AS (
+         |  SELECT ed.b AS node,
+         |    sum(($RankBase + (85 * coalesce(p.s, 0)) // 100) // ed.d)::BIGINT AS s
+         |  FROM ed LEFT JOIN c${i - 1} p ON p.node = ed.a
+         |  GROUP BY ed.b)""".stripMargin
+    }.mkString(",\n")
+    s"$c1,\n$steps"
+  }
+
   /** Bounded-iteration PageRank over the directed edge slice, in EXACT
     * integer arithmetic so both engines hash-match bit-for-bit. Ranks are
     * scaled by 1e9 and every step is integer math: contribution =
@@ -422,73 +547,35 @@ object Graph {
     * ulps — unhashable cross-engine; integer-scaled PageRank is
     * order-independent (integer + is associative) at a precision (1e-9) far
     * below any ranking use. Same O(k·|E|) shape as components: k rounds =
-    * k (shuffle join + sum-aggregate), dangling mass deliberately dropped
-    * (deterministic, and at 100 TB saves the global dangling-sum barrier
-    * per round). Top-k selection happens on the integer node ids; the
-    * human-readable key is re-derived only for the 20 output rows.
+    * k (shuffle join + sum-aggregate) of [[rankChain]], dangling mass
+    * deliberately dropped (deterministic, and at 100 TB saves the global
+    * dangling-sum barrier per round). Top-k selection happens on the
+    * integer node ids; the human-readable key is re-derived only for the 20
+    * output rows.
     */
   private val pagerank = {
-    val SCALE = "1000000000"    // 1e9 fixed-point
-    val BASE = "150000000"      // 0.15 * SCALE
-    val prRounds = 3
     val edgesSql =
       """e AS (SELECT DISTINCT a, b FROM eint),
         |nodes AS (SELECT a AS node FROM e UNION SELECT b FROM e),
         |outd AS (SELECT a AS node, count(*) AS d FROM e GROUP BY a),
         |ed AS (SELECT e.a, e.b, o.d FROM e JOIN outd o ON o.node = e.a)""".stripMargin
-    // Sparse rank representation: c_i holds the inbound contribution sum per
-    // RECEIVING node; a node absent from c_i has pr_i = BASE exactly (no
-    // inbound mass), so each round is ONE left join (ed ⟕ c_{i-1}, resolving
-    // each source's previous rank) + ONE aggregate — never a dense
-    // nodes-sized rank table rebuilt per round.
-    val c1 = s"c1 AS (SELECT b AS node, sum($SCALE // d)::BIGINT AS s FROM ed GROUP BY b)"
-    val steps = (2 to prRounds).map { i =>
-      s"""c$i AS (
-         |  SELECT ed.b AS node,
-         |    sum(($BASE + (85 * coalesce(p.s, 0)) // 100) // ed.d)::BIGINT AS s
-         |  FROM ed LEFT JOIN c${i - 1} p ON p.node = ed.a
-         |  GROUP BY ed.b)""".stripMargin
-    }.mkString(",\n")
     q("graph_pagerank",
       s"""WITH ${Oracle.linksCte},
          |$edgesIntSql,
          |$edgesSql,
-         |$c1,
-         |$steps,
+         |$rankChainSql,
          |rk AS (
          |  SELECT n.node,
-         |    CAST($BASE + (85 * coalesce(c.s, 0)) // 100 AS BIGINT) AS pr
-         |  FROM nodes n LEFT JOIN c$prRounds c ON c.node = n.node)
+         |    CAST($RankBase + (85 * coalesce(c.s, 0)) // 100 AS BIGINT) AS pr
+         |  FROM nodes n LEFT JOIN c$PrRounds c ON c.node = n.node)
          |SELECT 'P' || CAST(node // 1000000000000 AS STRING) || '-'
          |    || CAST(node % 1000000000000 AS STRING) AS node_key, pr
          |FROM (SELECT node, pr FROM rk ORDER BY pr DESC, node LIMIT 20)
          |ORDER BY pr DESC, node_key""".stripMargin) { (s, dir) =>
-      val e = edgesInt(s, dir).distinct()
-      val outd = e.groupBy(col("a").as("node")).agg(count(lit(1)).as("d"))
-      // pre-join each edge with its source's out-degree ONCE — the per-round
-      // join then touches only (a, b, d) + the sparse contribution table.
-      // localCheckpoint per round for the same plan-depth bound as
-      // components above (cold run measured 21s → 3s: the un-truncated
-      // 3-round plan compiled a distinct whole-stage class per depth).
-      // (A persisted `ed` fragment was tried and REVERTED: the PageRank
-      // family regressed +0.5-0.7 s per card against it — the cached frame
-      // keeps its AQE-coalesced layout and every per-round join starts
-      // from it, where the localCheckpoint keeps the shuffle's parallelism.)
-      val ed = e.join(outd.withColumnRenamed("node", "a"), Seq("a"))
-        .transform(graft.Iterative.truncate)
-      var contrib = ed.groupBy(col("b").as("node"))
-        .agg(sum(expr(s"$SCALE div d")).as("s")).transform(graft.Iterative.truncate)
-      (2 to prRounds).foreach { _ =>
-        contrib = ed.join(contrib.withColumnRenamed("node", "a"), Seq("a"), "left")
-          .groupBy(col("b").as("node"))
-          .agg(sum(expr(s"($BASE + (85 * coalesce(s, 0L)) div 100) div d")).as("s"))
-          .transform(graft.Iterative.truncate)
-      }
-      val nodes = ed.select(col("a").as("node"))
-        .union(ed.select(col("b").as("node"))).distinct()
-      nodes.join(contrib, Seq("node"), "left")
+      val ed = rankEdges(edgesInt(s, dir).distinct())
+      rankNodes(ed).join(rankChain(ed, PrRounds, None).last, Seq("node"), "left")
         .select(col("node"),
-          (lit(BASE.toLong) + expr("85 * coalesce(s, 0L) div 100")).as("pr"))
+          (lit(RankBase) + expr("85 * coalesce(s, 0L) div 100")).as("pr"))
         .orderBy(desc("pr"), col("node")).limit(20)
         .select(decNode(col("node")).as("node_key"), col("pr"))
         .orderBy(desc("pr"), col("node_key"))
@@ -503,26 +590,15 @@ object Graph {
     * monotonically on this slice.
     */
   private val pagerankDeltaQ = {
-    val SCALE = "1000000000"
-    val BASE = "150000000"
     val edgesSql =
       """e AS (SELECT DISTINCT a, b FROM eint),
         |outd AS (SELECT a AS node, count(*) AS d FROM e GROUP BY a),
         |ed AS (SELECT e.a, e.b, o.d FROM e JOIN outd o ON o.node = e.a)""".stripMargin
-    val c1 = s"c1 AS (SELECT b AS node, sum($SCALE // d)::BIGINT AS s FROM ed GROUP BY b)"
-    val steps = (2 to 3).map { i =>
-      s"""c$i AS (
-         |  SELECT ed.b AS node,
-         |    sum(($BASE + (85 * coalesce(p.s, 0)) // 100) // ed.d)::BIGINT AS s
-         |  FROM ed LEFT JOIN c${i - 1} p ON p.node = ed.a
-         |  GROUP BY ed.b)""".stripMargin
-    }.mkString(",\n")
     q("graph_pagerank_delta",
       s"""WITH ${Oracle.linksCte},
          |$edgesIntSql,
          |$edgesSql,
-         |$c1,
-         |$steps,
+         |$rankChainSql,
          |d1 AS (SELECT 1 AS round, sum((85 * s) // 100)::BIGINT AS l1_delta FROM c1),
          |d2 AS (
          |  SELECT 2 AS round,
@@ -538,27 +614,16 @@ object Graph {
          |  SELECT * FROM d1 UNION ALL SELECT * FROM d2 UNION ALL SELECT * FROM d3)
          |ORDER BY round""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val e = edgesInt(s, dir).distinct()
-      val outd = e.groupBy(col("a").as("node")).agg(count(lit(1)).as("d"))
-      val ed = e.join(outd.withColumnRenamed("node", "a"), Seq("a"))
-        .transform(graft.Iterative.truncate)
-      var contrib = ed.groupBy(col("b").as("node"))
-        .agg(sum(expr(s"$SCALE div d")).as("s")).transform(graft.Iterative.truncate)
-      val deltas = scala.collection.mutable.ArrayBuffer[Long](
-        contrib.agg(sum(expr("85 * s div 100"))).head.getLong(0))
-      (2 to 3).foreach { _ =>
-        val next = ed.join(contrib.withColumnRenamed("node", "a"), Seq("a"), "left")
-          .groupBy(col("b").as("node"))
-          .agg(sum(expr(s"($BASE + (85 * coalesce(s, 0L)) div 100) div d")).as("s"))
-          .transform(graft.Iterative.truncate)
-        deltas += next.withColumnRenamed("s", "sn")
-          .join(contrib.withColumnRenamed("s", "sp"), Seq("node"), "full_outer")
+      val cs = rankChain(rankEdges(edgesInt(s, dir).distinct()), PrRounds, None)
+      val first = cs.head.agg(sum(expr("85 * s div 100"))).head.getLong(0)
+      val moves = cs.sliding(2).map { case Seq(prev, next) =>
+        next.withColumnRenamed("s", "sn")
+          .join(prev.withColumnRenamed("s", "sp"), Seq("node"), "full_outer")
           .agg(sum(abs(expr("85 * coalesce(sn, 0L) div 100") -
             expr("85 * coalesce(sp, 0L) div 100"))).cast("long"))
           .head.getLong(0)
-        contrib = next
       }
-      deltas.toSeq.zipWithIndex
+      (first +: moves.toSeq).zipWithIndex
         .map { case (d, i) => (i + 1L, d) }
         .toDF("round", "l1_delta")
         .orderBy("round")
@@ -615,6 +680,26 @@ object Graph {
     }
   }
 
+  /** The oracle twin of [[orientedInt]] shared by triangles and clustering
+    * coeff: canonical edges `und2`, their degrees `deg`, orientation `o`.
+    */
+  private val orientedSql: String =
+    """und2 AS (
+      |  SELECT DISTINCT least(a, b) AS a, greatest(a, b) AS b
+      |  FROM eint WHERE a <> b),
+      |deg AS (
+      |  SELECT n, count(*) AS d FROM (
+      |    SELECT a AS n FROM und2 UNION ALL SELECT b FROM und2)
+      |  GROUP BY n),
+      |o AS (
+      |  SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND und2.a < und2.b)
+      |         THEN und2.a ELSE und2.b END AS s,
+      |         CASE WHEN da.d < db.d OR (da.d = db.d AND und2.a < und2.b)
+      |         THEN und2.b ELSE und2.a END AS t
+      |  FROM und2
+      |  JOIN deg da ON da.n = und2.a
+      |  JOIN deg db ON db.n = und2.b)""".stripMargin
+
   /** Triangle count + wedge closure over the undirected edge slice, via the
     * DEGREE-ORDERED orientation: every edge points from its (degree, id)-
     * smaller endpoint, so each node's out-degree is bounded by the graph
@@ -628,21 +713,7 @@ object Graph {
     */
   private val triangles = {
     val orientSql =
-      """und2 AS (
-        |  SELECT DISTINCT least(a, b) AS a, greatest(a, b) AS b
-        |  FROM eint WHERE a <> b),
-        |deg AS (
-        |  SELECT n, count(*) AS d FROM (
-        |    SELECT a AS n FROM und2 UNION ALL SELECT b FROM und2)
-        |  GROUP BY n),
-        |o AS (
-        |  SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND und2.a < und2.b)
-        |         THEN und2.a ELSE und2.b END AS s,
-        |         CASE WHEN da.d < db.d OR (da.d = db.d AND und2.a < und2.b)
-        |         THEN und2.b ELSE und2.a END AS t
-        |  FROM und2
-        |  JOIN deg da ON da.n = und2.a
-        |  JOIN deg db ON db.n = und2.b),
+      s"""$orientedSql,
         |w AS (
         |  SELECT least(o1.t, o2.t) AS v, greatest(o1.t, o2.t) AS x
         |  FROM o o1 JOIN o o2 ON o1.s = o2.s AND o1.t < o2.t),
@@ -659,15 +730,9 @@ object Graph {
          |  CASE WHEN wc.n_wedges = 0 THEN 0.0
          |       ELSE tc.n_triangles::DOUBLE / wc.n_wedges END AS closure
          |FROM wc, tc""".stripMargin) { (s, dir) =>
-      val und = canonInt(s, dir)
       val o = orientedInt(s, dir)
-      val w = o.select(col("s"), col("t").as("t1"))
-        .join(o.select(col("s"), col("t").as("t2")), Seq("s"))
-        .filter(col("t1") < col("t2"))
-        .select(least(col("t1"), col("t2")).as("a"),
-          greatest(col("t1"), col("t2")).as("b"))
-      val wc = w.agg(count(lit(1)).as("n_wedges"))
-      val tc = w.join(und, Seq("a", "b"))
+      val wc = wedges(o).agg(count(lit(1)).as("n_wedges"))
+      val tc = closedWedges(o, canonInt(s, dir))
         .agg(count(lit(1)).as("n_triangles"))
       wc.crossJoin(tc)
         .select(col("n_wedges"), col("n_triangles"),
@@ -676,6 +741,37 @@ object Graph {
             .as("closure"))
     }
   }
+
+  /** The oracle's TRUE components `comp (node, component)` of `und`, by a
+    * transitive-closure recursive CTE (fine on the bounded slice; the Spark
+    * side never materializes a closure), and their size table.
+    */
+  private val compSql: String =
+    """comp AS (
+      |  WITH RECURSIVE reach AS (
+      |    SELECT node, r FROM (
+      |      SELECT a AS node, a AS r FROM und
+      |      UNION SELECT a AS node, b AS r FROM und)
+      |    UNION
+      |    SELECT reach.node, und.b AS r
+      |    FROM reach JOIN und ON und.a = reach.r)
+      |  SELECT node, min(r) AS component FROM reach GROUP BY node)""".stripMargin
+  private val compSizesSql: String =
+    """SELECT component, count(*)::BIGINT AS n_nodes
+      |FROM comp GROUP BY component
+      |ORDER BY component""".stripMargin
+
+  /** Component sizes of the whole slice — the oracle of every card whose
+    * answer must equal a from-scratch components run.
+    */
+  private val sliceComponentsSql: String =
+    s"""WITH ${Oracle.linksCte},
+       |$edgesIntSql,
+       |und AS (
+       |  SELECT DISTINCT a, b FROM (
+       |    SELECT a, b FROM eint UNION ALL SELECT b, a FROM eint)),
+       |$compSql
+       |$compSizesSql""".stripMargin
 
   /** Connected components run TO CONVERGENCE — [[minLabels]] until stable
     * over [[undInt]], the production form of [[components]], which stays at
@@ -702,15 +798,7 @@ object Graph {
        |und AS (
        |  SELECT DISTINCT a, b FROM (
        |    SELECT a, b FROM eint UNION ALL SELECT b, a FROM eint)),
-       |comp AS (
-       |  WITH RECURSIVE reach AS (
-       |    SELECT node, r FROM (
-       |      SELECT a AS node, a AS r FROM und
-       |      UNION SELECT a AS node, b AS r FROM und)
-       |    UNION
-       |    SELECT reach.node, und.b AS r
-       |    FROM reach JOIN und ON und.a = reach.r)
-       |  SELECT node, min(r) AS component FROM reach GROUP BY node),
+       |$compSql,
        |bfs AS (
        |  WITH RECURSIVE walk AS (
        |    SELECT DISTINCT component AS m, component AS node, 0 AS d FROM comp
@@ -769,26 +857,38 @@ object Graph {
     * pass whose edge set matched its predecessor's.
     */
   def componentsBigStar(edges: DataFrame, maxRounds: Int = 50,
-      driverGateEdges: Long = DriverGateEdges, canonPre: DataFrame = null,
-      nodesPre: DataFrame = null): (DataFrame, Int) = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    lazy val e0 = edges.toDF("a", "b")
+      driverGateEdges: Long = DriverGateEdges): (DataFrame, Int) = {
+    val e = edges.toDF("a", "b")
       .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-    // every endpoint keeps a label even if its only edges are self-loops
-    val allNodes = if (nodesPre != null) nodesPre
-      else e0.select(col("a").as("node"))
-        .union(e0.select(col("b").as("node"))).distinct()
-    // canonical (child, parent): child > parent, self-loops dropped.
-    // canonPre lets the full-slice cards hand in the shared fragment (its
-    // (least, greatest) orientation is swapped to (greatest, least) here)
-    val canon0 = if (canonPre != null)
-      canonPre.select(greatest(col("a"), col("b")).as("a"),
-        least(col("a"), col("b")).as("b"))
-    else e0.filter(col("a") =!= col("b"))
-      .select(greatest(col("a"), col("b")).as("a"),
-        least(col("a"), col("b")).as("b"))
-      .distinct()
+    bigStar(childParent(e.filter(col("a") =!= col("b"))).distinct(),
+      e.select(col("a").as("node")).union(e.select(col("b").as("node"))).distinct(),
+      maxRounds, driverGateEdges)
+  }
+
+  /** Distinct self-loop-free `(a, b)` edges as canonical `(child, parent)`
+    * pairs, child > parent — the form [[bigStar]] contracts.
+    */
+  private def childParent(e: DataFrame): DataFrame =
+    e.select(greatest(col("a"), col("b")).as("a"), least(col("a"), col("b")).as("b"))
+
+  /** The slice's star-contraction components over the memoized frames:
+    * [[canonInt]] as the contracted edges and [[undInt]]'s endpoints as the
+    * node set (self-loop-only nodes keep their own label).
+    */
+  private def sliceBigStar(s: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame =
+    bigStar(childParent(canonInt(s, dir)),
+      undInt(s, dir).select(col("a").as("node")).distinct(),
+      50, DriverGateEdges)._1
+
+  /** The [[componentsBigStar]] kernel over distinct canonical
+    * `(child, parent)` pairs `canon0` and the node set `allNodes`, every
+    * one of which keeps a label even if its only edges are self-loops.
+    */
+  private def bigStar(canon0: DataFrame, allNodes: DataFrame, maxRounds: Int,
+      driverGateEdges: Long): (DataFrame, Int) = {
+    val spark = canon0.sparkSession
+    import spark.implicits._
     val gathered = gatherUnder(canon0, driverGateEdges)
     if (gathered.isDefined) {
       // flat-array replay of the identical large/small-star rounds: the
@@ -907,27 +1007,8 @@ object Graph {
     * O(log n) bound instead on a long chain.
     */
   private val componentsBigStarQ = q("graph_components_bigstar",
-    s"""WITH ${Oracle.linksCte},
-       |$edgesIntSql,
-       |und AS (
-       |  SELECT DISTINCT a, b FROM (
-       |    SELECT a, b FROM eint UNION ALL SELECT b, a FROM eint)),
-       |comp AS (
-       |  WITH RECURSIVE reach AS (
-       |    SELECT node, r FROM (
-       |      SELECT a AS node, a AS r FROM und
-       |      UNION SELECT a AS node, b AS r FROM und)
-       |    UNION
-       |    SELECT reach.node, und.b AS r
-       |    FROM reach JOIN und ON und.a = reach.r)
-       |  SELECT node, min(r) AS component FROM reach GROUP BY node)
-       |SELECT component, count(*)::BIGINT AS n_nodes
-       |FROM comp GROUP BY component
-       |ORDER BY component""".stripMargin) { (s, dir) =>
-    val (labels, _) = componentsBigStar(edgesInt(s, dir),
-      canonPre = canonInt(s, dir),
-      nodesPre = undInt(s, dir).select(col("a").as("node")).distinct())
-    labels.groupBy(col("lbl").as("component"))
+    sliceComponentsSql) { (s, dir) =>
+    sliceBigStar(s, dir).groupBy(col("lbl").as("component"))
       .agg(count(lit(1)).as("n_nodes"))
       .orderBy("component")
   }
@@ -996,23 +1077,7 @@ object Graph {
     * recompute, which is the entire contract.
     */
   private val componentsIncrementalQ = q("graph_components_incremental",
-    s"""WITH ${Oracle.linksCte},
-       |$edgesIntSql,
-       |und AS (
-       |  SELECT DISTINCT a, b FROM (
-       |    SELECT a, b FROM eint UNION ALL SELECT b, a FROM eint)),
-       |comp AS (
-       |  WITH RECURSIVE reach AS (
-       |    SELECT node, r FROM (
-       |      SELECT a AS node, a AS r FROM und
-       |      UNION SELECT a AS node, b AS r FROM und)
-       |    UNION
-       |    SELECT reach.node, und.b AS r
-       |    FROM reach JOIN und ON und.a = reach.r)
-       |  SELECT node, min(r) AS component FROM reach GROUP BY node)
-       |SELECT component, count(*)::BIGINT AS n_nodes
-       |FROM comp GROUP BY component
-       |ORDER BY component""".stripMargin) { (s, dir) =>
+    sliceComponentsSql) { (s, dir) =>
     val all = edgesInt(s, dir)
     val base = all.filter(pmod(col("a") + col("b"), lit(10)) =!= 0)
     val delta = all.filter(pmod(col("a") + col("b"), lit(10)) === 0)
@@ -1084,25 +1149,12 @@ object Graph {
        |und AS (
        |  SELECT DISTINCT a, b FROM (
        |    SELECT a, b FROM keep UNION ALL SELECT b, a FROM keep)),
-       |comp AS (
-       |  WITH RECURSIVE reach AS (
-       |    SELECT node, r FROM (
-       |      SELECT a AS node, a AS r FROM und
-       |      UNION SELECT a AS node, b AS r FROM und)
-       |    UNION
-       |    SELECT reach.node, und.b AS r
-       |    FROM reach JOIN und ON und.a = reach.r)
-       |  SELECT node, min(r) AS component FROM reach GROUP BY node)
-       |SELECT component, count(*)::BIGINT AS n_nodes
-       |FROM comp GROUP BY component
-       |ORDER BY component""".stripMargin) { (s, dir) =>
+       |$compSql
+       |$compSizesSql""".stripMargin) { (s, dir) =>
     val all = edgesInt(s, dir)
     val rem = all.filter(pmod(col("a") + col("b"), lit(10)) =!= 0)
     val del = all.filter(pmod(col("a") + col("b"), lit(10)) === 0)
-    val (baseLabels, _) = componentsBigStar(all,
-      canonPre = canonInt(s, dir),
-      nodesPre = undInt(s, dir).select(col("a").as("node")).distinct())
-    componentsDecremental(baseLabels, rem, del)
+    componentsDecremental(sliceBigStar(s, dir), rem, del)
       .groupBy(col("lbl").as("component"))
       .agg(count(lit(1)).as("n_nodes"))
       .orderBy("component")
@@ -1125,12 +1177,6 @@ object Graph {
   private val kcore = {
     val k = 2
     val peels = 3
-    val undSql =
-      """und AS (
-        |  SELECT DISTINCT a, b FROM (
-        |    SELECT a, b FROM eint
-        |    UNION ALL
-        |    SELECT b, a FROM eint))""".stripMargin
     val steps = (1 to peels).map { i =>
       s"""keep$i AS (
          |  SELECT a AS node FROM e${i - 1} GROUP BY a HAVING count(*) >= $k),
@@ -1217,12 +1263,6 @@ object Graph {
     */
   private val lpaCommunities = {
     val lpaRounds = 3
-    val undSql =
-      """und AS (
-        |  SELECT DISTINCT a, b FROM (
-        |    SELECT a, b FROM eint
-        |    UNION ALL
-        |    SELECT b, a FROM eint))""".stripMargin
     val steps = (1 to lpaRounds).map { i =>
       s"""c$i AS (
          |  SELECT node, lbl FROM (
@@ -1243,7 +1283,7 @@ object Graph {
          |  min(lbl)::BIGINT AS sample_label
          |FROM (SELECT lbl, count(*) AS sz FROM c$lpaRounds GROUP BY lbl)
          |GROUP BY sz ORDER BY sz""".stripMargin) { (s, dir) =>
-      lpaLabels(edgesInt(s, dir), lpaRounds, und0 = undInt(s, dir))
+      lpaRun(undInt(s, dir), lpaRounds, DriverGateEdges)
         .groupBy("lbl").agg(count(lit(1)).as("sz"))
         .groupBy(col("sz").as("n_members"))
         .agg(count(lit(1)).as("n_communities"), min(col("lbl")).as("sample_label"))
@@ -1251,16 +1291,20 @@ object Graph {
     }
   }
 
-  /** `rounds` synchronous majority-label steps over the symmetrized edge
-    * list → `(node, lbl)`. Size-gated like [[minLabels]]: a
-    * broadcast-sized slice replays identical rounds on the driver, large
-    * slices run the distributed join + two-level aggregate loop with
-    * truncated lineage.
+  /** `rounds` synchronous majority-label steps over the directed `(a, b)`
+    * edges `e` → `(node, lbl)`: [[lpaRun]] over their [[symmetrize]]d
+    * adjacency.
     */
   private[graft] def lpaLabels(e: DataFrame, rounds: Int,
-      driverGateEdges: Long = DriverGateEdges, und0: DataFrame = null): DataFrame = {
-    val und = if (und0 != null) und0
-      else e.union(e.select(col("b").as("a"), col("a").as("b"))).distinct()
+      driverGateEdges: Long = DriverGateEdges): DataFrame =
+    lpaRun(symmetrize(e), rounds, driverGateEdges)
+
+  /** LPA over a symmetric adjacency `und (a, b)` (the card passes
+    * [[undInt]]). Size-gated like [[minLabels]]: a broadcast-sized slice
+    * replays identical rounds on the driver, large slices run the
+    * distributed join + two-level aggregate loop with truncated lineage.
+    */
+  private def lpaRun(und: DataFrame, rounds: Int, driverGateEdges: Long): DataFrame = {
     val gathered = gatherUnder(und, driverGateEdges)
     if (gathered.isDefined) {
       // primitive CSR replay: the boxed form built TWO maps per node per
@@ -1302,7 +1346,7 @@ object Graph {
         lbl = next
         r += 1
       }
-      val spark = e.sparkSession
+      val spark = und.sparkSession
       import spark.implicits._
       return g.ids.indices.map(i => (g.ids(i), lbl(i))).toDF("node", "lbl")
     }
@@ -1414,29 +1458,19 @@ object Graph {
         .join(deg.select(col("n").as("a"), col("dg").as("da")), Seq("a"))
         .join(deg.select(col("n").as("b"), col("dg").as("db")), Seq("b"))
         .transform(graft.Iterative.truncate)
-      def report(i: Int, e: DataFrame): DataFrame = {
-        val nodes = e.select(explode(array(col("a"), col("b"))).as("n"))
-          .agg(countDistinct("n").as("n_nodes"))
-        e.agg(count(lit(1)).as("n_edges"))
-          .crossJoin(nodes)
+      // one aggregate over the endpoint rows (two per edge, a < b): a single
+      // stage reads the truncated frame, so no two tasks race for its blocks
+      def report(i: Int, e: DataFrame): DataFrame =
+        e.select(explode(array(col("a"), col("b"))).as("n"))
+          .agg(call_function("div", count(lit(1)), lit(2L)).as("n_edges"),
+            countDistinct("n").as("n_nodes"))
           .select(lit(i).as("round"), col("n_edges"), col("n_nodes"))
-      }
-      val lowFirst = col("da") < col("db") ||
-        (col("da") === col("db") && col("a") < col("b"))
       val perRound = report(0, edges) +: (1 to peels).map { i =>
-        // map-side orientation off the carried keys — zero joins
-        val o = edges.select(when(lowFirst, col("a")).otherwise(col("b")).as("s"),
-          when(lowFirst, col("b")).otherwise(col("a")).as("t"))
-        val tr = o.select(col("s"), col("t").as("t1"))
-          .join(o.select(col("s"), col("t").as("t2")), Seq("s"))
-          .filter(col("t1") < col("t2"))
-          .select(col("s").as("u"), least(col("t1"), col("t2")).as("v"),
-            greatest(col("t1"), col("t2")).as("x"))
-          .join(edges.select(col("a").as("v"), col("b").as("x")), Seq("v", "x"))
-        val sup = tr.select(least(col("u"), col("v")).as("a"),
-            greatest(col("u"), col("v")).as("b"))
-          .unionByName(tr.select(least(col("u"), col("x")).as("a"),
-            greatest(col("u"), col("x")).as("b")))
+        val tr = closedWedges(orientByDegree(edges), edges)
+        val sup = tr.select(least(col("s"), col("v")).as("a"),
+            greatest(col("s"), col("v")).as("b"))
+          .unionByName(tr.select(least(col("s"), col("x")).as("a"),
+            greatest(col("s"), col("x")).as("b")))
           .unionByName(tr.select(col("v").as("a"), col("x").as("b")))
           .groupBy("a", "b").agg(count(lit(1)).as("sup"))
         edges = edges.join(sup, Seq("a", "b"), "left")
@@ -1488,27 +1522,11 @@ object Graph {
     * one count per node. lcc lands in integer nano-units (one floored
     * division of exact integers), top-25 via TakeOrderedAndProject.
     */
-  private val clusteringCoeff = {
-    val orientCtes =
-      """und2 AS (
-        |  SELECT DISTINCT least(a, b) AS a, greatest(a, b) AS b
-        |  FROM eint WHERE a <> b),
-        |deg AS (
-        |  SELECT n, count(*) AS d FROM (
-        |    SELECT a AS n FROM und2 UNION ALL SELECT b FROM und2)
-        |  GROUP BY n),
-        |o AS (
-        |  SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND und2.a < und2.b)
-        |         THEN und2.a ELSE und2.b END AS s,
-        |         CASE WHEN da.d < db.d OR (da.d = db.d AND und2.a < und2.b)
-        |         THEN und2.b ELSE und2.a END AS t
-        |  FROM und2
-        |  JOIN deg da ON da.n = und2.a
-        |  JOIN deg db ON db.n = und2.b)""".stripMargin
+  private val clusteringCoeff =
     q("graph_clustering_coeff",
       s"""WITH ${Oracle.linksCte},
          |$edgesIntSql,
-         |$orientCtes,
+         |$orientedSql,
          |wv AS (
          |  SELECT o1.s, least(o1.t, o2.t) AS v, greatest(o1.t, o2.t) AS x
          |  FROM o o1 JOIN o o2 ON o1.s = o2.s AND o1.t < o2.t),
@@ -1526,23 +1544,12 @@ object Graph {
          |FROM deg d LEFT JOIN pern p ON p.n = d.n
          |WHERE d.d >= 2
          |ORDER BY lcc_nano DESC, node LIMIT 25""".stripMargin) { (s, dir) =>
-      val und = canonInt(s, dir)
-      val deg = und.select(col("a").as("n"))
-        .unionByName(und.select(col("b").as("n")))
-        .groupBy("n").agg(count(lit(1)).as("d"))
-      val o = orientedInt(s, dir)
-      val wv = o.select(col("s"), col("t").as("t1"))
-        .join(o.select(col("s"), col("t").as("t2")), Seq("s"))
-        .filter(col("t1") < col("t2"))
-        .select(col("s"), least(col("t1"), col("t2")).as("v"),
-          greatest(col("t1"), col("t2")).as("x"))
-      val tri = wv.join(und.select(col("a").as("v"), col("b").as("x")),
-        Seq("v", "x"))
+      val tri = closedWedges(orientedInt(s, dir), canonInt(s, dir))
       val pern = tri.select(col("s").as("n"))
         .unionByName(tri.select(col("v").as("n")))
         .unionByName(tri.select(col("x").as("n")))
         .groupBy("n").agg(count(lit(1)).as("t"))
-      deg.join(pern, Seq("n"), "left")
+      degInt(s, dir).join(pern, Seq("n"), "left")
         .filter(col("d") >= 2)
         .select(col("n").as("node"), col("d").as("degree"),
           coalesce(col("t"), lit(0L)).as("n_triangles"),
@@ -1550,7 +1557,6 @@ object Graph {
             / (col("d") * (col("d") - 1)) + lit(0.5)).as("lcc_nano"))
         .orderBy(desc("lcc_nano"), col("node")).limit(25)
     }
-  }
 
   /** Degree assortativity — one number for "do hubs link to hubs":
     * Pearson correlation of endpoint degrees over the symmetrized edge
@@ -1564,10 +1570,7 @@ object Graph {
   private val assortativity = q("graph_assortativity",
     s"""WITH ${Oracle.linksCte},
        |$edgesIntSql,
-       |und AS (
-       |  SELECT DISTINCT a, b FROM (
-       |    SELECT a, b FROM eint UNION ALL SELECT b, a FROM eint)
-       |  WHERE a <> b),
+       |$undNsSql,
        |deg AS (SELECT a AS n, count(*)::BIGINT AS d FROM und GROUP BY 1),
        |pairs AS (
        |  SELECT da.d AS x, db.d AS y
@@ -1599,6 +1602,43 @@ object Graph {
           .as("assortativity"))
   }
 
+  /** The per-source hop counts `c` over `h1…h3`, and the top-25 harmonic
+    * rows over `c` — shared by the exact and the capped card's oracles.
+    */
+  private val harmonicCountsSql: String =
+    """c AS (
+      |  SELECT src,
+      |    (SELECT count(*) FROM h1 WHERE h1.src = s.src)::BIGINT AS c1,
+      |    (SELECT count(*) FROM h2 WHERE h2.src = s.src)::BIGINT AS c2,
+      |    (SELECT count(*) FROM h3 WHERE h3.src = s.src)::BIGINT AS c3
+      |  FROM (SELECT DISTINCT src FROM h1) s)""".stripMargin
+  private val harmonicTopSql: String =
+    """SELECT src AS node, c1, c2, c3,
+      |  (c1 * 1000000000 + c2 * 500000000 + c3 * 333333333)::BIGINT
+      |    AS harmonic_nano
+      |FROM c ORDER BY harmonic_nano DESC, node LIMIT 25""".stripMargin
+
+  /** The exact 3-hop census CTE chain shared by the [[harmonicK3]] and
+    * [[neighborhoodFn]] oracles — the SQL twin of [[harmonicCensus]]
+    * (identity instance): `und` the undirected dedup, `h1/h2/h3` pairs at
+    * exactly distance 1/2/3, `c` the per-source hop counts.
+    */
+  private val harmonicHopsSql: String =
+    s"""$undNsSql,
+      |h1 AS (SELECT a AS src, b AS n FROM und),
+      |h2 AS (
+      |  SELECT DISTINCT h.src, u.b AS n
+      |  FROM h1 h JOIN und u ON u.a = h.n
+      |  WHERE u.b <> h.src
+      |    AND NOT EXISTS (SELECT 1 FROM h1 x WHERE x.src = h.src AND x.n = u.b)),
+      |h3 AS (
+      |  SELECT DISTINCT h.src, u.b AS n
+      |  FROM h2 h JOIN und u ON u.a = h.n
+      |  WHERE u.b <> h.src
+      |    AND NOT EXISTS (SELECT 1 FROM h1 x WHERE x.src = h.src AND x.n = u.b)
+      |    AND NOT EXISTS (SELECT 1 FROM h2 x WHERE x.src = h.src AND x.n = u.b)),
+      |$harmonicCountsSql""".stripMargin
+
   /** k-bounded harmonic centrality (k=3): for every node, Σ over nodes
     * within 3 hops of 1/d — the centrality that ranks "who can reach the
     * most, fastest" WITHOUT the all-pairs-shortest-paths cost unbounded
@@ -1616,43 +1656,11 @@ object Graph {
     * over a SAMPLED source set — the per-src pipeline is independent, so
     * sampling is a filter on `src`, nothing else changes.
     */
-  /** The exact 3-hop census CTE chain shared by the [[harmonicK3]] and
-    * [[neighborhoodFn]] oracles — the SQL twin of [[harmonicCensus]]
-    * (identity instance): `und` the undirected dedup, `h1/h2/h3` pairs at
-    * exactly distance 1/2/3, `c` the per-source hop counts.
-    */
-  private val harmonicHopsSql: String =
-    """und AS (
-      |  SELECT DISTINCT a, b FROM (
-      |    SELECT a, b FROM eint UNION ALL SELECT b, a FROM eint)
-      |  WHERE a <> b),
-      |h1 AS (SELECT a AS src, b AS n FROM und),
-      |h2 AS (
-      |  SELECT DISTINCT h.src, u.b AS n
-      |  FROM h1 h JOIN und u ON u.a = h.n
-      |  WHERE u.b <> h.src
-      |    AND NOT EXISTS (SELECT 1 FROM h1 x WHERE x.src = h.src AND x.n = u.b)),
-      |h3 AS (
-      |  SELECT DISTINCT h.src, u.b AS n
-      |  FROM h2 h JOIN und u ON u.a = h.n
-      |  WHERE u.b <> h.src
-      |    AND NOT EXISTS (SELECT 1 FROM h1 x WHERE x.src = h.src AND x.n = u.b)
-      |    AND NOT EXISTS (SELECT 1 FROM h2 x WHERE x.src = h.src AND x.n = u.b)),
-      |c AS (
-      |  SELECT src,
-      |    (SELECT count(*) FROM h1 WHERE h1.src = s.src)::BIGINT AS c1,
-      |    (SELECT count(*) FROM h2 WHERE h2.src = s.src)::BIGINT AS c2,
-      |    (SELECT count(*) FROM h3 WHERE h3.src = s.src)::BIGINT AS c3
-      |  FROM (SELECT DISTINCT src FROM h1) s)""".stripMargin
-
   private val harmonicK3 = q("graph_harmonic_k3",
     s"""WITH ${Oracle.linksCte},
        |$edgesIntSql,
        |$harmonicHopsSql
-       |SELECT src AS node, c1, c2, c3,
-       |  (c1 * 1000000000 + c2 * 500000000 + c3 * 333333333)::BIGINT
-       |    AS harmonic_nano
-       |FROM c ORDER BY harmonic_nano DESC, node LIMIT 25""".stripMargin) {
+       |$harmonicTopSql""".stripMargin) {
     (s, dir) =>
     h3CensusExact(s, dir)
       .orderBy(desc("harmonic_nano"), col("node")).limit(25)
@@ -1666,26 +1674,19 @@ object Graph {
   private def h3CensusExact(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
     graft.Caches.fragment(s, dir, "graph_h3_census") {
-      harmonicCensus(edgesInt(s, dir), identity, und0 = undInt(s, dir))
+      harmonicCensus(undIntNS(s, dir), identity)
     }
 
-  /** The shared 3-hop harmonic census pipeline: [[harmonicK3]] is the
-    * `identity` per-hop-transform instance, [[harmonicCapped]] plugs the
-    * hash-order frontier cap in. One implementation means a fix to the
-    * exclusion anti-joins or the nano weights can never apply to one card
-    * and not the other.
+  /** The shared 3-hop harmonic census pipeline over a symmetric,
+    * self-loop-free adjacency `und (a, b)` whose lineage is already
+    * materialized (the cards pass [[undIntNS]], [[harmonicCapped]] its own
+    * truncated frame): [[harmonicK3]] is the `identity` per-hop-transform
+    * instance, [[harmonicCapped]] plugs the hash-order frontier cap in. One
+    * implementation means a fix to the exclusion anti-joins or the nano
+    * weights can never apply to one card and not the other.
     */
-  private def harmonicCensus(edges: DataFrame,
-      capHop: DataFrame => DataFrame, und0: DataFrame = null): DataFrame = {
-    val e = edges.toDF("a", "b")
-      .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-    // a caller-provided und is already a memoized truncated frame — only the
-    // locally-derived form needs its lineage truncated to materialize once
-    val und = if (und0 != null) und0.filter(col("a") =!= col("b"))
-      else e.select("a", "b")
-        .union(e.select(col("b").as("a"), col("a").as("b"))).distinct()
-        .transform(graft.Iterative.truncate)
+  private def harmonicCensus(und: DataFrame,
+      capHop: DataFrame => DataFrame): DataFrame = {
     // h1 feeds three consumers (h2's expand, both exclusion anti-joins, its
     // count) and h2 two more; un-truncated, each reference re-derived the
     // whole subtree below it — the before-plan held 96 parquet scans of the
@@ -1723,12 +1724,9 @@ object Graph {
     * small-world / hub-dense graph approaches |V|² pairs by hop 2; capping
     * each source's frontier at `hopCap` before the next expansion bounds
     * the frame at |V|·hopCap rows per hop regardless of topology. The cap
-    * is applied in md5-prefix hash order of `(src, n)` — content-determined,
-    * engine-independent, replayable in SQL — never "whatever rows arrived
-    * first". Hop h's exclusion anti-joins run against the CAPPED earlier
-    * hops (the frames actually kept), so the semantics are fully defined by
-    * (graph, hopCap) alone. The per-src cap window is partitioned by src —
-    * never a global window.
+    * is [[hashCap]] over `(src, n)`. Hop h's exclusion anti-joins run
+    * against the CAPPED earlier hops (the frames actually kept), so the
+    * semantics are fully defined by (graph, hopCap) alone.
     *
     * Returns the full `(node, c1, c2, c3, harmonic_nano)` frame; callers
     * apply their own top-k. At a cap above every per-source hop frontier
@@ -1736,18 +1734,9 @@ object Graph {
     * pins exactly that, and GraphSpec pins cap-monotone coverage (counts
     * never exceed the exact card's, and grow monotonically with the cap).
     */
-  def harmonicCapped(edges: DataFrame, hopCap: Int,
-      und0: DataFrame = null): DataFrame = {
-    val capW = org.apache.spark.sql.expressions.Window
-      .partitionBy("src").orderBy("hk", "n")
-    def cap(df: DataFrame) = df
-      .withColumn("hk", graft.functions.Md5Prefix64(
-        concat_ws(":", col("src").cast("string"), col("n").cast("string"))))
-      .withColumn("rn", row_number().over(capW))
-      .filter(col("rn") <= hopCap)
-      .select("src", "n")
-    harmonicCensus(edges, cap, und0)
-  }
+  def harmonicCapped(edges: DataFrame, hopCap: Int): DataFrame =
+    harmonicCensus(symmetrize(edges).filter(col("a") =!= col("b"))
+      .transform(graft.Iterative.truncate), hashCap(_, "src", "n", hopCap))
 
   /** Registered per-hop cap for [[harmonicCapped]]: far above the fixture's
     * largest per-source hop frontier, so the oracle (which replays the SAME
@@ -1767,10 +1756,7 @@ object Graph {
   private val harmonicCapped_ = q("graph_harmonic_capped",
     s"""WITH ${Oracle.linksCte},
        |$edgesIntSql,
-       |und AS (
-       |  SELECT DISTINCT a, b FROM (
-       |    SELECT a, b FROM eint UNION ALL SELECT b, a FROM eint)
-       |  WHERE a <> b),
+       |$undNsSql,
        |h1 AS (${harmonicCapSql("SELECT a AS src, b AS n FROM und")}),
        |h2 AS (${harmonicCapSql(
       """SELECT DISTINCT h.src, u.b AS n
@@ -1785,18 +1771,10 @@ object Graph {
         |        AND NOT EXISTS (SELECT 1 FROM h1 x WHERE x.src = h.src AND x.n = u.b)
         |        AND NOT EXISTS (SELECT 1 FROM h2 x WHERE x.src = h.src AND x.n = u.b)"""
         .stripMargin)}),
-       |c AS (
-       |  SELECT src,
-       |    (SELECT count(*) FROM h1 WHERE h1.src = s.src)::BIGINT AS c1,
-       |    (SELECT count(*) FROM h2 WHERE h2.src = s.src)::BIGINT AS c2,
-       |    (SELECT count(*) FROM h3 WHERE h3.src = s.src)::BIGINT AS c3
-       |  FROM (SELECT DISTINCT src FROM h1) s)
-       |SELECT src AS node, c1, c2, c3,
-       |  (c1 * 1000000000 + c2 * 500000000 + c3 * 333333333)::BIGINT
-       |    AS harmonic_nano
-       |FROM c ORDER BY harmonic_nano DESC, node LIMIT 25""".stripMargin) {
+       |$harmonicCountsSql
+       |$harmonicTopSql""".stripMargin) {
     (s, dir) =>
-    harmonicCapped(edgesInt(s, dir), HarmonicHopCap, und0 = undInt(s, dir))
+    harmonicCensus(undIntNS(s, dir), hashCap(_, "src", "n", HarmonicHopCap))
       .orderBy(desc("harmonic_nano"), col("node")).limit(25)
   }
 
@@ -1889,10 +1867,7 @@ object Graph {
     q("graph_walk_corpus",
       s"""WITH ${Oracle.linksCte},
          |$edgesIntSql,
-         |und AS (
-         |  SELECT DISTINCT a, b FROM (
-         |    SELECT a, b FROM eint UNION ALL SELECT b, a FROM eint)
-         |  WHERE a <> b),
+         |$undNsSql,
          |adj AS (
          |  SELECT a, b, row_number() OVER (PARTITION BY a ORDER BY b) AS rn
          |  FROM und),
@@ -1967,10 +1942,7 @@ object Graph {
     q("graph_walk_corpus_biased",
       s"""WITH ${Oracle.linksCte},
          |$edgesIntSql,
-         |und AS (
-         |  SELECT DISTINCT a, b FROM (
-         |    SELECT a, b FROM eint UNION ALL SELECT b, a FROM eint)
-         |  WHERE a <> b),
+         |$undNsSql,
          |adj AS (
          |  SELECT a, b, row_number() OVER (PARTITION BY a ORDER BY b) AS rn
          |  FROM und),
@@ -2039,6 +2011,42 @@ object Graph {
     }
   }
 
+  /** THE common-neighbour wedge census over an adjacency frame `adj (a, b)`
+    * — symmetric, self-loop-free, hash-capped per centre or not: every pair
+    * `a < b` sharing at least one neighbour, with its `common_neighbors`
+    * count, minus the pairs `canon` already holds as edges. One self-join
+    * on the wedge centre (a single equi-key exchange) + one pair aggregate +
+    * one anti-join. With `centreDeg` `(n, d)` each wedge also carries its
+    * centre's [[adamicAdar]] weight, summed as `adamic_adar_nano`; that deg
+    * join rides the wedge join's centre key.
+    */
+  private def nonEdgeCensus(adj: DataFrame, canon: DataFrame,
+      centreDeg: Option[DataFrame]): DataFrame = {
+    val w = adj.as("x")
+      .join(adj.as("y"), col("x.a") === col("y.a") && col("x.b") < col("y.b"))
+    val pair = Seq(col("x.b").as("a"), col("y.b").as("b"))
+    val rows = centreDeg.fold(w.select(pair: _*))(deg =>
+      w.join(deg.select(col("n").as("ctr"), col("d")), col("x.a") === col("ctr"))
+        .select(pair :+ floor(lit(1000000000.0) / log(col("d")) + lit(0.5)).as("w"): _*))
+    val weight = centreDeg.map(_ => sum("w").as("adamic_adar_nano")).toSeq
+    rows.groupBy("a", "b").agg(count(lit(1)).as("common_neighbors"), weight: _*)
+      .join(canon, Seq("a", "b"), "left_anti")
+  }
+
+  /** THE non-edge scorer of both common-neighbour predictors: the
+    * [[nonEdgeCensus]] of `adj` against `canon`, and the neighbourhood
+    * Jaccard `cn / (da + db − cn)` from `deg (n, d)` — ONE division per
+    * emitted row. `deg` is the TRUE (uncapped) degree, so a capped `adj`
+    * still scores against the real neighbourhood size.
+    */
+  private def linkScores(adj: DataFrame, canon: DataFrame, deg: DataFrame): DataFrame =
+    nonEdgeCensus(adj, canon, None)
+      .join(deg.select(col("n").as("a"), col("d").as("da")), Seq("a"))
+      .join(deg.select(col("n").as("b"), col("d").as("db")), Seq("b"))
+      .select(col("a"), col("b"), col("common_neighbors"),
+        (col("common_neighbors").cast("double") /
+          (col("da") + col("db") - col("common_neighbors"))).as("jaccard"))
+
   /** Link prediction by common-neighborhood — the "which edge is missing?"
     * card over the dependency graph: for every NON-adjacent node pair that
     * shares at least one neighbor, the shared-neighbor count and the
@@ -2063,19 +2071,24 @@ object Graph {
     * NOT taken here because the oracle pins the exact census. The final
     * top-k folds through TakeOrderedAndProject, never a global sort.
     */
-  private val linkPredict = q("graph_link_predict",
+  /** The oracle CTEs of the three link cards: the self-loop-free `und`,
+    * the canonical edges `canon` and the degrees `deg`.
+    */
+  private val linkCtesSql: String =
     s"""WITH ${Oracle.linksCte},
        |$edgesIntSql,
-       |und AS (
-       |  SELECT DISTINCT a, b FROM (
-       |    SELECT a, b FROM eint UNION ALL SELECT b, a FROM eint)
-       |  WHERE a <> b),
+       |$undNsSql,
        |canon AS (SELECT DISTINCT least(a, b) AS a, greatest(a, b) AS b
        |          FROM eint WHERE a <> b),
-       |deg AS (SELECT a AS node, count(*)::BIGINT AS deg FROM und GROUP BY 1),
-       |cn AS (
+       |deg AS (SELECT a AS node, count(*)::BIGINT AS deg FROM und GROUP BY 1)""".stripMargin
+
+  /** The oracle's [[linkScores]] over the adjacency CTE `adj`: census,
+    * non-edge anti-join, Jaccard and the top-20 cut.
+    */
+  private def linkScoresSql(adj: String): String =
+    s"""cn AS (
        |  SELECT x.b AS a, y.b AS b, count(*)::BIGINT AS common_neighbors
-       |  FROM und x JOIN und y ON x.a = y.a AND x.b < y.b
+       |  FROM $adj x JOIN $adj y ON x.a = y.a AND x.b < y.b
        |  GROUP BY 1, 2),
        |cand AS (
        |  SELECT cn.a, cn.b, cn.common_neighbors
@@ -2087,20 +2100,11 @@ object Graph {
        |FROM cand
        |JOIN deg da ON da.node = cand.a
        |JOIN deg db ON db.node = cand.b
-       |ORDER BY common_neighbors DESC, a, b LIMIT 20""".stripMargin) { (s, dir) =>
-    val und = undIntNS(s, dir)
-    val canon = canonInt(s, dir)
-    val deg = degInt(s, dir).select(col("n").as("node"), col("d").as("deg"))
-    val cn = und.as("x")
-      .join(und.as("y"), col("x.a") === col("y.a") && col("x.b") < col("y.b"))
-      .select(col("x.b").as("a"), col("y.b").as("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("common_neighbors"))
-    cn.join(canon, Seq("a", "b"), "left_anti")
-      .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
-      .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
-      .select(col("a"), col("b"), col("common_neighbors"),
-        (col("common_neighbors").cast("double") /
-          (col("da") + col("db") - col("common_neighbors"))).as("jaccard"))
+       |ORDER BY common_neighbors DESC, a, b LIMIT 20""".stripMargin
+
+  private val linkPredict = q("graph_link_predict",
+    s"$linkCtesSql,\n${linkScoresSql("und")}") { (s, dir) =>
+    linkScores(undIntNS(s, dir), canonInt(s, dir), degInt(s, dir))
       .orderBy(desc("common_neighbors"), col("a"), col("b")).limit(20)
   }
 
@@ -2115,46 +2119,20 @@ object Graph {
     * trade-off is recall on pairs whose only shared neighbors were
     * sampled away — cap-monotone by construction (a larger cap's
     * neighbor set is a superset, so every surviving wedge survives) —
-    * measured against the exact census in GraphSpec. Scoring degrees stay
-    * UNCAPPED so the Jaccard denominator is the true neighborhood size.
+    * measured against the exact census in GraphSpec. It is [[linkScores]]
+    * over a [[hashCap]]ped adjacency, with UNCAPPED scoring degrees.
     *
     * Returns the full scored candidate frame
-    * `(a, b, common_neighbors, jaccard)`; callers apply their own top-k.
-    * The per-center rank is a window PARTITIONED by the center node —
-    * never global — and at the registered cap (4096, far above the
-    * fixture's max degree) the output is hash-identical to the exact
-    * census, which the oracle row pins.
+    * `(a, b, common_neighbors, jaccard)`; callers apply their own top-k. At
+    * the registered cap (4096, far above the fixture's max degree) the
+    * output is hash-identical to the exact census, which the oracle pins.
     */
-  def linkPredictCapped(edges: DataFrame, maxNeighbors: Int,
-      und0: DataFrame = null, capped0: DataFrame = null): DataFrame = {
-    val e = edges.toDF("a", "b")
-      .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-    val und = if (und0 != null) und0
-      else e.select("a", "b")
-        .union(e.select(col("b").as("a"), col("a").as("b"))).distinct()
+  def linkPredictCapped(edges: DataFrame, maxNeighbors: Int): DataFrame = {
+    val und = symmetrize(edges).filter(col("a") =!= col("b"))
     // und is the symmetric distinct frame, so its a<b half IS the canonical
     // (least, greatest) distinct edge list
-    val canon = und.filter(col("a") < col("b"))
-    val deg = und.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
-    val capW = org.apache.spark.sql.expressions.Window
-      .partitionBy("a").orderBy("hk", "b")
-    val capped = if (capped0 != null) capped0 else und
-      .withColumn("hk", graft.functions.Md5Prefix64(
-        concat_ws(":", col("a").cast("string"), col("b").cast("string"))))
-      .withColumn("rn", row_number().over(capW))
-      .filter(col("rn") <= maxNeighbors)
-      .select("a", "b")
-    val cn = capped.as("x")
-      .join(capped.as("y"), col("x.a") === col("y.a") && col("x.b") < col("y.b"))
-      .select(col("x.b").as("a"), col("y.b").as("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("common_neighbors"))
-    cn.join(canon, Seq("a", "b"), "left_anti")
-      .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
-      .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
-      .select(col("a"), col("b"), col("common_neighbors"),
-        (col("common_neighbors").cast("double") /
-          (col("da") + col("db") - col("common_neighbors"))).as("jaccard"))
+    linkScores(hashCap(und, "a", "b", maxNeighbors), und.filter(col("a") < col("b")),
+      und.groupBy(col("a").as("n")).agg(count(lit(1)).as("d")))
   }
 
   /** Registered cap for [[linkPredictCapped]]: far above the fixture's max
@@ -2171,50 +2149,22 @@ object Graph {
   private def cappedAdjInt(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
     graft.Caches.memo(s, dir, "graph_capped_adj") {
-      val capW = org.apache.spark.sql.expressions.Window
-        .partitionBy("a").orderBy("hk", "b")
-      undIntNS(s, dir)
-        .withColumn("hk", graft.functions.Md5Prefix64(
-          concat_ws(":", col("a").cast("string"), col("b").cast("string"))))
-        .withColumn("rn", row_number().over(capW))
-        .filter(col("rn") <= LinkPredictCap)
-        .select("a", "b")
+      hashCap(undIntNS(s, dir), "a", "b", LinkPredictCap)
         .transform(graft.Iterative.truncate)
     }
 
-  private val linkPredictCapped_ = q("graph_link_predict_capped",
-    s"""WITH ${Oracle.linksCte},
-       |$edgesIntSql,
-       |und AS (
-       |  SELECT DISTINCT a, b FROM (
-       |    SELECT a, b FROM eint UNION ALL SELECT b, a FROM eint)
-       |  WHERE a <> b),
-       |canon AS (SELECT DISTINCT least(a, b) AS a, greatest(a, b) AS b
-       |          FROM eint WHERE a <> b),
-       |deg AS (SELECT a AS node, count(*)::BIGINT AS deg FROM und GROUP BY 1),
-       |capped AS (
+  /** The oracle twin of [[cappedAdjInt]]: the `capped` CTE over `und`. */
+  private val cappedSql: String =
+    s"""capped AS (
        |  SELECT a, b FROM (
        |    SELECT a, b, row_number() OVER (PARTITION BY a ORDER BY
        |      ('0x' || substr(md5(a::VARCHAR || ':' || b::VARCHAR), 1, 15))::BIGINT,
        |      b) AS rn
-       |    FROM und) WHERE rn <= $LinkPredictCap),
-       |cn AS (
-       |  SELECT x.b AS a, y.b AS b, count(*)::BIGINT AS common_neighbors
-       |  FROM capped x JOIN capped y ON x.a = y.a AND x.b < y.b
-       |  GROUP BY 1, 2),
-       |cand AS (
-       |  SELECT cn.a, cn.b, cn.common_neighbors
-       |  FROM cn LEFT JOIN canon c ON c.a = cn.a AND c.b = cn.b
-       |  WHERE c.a IS NULL)
-       |SELECT cand.a, cand.b, cand.common_neighbors,
-       |  cand.common_neighbors::DOUBLE
-       |    / (da.deg + db.deg - cand.common_neighbors) AS jaccard
-       |FROM cand
-       |JOIN deg da ON da.node = cand.a
-       |JOIN deg db ON db.node = cand.b
-       |ORDER BY common_neighbors DESC, a, b LIMIT 20""".stripMargin) { (s, dir) =>
-    linkPredictCapped(edgesInt(s, dir), LinkPredictCap,
-      und0 = undIntNS(s, dir), capped0 = cappedAdjInt(s, dir))
+       |    FROM und) WHERE rn <= $LinkPredictCap)""".stripMargin
+
+  private val linkPredictCapped_ = q("graph_link_predict_capped",
+    s"$linkCtesSql,\n$cappedSql,\n${linkScoresSql("capped")}") { (s, dir) =>
+    linkScores(cappedAdjInt(s, dir), canonInt(s, dir), degInt(s, dir))
       .orderBy(desc("common_neighbors"), col("a"), col("b")).limit(20)
   }
 
@@ -2223,10 +2173,11 @@ object Graph {
     * w of 1/ln(deg(w)), so a pair sharing one obscure neighbor outranks a
     * pair sharing one hub everyone touches (Adamic & Adar 2003, the
     * strongest classic unsupervised link predictor on citation/social
-    * graphs). Runs on the SAME hash-order-capped wedge machinery as
-    * [[linkPredictCapped]] (cap 4096, above the fixture's max degree, so
-    * the oracle's uncapped replay pins a hash-identical result — exact
-    * until the cap must bite, Σ min(deg,cap)² bounded ever after).
+    * graphs). It is [[nonEdgeCensus]] over [[cappedAdjInt]], the capped
+    * adjacency graph_link_predict_capped scores (cap 4096, above the
+    * fixture's max degree, so the oracle's uncapped replay pins a
+    * hash-identical result — exact until the cap must bite, Σ min(deg,cap)²
+    * bounded ever after).
     *
     * Exactness: each wedge's weight is floored to integer nano-units
     * BEFORE the per-pair sum (`floor(1e9/ln(deg)+0.5)` of an integer
@@ -2237,21 +2188,8 @@ object Graph {
     * TRUE (uncapped) neighborhood sizes.
     */
   private val adamicAdar = q("graph_adamic_adar",
-    s"""WITH ${Oracle.linksCte},
-       |$edgesIntSql,
-       |und AS (
-       |  SELECT DISTINCT a, b FROM (
-       |    SELECT a, b FROM eint UNION ALL SELECT b, a FROM eint)
-       |  WHERE a <> b),
-       |canon AS (SELECT DISTINCT least(a, b) AS a, greatest(a, b) AS b
-       |          FROM eint WHERE a <> b),
-       |deg AS (SELECT a AS node, count(*)::BIGINT AS deg FROM und GROUP BY 1),
-       |capped AS (
-       |  SELECT a, b FROM (
-       |    SELECT a, b, row_number() OVER (PARTITION BY a ORDER BY
-       |      ('0x' || substr(md5(a::VARCHAR || ':' || b::VARCHAR), 1, 15))::BIGINT,
-       |      b) AS rn
-       |    FROM und) WHERE rn <= $LinkPredictCap),
+    s"""$linkCtesSql,
+       |$cappedSql,
        |wedge AS (
        |  SELECT x.b AS a, y.b AS b,
        |    CAST(floor(1000000000.0 / ln(d.deg) + 0.5) AS BIGINT) AS w
@@ -2267,21 +2205,7 @@ object Graph {
        |SELECT a, b, common_neighbors, adamic_adar_nano
        |FROM cand
        |ORDER BY adamic_adar_nano DESC, a, b LIMIT 20""".stripMargin) { (s, dir) =>
-    val canon = canonInt(s, dir)
-    val deg = degInt(s, dir).select(col("n").as("node"), col("d").as("deg"))
-    val capped = cappedAdjInt(s, dir)
-    // each wedge carries its center's 1/ln(deg) weight in integer nano-
-    // units; the deg join rides the wedge join's existing center key
-    val wedge = capped.as("x")
-      .join(capped.as("y"), col("x.a") === col("y.a") && col("x.b") < col("y.b"))
-      .join(deg.withColumnRenamed("node", "ctr").as("d"),
-        col("x.a") === col("ctr"))
-      .select(col("x.b").as("a"), col("y.b").as("b"),
-        floor(lit(1000000000.0) / log(col("deg")) + lit(0.5)).as("w"))
-    wedge.groupBy("a", "b")
-      .agg(sum("w").as("adamic_adar_nano"),
-        count(lit(1)).as("common_neighbors"))
-      .join(canon, Seq("a", "b"), "left_anti")
+    nonEdgeCensus(cappedAdjInt(s, dir), canonInt(s, dir), Some(degInt(s, dir)))
       .select("a", "b", "common_neighbors", "adamic_adar_nano")
       .orderBy(desc("adamic_adar_nano"), col("a"), col("b")).limit(20)
   }
@@ -2290,25 +2214,23 @@ object Graph {
     * "related to these" recommender over the link graph: teleport mass
     * lands only on the seeds, so rank measures proximity to the seed
     * neighborhood instead of global importance, and the top non-seed nodes
-    * are the recommendations. Same 1e9 fixed-point integer arithmetic as
-    * [[pagerank]] (sum/div of BIGINTs — bit-identical cross-engine, no
-    * float accumulation), same sparse inbound-contribution frames, and the
-    * same per-round lineage truncation.
+    * are the recommendations. It is [[pagerank]]'s [[rankChain]] with
+    * `seeds`: the same 1e9 fixed-point integer arithmetic (sum/div of
+    * BIGINTs — bit-identical cross-engine, no float accumulation), the same
+    * sparse inbound-contribution frames and the same per-round lineage
+    * truncation.
     *
     * The seed set here is the deterministic `node % 53 = 0` slice so the
     * oracle can replay it; the engine form takes any seed frame. Scale
     * shape: seeds ride a broadcastable side of each round's join; each
     * round is one `ed ⟕ contrib` join + one aggregate exactly like
-    * [[pagerank]] — a production variant would additionally semi-filter
+    * [[pagerank]]. A production variant would additionally semi-filter
     * `ed` to sources in `seeds ∪ contrib` (the reachable frontier, often
     * tiny for PPR), which changes no output since absent sources
     * contribute zero; the oracle pins the unfiltered form for parity with
     * the CTE unroll. Output folds through TakeOrderedAndProject.
     */
   private val pprQ = {
-    val SCALE = "1000000000"
-    val BASE = "150000000"
-    val rounds = 3
     val seedMod = 53
     val edgesSql =
       """e AS (SELECT DISTINCT a, b FROM eint),
@@ -2317,12 +2239,12 @@ object Graph {
         |ed AS (SELECT e.a, e.b, o.d FROM e JOIN outd o ON o.node = e.a)""".stripMargin
     val c1 =
       s"""c1 AS (
-         |  SELECT ed.b AS node, sum($BASE // ed.d)::BIGINT AS s
+         |  SELECT ed.b AS node, sum($RankBase // ed.d)::BIGINT AS s
          |  FROM ed JOIN seeds sd ON sd.node = ed.a GROUP BY ed.b)""".stripMargin
-    val steps = (2 to rounds).map { i =>
+    val steps = (2 to PrRounds).map { i =>
       s"""c$i AS (
          |  SELECT ed.b AS node,
-         |    sum((CASE WHEN sd.node IS NULL THEN 0 ELSE $BASE END
+         |    sum((CASE WHEN sd.node IS NULL THEN 0 ELSE $RankBase END
          |         + (85 * coalesce(p.s, 0)) // 100) // ed.d)::BIGINT AS s
          |  FROM ed LEFT JOIN c${i - 1} p ON p.node = ed.a
          |  LEFT JOIN seeds sd ON sd.node = ed.a
@@ -2337,39 +2259,18 @@ object Graph {
          |$steps,
          |rk AS (
          |  SELECT n.node, ((85 * coalesce(c.s, 0)) // 100)::BIGINT AS pr
-         |  FROM nodes n LEFT JOIN c$rounds c ON c.node = n.node
+         |  FROM nodes n LEFT JOIN c$PrRounds c ON c.node = n.node
          |  WHERE NOT EXISTS (SELECT 1 FROM seeds sd WHERE sd.node = n.node))
          |SELECT 'P' || CAST(node // 1000000000000 AS STRING) || '-'
          |    || CAST(node % 1000000000000 AS STRING) AS node_key, pr
          |FROM (SELECT node, pr FROM rk WHERE pr > 0
          |      ORDER BY pr DESC, node LIMIT 20)
          |ORDER BY pr DESC, node_key""".stripMargin) { (s, dir) =>
-      val e = edgesInt(s, dir).distinct()
-      val outd = e.groupBy(col("a").as("node")).agg(count(lit(1)).as("d"))
-      val ed = e.join(outd.withColumnRenamed("node", "a"), Seq("a"))
-        .transform(graft.Iterative.truncate)
-      val nodes = ed.select(col("a").as("node"))
-        .union(ed.select(col("b").as("node"))).distinct()
-        .transform(graft.Iterative.truncate)
+      val ed = rankEdges(edgesInt(s, dir).distinct())
+      val nodes = rankNodes(ed).transform(graft.Iterative.truncate)
       val seeds = nodes.filter(col("node") % seedMod === 0)
-      var contrib = ed
-        .join(seeds.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
-        .groupBy(col("b").as("node"))
-        .agg(sum(expr(s"$BASE div d")).as("s"))
-        .transform(graft.Iterative.truncate)
-      (2 to rounds).foreach { _ =>
-        contrib = ed
-          .join(contrib.withColumnRenamed("node", "a"), Seq("a"), "left")
-          .join(seeds.select(col("node").as("a"), lit(1L).as("is_seed")),
-            Seq("a"), "left")
-          .groupBy(col("b").as("node"))
-          .agg(sum(expr(
-            s"(coalesce(is_seed, 0L) * $BASE + (85 * coalesce(s, 0L)) div 100) div d"))
-            .as("s"))
-          .transform(graft.Iterative.truncate)
-      }
       nodes.join(seeds, Seq("node"), "left_anti")
-        .join(contrib, Seq("node"), "left")
+        .join(rankChain(ed, PrRounds, Some(seeds)).last, Seq("node"), "left")
         .select(col("node"),
           expr("(85 * coalesce(s, 0L)) div 100").as("pr"))
         .filter(col("pr") > 0)

@@ -250,4 +250,31 @@ class BenchSpec extends AnyFunSuite {
     assert(j.contains("\"nproc\":") && j.contains("\"load_avg\":") &&
       j.contains("\"timing\":\"best_of_2\""))
   }
+  test("start-up sweep spares a live JVM's scratch root and young dirs") {
+    val tmp = Files.createTempDirectory("bench-sweep")
+    val now = System.currentTimeMillis()
+    def dir(name: String, ageMs: Long): Path = {
+      val d = Files.createDirectories(tmp.resolve(name))
+      Files.write(d.resolve("f"), Array[Byte](1))
+      Files.setLastModifiedTime(d, java.nio.file.attribute.FileTime.fromMillis(now - ageMs))
+      d
+    }
+    val hour = 60L * 60 * 1000
+    val live = dir(s"${Caches.ScratchPrefix}${ProcessHandle.current().pid()}-1", 2 * hour)
+    // no process can hold this pid (above every OS pid limit)
+    val dead = dir(s"${Caches.ScratchPrefix}${Int.MaxValue}-2", 2 * hour)
+    val stale = dir("graft-stale", 2 * hour)
+    val young = dir("graft-young", 0L)
+    val foreign = dir("other-old", 2 * hour)
+    Bench.sweepStaleTemp(tmp, now - hour)
+    assert(Files.exists(live.resolve("f")), "a live JVM's scratch root was deleted")
+    assert(!Files.exists(dead) && !Files.exists(stale), "stale graft-* dirs survived")
+    assert(Files.exists(young) && Files.exists(foreign))
+    assert(Caches.scratchRoot.getFileName.toString
+      .startsWith(s"${Caches.ScratchPrefix}${ProcessHandle.current().pid()}-"))
+    Bench.sweepStaleTemp(tmp, Long.MaxValue) // the live root survives even this
+    assert(Files.exists(live))
+    Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => { Files.deleteIfExists(p); () })
+  }
 }
